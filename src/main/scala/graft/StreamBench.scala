@@ -134,6 +134,15 @@ object StreamBench {
     }
   }
 
+  /** SPARK_GRAFT_STREAM_SHUFFLE_PARTS: unset means the session
+    * default; anything but a positive integer fails the run rather
+    * than silently running the default regime under the wrong label. */
+  private[graft] def parseStreamParts(v: Option[String]): Option[Int] =
+    v.map { s =>
+      s.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_STREAM_SHUFFLE_PARTS must be a positive integer, got '$s'"))
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
@@ -150,8 +159,7 @@ object StreamBench {
     // session default for the streaming suite, the regime label gains
     // a "_pN" suffix so anchor lookups never cross-compare regimes,
     // and the output line records shuffle_partitions either way.
-    val streamParts = sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTS")
-      .flatMap(v => scala.util.Try(v.toInt).toOption)
+    val streamParts = parseStreamParts(sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTS"))
     streamParts.foreach(p =>
       spark.conf.set("spark.sql.shuffle.partitions", p.toString))
     val shufflePartsNow = spark.conf.get("spark.sql.shuffle.partitions").toInt

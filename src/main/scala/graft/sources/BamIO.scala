@@ -11,12 +11,18 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.model.{SamHeader, SamRecord}
 
 /** Filesystem access via the Hadoop FS API so the same code serves
-  * file://, hdfs:// and s3a:// — executors rebuild the default
-  * Configuration locally (cluster nodes carry site configs). */
+  * file://, hdfs:// and s3a://. One `Configuration` per JVM, built on
+  * first use from the same defaults and site XMLs a fresh one loads
+  * (cluster nodes carry their own site configs), so Hadoop's XML is
+  * parsed once, not per file open. `spark.hadoop.*` settings are not
+  * applied. The instance is shared by every caller and thread: never
+  * mutate it. */
 object Fs {
+  private[sources] lazy val conf = new Configuration()
+
   def get(p: String): (FileSystem, Path) = {
     val path = new Path(p)
-    (path.getFileSystem(new Configuration()), path)
+    (path.getFileSystem(conf), path)
   }
 
   /** Byte-concatenate a shard directory's part-* files into `out` in

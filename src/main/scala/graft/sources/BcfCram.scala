@@ -889,30 +889,16 @@ object BcfIO {
     }.toDS()
   }
 
-  def readDicts(file: String): Dicts = {
+  def readDicts(file: String): Dicts =
     if (isPlainBcf(file)) {
       val (dicts, in) = openPlainBody(file)
       in.close()
-      return dicts
-    }
-    val (fs, path) = Fs.get(file)
-    val in = new Bgzf.BgzfInputStream(new java.io.BufferedInputStream(fs.open(path)))
-    try {
-      val magic = new Array[Byte](5)
-      var got = 0
-      while (got < 5) { val r = in.read(magic, got, 5 - got); require(r > 0); got += r }
-      require(java.util.Arrays.equals(magic, Bcf.Magic), "not BCF2")
-      var lh = 0
-      (0 until 4).foreach(i => lh |= in.read() << (8 * i))
-      val ht = new Array[Byte](lh)
-      var o = 0
-      while (o < lh) { val r = in.read(ht, o, lh - o); require(r > 0); o += r }
-      Dicts.fromHeader(new String(ht, 0, lh - 1, UTF_8))
-    } finally in.close()
-  }
+      dicts
+    } else headerInfo(file)._1
 
-  /** Dicts + the virtual offset where records begin (header end). */
-  private def headerInfo(file: String): (Dicts, Long) = {
+  /** Dicts + the virtual offset where records begin (header end);
+    * read once per plan and handed to the planners below. */
+  private[sources] def headerInfo(file: String): (Dicts, Long) = {
     val (fs, path) = Fs.get(file)
     val in = new Bgzf.BgzfInputStream(new java.io.BufferedInputStream(fs.open(path)))
     try {
@@ -987,13 +973,20 @@ object BcfIO {
            splitSize: Long = 64L * 1024 * 1024,
            columns: Seq[String] = Nil):
       org.apache.spark.sql.Dataset[VcfVariant] = {
-    import spark.implicits._
     val fields = Vcf.maskFor(columns)
-    if (isPlainBcf(file)) return readPlain(spark, file, fields)
-    val (dicts, _) = headerInfo(file)
+    if (isPlainBcf(file)) readPlain(spark, file, fields)
+    else scanFull(spark, file, headerInfo(file), splitSize, fields)
+  }
+
+  /** Full scan of a BGZF BCF whose header is already read. */
+  private def scanFull(spark: org.apache.spark.sql.SparkSession, file: String,
+                       header: (Dicts, Long), splitSize: Long, fields: Int):
+      org.apache.spark.sql.Dataset[VcfVariant] = {
+    import spark.implicits._
+    val dicts = header._1
     // foreign BCFs without a sidecar fall back to BGZF block discovery
     // + record guessing, exactly the BAM shape (ref: BCFSplitGuesser.java)
-    val ranges = planFullRanges(file, splitSize)
+    val ranges = planFullRanges(file, header, splitSize)
     spark.sparkContext.parallelize(ranges, math.max(1, ranges.size))
       .flatMap { case (startVo, endVo2) => openRange(file, startVo, endVo2, dicts, fields) }
       .toDS()
@@ -1040,7 +1033,8 @@ object BcfIO {
         iv.exists { case (c, s, e) => v.chrom == c && v.pos <= e && bcfEnd(v) >= s }
       }
     }
-    val (dicts, _) = headerInfo(file)
+    val header = headerInfo(file)
+    val dicts = header._1
     val merged = Vcf.mergeIntervals(intervals)
 
     def overlaps(v: VcfVariant): Boolean =
@@ -1048,28 +1042,26 @@ object BcfIO {
         v.pos <= e && bcfEnd(v) >= s
       })
 
-    planIntervalRanges(file, intervals, splitSize) match {
+    planIntervalRanges(file, header, intervals, splitSize) match {
       case Some(ranges) =>
         spark.sparkContext.parallelize(ranges, math.max(1, ranges.size))
           .flatMap { case (s0, e0) =>
             openRange(file, s0, e0, dicts, fields).filter(overlaps) }
           .toDS()
       case None =>
-        // keep INFO in the mask: overlaps() reads END= spans
-        val cols = if (columns.isEmpty) Nil
-          else (columns ++ Seq("infoKeys", "infoValues")).distinct
-        read(spark, file, splitSize, cols).filter(overlaps(_))
+        // `fields` keeps INFO in the mask: overlaps() reads END= spans
+        scanFull(spark, file, header, splitSize, fields).filter(overlaps(_))
     }
   }
 
   /** Driver-side planning for [[readIntervals]] (shared with the DSv2
     * scan): disjoint record-aligned VO ranges from the best index, or
-    * None for the full-scan fallback. */
-  private[sources] def planIntervalRanges(file: String,
+    * None for the full-scan fallback.  `header` is [[headerInfo]]. */
+  private[sources] def planIntervalRanges(file: String, header: (Dicts, Long),
                     intervals: Seq[(String, Int, Int)],
                     splitSize: Long): Option[Seq[(Long, Long)]] = {
     val (fs, path) = Fs.get(file)
-    val (dicts, headerEndVo) = headerInfo(file)
+    val (dicts, headerEndVo) = header
     val refIdOf = dicts.contigs.zipWithIndex.toMap
     val merged = Vcf.mergeIntervals(intervals)
 
@@ -1152,9 +1144,6 @@ object BcfIO {
     rangesOpt
   }
 
-  /** [[headerInfo]] for the DSv2 reader factory. */
-  private[sources] def dictsOf(file: String): Dicts = headerInfo(file)._1
-
   /** Record-level interval overlap with the index's span semantics
     * (rlen = REF length), for consumers applying the authoritative
     * `intervals` option. */
@@ -1166,10 +1155,11 @@ object BcfIO {
 
   /** Full-scan range planning (header end + sidecar granules or
     * guessed splits), for consumers that need partitions rather than
-    * a Dataset. */
-  private[sources] def planFullRanges(file: String, splitSize: Long): Seq[(Long, Long)] = {
+    * a Dataset.  `header` is [[headerInfo]]. */
+  private[sources] def planFullRanges(file: String, header: (Dicts, Long),
+                                      splitSize: Long): Seq[(Long, Long)] = {
     val (fs, path) = Fs.get(file)
-    val (dicts, headerEndVo) = headerInfo(file)
+    val (dicts, headerEndVo) = header
     val bounds: Seq[Long] = SplittingIndex.read(fs, SplittingIndex.indexPath(path)) match {
       case Some(sidx) =>
         (headerEndVo +: sidx.entries.map(_.vo).toSeq :+ sidx.endVo).distinct.sorted

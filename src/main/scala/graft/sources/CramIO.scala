@@ -590,7 +590,9 @@ object CramIO {
   /** Decode plan for the file: major version from the file definition
     * and the record-payload profile from the first data container's
     * compression header (graft profile marker vs foreign data-series —
-    * foreign CRAMs route through [[CramForeign]]). */
+    * foreign CRAMs route through [[CramForeign]]).  The CRAM spec puts
+    * the compression header first in every data container, so only that
+    * block is read and CRC-checked, not the whole container. */
   private[sources] def detectMeta(file: String,
                                   firstContainerOffset: Option[Long]): CramMeta = {
     val (fs, p) = Fs.get(file)
@@ -599,8 +601,11 @@ object CramIO {
       val major = readFileDefinition(new BufferedInputStream(raw, 64))
       val foreign = firstContainerOffset.exists { off =>
         raw.seek(off)
-        val blocks = readContainerBlocks(new BufferedInputStream(raw), major)
-        !blocks.exists(b => b.contentType == CompressionHeader && isGraftProfile(b.data))
+        val in = new BufferedInputStream(raw)
+        readContainerHeader(in, major) == 0 || {
+          val b = readBlock(in, withCrc = major >= 3)
+          !(b.contentType == CompressionHeader && isGraftProfile(b.data))
+        }
       }
       CramMeta(major, foreign)
     } finally raw.close()
@@ -682,7 +687,14 @@ object CramIO {
   /** Parse one container (header + its blocks) from the stream;
     * `major` selects the framing (3.x carries CRC32s, 2.x none). */
   private def readContainerBlocks(in: InputStream, major: Int = 3): Seq[Block] = {
-    val clen = readInt32Le(in)
+    val nBlocks = readContainerHeader(in, major)
+    (0 until nBlocks).map(_ => readBlock(in, withCrc = major >= 3))
+  }
+
+  /** Consume a container header and return its block count; the
+    * stream is left at the container's first block. */
+  private def readContainerHeader(in: InputStream, major: Int): Int = {
+    readInt32Le(in) // container length
     Cram.readItf8(in) // refSeqId
     Cram.readItf8(in); Cram.readItf8(in); Cram.readItf8(in) // start/span/nrec
     Cram.readLtf8(in); Cram.readLtf8(in) // counter/bases
@@ -690,8 +702,7 @@ object CramIO {
     val nLandmarks = Cram.readItf8(in)
     (0 until nLandmarks).foreach(_ => Cram.readItf8(in))
     if (major >= 3) skipFully(in, 4) // header crc
-    val _ = clen
-    (0 until nBlocks).map(_ => readBlock(in, withCrc = major >= 3))
+    nBlocks
   }
 
   /** Validate the file definition and return the major version. */

@@ -107,7 +107,7 @@ object GraftDataSinks {
       "BCF writes need option(\"header\", <path to an existing .bcf/.vcf/" +
         ".vcf.bgz>) — records do not carry the contig/FILTER/INFO/FORMAT " +
         "dictionaries their wire format indexes"))
-    if (path.endsWith(".bcf")) BcfIO.dictsOf(path)
+    if (path.endsWith(".bcf")) BcfIO.headerInfo(path)._1
     else BcfIO.Dicts.fromHeader(Vcf.readHeader(path).lines.mkString("\n"))
   }
 

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.model.{ReferenceFragment, SamRecord, SequencedFragment, VcfVariant}
-import graft.sources.{BamIO, BcfIO, Fasta, Fastq, RangedText, Vcf}
+import graft.sources.{BamIO, BcfIO, Fasta, Fastq, Fs, RangedText, Vcf}
 
 /** DataSource V2 façade over the graft format codecs — the Spark-first
   * re-expression of the reference's InputFormats as first-class
@@ -405,7 +405,6 @@ abstract class FileLogMicroBatchStream(dir: String, checkpointLocation: String)
     * foreign files in the landing directory must not enter the log). */
   protected def accepts(name: String): Boolean = true
 
-  private val hconf = new org.apache.hadoop.conf.Configuration()
   private val logPath =
     new org.apache.hadoop.fs.Path(checkpointLocation, "graft-file-log")
 
@@ -415,7 +414,7 @@ abstract class FileLogMicroBatchStream(dir: String, checkpointLocation: String)
   /** The committed offset→file mapping, one path per line in log
     * order.  Written atomically (temp + rename) on every extension. */
   private def loadLog(): Vector[String] = {
-    val fs = logPath.getFileSystem(hconf)
+    val fs = logPath.getFileSystem(Fs.conf)
     if (!fs.exists(logPath)) Vector.empty
     else {
       val in = new java.io.BufferedReader(new java.io.InputStreamReader(
@@ -427,7 +426,7 @@ abstract class FileLogMicroBatchStream(dir: String, checkpointLocation: String)
   }
 
   private def saveLog(): Unit = {
-    val fs = logPath.getFileSystem(hconf)
+    val fs = logPath.getFileSystem(Fs.conf)
     fs.mkdirs(logPath.getParent)
     val tmp = new org.apache.hadoop.fs.Path(logPath.getParent,
       logPath.getName + ".tmp")
@@ -442,7 +441,7 @@ abstract class FileLogMicroBatchStream(dir: String, checkpointLocation: String)
 
   private def refresh(): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(hconf)
+    val fs = p.getFileSystem(Fs.conf)
     val listed =
       if (!fs.exists(p)) Array.empty[String] // producer not started yet
       else if (fs.getFileStatus(p).isDirectory)
@@ -1037,17 +1036,17 @@ class BcfScan(paths: Seq[String], splitSize: Long, pruned: StructType,
     val optIv = optionIntervals.map(s => BamIO.parseIntervalSpec(s))
     val pruneIv = optIv.getOrElse(filterIntervals)
     paths.flatMap { path =>
+      val header = BcfIO.headerInfo(path)
       val ranges =
         (if (pruneIv.isEmpty) None
-         else BcfIO.planIntervalRanges(path, pruneIv, splitSize))
-          .getOrElse(BcfIO.planFullRanges(path, splitSize))
+         else BcfIO.planIntervalRanges(path, header, pruneIv, splitSize))
+          .getOrElse(BcfIO.planFullRanges(path, header, splitSize))
       // option intervals are authoritative record filters; the
       // filter-derived ranges leave exactness to Spark's residual.
       // dicts ride the partition: re-parsing the header once per task
       // would cost an extra remote open + BGZF decode each
-      val dicts = BcfIO.dictsOf(path)
       ranges.map { case (s, e) =>
-        BcfPartition(path, s, e, optIv.getOrElse(Nil).toArray, dicts): InputPartition
+        BcfPartition(path, s, e, optIv.getOrElse(Nil).toArray, header._1): InputPartition
       }
     }.toArray
   }
@@ -1077,9 +1076,9 @@ class BcfMicroBatchStream(dir: String, splitSize: Long, pruned: StructType,
   // (.bcf.sidx/.csi) — only the records are rows
   override protected def accepts(name: String): Boolean = name.endsWith(".bcf")
   override protected def planFile(path: String): Seq[InputPartition] = {
-    val dicts = BcfIO.dictsOf(path)
-    BcfIO.planFullRanges(path, splitSize).map { case (s, e) =>
-      BcfPartition(path, s, e, Array.empty, dicts): InputPartition
+    val header = BcfIO.headerInfo(path)
+    BcfIO.planFullRanges(path, header, splitSize).map { case (s, e) =>
+      BcfPartition(path, s, e, Array.empty, header._1): InputPartition
     }
   }
   override def createReaderFactory(): PartitionReaderFactory =

@@ -8,6 +8,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * rest of the suite. */
 class BenchProtocolSpec extends AnyFunSuite {
 
+  test("parseStreamParts fails fast on a malformed or non-positive value") {
+    assert(StreamBench.parseStreamParts(None).isEmpty)
+    assert(StreamBench.parseStreamParts(Some("32")).contains(32))
+    Seq("32x", "", " 8", "0", "-4", "99999999999").foreach { bad =>
+      val e = intercept[IllegalArgumentException](StreamBench.parseStreamParts(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_STREAM_SHUFFLE_PARTS"), bad)
+      assert(e.getMessage.contains(s"'$bad'"), bad)
+    }
+  }
+
   test("parseQueryMedians extracts the queries map and nothing else") {
     val json =
       """{"metric":"total","value":12.5,"unit":"sec",""" +

@@ -283,7 +283,8 @@ class PropertySpec extends AnyFunSuite {
       Bcf.write(f, BcfIO.Dicts(contigs, filters, infoKeys).headerText,
         vs, contigs, filters, infoKeys)
       Csi.buildAndWriteBcf(f)
-      val dicts = BcfIO.dictsOf(f)
+      val header = BcfIO.headerInfo(f)
+      val dicts = header._1
       queries.foreach { case (ivs, splitSize) =>
         val merged = Vcf.mergeIntervals(ivs)
         val naive = vs.filter { v =>
@@ -291,7 +292,7 @@ class PropertySpec extends AnyFunSuite {
             v.pos <= e && v.pos + math.max(1, v.ref.length) - 1 >= s
           })
         }.map(_.id).sorted
-        BcfIO.planIntervalRanges(f, ivs, splitSize) match {
+        BcfIO.planIntervalRanges(f, header, ivs, splitSize) match {
           case Some(ranges) =>
             val got = ranges.flatMap { case (s0, e0) =>
               BcfIO.openRange(f, s0, e0, dicts)
