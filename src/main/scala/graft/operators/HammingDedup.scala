@@ -66,7 +66,8 @@ object HammingDedup {
     * (doc_id, sigCol) frame.  Dist-0 pairs expand from the same-sig
     * groups; dist ≥ 1 pairs expand from the verified distinct-sig
     * pairs via two member joins (output-bound — no wasted candidate
-    * work).  Callers localCheckpoint `sigs` (five consumers). */
+    * work).  Callers stableCheckpoint `sigs` (five consumers); the
+    * declared ORDER BY goes through [[graft.queries.Pipeline.sortedOutput]]. */
   def pairs(sigs: DataFrame, sigCol: String, maxDist: Int,
             bandBits: Int): DataFrame = {
     // sig_a < sig_b means every cross pair is dist >= 1 already
@@ -79,14 +80,7 @@ object HammingDedup {
         col(s"a.$sigCol") === col(s"b.$sigCol") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         lit(0).cast("int").as("dist"))
-    // checkpoint BEFORE the declared ORDER BY (r20): the range
-    // partitioner's sampling job re-executes its child, so the member
-    // joins + verify ran twice per query (HammingPairsProbe: pair
-    // stream 1.12 s vs 1.68 s end-to-end at sf0.1).  The barrier
-    // trades one write+read of the (bounded, output-sized) pair
-    // stream for the second execution.
-    graft.queries.Pipeline.stableCheckpoint(sameSig.unionAll(crossSig))
-      .orderBy("doc_a", "doc_b")
+    graft.queries.Pipeline.sortedOutput(sameSig.unionAll(crossSig), "doc_a", "doc_b")
   }
 
   /** The count form (the P52b discipline): per-distance pair COUNTS
@@ -94,8 +88,9 @@ object HammingDedup {
     * Σ g_a·g_b over verified distinct-sig pairs at 1..maxDist — so
     * not one pair row is ever built and the answer stays
     * aggregation-shaped at any corpus scale.  `sigGroups` is the
-    * (sigCol, g=count) frame; callers localCheckpoint it (three
-    * consumers off one signature pass). */
+    * (sigCol, g=count) frame; callers stableCheckpoint it (three
+    * consumers off one signature pass).  Sorted by dist through
+    * [[graft.queries.Pipeline.sortedOutput]]. */
   def counts(sigGroups: DataFrame, sigCol: String, maxDist: Int,
              bandBits: Int): DataFrame = {
     val crossCounts = sigPairs(sigGroups.select(sigCol), sigCol, maxDist, bandBits)
@@ -106,10 +101,7 @@ object HammingDedup {
     val sameCounts = sigGroups
       .select(lit(0).cast("int").as("dist"), expr("(g * (g - 1)) DIV 2").as("p"))
       .groupBy("dist").agg(sum("p").as("n_pairs"))
-    // checkpoint before ORDER BY: ≤ maxDist+1 rows materialize, the
-    // sampling job would otherwise re-run the whole count pipeline
-    graft.queries.Pipeline.stableCheckpoint(
-        sameCounts.unionAll(crossCounts).filter(col("n_pairs") > 0))
-      .orderBy("dist")
+    graft.queries.Pipeline.sortedOutput(
+      sameCounts.unionAll(crossCounts).filter(col("n_pairs") > 0), "dist")
   }
 }

@@ -56,7 +56,7 @@ object CorpusStats {
     val kept = fps
       .withColumn("df", count(lit(1)).over(Window.partitionBy("fp")))
       .filter(col("df") <= MaxDf).drop("df")
-    kept.as("a")
+    Pipeline.sortedOutput(kept.as("a")
       .join(kept.as("b"),
         col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
@@ -64,11 +64,8 @@ object CorpusStats {
       .agg(count(lit(1)).as("shared"))
       .filter(expr("10 * shared >= 3 * least(na, nb)"))
       .select(col("doc_a"), col("doc_b"), col("shared"),
-        expr("least(na, nb)").as("min_fp"))
-      // checkpoint before the declared ORDER BY (r20): the range
-      // sampling job re-executes its child's post-shuffle segment
-      .transform(Pipeline.stableCheckpoint)
-      .orderBy("doc_a", "doc_b")
+        expr("least(na, nb)").as("min_fp")),
+      "doc_a", "doc_b")
   }
 
   val qWinnowOverlapSql: String = {

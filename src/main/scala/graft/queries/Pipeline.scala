@@ -69,12 +69,7 @@ object Pipeline {
   // instead of the ~10⁻³ of 2-row bands, i.e. hundreds of candidates
   // rather than ~1M).
   def qDedupMinhash(s: SparkSession, d: String): DataFrame =
-    // checkpoint before the declared ORDER BY (r20): the range
-    // sampling job re-executes its child — the whole LSH+verify
-    // pipeline ran twice per query (BlindSpotProbe: pair stream
-    // 0.71 s vs 1.13 s benched end-to-end at sf0.1)
-    stableCheckpoint(minhashPairs(s, d).select("doc_a", "doc_b", "jaccard"))
-      .orderBy("doc_a", "doc_b")
+    sortedOutput(minhashPairs(s, d).select("doc_a", "doc_b", "jaccard"), "doc_a", "doc_b")
 
   /** The LSH candidate + exact-verify pair pipeline (shared by the
     * pair query above and the clustering query below).
@@ -165,19 +160,36 @@ object Pipeline {
     * appear in at least one pair get a label — singletons are their
     * own keeper by definition and never enter the loop. */
   /** Lineage-truncating materialization for the bounded per-doc /
-    * per-sig DECISION frames the query paths re-consume (guide §5):
-    * executor-local checkpoint by default — cheapest, and exactly
-    * right in a single-node harness — but when the session has a
-    * checkpoint dir configured (`sc.setCheckpointDir`, i.e. a real
-    * cluster where an executor loss would strand localCheckpoint
-    * blocks with NO recompute path and fail the query mid-job), a
-    * RELIABLE checkpoint instead.  Same results either way, pinned by
-    * CheckpointPolicySpec; [[componentLabels]] applies the same policy
-    * to its loop state.  The 100 TB posture (VERDICT r19 item 6): at
-    * scale, set a checkpoint dir; the harness default stays local. */
+    * per-sig DECISION frames that one query consumes several times
+    * (signature frames, CC loop state): executor-local checkpoint by
+    * default — cheapest, and exactly right in a single-node harness —
+    * but when the session has a checkpoint dir configured
+    * (`sc.setCheckpointDir`, i.e. a real cluster where an executor
+    * loss would strand localCheckpoint blocks with NO recompute path
+    * and fail the query mid-job), a RELIABLE checkpoint instead.  Same
+    * results either way, pinned by CheckpointPolicySpec.  The 100 TB
+    * posture: at scale, set a checkpoint dir; the harness default
+    * stays local.  Not a sort barrier: a declared ORDER BY goes
+    * through [[sortedOutput]], which keeps the plan lazy and visible. */
   private[graft] def stableCheckpoint(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
     else df.localCheckpoint()
+
+  /** The declared ORDER BY over an expensive pipeline: hash-repartition
+    * on the sort keys, then sort.  The range partitioner samples its
+    * child in a separate job, and without a barrier that job
+    * re-executes the join/verify/kernel segment between the last
+    * exchange and the sort.  The hash exchange is the barrier: under
+    * AQE it materializes as its own query stage, so the sampling job
+    * reads that stage's shuffle output instead.  Where the child
+    * already ends in an exchange on the sort keys (an aggregate grouped
+    * by them), Spark drops the repartition as redundant and that
+    * exchange is the barrier.  Unlike a checkpoint, building the frame
+    * starts no Spark job and the executed plan keeps every join,
+    * exchange and kernel visible to the plan audits (PlanAuditSpec
+    * pins the barrier per query). */
+  private[graft] def sortedOutput(df: DataFrame, cols: String*): DataFrame =
+    df.repartition(cols.map(col): _*).orderBy(cols.map(col): _*)
 
   /** Rounds the most recent [[componentLabels]] call took — probe
     * telemetry (CcSkewProbe), not part of any query result.  Shared
@@ -516,16 +528,13 @@ object Pipeline {
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
         expr("graft_shingles64(text, 2)").as("sh"))
-    // checkpoint before the declared ORDER BY (r20): the range
-    // sampling job re-executes its child — the prefix-filter join +
-    // merge-kernel verify pipeline ran twice per query
-    stableCheckpoint(graft.operators.SimJoin
+    sortedOutput(graft.operators.SimJoin
       .jaccardCandidates(docs, "doc_id", "source", "sh", 0.5)
       .withColumn("jaccard",
         expr("CAST(inter AS DOUBLE) / (la + lb - inter)"))
       .filter(col("jaccard") >= 0.5)
-      .select(col("ida").as("doc_a"), col("idb").as("doc_b"), col("jaccard")))
-      .orderBy("doc_a", "doc_b")
+      .select(col("ida").as("doc_a"), col("idb").as("doc_b"), col("jaccard")),
+      "doc_a", "doc_b")
   }
 
   val qNgramJaccardSql: String =
@@ -553,15 +562,13 @@ object Pipeline {
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
         expr("graft_shingles64(text, 2)").as("sh"))
-    // checkpoint before the declared ORDER BY (r20) — same sampling
-    // re-execution cut as qNgramJaccard
-    stableCheckpoint(graft.operators.SimJoin
+    sortedOutput(graft.operators.SimJoin
       .containmentCandidates(docs, "doc_id", "source", "sh", 0.3)
       .withColumn("containment", expr("CAST(inter AS DOUBLE) / la"))
       .filter(col("containment") >= 0.3)
       .select(col("ida").as("doc_a"), col("idb").as("doc_b"),
-        col("containment")))
-      .orderBy("doc_a", "doc_b")
+        col("containment")),
+      "doc_a", "doc_b")
   }
 
   val qContainmentSql: String =
@@ -979,16 +986,10 @@ object Pipeline {
   // min hash per window, distinct mins) — the standard rolling-hash
   // sampling used for plagiarism-style containment detection.
   def qFingerprint(s: SparkSession, d: String): DataFrame =
-    // checkpoint BEFORE the declared ORDER BY (r20): the range
-    // partitioner's sampling job re-executes its child, so the
-    // grams+winnow kernel ran TWICE per query — BlindSpotProbe
-    // measured the kernel scan at 0.38 s vs 1.01 s end-to-end at
-    // sf0.1; the barrier makes the sampling pass read materialized
-    // rows instead (guide §1/§2: don't compute things twice).
-    stableCheckpoint(Tables.documents(s, d)
+    sortedOutput(Tables.documents(s, d)
       .select(col("doc_id"),
-        explode(expr("graft_winnow(graft_grams32(text, 8), 4)")).as("fingerprint")))
-      .orderBy("doc_id", "fingerprint")
+        explode(expr("graft_winnow(graft_grams32(text, 8), 4)")).as("fingerprint")),
+      "doc_id", "fingerprint")
 
   val qFingerprintSql: String =
     s"""WITH g AS (

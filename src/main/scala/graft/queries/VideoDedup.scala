@@ -193,16 +193,13 @@ object VideoDedup {
     val rare = all.groupBy("fsig").agg(count(lit(1)).as("df"))
       .filter(col("df") <= MaxSigDf).select("fsig")
     val sigs = all.join(rare, "fsig")
-    // checkpoint before the declared ORDER BY (r20): the range
-    // sampling job re-executes its child — guard + pair join + agg
-    // ran twice per query
-    Pipeline.stableCheckpoint(
+    Pipeline.sortedOutput(
       sigs.as("a").join(sigs.as("b"),
           col("a.fsig") === col("b.fsig") && col("a.doc_id") < col("b.doc_id"))
         .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
         .agg(count(lit(1)).as("shared_frames"))
-        .filter(col("shared_frames") >= MinShared))
-      .orderBy("doc_a", "doc_b")
+        .filter(col("shared_frames") >= MinShared),
+      "doc_a", "doc_b")
   }
 
   def qVideoDedup(s: SparkSession, d: String): DataFrame =
@@ -225,10 +222,7 @@ object VideoDedup {
     * sigs within TolDist, each individually rare) is bounded by the
     * band-bucket volume the sigPairs join already pays, same as P52. */
   private[graft] def sharedFramePairsTol(all: DataFrame): DataFrame =
-    // checkpoint before the ORDER BY: the range sampling job would
-    // re-execute the whole banded pair core (r20)
-    Pipeline.stableCheckpoint(sharedFramePairsTolUnordered(all))
-      .orderBy("doc_a", "doc_b")
+    Pipeline.sortedOutput(sharedFramePairsTolUnordered(all), "doc_a", "doc_b")
 
   /** [[sharedFramePairsTol]] without the final ORDER BY — the
     * keep-list path ([[clusterKeepBySet]]) feeds these pairs straight

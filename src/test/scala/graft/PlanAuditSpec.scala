@@ -1,6 +1,9 @@
 package graft
 
 import graft.queries.{Genomic, Pipeline, Relational}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 /** Explain audits (I5): the plans we ship are the plans we want —
   * filters reach the parquet scan, projections prune columns, small
@@ -583,5 +586,94 @@ class PlanAuditSpec extends SparkSpec {
     // per-partition heaps need no pre-shuffle: the only exchange is
     // none at all (TakeOrdered reduces driver-side over partitions)
     assert(!plan.contains("Exchange"), plan)
+  }
+
+  // the declared ORDER BY over a join/verify pipeline goes through
+  // Pipeline.sortedOutput: the keys and their sort columns
+  private val sortedOutputKeys = Seq(
+    "q_dedup_minhash" -> Seq("doc_a", "doc_b"),
+    "q_ngram_jaccard" -> Seq("doc_a", "doc_b"),
+    "q_containment" -> Seq("doc_a", "doc_b"),
+    "q_fingerprint" -> Seq("doc_id", "fingerprint"),
+    "q_winnow_overlap" -> Seq("doc_a", "doc_b"),
+    "q_simhash_hamming" -> Seq("doc_a", "doc_b"),
+    "q_simhash_hamming_count" -> Seq("dist"),
+    "q_video_dedup" -> Seq("doc_a", "doc_b"),
+    "q_video_dedup_tol" -> Seq("doc_a", "doc_b"))
+
+  test("sorted-output queries build lazily: no checkpoint job before the ORDER BY") {
+    // a build may start Spark's parquet schema read, and the
+    // stableCheckpoint of each decision frame the query consumes
+    // several times (the signature frames, the tolerant guard list);
+    // a checkpoint in front of the sort would add one more job
+    val decisionFrames = Map("q_simhash_hamming" -> 1, "q_simhash_hamming_count" -> 1,
+      "q_video_dedup" -> 1, "q_video_dedup_tol" -> 2).withDefaultValue(0)
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(e.stageInfos.map(_.name).mkString("; ")))
+    }
+    // listener delivery is asynchronous: bracket the build between two
+    // marker jobs and wait until the closing one has been delivered
+    def marker(name: String): Unit = {
+      sc.setJobDescription(name)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      eventually(timeout(30.seconds), interval(20.millis)) {
+        assert(seen.contains(name))
+      }
+    }
+    sc.addSparkListener(listener)
+    try sortedOutputKeys.foreach { case (key, _) =>
+      marker(s"before $key")
+      seen.clear()
+      SparkEntry.queries(key)(spark, sf)
+      marker(s"after $key")
+      val jobs = seen.toArray(Array.empty[String]).toSeq
+      assert(jobs.last == s"after $key", jobs)
+      val built = jobs.init
+      val checkpoints = built.count(_.contains("heckpoint at "))
+      assert(checkpoints == decisionFrames(key),
+        s"$key ran $checkpoints checkpoint jobs while building: $built")
+      if (decisionFrames(key) == 0)
+        assert(built.forall(_.startsWith("parquet at ")),
+          s"$key started Spark jobs while building its DataFrame: $built")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("sorted-output queries keep a hash barrier on the sort keys under the range exchange") {
+    // the range partitioner's sampling job re-executes the segment
+    // between the range exchange and the next exchange below it: that
+    // segment must be a straight pipeline off a hash exchange on the
+    // sort keys — sortedOutput's REPARTITION_BY_COL exchange, or, where
+    // EnsureRequirements drops that one as redundant, the exchange of a
+    // final aggregate grouped by the sort keys
+    def names(exprs: String): Seq[String] =
+      """(\w+)#\d+""".r.findAllMatchIn(exprs).map(_.group(1)).toSeq
+    def after(line: String, open: String): String =
+      line.substring(line.indexOf(open) + open.length)
+    sortedOutputKeys.foreach { case (key, keys) =>
+      val plan = planOf(SparkEntry.queries(key)(spark, sf))
+      val lines = plan.linesIterator.toIndexedSeq
+      val at = lines.indexWhere(_.contains("Exchange rangepartitioning("))
+      assert(at >= 0, s"$key has no range exchange:\n$plan")
+      assert(names(after(lines(at), "rangepartitioning(")) == keys,
+        s"$key range-partitions on other keys:\n$plan")
+      val segment = lines.drop(at + 1).takeWhile(!_.contains("Exchange "))
+      assert(segment.forall(l => !l.trim.startsWith(":-") && !l.contains("Join") &&
+        !l.contains("Scan")), s"$key re-executes a join or scan to sample its sort:\n$plan")
+      val barrier = lines.lift(at + 1 + segment.size).getOrElse("")
+      assert(barrier.contains("Exchange hashpartitioning("), s"$key has no hash barrier:\n$plan")
+      val hashKeys = names(after(barrier, "hashpartitioning(").split(", \\d+\\)")(0))
+      val onSortKeys = barrier.contains("REPARTITION_BY_COL") && hashKeys == keys
+      val groupedBySortKeys = segment.exists { l =>
+        l.contains("HashAggregate(keys=[") &&
+          names(after(l, "keys=[").takeWhile(_ != ']')) == hashKeys &&
+          names(after(l, "output=[")).take(keys.size) == keys
+      }
+      assert(onSortKeys || groupedBySortKeys,
+        s"$key hash barrier is not on the sort keys:\n$plan")
+    }
   }
 }
