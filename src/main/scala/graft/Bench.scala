@@ -427,9 +427,19 @@ object Bench {
                                      warmMin: Double): Boolean =
     retry >= warmMin && burstSuspect(prev = retry, med = first)
 
+  /** `SPARK_GRAFT_PROBE_GATE` (shared with StreamBench): unset = no
+    * gate; a non-number or a value <= 0 fails fast instead of
+    * silently switching the gate off. */
+  private[graft] def parseProbeGate(v: Option[String]): Option[Double] =
+    v.map { s =>
+      s.toDoubleOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_PROBE_GATE must be a positive number, got '$s'"))
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val probeGate = parseProbeGate(sys.env.get("SPARK_GRAFT_PROBE_GATE"))
     val spark = GraftSession.configure(
       SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -461,8 +471,7 @@ object Bench {
     // window only burns the round's wall clock.  Opt-in: unattended
     // driver runs keep measuring (a suspect artifact still carries
     // information), retry loops set the gate.
-    sys.env.get("SPARK_GRAFT_PROBE_GATE")
-      .flatMap(g => scala.util.Try(g.toDouble).toOption).foreach { gate =>
+    probeGate.foreach { gate =>
         val pfx = sys.env.get("SPARK_GRAFT_BENCH_OUT")
           .map(p => java.nio.file.Paths.get(p).getFileName.toString)
           .map(_.replaceAll("""_?r?\d+\.json$""", "_"))

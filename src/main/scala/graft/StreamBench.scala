@@ -160,6 +160,7 @@ object StreamBench {
     // a "_pN" suffix so anchor lookups never cross-compare regimes,
     // and the output line records shuffle_partitions either way.
     val streamParts = parseStreamParts(sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE_PARTS"))
+    val probeGate = Bench.parseProbeGate(sys.env.get("SPARK_GRAFT_PROBE_GATE"))
     streamParts.foreach(p =>
       spark.conf.set("spark.sql.shuffle.partitions", p.toString))
     val shufflePartsNow = spark.conf.get("spark.sql.shuffle.partitions").toInt
@@ -198,8 +199,7 @@ object StreamBench {
     val regimeLine: Option[String => Boolean] =
       Some(_.contains(s""""regime":"${esc(regimeNow)}""""))
 
-    sys.env.get("SPARK_GRAFT_PROBE_GATE")
-      .flatMap(g => scala.util.Try(g.toDouble).toOption).foreach { gate =>
+    probeGate.foreach { gate =>
         for {
           (file, _, _, prevParOpt) <- Bench.prevProbeAnchor(
             """STREAMBENCH.*_r(\d+)\.json""", "SPARK_GRAFT_PREV_STREAMBENCH",

@@ -239,9 +239,9 @@ object FormatBench {
       timedRead(label, nSite.toLong)(
         BcfIO.read(spark, bcfFile, columns = cols).count())
     val bFull = breadN("bcf_cohort_full", Nil)
-    // r16 (the §6.r15 bimodality watch item, settled by BcfModeProbe
-    // + an in-situ code-cache A/B): fresh JVMs converge to ~35-45k
-    // rec/s by rep 3 (plain JIT warm-up, BCFMODEPROBE_r16), but THIS
+    // r16 (the §6.r15 bimodality watch item, settled by an in-situ
+    // code-cache A/B): fresh JVMs converge to ~35-45k rec/s by rep 3
+    // (plain JIT warm-up, BCFMODEPROBE_r16), but THIS
     // long-lived bench JVM stays at ~9k even after six reads
     // (bcf_full_warmup 1.00x) — the default ReservedCodeCacheSize is
     // exhausted by ~25 earlier codegen-heavy phases, so the BCF decode

@@ -34,8 +34,8 @@ object Skew {
     * partitions whose rows all TIE on the key — with a pair key the
     * 8-byte radix prefix covers only `key`, so every comparison falls
     * back to the record comparator for the salt; the packed single
-    * column radix-sorts through (SkewProbe at sf1, 50% hot:
-    * slowest-task 1.76s pair vs 1.10s packed on identical balance).
+    * column radix-sorts through (SKEWPROBE_r12.json at sf1, 50% hot:
+    * slowest task 2.19s pair vs 0.99s packed on identical balance).
     * Exact whenever `key * nSalts + salt` doesn't wrap, i.e. |key| <
     * 2⁶³/nSalts — every realistic ID domain; use [[saltedJoin]] for
     * adversarial key ranges. */

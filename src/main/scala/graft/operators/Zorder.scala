@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton) layout writer — the user-facing form of the
-  * capability q_zorder_layout models and graft.ZorderProbe measures
-  * (12.4× less I/O on 2-D probes at sf1): rewrite a table so parquet
+  * capability q_zorder_layout models (12.4× less I/O on 2-D probes
+  * at sf1, ZORDERPROBE_r12.json): rewrite a table so parquet
   * row-group min/max statistics become selective on EVERY clustering
   * dimension at once, turning multi-dim range predicates into
   * row-group/file skipping with no index structure to maintain
@@ -104,5 +104,53 @@ object Zorder {
     require(fs.rename(src, dst),
       s"compact: rename $tmp -> $path failed; original preserved at $old")
     fs.delete(old, true)
+  }
+
+  /** Layout evidence for a local parquet directory against a d-dim
+    * rectangle: (row groups, candidate row groups, candidate files,
+    * files).  A row group is a candidate when its footer min/max box
+    * intersects EVERY (col, lo, hi) range — exactly the statistics
+    * test the parquet reader prunes on; a dim without statistics
+    * cannot prune and keeps the row group a candidate. */
+  def footerAuditDims(dir: String, ranges: Seq[(String, Long, Long)]):
+      (Int, Int, Int, Int) = {
+    import scala.jdk.CollectionConverters._
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val files = new java.io.File(dir).listFiles()
+      .filter(f => f.getName.endsWith(".parquet") && f.length() > 0)
+      .sortBy(_.getName)
+    var rgTotal = 0; var rgCand = 0; var fCand = 0
+    files.foreach { f =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf)
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try {
+        var fileHit = false
+        reader.getFooter.getBlocks.asScala.foreach { b =>
+          rgTotal += 1
+          def range(col: String): Option[(Long, Long)] =
+            b.getColumns.asScala
+              .find(_.getPath.toDotString == col)
+              .flatMap { c =>
+                val st = c.getStatistics
+                if (st == null || !st.hasNonNullValue) None
+                else Some((st.genericGetMin, st.genericGetMax) match {
+                  case (mn: java.lang.Integer, mx: java.lang.Integer) =>
+                    (mn.longValue, mx.longValue)
+                  case (mn: java.lang.Long, mx: java.lang.Long) =>
+                    (mn.longValue, mx.longValue)
+                  case other =>
+                    throw new IllegalStateException(s"unexpected stats $other")
+                })
+              }
+          val hit = ranges.forall { case (colName, lo, hi) =>
+            range(colName).forall { case (mn, mx) => mx >= lo && mn <= hi }
+          }
+          if (hit) { rgCand += 1; fileHit = true }
+        }
+        if (fileHit) fCand += 1
+      } finally reader.close()
+    }
+    (rgTotal, rgCand, fCand, files.length)
   }
 }

@@ -316,12 +316,6 @@ object RankedLimitRule extends Rule[LogicalPlan]
     with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
   import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
 
-  /** Kill switch (default on) — exists so the shuffle-bytes A/B probe
-    * can measure the pushdown's effect on the same jar. */
-  private def enabled: Boolean =
-    SQLConf.get.getConfString("spark.graft.ranked.limitPushdown", "true")
-      .equalsIgnoreCase("true")
-
   private val MaxPushedLimit = 1000000L // beyond this the map-side state
                                         // (k rows per group) stops being small
 
@@ -419,7 +413,7 @@ object RankedLimitRule extends Rule[LogicalPlan]
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case f @ Filter(cond, r: RankedPrefixSum) if enabled && r.limit.isEmpty =>
+    case f @ Filter(cond, r: RankedPrefixSum) if r.limit.isEmpty =>
       val chain = chainOf(r)
       if (!chain.forall(n => n.kinds.nonEmpty && n.kinds.forall(prunable)) ||
         limitedBelow(chain.last)) f

@@ -255,8 +255,8 @@ object Analytics {
   // (and replicating the small side per salt) must change nothing but
   // the shuffle layout.  This is the tool for the pathological key
   // AQE's skew split can't rebalance.  r12: the PACKED single-key
-  // form — SkewProbe measured the (key, salt) pair join paying a
-  // record-comparator fallback on the 100%-tied key radix prefix
+  // form — SKEWPROBE_r12.json measured the (key, salt) pair join
+  // paying a record-comparator fallback on the 100%-tied key prefix
   // (slowest task 2.19s vs 0.99s packed at identical balance);
   // suppkey is integral so the packing contract holds trivially.
   def qSkewJoin(s: SparkSession, d: String): DataFrame = {

@@ -859,14 +859,14 @@ object CorpusStats {
   // single window is itself unique.
   private val dupW = 5
 
-  /** The positioned exact-shingle stream (doc_id, pos, s) — shared by
-    * the span construction and by DupSubstrProbe's strategy A/B.
-    * graft_word_shingles is the fused zero-copy kernel for the SQL
-    * spelling `transform(sequence(0, size(toks) - W), i ->
+  /** The positioned exact-shingle stream (doc_id, pos, s) that the
+    * span construction reads.  graft_word_shingles is the fused
+    * zero-copy kernel for the SQL spelling
+    * `transform(sequence(0, size(toks) - W), i ->
     * concat_ws(' ', slice(toks, i + 1, W)))` (parity spec-pinned on
     * adversarial inputs); short docs yield the empty array, so no
     * size filter is needed. */
-  private[graft] def shingleStream(s: SparkSession, d: String): DataFrame =
+  private def shingleStream(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .select(col("doc_id"),
         posexplode(expr(s"graft_word_shingles(text, $dupW)")).as(Seq("pos", "s")))
@@ -883,10 +883,10 @@ object CorpusStats {
     // storage, and the one-pass `COUNT OVER (PARTITION BY s)` form
     // buffers every occurrence of a hot shingle in one task (exactly
     // the boilerplate-text key a 100 TB corpus is full of; measured
-    // by DupSubstrProbe — see §6.r12).  The recompute is scan+explode
-    // CPU only — embarrassingly parallel, zero extra shuffle — and
-    // the semi-join stays skew-immune because its right side carries
-    // at most ONE row per shingle.
+    // in DUPSUBSTRPROBE_r12.json — see §6.r12).  The recompute is
+    // scan+explode CPU only — embarrassingly parallel, zero extra
+    // shuffle — and the semi-join stays skew-immune because its right
+    // side carries at most ONE row per shingle.
     //
     // The SHJ hint is measured, not stylistic (DUPSUBSTRPROBE_r12):
     // default SMJ SORTS the shingle stream, and on a hot boilerplate

@@ -20,7 +20,7 @@ object Genomic {
   /** Default swap point for [[qRangeCount]]'s distributed-ranking
     * form (`spark.graft.ranked.rangeCountMinBytes`), against the
     * PHYSICAL bytes of the query's two parquet inputs (lineitem +
-    * part: 11.0 MB at sf0.1, 113 MB at sf1 — RangeCountStatsProbe).
+    * part: 11.0 MB at sf0.1, 113 MB at sf1).
     * The measured window→ranked crossover is ≈ sf0.2 (r9: window
     * 2.13s vs ranked 2.39s at sf0.1, 8.61s vs 4.02s at sf1), i.e.
     * ~2× the sf0.1 input — 22 MB.  File size, not optimizer stats:
@@ -28,7 +28,7 @@ object Genomic {
     * per query build and cost ~0.2s/run at sf0.1 (measured in the r20
     * ABBA), while a FileSystem length lookup is sub-ms and equally
     * deterministic. */
-  private[graft] val RangeCountRankedMinBytes: String = "22000000"
+  private val RangeCountRankedMinBytes: String = "22000000"
 
   /** Physical length of the parquet inputs the ranked swap gates on. */
   private def inputBytes(s: SparkSession, paths: String*): Long =

@@ -214,23 +214,13 @@ object Packing {
     * collapsed to a single symbol — ADVICE r10), the loop stops and
     * returns the merges learned so far. */
   private[graft] def learnMerges(s: SparkSession, d: String, batch: Int = 1,
-                                 rounds: Int = BpeRounds): Seq[(Long, String, String, Long)] =
-    learnMergesCounted(s, d, batch, rounds)._1
-
-  /** [[learnMerges]] plus the COUNTED number of driver collect rounds
-    * actually executed — including a final round that came back empty
-    * (pair supply ran dry), which ceil(n_merges/batch) would miss
-    * (ADVICE r11: count the loop, don't derive it). */
-  private[graft] def learnMergesCounted(s: SparkSession, d: String, batch: Int = 1,
-                                        rounds: Int = BpeRounds): (Seq[(Long, String, String, Long)], Int) = {
+                                 rounds: Int = BpeRounds): Seq[(Long, String, String, Long)] = {
     require(batch >= 1, s"batch must be >= 1, got $batch")
     var v = vocab(s, d).transform(Pipeline.stableCheckpoint)
     val merges = Seq.newBuilder[(Long, String, String, Long)]
     var step = 0
-    var collects = 0
     var dry = false
     while (step < rounds && !dry) {
-      collects += 1
       // the size guard runs on the CHECKPOINTED frame — a free probe
       // of a materialized column (see the pairCounts precondition)
       val top = pairCounts(v.filter(size(col("syms")) >= 2))
@@ -252,7 +242,7 @@ object Packing {
       }
     }
     v.unpersist()
-    (merges.result(), collects)
+    merges.result()
   }
 
   /** One round of greedy left-to-right non-overlapping merge

@@ -150,15 +150,6 @@ object Pipeline {
     componentLabels(s, minhashPairs(s, d).select("doc_a", "doc_b"))
       .orderBy("doc_id")
 
-  /** Connected components over a verified (doc_a, doc_b) pair graph:
-    * (doc_id, cluster_id = min reachable doc_id), unordered.  The ONE
-    * spelling of distributed min-label propagation — P2b built it for
-    * text near-dup pairs; the r16 media keep-lists
-    * ([[ImageDedup.qImageClusterKeep]], [[AudioDedup]]) run the same
-    * loop over their banded-hamming pair output (VERDICT r15 item 4:
-    * dedup must END in a keep-list, not a pair list).  Only docs that
-    * appear in at least one pair get a label — singletons are their
-    * own keeper by definition and never enter the loop. */
   /** Lineage-truncating materialization for the bounded per-doc /
     * per-sig DECISION frames that one query consumes several times
     * (signature frames, CC loop state): executor-local checkpoint by
@@ -191,15 +182,15 @@ object Pipeline {
   private[graft] def sortedOutput(df: DataFrame, cols: String*): DataFrame =
     df.repartition(cols.map(col): _*).orderBy(cols.map(col): _*)
 
-  /** Rounds the most recent [[componentLabels]] call took — probe
-    * telemetry (CcSkewProbe), not part of any query result.  Shared
-    * last-writer-wins slot: queries that run CC loops on CONCURRENT
-    * driver threads (qReleaseFilterMedia) overwrite it to the
-    * sentinel -2 after joining, so a reader never sees one racing
-    * loop's value masquerading as the query's (ADVICE r18; the probe
-    * itself runs one query at a time and is unaffected). */
-  @volatile private[graft] var lastCcRounds: Int = -1
-
+  /** Connected components over a verified (doc_a, doc_b) pair graph:
+    * (doc_id, cluster_id = min reachable doc_id), unordered.  The ONE
+    * spelling of distributed min-label propagation — P2b built it for
+    * text near-dup pairs; the r16 media keep-lists
+    * ([[ImageDedup.qImageClusterKeep]], [[AudioDedup]]) run the same
+    * loop over their banded-hamming pair output (VERDICT r15 item 4:
+    * dedup must END in a keep-list, not a pair list).  Only docs that
+    * appear in at least one pair get a label — singletons are their
+    * own keeper by definition and never enter the loop. */
   private[graft] def componentLabels(s: SparkSession, pairs: DataFrame): DataFrame = {
     // checkpoint (not persist): truncates lineage so each propagation
     // round's logical plan is just edges⋈labels — with plain persist
@@ -237,18 +228,10 @@ object Pipeline {
     // ~50 B/node.  Above the cap (a 100 TB corpus's sig graph can be
     // billions of edges) the O(log diameter) distributed loop below is
     // the path, unchanged.  spark.graft.cc.localEdgeThreshold=0 forces
-    // the loop (the skew and convergence probes measure IT, not the
-    // fast path).
+    // the loop (CcHybridSpec pins both paths to the same labels).
     val localCap = s.conf.get("spark.graft.cc.localEdgeThreshold", "2000000").toLong
     val nEdges = edges.count()
     if (nEdges <= localCap) {
-      lastCcRounds = 0 // telemetry: 0 = driver fast path took it
-      // same overlap-provable log convention as the loop rounds below:
-      // at bench scale BOTH release-filter CC calls land here, so the
-      // fast path must leave interleavable timestamps too
-      if (sys.env.contains("SPARK_GRAFT_CC_LOG")) System.err.println(
-        s"[cc] fastpath edges=$nEdges thread=${Thread.currentThread().getName} " +
-          s"t_start_ms=${System.currentTimeMillis()}")
       val parent = new java.util.HashMap[Long, Long]()
       def find(x: Long): Long = {
         var r = x
@@ -274,9 +257,6 @@ object Pipeline {
       val nodes = parent.keySet.asScala.toSeq ++
         parent.values.asScala.toSeq // roots that never re-keyed
       val labelRows = nodes.distinct.map(n => (n, find(n)))
-      if (sys.env.contains("SPARK_GRAFT_CC_LOG")) System.err.println(
-        s"[cc] fastpath done nodes=${labelRows.size} " +
-          s"thread=${Thread.currentThread().getName} t_end_ms=${System.currentTimeMillis()}")
       import s.implicits._
       return labelRows.toDF("doc_id", "cluster_id")
     }
@@ -287,12 +267,7 @@ object Pipeline {
     var labels = cached
     var converged = false
     var rounds = 0
-    // per-round diagnostics (rounds × wall is the loop's entire cost
-    // model — see SURVEY §6.r17): set SPARK_GRAFT_CC_LOG=1 to emit one
-    // stderr line per round; read by CcProbe, silent otherwise
-    val ccLog = sys.env.contains("SPARK_GRAFT_CC_LOG")
     while (!converged && rounds < 64) {
-      val tRound = System.nanoTime()
       // ONE aggregation per round, three branches unioned into it:
       //   self — carries each doc's previous label as `old`, so the
       //     convergence check needs no second join (old is null on the
@@ -354,19 +329,11 @@ object Pipeline {
       labels = next.select("doc", "label")
       converged = changed == 0
       rounds += 1
-      if (ccLog) System.err.println(
-        f"[cc] round=$rounds wall_ms=${(System.nanoTime() - tRound) / 1e6}%.0f changed=${changed > 0} " +
-          // thread + absolute end-time let a reader prove two CONCURRENT
-          // loops' rounds interleaved (VERDICT r18 item 6: the release
-          // filter runs its image and audio CC loops on two driver
-          // threads; overlap is a claim until the log shows it)
-          s"thread=${Thread.currentThread().getName} t_end_ms=${System.currentTimeMillis()}")
     }
     // partially-propagated labels are WRONG components, not an
     // approximation — fail loudly rather than return them
     if (!converged) throw new IllegalStateException(
       s"connected-components label propagation did not converge in $rounds rounds")
-    lastCcRounds = rounds
     // truncate the RETURNED frame's lineage too: the loop has already
     // executed eagerly (each round's count), so consumers should plan
     // against the materialized result, not the unrolled round history
@@ -1026,7 +993,7 @@ object Pipeline {
     * consumer (MLlib's Lloyd caches its vectors for the same reason);
     * c1 is persisted because the profile consumes it twice (broadcast
     * + the a2 subtree). */
-  private[graft] def kmeansState(s: SparkSession, d: String, k: Int = KmeansK)
+  private def kmeansState(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val q = Tables.embeddings(s, d)
       .select(col("vec_id"), expr(
@@ -1055,7 +1022,7 @@ object Pipeline {
         .groupBy("cell")
         .agg(expr("transform(array_sort(collect_list(struct(d, v))), e -> e.v)").as("c"))
 
-    val c0 = q.filter(col("vec_id") < k)
+    val c0 = q.filter(col("vec_id") < KmeansK)
       .select(col("vec_id").as("cell"), col("qv").as("c"))
     val c1 = update(assign(c0)).persist()
     (q, c1, assign(c1))
@@ -1188,14 +1155,8 @@ object Pipeline {
   // correctly-rounded IEEE expressions identical on both engines).
   private val SemTau = "0.45"
 
-  def qSemDedup(s: SparkSession, d: String): DataFrame = semDedupAt(s, d, KmeansK)
-
-  /** qSemDedup with a parameterized cell count — the k ∝ n scale knob
-    * (SemDeDup §3: clusters grow with the corpus so Σ|cell|² pair
-    * work stays near-linear).  The gated query pins k = 8 for the
-    * fixed-k oracle; [[graft.SemDedupProbe]] measures this form. */
-  private[graft] def semDedupAt(s: SparkSession, d: String, k: Int): DataFrame = {
-    val (q, _, a2) = kmeansState(s, d, k)
+  def qSemDedup(s: SparkSession, d: String): DataFrame = {
+    val (q, _, a2) = kmeansState(s, d)
     // one small (vec_id, cell, qv) frame feeds BOTH self-join sides:
     // without the checkpoint each side re-runs the full two-iteration
     // Lloyd assignment subtree
@@ -1564,9 +1525,6 @@ object Pipeline {
     val imgDrop = Await.result(fImg, Duration.Inf)
     val audDrop = Await.result(fAud, Duration.Inf)
     val txtGates = Await.result(fTxt, Duration.Inf)
-    // the loops raced their writes to the shared telemetry slot —
-    // leave a deterministic sentinel, not whichever finished last
-    lastCcRounds = -2
     txtGates
       .join(imgDrop.withColumn("img_dup", lit(1)), Seq("doc_id"), "left")
       .join(audDrop.withColumn("aud_dup", lit(1)), Seq("doc_id"), "left")

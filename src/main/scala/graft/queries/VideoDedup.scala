@@ -250,7 +250,7 @@ object VideoDedup {
     *    duplicated work hid under a Union, not an Exchange, so
     *    exchange reuse never deduped it).
     */
-  private[graft] def sharedFramePairsTolUnordered(all: DataFrame): DataFrame = {
+  private def sharedFramePairsTolUnordered(all: DataFrame): DataFrame = {
     val uniq = Pipeline.stableCheckpoint(
       all.groupBy("fsig").agg(count(lit(1)).as("df"))
         .filter(col("df") <= MaxSigDf).select(col("fsig").as("sig")))

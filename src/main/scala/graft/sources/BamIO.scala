@@ -488,26 +488,18 @@ object BamIO {
     * merges (stream concat) and emits the index. */
   def write(ds: Dataset[SamRecord], header: SamHeader, file: String,
             granularity: Int = 1000): Unit = {
-    val spark = ds.sparkSession
     val (fs, path) = Fs.get(file)
     val tmpDir = new Path(path.getParent, "." + path.getName + ".shards")
     fs.mkdirs(tmpDir)
     val refIdx = header.refs.map(_.name).zipWithIndex.toMap
     val tmpDirStr = tmpDir.toString
-    // in-stream pipelined deflate (opt-in): pays off when this stage
-    // runs FEWER write tasks than the executor has idle cores — the
-    // classic coalesce(1) final export; default 0 = synchronous, since
-    // a full-width write stage already saturates deflate across tasks
-    val deflateWorkers = spark.conf.getOption("spark.graft.bgzf.write.workers")
-      .map(_.toInt).getOrElse(0)
 
     // each task: shard BGZF + local index entries (vo relative to shard)
     val shardInfo = ds.rdd.mapPartitionsWithIndex { (pid, it) =>
       Iterator.single(writeShard(it, new Path(tmpDirStr, f"part-$pid%05d.bam"),
-        refIdx, granularity, pid, deflateWorkers))
+        refIdx, granularity, pid))
     }.collect().sortBy(_.pid)
     mergeShardInfo(file, header, tmpDirStr, shardInfo, granularity)
-    val _ = spark
   }
 
   /** One task's shard + its local (shard-relative) index entries —
@@ -518,8 +510,8 @@ object BamIO {
 
   private[sources] def writeShard(it: Iterator[SamRecord], shardPath: Path,
                                   refIdx: Map[String, Int], granularity: Int,
-                                  pid: Int, deflateWorkers: Int = 0): ShardInfo = {
-    val w = new ShardWriter(shardPath, refIdx, granularity, pid, deflateWorkers)
+                                  pid: Int): ShardInfo = {
+    val w = new ShardWriter(shardPath, refIdx, granularity, pid)
     try { it.foreach(w.write); w.finish() }
     catch { case e: Throwable => w.abort(); throw e }
   }
@@ -528,24 +520,22 @@ object BamIO {
     * the partition in memory), shared by [[writeShard]] and the
     * DataSource V2 sink's per-row writes. */
   private[sources] final class ShardWriter(shardPath: Path, refIdx: Map[String, Int],
-                                           granularity: Int, pid: Int,
-                                           deflateWorkers: Int = 0) {
+                                           granularity: Int, pid: Int) {
     private val out = {
       val (tfs, _) = Fs.get(shardPath.toString)
-      new Bgzf.BgzfOutputStream(tfs.create(shardPath, true),
-        workers = deflateWorkers)
+      new Bgzf.BgzfOutputStream(tfs.create(shardPath, true))
     }
-    // (blockIndex, refId, pos0): resolved to virtual offsets at finish
-    // so index markers never drain the (possibly pipelined) deflate
-    private val pending = new ArrayBuffer[(Int, Int, Int)]()
+    // (shard-relative virtual offset, refId, pos0) per indexed record
+    private val entries = new ArrayBuffer[(Long, Int, Int)]()
     private var n = 0L
     private var count = 0L
     private var maxSpan = 0
 
     def write(rec: SamRecord): Unit = {
       if (n % granularity == 0) {
-        // align indexed records to block starts, offset resolved later
-        pending += ((out.markBoundary(),
+        // align indexed records to block starts
+        out.blockBoundary()
+        entries += ((Bgzf.virtualOffset(out.compressedOffset, 0),
           refIdx.get(rec.rname).getOrElse(-1), rec.pos - 1))
       }
       if (rec.pos > 0) {
@@ -562,9 +552,6 @@ object BamIO {
     def finish(): ShardInfo = {
       out.blockBoundary()
       val shardLen = out.compressedOffset
-      val entries = pending.map { case (bi, refId, pos0) =>
-        (Bgzf.virtualOffset(out.offsetOfBlock(bi), 0), refId, pos0)
-      }
       out.closeWithoutTerminator()
       ShardInfo(pid, shardLen, count, entries.toArray, maxSpan)
     }

@@ -652,8 +652,7 @@ object BcfIO {
     * nothing buffers the partition), shared by [[write]] and the
     * DataSource V2 sink's per-row writes (v2.BcfWriterFactory). */
   private[graft] final class ShardWriter(shardPath: String, dicts: Dicts,
-                                         granularity: Int, pid: Int,
-                                         deflateWorkers: Int = 0) {
+                                         granularity: Int, pid: Int) {
     private val contigIdx = dicts.contigs.zipWithIndex.toMap
     // record ints index the SHARED string table (BCF2 spec), matching
     // the IDX= attributes headerText emits
@@ -663,11 +662,10 @@ object BcfIO {
       if (dicts.fmtKeys.isEmpty) Map.empty[String, Int] else dicts.stringIdx
     private val out = {
       val (tfs, tp) = Fs.get(shardPath)
-      new Bgzf.BgzfOutputStream(tfs.create(tp, true), workers = deflateWorkers)
+      new Bgzf.BgzfOutputStream(tfs.create(tp, true))
     }
-    // (blockIndex, refId, pos0) - resolved to offsets at shard end so
-    // index markers never drain the (possibly pipelined) deflate
-    private val pending = scala.collection.mutable.ArrayBuffer[(Int, Int, Int)]()
+    // (shard-relative virtual offset, refId, pos0) per indexed record
+    private val entries = scala.collection.mutable.ArrayBuffer[(Long, Int, Int)]()
     private var n = 0L
     // track (refId, pos) monotonicity + max record span so the
     // driver can mark the sidecar interval-prunable (maxSpan >= 0)
@@ -680,7 +678,8 @@ object BcfIO {
 
     def write(v: VcfVariant): Unit = {
       if (n % granularity == 0) {
-        pending += ((out.markBoundary(),
+        out.blockBoundary()
+        entries += ((Bgzf.virtualOffset(out.compressedOffset, 0),
           contigIdx.getOrElse(v.chrom, -1), v.pos.toInt - 1))
       }
       val key = (contigIdx.getOrElse(v.chrom, -1), v.pos.toInt - 1)
@@ -707,9 +706,6 @@ object BcfIO {
     def finish(): ShardInfo = {
       out.blockBoundary()
       val shardLen = out.compressedOffset
-      val entries = pending.map { case (bi, refId, pos0) =>
-        (Bgzf.virtualOffset(out.offsetOfBlock(bi), 0), refId, pos0)
-      }
       out.closeWithoutTerminator()
       ShardInfo(pid, shardLen, entries.toArray, sorted,
         Option(firstKey), Option(lastKey), maxSpan)
@@ -778,13 +774,9 @@ object BcfIO {
     val tmpDir = new org.apache.hadoop.fs.Path(path.getParent, "." + path.getName + ".shards")
     fs.mkdirs(tmpDir)
     val tmpDirStr = tmpDir.toString
-    // opt-in per-stream pipelined deflate (see BamIO.write): wins only
-    // when this stage runs fewer write tasks than idle cores
-    val deflateWorkers = ds.sparkSession.conf
-      .getOption("spark.graft.bgzf.write.workers").map(_.toInt).getOrElse(0)
     val shardInfo = ds.rdd.mapPartitionsWithIndex { (pid, it) =>
       val shardPath = new org.apache.hadoop.fs.Path(tmpDirStr, f"part-$pid%05d.bcf")
-      val w = new ShardWriter(shardPath.toString, dicts, granularity, pid, deflateWorkers)
+      val w = new ShardWriter(shardPath.toString, dicts, granularity, pid)
       try { it.foreach(w.write); Iterator.single(w.finish()) }
       catch { case e: Throwable => w.abort(); throw e }
     }.collect().sortBy(_.pid).toSeq

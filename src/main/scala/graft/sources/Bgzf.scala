@@ -186,64 +186,16 @@ object Bgzf {
     * Flushes a block whenever the uncompressed buffer reaches
     * `blockSize`; `blockBoundary()` forces one (used by writers that
     * must align records to block starts for the splitting index). */
-  /** BGZF block writer.  `workers > 1` turns on PIPELINED deflate: a
-    * bounded queue of filled blocks fans out to a worker pool while
-    * the stream thread keeps filling — 3-5× single-stream throughput
-    * when cores are idle (DeflateProbe).  Blocks are written strictly
-    * in order, so the byte stream is identical to the synchronous
-    * path.  `blockBoundary()` drains all in-flight blocks before
-    * returning, so `compressedOffset` keeps its contract (exact right
-    * after a boundary) and index sidecars are unaffected.
-    *
-    * Default stays synchronous: a Spark write stage usually runs as
-    * many shard-writer tasks as the executor has cores, which already
-    * saturates deflate; in-stream workers pay off for UNDER-
-    * parallelized stages — the classic `coalesce(1)` final export. */
   final class BgzfOutputStream(raw: OutputStream, level: Int = 6,
-                               blockSize: Int = 0xff00,
-                               workers: Int = 0) extends OutputStream {
+                               blockSize: Int = 0xff00) extends OutputStream {
     require(blockSize <= 0xff00, "BGZF uncompressed block payload must be < 64KiB")
     private val buf = new Array[Byte](blockSize)
     private var n = 0
     private var coffset = 0L
 
-    private val pool =
-      if (workers > 1)
-        java.util.concurrent.Executors.newFixedThreadPool(workers,
-          new java.util.concurrent.ThreadFactory {
-            def newThread(r: Runnable): Thread = {
-              val t = new Thread(r, "bgzf-deflate"); t.setDaemon(true); t
-            }
-          })
-      else null
-    private val inFlight =
-      new java.util.ArrayDeque[java.util.concurrent.Future[Array[Byte]]]()
-    // compressed start offset of every block written so far — lets a
-    // boundary be MARKED without draining the pipeline (deferred
-    // resolution via offsetOfBlock once the stream is drained)
-    private val blockStarts = new scala.collection.mutable.ArrayBuffer[Long]()
-    private var blocksEnqueued = 0
-
     /** Compressed offset of the block that the NEXT written byte will
       * start (valid right after blockBoundary()/construction). */
     def compressedOffset: Long = coffset
-    def pendingBytes: Int = n
-
-    /** Mark a block boundary WITHOUT draining the deflate pipeline:
-      * returns the index of the block the next byte will start, to be
-      * resolved with [[offsetOfBlock]] after a draining boundary
-      * (blockBoundary/close).  This is what keeps index-granularity
-      * markers from serializing the pipelined writer. */
-    def markBoundary(): Int = {
-      if (n > 0) flushBlock()
-      blocksEnqueued
-    }
-
-    /** Compressed start offset of block `i` — valid once every block
-      * up to `i` has been physically written (after blockBoundary()/
-      * close()). */
-    def offsetOfBlock(i: Int): Long =
-      if (i < blockStarts.length) blockStarts(i) else coffset
 
     override def write(b: Int): Unit = {
       buf(n) = b.toByte
@@ -261,45 +213,17 @@ object Bgzf {
       }
     }
 
-    def blockBoundary(): Unit = {
-      if (n > 0) flushBlock()
-      drainAll()
-    }
+    def blockBoundary(): Unit = if (n > 0) flushBlock()
 
     private def flushBlock(): Unit = {
-      if (pool == null) {
-        blockStarts += coffset
-        coffset += writeBlockTo(raw, buf, 0, n, level)
-      } else {
-        val copy = java.util.Arrays.copyOf(buf, n)
-        // bound in-flight memory to ~2 blocks per worker
-        while (inFlight.size >= workers * 2) drainOne()
-        inFlight.add(pool.submit(new java.util.concurrent.Callable[Array[Byte]] {
-          def call(): Array[Byte] = {
-            val b = new java.io.ByteArrayOutputStream(copy.length / 2 + 64)
-            writeBlockTo(b, copy, 0, copy.length, level)
-            b.toByteArray
-          }
-        }))
-      }
-      blocksEnqueued += 1
+      coffset += writeBlockTo(raw, buf, 0, n, level)
       n = 0
     }
 
-    private def drainOne(): Unit = {
-      val b = inFlight.poll().get()
-      blockStarts += coffset
-      raw.write(b)
-      coffset += b.length
-    }
-
-    private def drainAll(): Unit = while (!inFlight.isEmpty) drainOne()
-
-    override def flush(): Unit = { drainAll(); raw.flush() }
+    override def flush(): Unit = raw.flush()
 
     override def close(): Unit = {
       blockBoundary()
-      if (pool != null) pool.shutdown()
       raw.write(EofMarker)
       raw.flush()
       raw.close()
@@ -310,7 +234,6 @@ object Bgzf {
       * one terminator at the very end, ref: SAMOutputPreparer). */
     def closeWithoutTerminator(): Unit = {
       blockBoundary()
-      if (pool != null) pool.shutdown()
       raw.flush()
       raw.close()
     }

@@ -18,6 +18,17 @@ class BenchProtocolSpec extends AnyFunSuite {
     }
   }
 
+  test("parseProbeGate fails fast on a malformed or non-positive value") {
+    assert(Bench.parseProbeGate(None).isEmpty)
+    assert(Bench.parseProbeGate(Some("1.15")).contains(1.15))
+    assert(Bench.parseProbeGate(Some("2")).contains(2.0))
+    Seq("1.15x", "", "abc", "1,15", "0", "-1.2", "NaN").foreach { bad =>
+      val e = intercept[IllegalArgumentException](Bench.parseProbeGate(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_PROBE_GATE"), bad)
+      assert(e.getMessage.contains(s"'$bad'"), bad)
+    }
+  }
+
   test("parseQueryMedians extracts the queries map and nothing else") {
     val json =
       """{"metric":"total","value":12.5,"unit":"sec",""" +

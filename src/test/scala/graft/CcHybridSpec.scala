@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.LogicalRDD
 
 import graft.queries.Pipeline
 
@@ -13,13 +15,15 @@ import graft.queries.Pipeline
   * reachable doc over the symmetric closure. */
 class CcHybridSpec extends SparkSpec {
 
-  private def labels(pairs: Seq[(Long, Long)], cap: String): Map[Long, Long] = {
+  private def labelFrame(pairs: Seq[(Long, Long)], cap: String): DataFrame = {
     import spark.implicits._
     spark.conf.set("spark.graft.cc.localEdgeThreshold", cap)
     try Pipeline.componentLabels(spark, pairs.toDF("doc_a", "doc_b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     finally spark.conf.unset("spark.graft.cc.localEdgeThreshold")
   }
+
+  private def labels(pairs: Seq[(Long, Long)], cap: String): Map[Long, Long] =
+    labelFrame(pairs, cap).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("driver union-find equals the distributed loop on chains, cliques and dup edges") {
     // a 40-deep chain (pointer-jump territory), a 5-clique, an
@@ -37,11 +41,16 @@ class CcHybridSpec extends SparkSpec {
   }
 
   test("the fast path reports rounds=0 and the loop reports its round count") {
+    // the returned frame shows which path the cap selected: the driver
+    // union-find hands back its labels as a local relation, the loop
+    // its checkpointed final round
     val pairs = Seq((1L, 2L), (2L, 3L))
-    labels(pairs, cap = "1000000")
-    assert(Pipeline.lastCcRounds === 0)
-    labels(pairs, cap = "0")
-    assert(Pipeline.lastCcRounds > 0)
+    val fast = labelFrame(pairs, cap = "1000000").queryExecution.analyzed
+    assert(fast.collectLeaves().map(_.getClass) === Seq(classOf[LocalRelation]),
+      fast.treeString)
+    val loop = labelFrame(pairs, cap = "0").queryExecution.analyzed
+    assert(loop.collectLeaves().map(_.getClass) === Seq(classOf[LogicalRDD]),
+      loop.treeString)
   }
 
   test("an empty pair frame yields an empty label frame on both paths") {

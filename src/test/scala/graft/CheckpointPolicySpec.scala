@@ -37,6 +37,26 @@ class CheckpointPolicySpec extends SparkSpec {
     }
   }
 
+  test("reliable stableCheckpoint evaluates its child once per input row") {
+    // the eager reliable checkpoint computes its RDD in the one job that
+    // writes the checkpoint files; a second pass over an uncached child
+    // (a count, then the write) would run every row twice
+    import org.apache.spark.sql.functions.{col, udf}
+    val sc = spark.sparkContext
+    val evals = sc.longAccumulator("stableCheckpoint_child_evals")
+    val counted = udf { (x: Long) => evals.add(1); x }.asNondeterministic()
+    val df = spark.range(0, 1000, 1, 4).select(counted(col("id")).as("x"))
+    sc.setCheckpointDir(tmpDir("graft_ckpt_once"))
+    try {
+      val out = Pipeline.stableCheckpoint(df)
+      assert(out.count() === 1000L)
+      assert(evals.sum === 1000L, "the child ran more than once per row")
+    } finally {
+      sc.setCheckpointDir(null)
+      spark.catalog.clearCache()
+    }
+  }
+
   test("stableCheckpoint helper picks the configured mode") {
     import spark.implicits._
     val df = Seq(1L, 2L).toDF("x")

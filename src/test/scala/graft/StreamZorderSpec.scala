@@ -10,7 +10,7 @@ case class ZDoc(doc_id: Long, n_chars: Long, n_tok: Long, payload: String)
 /** Streaming z-order ingest + compaction (I4 × P63): every
   * micro-batch appends z-clustered files, compaction restores the
   * global layout.  Evidence is the parquet footers themselves
-  * (ZorderProbe.footerAuditDims — the exact statistics the reader
+  * (Zorder.footerAuditDims — the exact statistics the reader
   * prunes on), not just row counts. */
 class StreamZorderSpec extends SparkSpec {
 
@@ -50,7 +50,7 @@ class StreamZorderSpec extends SparkSpec {
 
     val rect = Seq(("n_chars", 100L, 200L), ("n_tok", 300L, 400L))
     val (rgPreTotal, rgPreCand, fPreCand, fPreTotal) =
-      ZorderProbe.footerAuditDims(path, rect)
+      Zorder.footerAuditDims(path, rect)
     assert(fPreTotal === 8)
     // every batch spans the full value space, so the rectangle finds
     // candidates in several per-batch z-runs
@@ -76,7 +76,7 @@ class StreamZorderSpec extends SparkSpec {
     // smaller candidate fraction — global clustering beats 4
     // overlapping per-batch clusterings
     val (rgPostTotal, rgPostCand, fPostCand, fPostTotal) =
-      ZorderProbe.footerAuditDims(path, rect)
+      Zorder.footerAuditDims(path, rect)
     assert(fPostTotal === 4)
     assert(rgPostCand < rgPreCand,
       s"compaction must tighten row-group candidates: $rgPreCand -> $rgPostCand")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
+import graft.operators.Zorder
 import graft.queries.Packing
 
 /** P63 Z-order layout: kernel bit semantics (interleave/deinterleave
@@ -10,6 +11,26 @@ import graft.queries.Packing
   * itself — on the real corpus, 2-D range probes must touch strictly
   * fewer z-ordered files than doc_id-ordered files. */
 class ZorderSpec extends SparkSpec {
+
+  /** `byid` and `byz` parquet layouts of the sf0.01 documents as
+    * (doc_id, n_chars, n_tok, text, z) under `base` — `nFiles`
+    * range-partitioned sorted files, small block size so files carry
+    * several row groups (text kept for realistic row-group weight). */
+  private def writeLayouts(base: String, nFiles: Int, blockKiB: Int): Unit = {
+    val frame = Tables.documents(spark, "/root/testdata/sf0.01")
+      .select(col("doc_id"), col("n_chars").cast("bigint").as("n_chars"),
+        expr(graft.queries.Corpus.tokCount).as("n_tok"), col("text"))
+      .withColumn("z", expr("graft_zorder64(n_chars, n_tok)"))
+    Seq("byid" -> Seq(col("doc_id")),
+        "byz" -> Seq(col("z"), col("doc_id"))).foreach { case (name, sortCols) =>
+      frame
+        .repartitionByRange(nFiles, sortCols: _*)
+        .sortWithinPartitions(sortCols: _*)
+        .write.option("parquet.block.size", (blockKiB * 1024).toString)
+        .option("parquet.page.size", (16 * 1024).toString)
+        .mode("overwrite").parquet(s"$base/$name")
+    }
+  }
 
   private def refMorton(a: Long, b: Long): Long = {
     var z = 0L
@@ -98,14 +119,14 @@ class ZorderSpec extends SparkSpec {
     // statistics the reader prunes on), and run the filtered scans.
     val base = java.nio.file.Files.createTempDirectory("zspec").toString
     try {
-      ZorderProbe.writeLayouts(spark, "/root/testdata/sf0.01", base,
-        nFiles = 10, blockKiB = 16)
+      writeLayouts(base, nFiles = 10, blockKiB = 16)
       val probes = Seq((0L, 200L, 0L, 40L), (200L, 400L, 30L, 70L),
         (100L, 300L, 10L, 50L))
       var idCand = 0; var zCand = 0
       probes.foreach { case (cLo, cHi, tLo, tHi) =>
-        val (_, idRg, _, _) = ZorderProbe.footerAudit(s"$base/byid", cLo, cHi, tLo, tHi)
-        val (_, zRg, _, _) = ZorderProbe.footerAudit(s"$base/byz", cLo, cHi, tLo, tHi)
+        val rect = Seq(("n_chars", cLo, cHi), ("n_tok", tLo, tHi))
+        val (_, idRg, _, _) = Zorder.footerAuditDims(s"$base/byid", rect)
+        val (_, zRg, _, _) = Zorder.footerAuditDims(s"$base/byz", rect)
         assert(zRg <= idRg, s"probe ($cLo,$cHi,$tLo,$tHi): z=$zRg id=$idRg")
         idCand += idRg; zCand += zRg
         // and the engine agrees with itself: identical filtered rows
@@ -137,7 +158,7 @@ class ZorderSpec extends SparkSpec {
         .selectExpr("doc_id", "n_chars",
           "CAST(size(filter(split(text, ' '), t -> t <> '')) AS BIGINT) AS n_tok",
           "(doc_id * 37) % 1000 AS bucket", "text")
-      graft.operators.Zorder.writeZOrdered(df,
+      Zorder.writeZOrdered(df,
         Seq("n_chars", "n_tok", "bucket"), s"$base/z3", files = 10, blockKiB = 16)
       df.repartitionByRange(10, col("doc_id")).sortWithinPartitions("doc_id")
         .write.option("parquet.block.size", (16 * 1024).toString)
@@ -149,8 +170,8 @@ class ZorderSpec extends SparkSpec {
         Seq(("n_chars", 200L, 500L), ("n_tok", 30L, 90L), ("bucket", 300L, 700L)))
       var zC = 0; var idC = 0
       probes.foreach { p =>
-        val (_, z, _, _) = ZorderProbe.footerAuditDims(s"$base/z3", p)
-        val (_, id, _, _) = ZorderProbe.footerAuditDims(s"$base/byid", p)
+        val (_, z, _, _) = Zorder.footerAuditDims(s"$base/z3", p)
+        val (_, id, _, _) = Zorder.footerAuditDims(s"$base/byid", p)
         assert(z <= id, s"$p: z=$z id=$id")
         zC += z; idC += id
         def rows(dir: String) = {

@@ -146,25 +146,62 @@ class BamSpec extends SparkSpec {
     }
   }
 
-  test("pipelined deflate writes byte-identical files and indexes") {
+  /** (refId, pos0) stored in the record that starts at virtual offset
+    * `vo`: the two int32s after `skip` bytes of length prefix (BAM:
+    * block_size; BCF: l_shared + l_indiv). */
+  private def keyAt(file: String, vo: Long, skip: Int): (Int, Int) = {
+    val (fs, p) = Fs.get(file)
+    val raw = fs.open(p)
+    raw.seek(Bgzf.voCompressed(vo))
+    val in = new Bgzf.BgzfInputStream(raw, Bgzf.voCompressed(vo))
+    try {
+      in.seekInBlock(Bgzf.voUncompressed(vo))
+      val b = new Array[Byte](skip + 8)
+      new java.io.DataInputStream(in).readFully(b)
+      val bb = java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      (bb.getInt(skip), bb.getInt(skip + 4))
+    } finally in.close()
+  }
+
+  test("splitting-index entries name their records (BAM and BCF, 3 shards)") {
     import spark.implicits._
-    val dir = tmpDir("bam_pipe")
-    val sync = s"$dir/sync.bam"
-    val pipe = s"$dir/pipe.bam"
-    val ds = spark.createDataset(sorted).coalesce(1)
-    BamIO.write(ds, header, sync, granularity = 50)
-    spark.conf.set("spark.graft.bgzf.write.workers", "8")
-    try BamIO.write(ds, header, pipe, granularity = 50)
-    finally spark.conf.unset("spark.graft.bgzf.write.workers")
-    // blocks are written strictly in order, so the BYTES are identical
-    val a = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(sync))
-    val b = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(pipe))
-    assert(java.util.Arrays.equals(a, b), "pipelined BGZF bytes differ")
-    val (fs, ps) = Fs.get(sync)
-    val (_, pp) = Fs.get(pipe)
-    val ia = SplittingIndex.read(fs, SplittingIndex.indexPath(ps)).get
-    val ib = SplittingIndex.read(fs, SplittingIndex.indexPath(pp)).get
-    assert(ia.entries.toSeq === ib.entries.toSeq, "index entries differ")
+    val dir = tmpDir("sidx_keys")
+    val g = 16
+    // every shard's entries are its records 0, g, 2g, ... in write order
+    def expected[T](shards: Array[Array[T]])(key: T => (Int, Int)): Seq[(Int, Int)] =
+      shards.toSeq.flatMap(sh => sh.indices.by(g).map(i => key(sh(i))))
+    def check(file: String, want: Seq[(Int, Int)], skip: Int): Unit = {
+      val (fs, p) = Fs.get(file)
+      val idx = SplittingIndex.read(fs, SplittingIndex.indexPath(p)).get
+      assert(idx.granularity === g)
+      assert(idx.entries.map(e => (e.refId, e.pos)).toSeq === want, file)
+      idx.entries.foreach { e =>
+        assert(Bgzf.voUncompressed(e.vo) === 0, s"$file: entry not block-aligned")
+        assert(keyAt(file, e.vo, skip) === ((e.refId, e.pos)), s"$file @ ${e.vo}")
+      }
+    }
+
+    val refIdx = header.refs.map(_.name).zipWithIndex.toMap
+    val bamRdd = spark.sparkContext.parallelize(sorted, 3)
+    val bamShards = bamRdd.glom().collect()
+    assert(bamShards.length === 3 && bamShards.forall(_.length > g))
+    val bam = s"$dir/t.bam"
+    BamIO.write(spark.createDataset(bamRdd), header, bam, granularity = g)
+    check(bam, expected(bamShards)(r => (refIdx(r.rname), r.pos - 1)), skip = 4)
+
+    val dicts = BcfIO.Dicts(Array("c1", "c2"), Array("PASS"), Array("DP"))
+    val variants = (0 until 300).map { i =>
+      graft.model.VcfVariant(if (i < 150) "c1" else "c2", 10L + (i % 150) * 7, s"v$i",
+        if (i % 29 == 0) "A" * 300 else "A", Array("C"), Some(9.0), "PASS",
+        Array("DP"), Array(s"${i % 70}"), Array.empty, Array.empty)
+    }
+    val bcfRdd = spark.sparkContext.parallelize(variants, 3)
+    val bcfShards = bcfRdd.glom().collect()
+    assert(bcfShards.length === 3 && bcfShards.forall(_.length > g))
+    val bcf = s"$dir/t.bcf"
+    BcfIO.write(spark.createDataset(bcfRdd), dicts, bcf, granularity = g)
+    check(bcf, expected(bcfShards)(v => (dicts.contigs.indexOf(v.chrom), v.pos.toInt - 1)),
+      skip = 8)
   }
 
   test("read honors small split sizes (multi-range) identically") {

@@ -4,7 +4,7 @@
 Settles whether the r12 sf1 movers (q_ann_ivf_mp 1.7-2x etc., in files
 git-diff says did NOT change) are real regressions or ambient window
 drift: build the r11-verdict and r12-verdict jars, then run the suspect
-queries ALTERNATING jar-by-jar inside ONE window (the SkewProbe
+queries ALTERNATING jar-by-jar inside ONE window (the SKEWPROBE_r12
 methodology — cross-window comparisons are confounded by the measured
 1.1-1.2x host drift; see memory/bench-window-drift).
 

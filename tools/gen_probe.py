@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Generate the 100x scale-probe tables under /tmp/probe100x.
 
-The driver testdata tops out at sf0.1; graft.Probe runs the gated
+The committed test tables top out at sf0.1; graft.Bench runs the gated
 queries against this synthetic set to check the 100x scaling story
 (SURVEY.md par.6 records the numbers):
 
@@ -10,7 +10,7 @@ queries against this synthetic set to check the 100x scaling story
   - documents:  sf0.1 documents x10 with fresh doc_ids (dup-dense)
 
 Usage: python3 tools/gen_probe.py [outdir] [sfdir]
-Then:  sbt "runMain graft.Probe /tmp/probe100x q_retention q_funnel ..."
+Then:  SPARK_GRAFT_SF_DIR=/tmp/probe100x sbt "runMain graft.Bench q_retention q_funnel ..."
 """
 import os
 import sys
