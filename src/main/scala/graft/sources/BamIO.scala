@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException}
+import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException, OutputStream}
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -25,19 +25,50 @@ object Fs {
     (path.getFileSystem(conf), path)
   }
 
-  /** Byte-concatenate a shard directory's part-* files into `out` in
-    * name order — the single merge primitive every sharded writer
-    * (SAM/BAM/FASTQ/VCF/BCF) funnels through. */
-  def concatParts(fs: FileSystem, shardDir: Path, out: java.io.OutputStream): Unit = {
-    val parts = fs.listStatus(shardDir).map(_.getPath)
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+  /** Path of partition `pid`'s committed shard under `dir`. */
+  def partPath(dir: String, pid: Int, ext: String): Path = new Path(dir, f"part-$pid%05d.$ext")
+
+  /** Byte-concatenate `parts` into `out` in order — the single merge
+    * primitive every sink (BAM, BCF, CRAM, SAM, FASTQ, QSEQ, VCF)
+    * funnels its committed shards through.  A missing part fails the
+    * merge. */
+  def concatParts(fs: FileSystem, parts: Seq[Path], out: OutputStream): Unit = {
     val buf = new Array[Byte](1 << 20)
     parts.foreach { p =>
       val in = fs.open(p)
-      var r = in.read(buf)
-      while (r > 0) { out.write(buf, 0, r); r = in.read(buf) }
-      in.close()
+      try {
+        var r = in.read(buf)
+        while (r > 0) { out.write(buf, 0, r); r = in.read(buf) }
+      } finally in.close()
     }
+  }
+
+  /** Sidecar indexes a reader may pick up beside a data file. */
+  private val Sidecars = Seq(".sidx", ".bai", ".csi", ".tbi", ".crai")
+
+  /** The one driver commit of every sink: `merge` writes the whole
+    * file into a temp sibling of `target`; only once it returns are
+    * the target's sidecar indexes deleted, the temp moved over the
+    * target, and `index` run with the merge's result to write the
+    * sidecars this format produces.  A failed merge removes the temp
+    * and leaves the target and its indexes as they were; a crash after
+    * the move leaves a complete file with no index. */
+  def commitFile[A](target: String)(merge: OutputStream => A)(index: A => Unit): Unit = {
+    val (fs, path) = get(target)
+    val tmp = new Path(path.getParent, s".${path.getName}.${java.util.UUID.randomUUID}.tmp")
+    val merged =
+      try {
+        val out = new BufferedOutputStream(fs.create(tmp, true))
+        try merge(out) finally out.close()
+      } catch { case e: Throwable => fs.delete(tmp, false); throw e }
+    Sidecars.foreach(s => fs.delete(new Path(path.getParent, path.getName + s), false))
+    // HDFS rename does not overwrite
+    if (fs.exists(path)) fs.delete(path, false)
+    if (!fs.rename(tmp, path)) {
+      fs.delete(tmp, false)
+      throw new java.io.IOException(s"could not move the merged file into place at $target")
+    }
+    index(merged)
   }
 }
 
@@ -88,6 +119,35 @@ object SplittingIndex {
   }
 
   def indexPath(bam: Path): Path = new Path(bam.getParent, bam.getName + ".sidx")
+
+  /** Driver merge of header-less BGZF shards (BAM, BCF) through
+    * [[Fs.commitFile]]: `header` as BGZF blocks + the
+    * `part-<pid>.<ext>` shards under `tmpDir` in the given order + the
+    * EOF terminator, then the v2 sidecar, each shard's entries shifted
+    * by the compressed bytes before it.  `shards` = (pid, compressed
+    * length, shard-relative (vo, refId, pos0) entries). */
+  private[sources] def mergeShards(file: String, header: Array[Byte], tmpDir: String,
+                                   ext: String,
+                                   shards: Seq[(Int, Long, Array[(Long, Int, Int)])],
+                                   granularity: Int, maxSpan: Int): Unit = {
+    val (fs, path) = Fs.get(file)
+    Fs.commitFile(file) { out =>
+      var coffset = Bgzf.writeBlocksTo(out, header, 0, header.length)
+      val entries = shards.flatMap { case (_, len, es) =>
+        val base = coffset
+        coffset += len
+        es.toSeq.map { case (vo, refId, pos) =>
+          Entry(Bgzf.virtualOffset(Bgzf.voCompressed(vo) + base, Bgzf.voUncompressed(vo)),
+            refId, pos)
+        }
+      }
+      Fs.concatParts(fs, shards.map(s => Fs.partPath(tmpDir, s._1, ext)), out)
+      out.write(Bgzf.EofMarker)
+      (entries, Bgzf.virtualOffset(coffset, 0))
+    } { case (entries, endVo) =>
+      write(fs, indexPath(path), granularity, entries, endVo, maxSpan)
+    }
+  }
 }
 
 /** Distributed BAM read/write (S3-S5).
@@ -100,11 +160,16 @@ object SplittingIndex {
   * its [startVo, endVo) range.  Boundaries are computed once centrally,
   * so neighbors can never disagree about record ownership.
   *
-  * Write path: each partition writes a header-less BGZF shard +
-  * returns its local splitting-index entries; the driver concatenates
-  * header + shards + EOF terminator (BGZF concatenation is valid) and
-  * shifts the index entries — the reference's SAMFileMerger.java:32
-  * shape without a second pass over the data.
+  * Write path: [[write]] is the `format("bam")` batch write
+  * (v2.GraftDataSinks) with the header in memory.  Each task attempt
+  * streams a header-less BGZF shard + its local splitting-index
+  * entries into its own attempt file, renamed into place on task
+  * commit; the driver commit ([[Fs.commitFile]]) concatenates header +
+  * shards + EOF terminator (BGZF concatenation is valid) into a temp
+  * sibling, shifting the index entries, drops the target's old
+  * sidecars, moves the temp over the target and writes the new
+  * `.sidx` — the reference's SAMFileMerger.java:32 shape without a
+  * second pass over the data.
   */
 object BamIO {
 
@@ -438,9 +503,11 @@ object BamIO {
       }
     }
 
-  /** Coordinate-sort (range partition on (refIdx, pos) — balanced
-    * writers, no single-task sort) and write with an SO:coordinate
-    * header (ref: util/GetSortedBAMHeader.java + sorted write path).
+  /** Coordinate order for a write: range partition on (refIdx, pos) —
+    * balanced writers, no single-task sort — then sort within
+    * partitions (ref: util/GetSortedBAMHeader.java + sorted write
+    * path).  Shared by [[writeSorted]] and `Sam.writeSorted`; records
+    * with equal (ref, pos) come out in no particular order.
     *
     * The sort key is ONE packed long, `refIdx·2^32 + (pos + 2^31)` —
     * unlike the ranked packed PREFIX this is an injective,
@@ -453,8 +520,8 @@ object BamIO {
     * long keeps the whole sort in the radix/prefix path and the
     * range exchange samples one word per row.  Kill switch shared
     * with the ranked packing: `spark.graft.ranked.packedSortPrefix`. */
-  def writeSorted(ds: Dataset[SamRecord], header: SamHeader, file: String,
-                  granularity: Int = 1000): Unit = {
+  private[sources] def coordinateSorted(ds: Dataset[SamRecord],
+                                        header: SamHeader): Dataset[SamRecord] = {
     import org.apache.spark.sql.functions._
     val spark = ds.sparkSession
     import spark.implicits._
@@ -463,7 +530,7 @@ object BamIO {
     val refIdx = coalesce(orderMap(col("rname")), lit(Int.MaxValue))
     val packed = spark.conf
       .getOption("spark.graft.ranked.packedSortPrefix").forall(_.equalsIgnoreCase("true"))
-    val sorted = (if (packed) {
+    (if (packed) {
       ds.toDF()
         .withColumn("_pk",
           refIdx.cast("long") * lit(4294967296L) +
@@ -478,47 +545,31 @@ object BamIO {
         .sortWithinPartitions(col("_refIdx"), col("pos"))
         .drop("_refIdx")
     }).as[SamRecord]
-    write(sorted, header.asCoordinateSorted, file, granularity)
   }
+
+  /** Coordinate-sort ([[coordinateSorted]]) and write with an
+    * SO:coordinate header. */
+  def writeSorted(ds: Dataset[SamRecord], header: SamHeader, file: String,
+                  granularity: Int = 1000): Unit =
+    write(coordinateSorted(ds, header), header.asCoordinateSorted, file, granularity)
 
   // --------------------------------------------------------------- write
 
-  /** Write `ds` as a single BAM file + sidecar splitting index.
-    * Partition tasks write header-less shards in parallel; the driver
-    * merges (stream concat) and emits the index. */
+  /** Write `ds` as a single BAM file + sidecar splitting index: the
+    * `format("bam")` batch write with `header` in memory. */
   def write(ds: Dataset[SamRecord], header: SamHeader, file: String,
-            granularity: Int = 1000): Unit = {
-    val (fs, path) = Fs.get(file)
-    val tmpDir = new Path(path.getParent, "." + path.getName + ".shards")
-    fs.mkdirs(tmpDir)
-    val refIdx = header.refs.map(_.name).zipWithIndex.toMap
-    val tmpDirStr = tmpDir.toString
+            granularity: Int = 1000): Unit =
+    v2.GraftDataSinks.overwrite(ds, new v2.BamTable(v2.GraftDataSinks.at(file), Some(header)),
+      Map("granularity" -> granularity.toString))
 
-    // each task: shard BGZF + local index entries (vo relative to shard)
-    val shardInfo = ds.rdd.mapPartitionsWithIndex { (pid, it) =>
-      Iterator.single(writeShard(it, new Path(tmpDirStr, f"part-$pid%05d.bam"),
-        refIdx, granularity, pid))
-    }.collect().sortBy(_.pid)
-    mergeShardInfo(file, header, tmpDirStr, shardInfo, granularity)
-  }
-
-  /** One task's shard + its local (shard-relative) index entries —
-    * shared by the typed writer and the DataSource V2 sink. */
+  /** One task's shard + its local (shard-relative) index entries. */
   final case class ShardInfo(pid: Int, shardLen: Long, count: Long,
                              entries: Array[(Long, Int, Int)], maxSpan: Int)
     extends Serializable
 
-  private[sources] def writeShard(it: Iterator[SamRecord], shardPath: Path,
-                                  refIdx: Map[String, Int], granularity: Int,
-                                  pid: Int): ShardInfo = {
-    val w = new ShardWriter(shardPath, refIdx, granularity, pid)
-    try { it.foreach(w.write); w.finish() }
-    catch { case e: Throwable => w.abort(); throw e }
-  }
-
   /** Incremental shard writer (one record at a time — nothing buffers
-    * the partition in memory), shared by [[writeShard]] and the
-    * DataSource V2 sink's per-row writes. */
+    * the partition in memory), driven by the DataSource V2 sink's
+    * per-row writes. */
   private[sources] final class ShardWriter(shardPath: Path, refIdx: Map[String, Int],
                                            granularity: Int, pid: Int) {
     private val out = {
@@ -561,40 +612,16 @@ object BamIO {
       catch { case _: java.io.IOException => () }
   }
 
-  /** Driver-side merge: header block + shards in pid order + EOF
-    * terminator, shifting each shard's index entries by the bytes
-    * before it; writes the v2 sidecar index. */
+  /** Driver-side merge: header block + the shards in pid order + EOF
+    * terminator, then the v2 sidecar index
+    * ([[SplittingIndex.mergeShards]]). */
   private[sources] def mergeShardInfo(file: String, header: SamHeader,
-                                      tmpDirStr: String, shardInfo: Seq[ShardInfo],
+                                      tmpDir: String, shardInfo: Seq[ShardInfo],
                                       granularity: Int): Unit = {
-    val (fs, path) = Fs.get(file)
-    val tmpDir = new Path(tmpDirStr)
-    val out = new BufferedOutputStream(fs.create(path, true))
     val headerBuf = new ByteArrayOutputStream()
     BamCodec.writeHeader(headerBuf, header)
-    val headerBytes = headerBuf.toByteArray
-    var coffset = 0L
-    coffset += Bgzf.writeBlocksTo(out, headerBytes, 0, headerBytes.length)
-    val allEntries = new ArrayBuffer[SplittingIndex.Entry]()
-    shardInfo.foreach { si =>
-      si.entries.foreach { case (vo, refId, pos) =>
-        allEntries += SplittingIndex.Entry(Bgzf.virtualOffset(Bgzf.voCompressed(vo) + coffset,
-          Bgzf.voUncompressed(vo)), refId, pos)
-      }
-      val shardPath = new Path(tmpDirStr, f"part-${si.pid}%05d.bam")
-      val sin = fs.open(shardPath)
-      val buf = new Array[Byte](1 << 20)
-      var r = sin.read(buf)
-      while (r > 0) { out.write(buf, 0, r); r = sin.read(buf) }
-      sin.close()
-      coffset += si.shardLen
-    }
-    val endVo = Bgzf.virtualOffset(coffset, 0)
-    out.write(Bgzf.EofMarker)
-    out.close()
-    fs.delete(tmpDir, true)
-    val fileMaxSpan = if (shardInfo.isEmpty) 0 else shardInfo.map(_.maxSpan).max
-    SplittingIndex.write(fs, SplittingIndex.indexPath(path), granularity,
-      allEntries.toSeq, endVo, fileMaxSpan)
+    SplittingIndex.mergeShards(file, headerBuf.toByteArray, tmpDir, "bam",
+      shardInfo.map(si => (si.pid, si.shardLen, si.entries)), granularity,
+      if (shardInfo.isEmpty) 0 else shardInfo.map(_.maxSpan).max)
   }
 }

@@ -649,8 +649,8 @@ object BcfIO {
       extends Serializable
 
   /** Incremental header-less BCF shard writer (one record at a time -
-    * nothing buffers the partition), shared by [[write]] and the
-    * DataSource V2 sink's per-row writes (v2.BcfWriterFactory). */
+    * nothing buffers the partition), driven by the DataSource V2
+    * sink's per-row writes (v2.BcfWriterFactory). */
   private[graft] final class ShardWriter(shardPath: String, dicts: Dicts,
                                          granularity: Int, pid: Int) {
     private val contigIdx = dicts.contigs.zipWithIndex.toMap
@@ -716,13 +716,13 @@ object BcfIO {
       catch { case _: Throwable => () }
   }
 
-  /** Driver-side commit: header + shard concat (offset-shifted index
-    * entries) + EOF + v2 sidecar splitting index.  Shards are
-    * `part-<pid>.bcf` files under `tmpDirStr`, deleted afterwards. */
+  /** Driver-side merge: header + the shards in pid order + EOF, then
+    * the v2 sidecar splitting index ([[SplittingIndex.mergeShards]]),
+    * interval-prunable (maxSpan >= 0) exactly when the file is
+    * coordinate-sorted. */
   private[graft] def mergeShardInfo(file: String, dicts: Dicts,
-                                    tmpDirStr: String, shardInfo: Seq[ShardInfo],
+                                    tmpDir: String, shardInfo: Seq[ShardInfo],
                                     granularity: Int): Unit = {
-    val (fs, path) = Fs.get(file)
     val nonEmpty = shardInfo.filter(_.firstKey.nonEmpty)
     val fileSorted = nonEmpty.forall(_.sorted) &&
       nonEmpty.sliding(2).forall {
@@ -735,7 +735,6 @@ object BcfIO {
     val fileMaxSpan =
       if (fileSorted) nonEmpty.map(_.maxSpan).foldLeft(0)(math.max) else -1
 
-    val out = new java.io.BufferedOutputStream(fs.create(path, true))
     val headerBuf = new ByteArrayOutputStream()
     val o = new DataOutputStream(headerBuf)
     o.write(Bcf.Magic)
@@ -744,44 +743,16 @@ object BcfIO {
     o.write((ht.length >> 16) & 0xff); o.write((ht.length >> 24) & 0xff)
     o.write(ht)
     o.flush()
-    var coffset = 0L
-    coffset += Bgzf.writeBlocksTo(out, headerBuf.toByteArray, 0, headerBuf.size())
-    val allEntries = scala.collection.mutable.ArrayBuffer[SplittingIndex.Entry]()
-    shardInfo.foreach { si =>
-      si.entries.foreach { case (vo, refId, pos) =>
-        allEntries += SplittingIndex.Entry(
-          Bgzf.virtualOffset(Bgzf.voCompressed(vo) + coffset, Bgzf.voUncompressed(vo)),
-          refId, pos)
-      }
-      val shardPath = new org.apache.hadoop.fs.Path(tmpDirStr, f"part-${si.pid}%05d.bcf")
-      val sin = fs.open(shardPath)
-      val buf = new Array[Byte](1 << 20)
-      var r = sin.read(buf)
-      while (r > 0) { out.write(buf, 0, r); r = sin.read(buf) }
-      sin.close()
-      coffset += si.shardLen
-    }
-    out.write(Bgzf.EofMarker)
-    out.close()
-    fs.delete(new org.apache.hadoop.fs.Path(tmpDirStr), true)
-    SplittingIndex.write(fs, SplittingIndex.indexPath(path), granularity,
-      allEntries.toSeq, Bgzf.virtualOffset(coffset, 0), fileMaxSpan)
+    SplittingIndex.mergeShards(file, headerBuf.toByteArray, tmpDir, "bcf",
+      shardInfo.map(si => (si.pid, si.shardLen, si.entries)), granularity, fileMaxSpan)
   }
 
+  /** Write `ds` as one BCF + sidecar splitting index: the
+    * `format("bcf")` batch write with `dicts` in memory. */
   def write(ds: org.apache.spark.sql.Dataset[VcfVariant], dicts: Dicts,
-            file: String, granularity: Int = 1000): Unit = {
-    val (fs, path) = Fs.get(file)
-    val tmpDir = new org.apache.hadoop.fs.Path(path.getParent, "." + path.getName + ".shards")
-    fs.mkdirs(tmpDir)
-    val tmpDirStr = tmpDir.toString
-    val shardInfo = ds.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val shardPath = new org.apache.hadoop.fs.Path(tmpDirStr, f"part-$pid%05d.bcf")
-      val w = new ShardWriter(shardPath.toString, dicts, granularity, pid)
-      try { it.foreach(w.write); Iterator.single(w.finish()) }
-      catch { case e: Throwable => w.abort(); throw e }
-    }.collect().sortBy(_.pid).toSeq
-    mergeShardInfo(file, dicts, tmpDirStr, shardInfo, granularity)
-  }
+            file: String, granularity: Int = 1000): Unit =
+    v2.GraftDataSinks.overwrite(ds, new v2.BcfTable(v2.GraftDataSinks.at(file), Some(dicts)),
+      Map("granularity" -> granularity.toString))
 
   /** htslib can emit BCF2 UNCOMPRESSED (raw "BCF" magic, no BGZF —
     * the piping form; `bcftools view -Ou`).  Sniff the first bytes to

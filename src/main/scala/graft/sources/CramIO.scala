@@ -292,11 +292,25 @@ object CramIO {
 
   // -------------------------------------------------------------- write
 
-  /** Streaming per-task shard writer: records arrive one at a time
-    * and leave as ~1 MB containers — a multi-GB partition never
-    * buffers.  Shared by the typed write path and the DataSource V2
-    * sink. */
-  final class ShardWriter(pathStr: String, refIdx: Map[String, Int]) {
+  /** A per-task CRAM shard: records in, data containers out. */
+  private[sources] trait ShardSink {
+    def write(rec: SamRecord): Unit
+    /** Flush the tail container, close, return records written. */
+    def finish(): Long
+    def abort(): Unit
+  }
+
+  /** The shard writer of a (checked) write profile. */
+  private[sources] def shardWriter(pathStr: String, refIdx: Map[String, Int],
+                                   profile: String): ShardSink =
+    if (profile == "graft") new ShardWriter(pathStr, refIdx)
+    else new SpecShardWriter(pathStr, refIdx, v31 = profile.startsWith("spec31"),
+      fqz = profile == "spec31-fqz")
+
+  /** Streaming per-task shard writer of the graft profile: records
+    * arrive one at a time and leave as ~1 MB containers — a multi-GB
+    * partition never buffers. */
+  final class ShardWriter(pathStr: String, refIdx: Map[String, Int]) extends ShardSink {
     private val out = {
       val (tfs, tp) = Fs.get(pathStr)
       new java.io.BufferedOutputStream(tfs.create(tp, true))
@@ -345,7 +359,6 @@ object CramIO {
       if (recs.size >= (1 << 20)) flush() // ~1 MB containers
     }
 
-    /** Flush the tail container, close, return records written. */
     def finish(): Long = { flush(); out.close(); nTotal }
 
     def abort(): Unit =
@@ -358,7 +371,8 @@ object CramIO {
     * discipline as [[ShardWriter]]: ~1 MB of buffered payload per
     * container, so a multi-GB partition never accumulates. */
   final class SpecShardWriter(pathStr: String, refIdx: Map[String, Int],
-                              v31: Boolean = false, fqz: Boolean = false) {
+                              v31: Boolean = false, fqz: Boolean = false)
+      extends ShardSink {
     private val out = {
       val (tfs, tp) = Fs.get(pathStr)
       new java.io.BufferedOutputStream(tfs.create(tp, true))
@@ -407,34 +421,36 @@ object CramIO {
       try out.close() catch { case _: java.io.IOException => () }
   }
 
-  /** Driver-side assembly: file definition + SAM-header container +
-    * the shard files under `tmpDir` in name order + EOF container. */
-  private[sources] def mergeShards(file: String, header: SamHeader,
-                                   tmpDir: org.apache.hadoop.fs.Path,
-                                   minor: Int = 0): Unit = {
-    val (fs, path) = Fs.get(file)
-    val out = new java.io.BufferedOutputStream(fs.create(path, true))
-    out.write("CRAM".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.write(3); out.write(minor)
-    out.write(new Array[Byte](20)) // file id
+  /** Driver-side merge through [[Fs.commitFile]]: file definition +
+    * SAM-header container + the `part-<pid>.cram` shards under
+    * `tmpDir` in pid order + EOF container, then the
+    * container-granularity `.crai` (one header walk of the new file),
+    * so interval reads prune containers without re-walking headers. */
+  private[sources] def mergeShards(file: String, header: SamHeader, tmpDir: String,
+                                   pids: Seq[Int], minor: Int): Unit = {
+    val (fs, _) = Fs.get(file)
     // SAM header container: one FileHeader block; spec prefixes the
     // text with its int32 length inside the block
     val ht = header.text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val hblk = new ByteArrayOutputStream(ht.length + 8)
     writeInt32Le(hblk, ht.length)
     hblk.write(ht)
-    writeContainer(out, refSeqId = -1, startPos = 0, span = 0, nRecords = 0,
-      counter = 0L, bases = 0L,
-      blocks = Seq(Block(Gzip, FileHeader, 0, hblk.toByteArray)), landmarks = Nil)
-    Fs.concatParts(fs, tmpDir, out)
-    writeEofContainer(out)
-    out.close()
-    fs.delete(tmpDir, true)
+    Fs.commitFile(file) { out =>
+      out.write("CRAM".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      out.write(3); out.write(minor)
+      out.write(new Array[Byte](20)) // file id
+      writeContainer(out, refSeqId = -1, startPos = 0, span = 0, nRecords = 0,
+        counter = 0L, bases = 0L,
+        blocks = Seq(Block(Gzip, FileHeader, 0, hblk.toByteArray)), landmarks = Nil)
+      Fs.concatParts(fs, pids.map(Fs.partPath(tmpDir, _, "cram")), out)
+      writeEofContainer(out)
+    }(_ => Crai.buildAndWrite(file))
   }
 
-  /** Write a CRAM: file definition + SAM-header container + one data
-    * container per partition (parallel shards, driver concat — the
-    * BamIO shape) + EOF container.
+  /** Write a CRAM + `.crai`: the `format("cram")` batch write with
+    * `header` in memory — file definition + SAM-header container +
+    * each partition's data containers + EOF container, committed like
+    * every graft sink (v2.GraftDataSinks).
     *
     * `profile = "graft"` (default) writes the fast-path profile (BAM
     * codec payloads in one external block, marker in the compression
@@ -445,41 +461,12 @@ object CramIO {
     * container shape framed as CRAM 3.1 with the 3.1 codecs — rANS
     * Nx16 blocks and the name tokeniser on the RN series;
     * `profile = "spec31-fqz"` additionally rides the QS series on the
-    * fqzcomp quality codec (the htslib "small"-profile shape). */
+    * fqzcomp quality codec (the htslib "small"-profile shape).  Any
+    * other profile fails before a task runs. */
   def write(ds: Dataset[SamRecord], header: SamHeader, file: String,
-            profile: String = "graft"): Unit = {
-    require(profile == "graft" || profile == "spec" || profile == "spec31" ||
-      profile == "spec31-fqz", s"unknown profile $profile")
-    val (fs, path) = Fs.get(file)
-    val tmpDir = new org.apache.hadoop.fs.Path(path.getParent, "." + path.getName + ".shards")
-    fs.mkdirs(tmpDir)
-    val tmpDirStr = tmpDir.toString
-    val refIdx = header.refs.map(_.name).zipWithIndex.toMap
-    val spec = profile != "graft"
-    val v31 = profile.startsWith("spec31")
-    val fqz = profile == "spec31-fqz"
-
-    val shardCounts = ds.rdd.mapPartitionsWithIndex { (pid, it) =>
-      val p = new org.apache.hadoop.fs.Path(tmpDirStr, f"part-$pid%05d.cram").toString
-      val n =
-        if (spec) {
-          val shard = new SpecShardWriter(p, refIdx, v31, fqz)
-          it.foreach(shard.write)
-          shard.finish()
-        } else {
-          val shard = new ShardWriter(p, refIdx)
-          it.foreach(shard.write)
-          shard.finish()
-        }
-      Iterator.single((pid, n))
-    }.collect().sortBy(_._1)
-
-    mergeShards(file, header, tmpDir, minor = if (v31) 1 else 0)
-    val _ = shardCounts
-    // container-granularity .crai sidecar (one driver header-walk):
-    // interval reads then prune containers without re-walking headers
-    Crai.buildAndWrite(file)
-  }
+            profile: String = "graft"): Unit =
+    v2.GraftDataSinks.overwrite(ds, new v2.CramTable(v2.GraftDataSinks.at(file), Some(header)),
+      Map("profile" -> profile))
 
   // --------------------------------------------------------------- read
 

@@ -1,8 +1,5 @@
 package graft.sources
 
-import java.io.OutputStreamWriter
-import java.nio.charset.StandardCharsets.UTF_8
-
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 
@@ -113,22 +110,10 @@ object Fastq {
     s"@$name\n${f.sequence}\n+\n${f.quality}"
   }
 
-  /** Write shards + merge into one .fastq. */
-  def write(ds: Dataset[SequencedFragment], out: String): Unit = {
-    import ds.sparkSession.implicits._
-    val tmp = out + ".shards"
-    ds.map(formatRecord).write.mode("overwrite").text(tmp)
-    concatText(tmp, out)
-  }
-
-  private[sources] def concatText(shardDir: String, out: String): Unit = {
-    val (fs, dir) = Fs.get(shardDir)
-    val (_, outPath) = Fs.get(out)
-    val w = fs.create(outPath, true)
-    Fs.concatParts(fs, dir, w)
-    w.close()
-    fs.delete(dir, true)
-  }
+  /** Write one uncompressed .fastq: the `format("fastq")` batch write. */
+  def write(ds: Dataset[SequencedFragment], out: String): Unit =
+    v2.GraftDataSinks.overwrite(ds, new v2.FastqTable(v2.GraftDataSinks.at(out),
+      Some(v2.GraftDataSinks.TextHeader(Nil, bgzf = false))))
 }
 
 /** QSEQ: one tab-separated record per line
@@ -169,10 +154,8 @@ object Qseq {
     if (filterFailedQc) ds.filter(_.filterPassed) else ds
   }
 
-  def write(ds: Dataset[SequencedFragment], out: String): Unit = {
-    import ds.sparkSession.implicits._
-    val tmp = out + ".shards"
-    ds.map(formatLine).write.mode("overwrite").text(tmp)
-    Fastq.concatText(tmp, out)
-  }
+  /** Write one uncompressed .qseq: the `format("qseq")` batch write. */
+  def write(ds: Dataset[SequencedFragment], out: String): Unit =
+    v2.GraftDataSinks.overwrite(ds, new v2.QseqTable(v2.GraftDataSinks.at(out),
+      Some(v2.GraftDataSinks.TextHeader(Nil, bgzf = false))))
 }

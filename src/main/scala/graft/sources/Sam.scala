@@ -1,9 +1,8 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, BufferedReader, InputStreamReader, OutputStreamWriter}
+import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,8 +15,9 @@ import graft.model.{SamHeader, SamRecord, SamRef}
   * UDFs, no per-record JVM lambdas (field semantics per
   * SAMRecordReader.java; header reading per util/SAMHeaderReader.java).
   *
-  * Write: partition shards (header-less) + driver-side merge that
-  * prepends one header — the SAMFileMerger.java:32 shape.
+  * Write: the `format("sam")` sink — partition shards (header-less)
+  * + driver-side merge that prepends one header — the
+  * SAMFileMerger.java:32 shape.
   */
 object Sam {
 
@@ -85,67 +85,17 @@ object Sam {
         expr("CASE WHEN size(p) > 11 THEN slice(p, 12, size(p) - 11) " +
           "ELSE CAST(array() AS ARRAY<STRING>) END").as("tags"))
 
-  /** Format records back to SAM lines (inverse expression chain). */
-  def formatLines(ds: Dataset[SamRecord]): DataFrame =
-    ds.toDF()
-      .withColumn("_base", expr(
-        "concat_ws('\t', qname, CAST(flag AS STRING), rname, " +
-          "CAST(pos AS STRING), CAST(mapq AS STRING), cigar, rnext, " +
-          "CAST(pnext AS STRING), CAST(tlen AS STRING), seq, qual)"))
-      .select(expr("CASE WHEN size(tags) = 0 THEN _base " +
-        "ELSE concat(_base, '\t', array_join(tags, '\t')) END").as("value"))
-
-  /** Write as header-less text shards under `dir`. */
-  def writeShards(ds: Dataset[SamRecord], dir: String): Unit =
-    formatLines(ds).write.mode("overwrite").text(dir)
-
-  /** Merge text shards into one .sam with a single header
-    * (ref: util/SAMFileMerger.java). */
-  def mergeShards(shardDir: String, out: String, header: SamHeader): Unit = {
-    val (fs, dir) = Fs.get(shardDir)
-    val (_, outPath) = Fs.get(out)
-    val parts = fs.listStatus(dir).map(_.getPath)
-      .filter(p => p.getName.startsWith("part-")).sortBy(_.getName)
-    val w = new OutputStreamWriter(fs.create(outPath, true), UTF_8)
-    try {
-      if (header.text.nonEmpty) { w.write(header.text); w.write('\n') }
-      parts.foreach { p =>
-        val in = new BufferedReader(new InputStreamReader(fs.open(p), UTF_8))
-        var line = in.readLine()
-        while (line != null) {
-          w.write(line); w.write('\n')
-          line = in.readLine()
-        }
-        in.close()
-      }
-    } finally w.close()
-  }
-
   /** Write records as-is (partition order preserved, no sort; the
-    * reference's KeyIgnoringSAMRecordWriter shape): parallel text
-    * shards + single-header merge. */
-  def write(ds: Dataset[SamRecord], header: SamHeader, out: String): Unit = {
-    val tmp = out + ".shards"
-    writeShards(ds, tmp)
-    mergeShards(tmp, out, header)
-    val (fs, t) = Fs.get(tmp)
-    fs.delete(t, true)
-  }
+    * reference's KeyIgnoringSAMRecordWriter shape): the
+    * `format("sam")` batch write with `header` in memory — parallel
+    * text shards + single-header merge. */
+  def write(ds: Dataset[SamRecord], header: SamHeader, out: String): Unit =
+    v2.GraftDataSinks.overwrite(ds, new v2.SamTable(v2.GraftDataSinks.at(out),
+      Some(v2.GraftDataSinks.TextHeader(v2.GraftDataSinks.samLines(header), bgzf = false))))
 
-  /** One-call sorted write: coordinate-sort (range partition — no
-    * single-reducer funnel), write shards, merge with a header
+  /** One-call sorted write: BAM's coordinate sort
+    * ([[BamIO.coordinateSorted]]), then [[write]] with a header
     * rewritten to SO:coordinate (ref: util/GetSortedBAMHeader.java). */
-  def writeSorted(ds: Dataset[SamRecord], header: SamHeader, out: String): Unit = {
-    val spark = ds.sparkSession
-    val refOrder = header.refs.map(_.name).zipWithIndex.toMap
-    import org.apache.spark.sql.functions.typedLit
-    val orderMap = typedLit(refOrder)
-    val sorted = ds.toDF()
-      .withColumn("_refIdx", coalesce(orderMap(col("rname")), lit(Int.MaxValue)))
-      .repartitionByRange(col("_refIdx"), col("pos"))
-      .sortWithinPartitions(col("_refIdx"), col("pos"))
-      .drop("_refIdx")
-    import spark.implicits._
-    write(sorted.as[SamRecord], header.asCoordinateSorted, out)
-  }
+  def writeSorted(ds: Dataset[SamRecord], header: SamHeader, out: String): Unit =
+    write(BamIO.coordinateSorted(ds, header), header.asCoordinateSorted, out)
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, BufferedReader, InputStreamReader, OutputStreamWriter}
+import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.{Dataset, SparkSession}
@@ -303,33 +303,18 @@ object Vcf {
     if (tabix) Tabix.buildAndWriteVcf(out)
   }
 
-  def writeBgzf(ds: Dataset[VcfVariant], header: VcfHeader, out: String): Unit = {
-    import ds.sparkSession.implicits._
-    val tmp = out + ".shards"
-    ds.map(formatLine).write.mode("overwrite").text(tmp)
-    val (fs, dir) = Fs.get(tmp)
-    val (_, outPath) = Fs.get(out)
-    val bg = new Bgzf.BgzfOutputStream(fs.create(outPath, true))
-    try {
-      if (header.lines.nonEmpty) bg.write((header.text + "\n").getBytes(UTF_8))
-      Fs.concatParts(fs, dir, bg)
-    } finally bg.close() // BgzfOutputStream close appends the EOF terminator
-    fs.delete(dir, true)
-  }
+  /** Write one BGZF-compressed .vcf.bgz, without building a `.tbi`. */
+  def writeBgzf(ds: Dataset[VcfVariant], header: VcfHeader, out: String): Unit =
+    save(ds, header, out, bgzf = true)
 
-  /** Write shards then merge into one .vcf with a single header
+  /** Write one plain-text .vcf with a single header
     * (ref: util/VCFFileMerger.java). */
-  def write(ds: Dataset[VcfVariant], header: VcfHeader, out: String): Unit = {
-    import ds.sparkSession.implicits._
-    val tmp = out + ".shards"
-    ds.map(formatLine).write.mode("overwrite").text(tmp)
-    val (fs, dir) = Fs.get(tmp)
-    val (_, outPath) = Fs.get(out)
-    val w = fs.create(outPath, true)
-    try {
-      if (header.lines.nonEmpty) w.write((header.text + "\n").getBytes(UTF_8))
-      Fs.concatParts(fs, dir, w)
-    } finally w.close()
-    fs.delete(dir, true)
-  }
+  def write(ds: Dataset[VcfVariant], header: VcfHeader, out: String): Unit =
+    save(ds, header, out, bgzf = false)
+
+  /** The `format("vcf")` batch write with `header` in memory. */
+  private def save(ds: Dataset[VcfVariant], header: VcfHeader, out: String,
+                   bgzf: Boolean): Unit =
+    v2.GraftDataSinks.overwrite(ds, new v2.VcfTable(v2.GraftDataSinks.at(out),
+      Some(v2.GraftDataSinks.TextHeader(header.lines, bgzf))))
 }

@@ -4,57 +4,66 @@ import java.io.{BufferedOutputStream, OutputStream}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.plans.logical.OverwriteByExpression
+import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.model.{SamRecord, SequencedFragment, VcfVariant}
-import graft.sources.{BamIO, BcfIO, Bgzf, Fastq, Fs, Qseq, Sam, Vcf}
+import graft.model.{SamHeader, SamRecord, SequencedFragment, VcfVariant}
+import graft.sources.{BamIO, BcfIO, Bgzf, CramIO, Fastq, Fs, Qseq, Sam, Vcf}
 
-/** DataSource V2 write paths — `df.write.format("bam"/"sam"/"fastq"/
-  * "vcf").mode("overwrite").save(path)` — completing the SQL-level
-  * I/O story over the same shard-then-merge machinery as the typed
-  * writers (ref: KeyIgnoringBAMOutputFormat + SAMFileMerger.java:32).
+/** DataSource V2 write paths — the one write path of every graft
+  * format.  `df.write.format("bam"/"bcf"/"cram"/"sam"/"fastq"/"qseq"/
+  * "vcf").mode("overwrite").save(path)` and the typed writers
+  * (`BamIO.write`/`writeSorted`, `BcfIO.write`, `CramIO.write`,
+  * `Sam.write`, `Fastq.write`, `Qseq.write`, `Vcf.write`/`writeBgzf`)
+  * run the same batch write: a typed writer builds the format's table
+  * with its in-memory header and runs Spark's own V2 overwrite plan
+  * over it ([[GraftDataSinks.overwrite]]); the DataFrame API resolves
+  * the header from `option("header", path)` — the reference's
+  * `hadoopbam.anysam.output.header` property (ref:
+  * KeyIgnoringBAMOutputFormat + SAMFileMerger.java:32).
   *
-  * Each task writes one header-less shard (BGZF for BAM, text
-  * otherwise) under a query-scoped temp dir, renaming into place on
-  * task commit so speculative attempts can never collide; the driver
-  * commit concatenates header + shards in partition order (+ BGZF EOF
-  * terminator and the v2 splitting index for BAM).
+  * Tasks: each task attempt streams its rows into its own attempt file
+  * under a query-scoped shard dir and renames it to `part-<pid>` on
+  * task commit ([[ShardingDataWriter]]).  Spark's commit coordinator
+  * lets one attempt per partition commit, so a retried, speculative or
+  * abandoned attempt never reaches the output.
   *
-  * SAM/BAM need a header the rows don't carry (reference dictionary
-  * for refId encoding) — exactly the reference's
-  * `hadoopbam.anysam.output.header` property, surfaced as
-  * `option("header", pathToExistingSamOrBam)`.  VCF takes the same
-  * option (header lines copied); FASTQ needs none.  Both save modes
-  * rewrite the target file (a BAM is one file, not a directory —
-  * appending records would need a sort-merge, which is `writeSorted`'s
-  * job).
+  * Driver commit ([[Fs.commitFile]], the same for every format):
+  *   1. merge the header + the committed shards in partition order (+
+  *      the BGZF EOF block / CRAM EOF container) into a temp sibling
+  *      of the target;
+  *   2. delete the target's sidecar indexes (.sidx .bai .csi .tbi
+  *      .crai);
+  *   3. move the temp file over the target;
+  *   4. write the sidecars this format produces: `.sidx` for BAM and
+  *      BCF, `.crai` for CRAM.
+  * A failed merge leaves the target and its indexes as they were; a
+  * crash after step 3 leaves a complete file with no index, which
+  * every reader handles by its no-index fallback.  Both save modes
+  * rewrite the whole file, so only mode("overwrite") is accepted.
   */
 object GraftDataSinks {
 
-  /** Decode incoming rows (in the WRITE schema's column order, which
-    * need not match the record's) back to typed records.  `fromRow`
-    * reads a row already reordered to `fullSchema` (the case-class
-    * field order) — explicit field reads, because a serialized
+  /** The record decoder of a write: by-name V2 writes deliver the
+    * table's own columns in its own order, so `fromRow` reads them by
+    * position — explicit field reads, because a serialized
     * ExpressionEncoder deserializer does not survive the trip to
     * executors (its UnresolvedMapObjects loses the resolution lambda). */
-  private[v2] class RowDecoder[T](fullSchema: StructType, writeSchema: StructType,
-                                  fromRow: InternalRow => T)
-      extends Serializable {
-    @transient private lazy val reorder =
-      UnsafeProjection.create(fullSchema.map { f =>
-        val i = writeSchema.fieldIndex(f.name)
-        BoundReference(i, writeSchema(i).dataType, writeSchema(i).nullable)
-      }.toSeq)
-    def decode(row: InternalRow): T = fromRow(reorder(row))
-    def validate(): Unit = fullSchema.fieldNames.foreach { n =>
-      require(writeSchema.fieldNames.contains(n),
-        s"write schema is missing required column '$n' " +
-          s"(expected columns: ${fullSchema.fieldNames.mkString(", ")})")
-    }
+  private[v2] def decoder[T](fullSchema: StructType, writeSchema: StructType,
+                             fromRow: InternalRow => T): InternalRow => T = {
+    require(writeSchema.fieldNames.sameElements(fullSchema.fieldNames),
+      s"write columns (${writeSchema.fieldNames.mkString(", ")}) are not the " +
+        s"table's (${fullSchema.fieldNames.mkString(", ")})")
+    fromRow
   }
 
   /** Explicit InternalRow → record readers (fields in case-class
@@ -82,6 +91,24 @@ object GraftDataSinks {
       str(r, 6), strArr(r, 7), strArr(r, 8), strArr(r, 9), strArr(r, 10))
   }
 
+  /** Table options naming `file` as the one path — what a typed
+    * writer builds its table over. */
+  private[graft] def at(file: String): CaseInsensitiveStringMap =
+    new CaseInsensitiveStringMap(java.util.Map.of("path", file))
+
+  /** Run `ds` into `table` as Spark's own V2 overwrite — the plan
+    * `df.write.mode("overwrite").save` builds — with columns matched
+    * by name, as `.as[T]` matches them.  `options` are the write
+    * options (`granularity`, `profile`). */
+  private[graft] def overwrite(ds: Dataset[_], table: Table,
+                               options: Map[String, String] = Map.empty): Unit = {
+    val rows = ds.toDF().select(table.columns().toSeq.map(c => col(c.name)): _*)
+    org.apache.spark.sql.classic.GraftDatasetAccess.ofRows(ds.sparkSession,
+      OverwriteByExpression.byName(DataSourceV2Relation.create(table, None, None),
+        rows.queryExecution.logical, Literal.TrueLiteral, options))
+    ()
+  }
+
   private[v2] def shardDir(target: String, queryId: String): String = {
     val p = new Path(target)
     new Path(p.getParent, s".${p.getName}.shards-$queryId").toString
@@ -89,12 +116,12 @@ object GraftDataSinks {
 
   /** Read a SAM header from an existing .bam/.sam/.cram file (the
     * reference's output-header property semantics). */
-  private[v2] def samHeaderFrom(opt: Option[String]): graft.model.SamHeader = {
+  private[v2] def samHeaderFrom(opt: Option[String]): SamHeader = {
     val path = opt.getOrElse(throw new IllegalArgumentException(
       "BAM/SAM/CRAM writes need option(\"header\", <path to an existing " +
         ".sam/.bam/.cram>) — records do not carry the reference dictionary"))
     if (path.endsWith(".bam")) BamIO.readHeader(path)
-    else if (path.endsWith(".cram")) graft.sources.CramIO.readHeader(path)
+    else if (path.endsWith(".cram")) CramIO.readHeader(path)
     else Sam.readHeader(path)
   }
 
@@ -111,6 +138,36 @@ object GraftDataSinks {
     else BcfIO.Dicts.fromHeader(Vcf.readHeader(path).lines.mkString("\n"))
   }
 
+  /** `option("granularity")` (records per splitting-index entry,
+    * default 1000), checked on the driver before any task runs. */
+  private[v2] def granularityOf(options: CaseInsensitiveStringMap): Int = {
+    val v = options.getOrDefault("granularity", "1000")
+    v.trim.toIntOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"option granularity = '$v': expected a positive integer"))
+  }
+
+  private val CramProfiles = Seq("graft", "spec", "spec31", "spec31-fqz")
+
+  /** `option("profile")` of a CRAM write (default "graft"), checked on
+    * the driver before any task runs. */
+  private[v2] def cramProfileOf(options: CaseInsensitiveStringMap): String = {
+    val p = options.getOrDefault("profile", "graft")
+    if (!CramProfiles.contains(p)) throw new IllegalArgumentException(
+      s"option profile = '$p': expected one of ${CramProfiles.mkString(", ")}")
+    p
+  }
+
+  /** A text sink's resolved header: the lines written before the
+    * records, and whether the file is BGZF-compressed. */
+  final case class TextHeader(lines: Seq[String], bgzf: Boolean)
+
+  /** The DataFrame API compresses a text target whose name says so. */
+  private[v2] def textHeader(target: String, lines: Seq[String]): TextHeader =
+    TextHeader(lines, target.endsWith(".bgz") || target.endsWith(".gz"))
+
+  private[graft] def samLines(h: SamHeader): Seq[String] =
+    if (h.text.isEmpty) Nil else h.text.split("\n", -1).toSeq
+
   /** Single-file sinks rewrite the target wholesale; only
     * mode("overwrite") expresses that honestly.  Appending to a BAM
     * needs a sort-merge — that's writeSorted's job on the typed API. */
@@ -122,206 +179,50 @@ object GraftDataSinks {
         "use mode(\"overwrite\") (append would silently drop the existing records)")
   }
 
-  /** Commit-side concat of text shards with optional header; BGZF-
-    * compresses when the target name says so. */
-  private[v2] def mergeTextShards(target: String, tmp: String,
-                                  headerLines: Seq[String]): Unit = {
-    val (fs, outPath) = Fs.get(target)
-    val bgzf = target.endsWith(".bgz") || target.endsWith(".gz")
-    val raw = fs.create(outPath, true)
-    val out: OutputStream =
-      if (bgzf) new Bgzf.BgzfOutputStream(raw) else new BufferedOutputStream(raw)
-    try {
-      headerLines.foreach { l => out.write(l.getBytes(UTF_8)); out.write('\n') }
-      Fs.concatParts(fs, new Path(tmp), out)
-    } finally out.close() // BgzfOutputStream close appends the EOF terminator
-    fs.delete(new Path(tmp), true)
+  /** Driver commit of a text sink: header lines + the shards of
+    * `pids`, BGZF-compressed (with the EOF terminator) when asked. */
+  private[v2] def mergeTextShards(target: String, tmp: String, pids: Seq[Int],
+                                  header: TextHeader): Unit = {
+    val (fs, _) = Fs.get(target)
+    Fs.commitFile(target) { raw =>
+      val out: OutputStream = if (header.bgzf) new Bgzf.BgzfOutputStream(raw) else raw
+      header.lines.foreach { l => out.write(l.getBytes(UTF_8)); out.write('\n') }
+      Fs.concatParts(fs, pids.map(Fs.partPath(tmp, _, "txt")), out)
+      out.close() // BgzfOutputStream close appends the EOF terminator
+    }(_ => ())
   }
+
+  private[v2] def pidsOf(messages: Array[WriterCommitMessage]): Seq[Int] =
+    messages.map(_.asInstanceOf[ShardDone].pid).sorted.toSeq
 }
 
-// ------------------------------------------------------------------ BAM
-
-class BamWriteBuilder(target: String, info: LogicalWriteInfo)
+/** The one write builder every graft sink shares: overwrite only,
+  * shards under a query-scoped dir.  `batch(shardDir)` is the format's
+  * [[ShardedBatchWrite]], built with its header already resolved. */
+class GraftWriteBuilder(target: String, info: LogicalWriteInfo, fmt: String,
+                        batch: String => BatchWrite)
     extends WriteBuilder with SupportsTruncate {
   private var truncated = false
   override def truncate(): WriteBuilder = { truncated = true; this }
   override def build(): Write = {
-    // append would silently destroy existing records (the merge
-    // rewrites the whole file) — only overwrite is honest here
-    GraftDataSinks.requireOverwrite(truncated, target, "bam")
-    // resolve the header NOW so a bad/missing option fails before any
-    // task launches, not after the whole job has run
-    val header = GraftDataSinks.samHeaderFrom(Option(info.options.get("header")))
-    val granularity = Option(info.options.get("granularity")).map(_.toInt).getOrElse(1000)
-    new Write {
-      override def toBatch: BatchWrite =
-        new BamBatchWrite(target, header, granularity, info.schema(),
-          GraftDataSinks.shardDir(target, info.queryId()))
-    }
+    GraftDataSinks.requireOverwrite(truncated, target, fmt)
+    val b = batch(GraftDataSinks.shardDir(target, info.queryId()))
+    new Write { override def toBatch: BatchWrite = b }
   }
 }
 
-case class BamShardDone(info: BamIO.ShardInfo) extends WriterCommitMessage
-
-class BamBatchWrite(target: String, header: graft.model.SamHeader,
-                    granularity: Int, schema: StructType, tmp: String)
-    extends BatchWrite {
-  override def createBatchWriterFactory(i: PhysicalWriteInfo): DataWriterFactory = {
-    val decoder = new GraftDataSinks.RowDecoder(ExpressionEncoder[SamRecord]().schema,
-      schema, GraftDataSinks.RowCodecs.sam)
-    decoder.validate()
-    val refIdx = header.refs.map(_.name).zipWithIndex.toMap
-    new BamWriterFactory(tmp, refIdx, granularity, decoder)
-  }
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val infos = messages.map(_.asInstanceOf[BamShardDone].info).sortBy(_.pid)
-    BamIO.mergeShardInfo(target, header, tmp, infos.toSeq, granularity)
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
+/** Driver side shared by every sink: `merge` the committed shards
+  * into the target (through [[Fs.commitFile]]); the shard dir is
+  * dropped whether the merge succeeds or fails. */
+abstract class ShardedBatchWrite(tmp: String) extends BatchWrite {
+  protected def merge(messages: Array[WriterCommitMessage]): Unit
+  final override def commit(messages: Array[WriterCommitMessage]): Unit =
+    try merge(messages) finally dropShards()
+  final override def abort(messages: Array[WriterCommitMessage]): Unit = dropShards()
+  private def dropShards(): Unit = {
     val (fs, p) = Fs.get(tmp)
     fs.delete(p, true)
   }
-}
-
-class BamWriterFactory(tmp: String, refIdx: Map[String, Int], granularity: Int,
-                       decoder: GraftDataSinks.RowDecoder[SamRecord])
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new ShardingDataWriter[BamShardDone](tmp, partitionId, taskId, "bam") {
-      // streams record-by-record — a multi-GB partition never buffers
-      private val shard = new BamIO.ShardWriter(attemptPath, refIdx, granularity, partitionId)
-      override def write(row: InternalRow): Unit = shard.write(decoder.decode(row))
-      override def finishAttempt(): BamShardDone = BamShardDone(shard.finish())
-      override def abortAttempt(): Unit = shard.abort()
-    }
-}
-
-// ------------------------------------------------------------------ BCF
-
-/** `df.write.format("bcf").option("header", ...)` — the BAM sink
-  * pattern applied to BCF2: per-task header-less BGZF shards through
-  * [[BcfIO.ShardWriter]], driver commit concat + shifted splitting
-  * index via [[BcfIO.mergeShardInfo]] (ref:
-  * KeyIgnoringBCFRecordWriter.java:1 copies a donor header the same
-  * way; the merge machinery here is graft's own v2-sidecar contract).
-  */
-class BcfWriteBuilder(target: String, info: LogicalWriteInfo)
-    extends WriteBuilder with SupportsTruncate {
-  private var truncated = false
-  override def truncate(): WriteBuilder = { truncated = true; this }
-  override def build(): Write = {
-    GraftDataSinks.requireOverwrite(truncated, target, "bcf")
-    // resolve dictionaries NOW so a bad/missing option fails before
-    // any task launches, not after the whole job has run
-    val dicts = GraftDataSinks.bcfDictsFrom(Option(info.options.get("header")))
-    val granularity = Option(info.options.get("granularity")).map(_.toInt).getOrElse(1000)
-    new Write {
-      override def toBatch: BatchWrite =
-        new BcfBatchWrite(target, dicts, granularity, info.schema(),
-          GraftDataSinks.shardDir(target, info.queryId()))
-    }
-  }
-}
-
-case class BcfShardDone(info: BcfIO.ShardInfo) extends WriterCommitMessage
-
-class BcfBatchWrite(target: String, dicts: BcfIO.Dicts, granularity: Int,
-                    schema: StructType, tmp: String) extends BatchWrite {
-  override def createBatchWriterFactory(i: PhysicalWriteInfo): DataWriterFactory = {
-    val decoder = new GraftDataSinks.RowDecoder(ExpressionEncoder[VcfVariant]().schema,
-      schema, GraftDataSinks.RowCodecs.vcf)
-    decoder.validate()
-    new BcfWriterFactory(tmp, dicts, granularity, decoder)
-  }
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val infos = messages.map(_.asInstanceOf[BcfShardDone].info).sortBy(_.pid)
-    BcfIO.mergeShardInfo(target, dicts, tmp, infos.toSeq, granularity)
-  }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val (fs, p) = Fs.get(tmp)
-    fs.delete(p, true)
-  }
-}
-
-class BcfWriterFactory(tmp: String, dicts: BcfIO.Dicts, granularity: Int,
-                       decoder: GraftDataSinks.RowDecoder[VcfVariant])
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new ShardingDataWriter[BcfShardDone](tmp, partitionId, taskId, "bcf") {
-      // streams record-by-record — a multi-GB partition never buffers
-      private val shard =
-        new BcfIO.ShardWriter(attemptPath.toString, dicts, granularity, partitionId)
-      override def write(row: InternalRow): Unit = shard.write(decoder.decode(row))
-      override def finishAttempt(): BcfShardDone = BcfShardDone(shard.finish())
-      override def abortAttempt(): Unit = shard.abort()
-    }
-}
-
-// ----------------------------------------------------------------- CRAM
-
-class CramWriteBuilder(target: String, info: LogicalWriteInfo)
-    extends WriteBuilder with SupportsTruncate {
-  private var truncated = false
-  override def truncate(): WriteBuilder = { truncated = true; this }
-  override def build(): Write = {
-    GraftDataSinks.requireOverwrite(truncated, target, "cram")
-    val header = GraftDataSinks.samHeaderFrom(Option(info.options.get("header")))
-    val profile = Option(info.options.get("profile")).getOrElse("graft")
-    new Write {
-      override def toBatch: BatchWrite =
-        new CramBatchWrite(target, header, info.schema(),
-          GraftDataSinks.shardDir(target, info.queryId()), profile)
-    }
-  }
-}
-
-class CramBatchWrite(target: String, header: graft.model.SamHeader,
-                     schema: StructType, tmp: String,
-                     profile: String = "graft") extends BatchWrite {
-  override def createBatchWriterFactory(i: PhysicalWriteInfo): DataWriterFactory = {
-    val decoder = new GraftDataSinks.RowDecoder(ExpressionEncoder[SamRecord]().schema,
-      schema, GraftDataSinks.RowCodecs.sam)
-    decoder.validate()
-    val refIdx = header.refs.map(_.name).zipWithIndex.toMap
-    new CramWriterFactory(tmp, refIdx, decoder, profile)
-  }
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    graft.sources.CramIO.mergeShards(target, header, new Path(tmp),
-      minor = if (profile.startsWith("spec31")) 1 else 0)
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val (fs, p) = Fs.get(tmp)
-    fs.delete(p, true)
-  }
-}
-
-class CramWriterFactory(tmp: String, refIdx: Map[String, Int],
-                        decoder: GraftDataSinks.RowDecoder[SamRecord],
-                        profile: String = "graft")
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new ShardingDataWriter[TextShardDone](tmp, partitionId, taskId, "cram") {
-      // streams record-by-record into ~1 MB containers — a multi-GB
-      // partition never buffers
-      private val spec = profile != "graft"
-      private val graftShard =
-        if (spec) null
-        else new graft.sources.CramIO.ShardWriter(attemptPath.toString, refIdx)
-      private val specShard =
-        if (spec)
-          new graft.sources.CramIO.SpecShardWriter(attemptPath.toString, refIdx,
-            v31 = profile.startsWith("spec31"), fqz = profile == "spec31-fqz")
-        else null
-      override def write(row: InternalRow): Unit = {
-        val r = decoder.decode(row)
-        if (specShard != null) specShard.write(r) else graftShard.write(r)
-      }
-      override def finishAttempt(): TextShardDone = {
-        if (specShard != null) specShard.finish() else graftShard.finish()
-        TextShardDone(partitionId)
-      }
-      override def abortAttempt(): Unit =
-        if (specShard != null) specShard.abort() else graftShard.abort()
-    }
 }
 
 /** Write-to-temp + rename-on-commit shard writer: the commit
@@ -332,7 +233,7 @@ abstract class ShardingDataWriter[M <: WriterCommitMessage](
     tmp: String, partitionId: Int, taskId: Long, ext: String)
     extends DataWriter[InternalRow] {
   protected val attemptPath = new Path(tmp, f"attempt-$partitionId%05d-$taskId.$ext.tmp")
-  protected val finalPath = new Path(tmp, f"part-$partitionId%05d.$ext")
+  protected val finalPath: Path = Fs.partPath(tmp, partitionId, ext)
   /** Close the attempt file, return the commit message. */
   def finishAttempt(): M
   /** Close/discard the attempt file's sink. */
@@ -358,58 +259,141 @@ abstract class ShardingDataWriter[M <: WriterCommitMessage](
   override def close(): Unit = ()
 }
 
-// ------------------------------------------- text formats (SAM/FASTQ/VCF)
+// ------------------------------------------------------------------ BAM
 
-/** One commit message per text shard. */
-case class TextShardDone(pid: Int) extends WriterCommitMessage
+case class BamShardDone(info: BamIO.ShardInfo) extends WriterCommitMessage
 
-class TextWriteBuilder[T](target: String, info: LogicalWriteInfo,
-                          fullSchema: StructType, fromRow: InternalRow => T,
-                          format: T => String,
-                          headerLines: () => Seq[String])
-    extends WriteBuilder with SupportsTruncate {
-  private var truncated = false
-  override def truncate(): WriteBuilder = { truncated = true; this }
-  override def build(): Write = {
-    GraftDataSinks.requireOverwrite(truncated, target, "single-file text")
-    // resolve header lines NOW: a missing/bad header option must fail
-    // before any task launches, not at driver commit after the job ran
-    val header = headerLines()
-    new Write {
-      override def toBatch: BatchWrite = new BatchWrite {
-        private val tmp = GraftDataSinks.shardDir(target, info.queryId())
-        override def createBatchWriterFactory(i: PhysicalWriteInfo): DataWriterFactory = {
-          val decoder = new GraftDataSinks.RowDecoder(fullSchema, info.schema(), fromRow)
-          decoder.validate()
-          new TextWriterFactory[T](tmp, decoder, format)
-        }
-        override def commit(messages: Array[WriterCommitMessage]): Unit =
-          GraftDataSinks.mergeTextShards(target, tmp, header)
-        override def abort(messages: Array[WriterCommitMessage]): Unit = {
-          val (fs, p) = Fs.get(tmp)
-          fs.delete(p, true)
-        }
-      }
-    }
-  }
+class BamBatchWrite(target: String, tmp: String, header: SamHeader,
+                    granularity: Int, schema: StructType)
+    extends ShardedBatchWrite(tmp) {
+  override def createBatchWriterFactory(i: PhysicalWriteInfo): DataWriterFactory =
+    new BamWriterFactory(tmp, header.refs.map(_.name).zipWithIndex.toMap, granularity,
+      GraftDataSinks.decoder(ExpressionEncoder[SamRecord]().schema, schema,
+        GraftDataSinks.RowCodecs.sam))
+  override protected def merge(messages: Array[WriterCommitMessage]): Unit =
+    BamIO.mergeShardInfo(target, header, tmp,
+      messages.map(_.asInstanceOf[BamShardDone].info).sortBy(_.pid).toSeq, granularity)
 }
 
-class TextWriterFactory[T](tmp: String, decoder: GraftDataSinks.RowDecoder[T],
+class BamWriterFactory(tmp: String, refIdx: Map[String, Int], granularity: Int,
+                       decode: InternalRow => SamRecord)
+    extends DataWriterFactory {
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    new ShardingDataWriter[BamShardDone](tmp, partitionId, taskId, "bam") {
+      // streams record-by-record — a multi-GB partition never buffers
+      private val shard = new BamIO.ShardWriter(attemptPath, refIdx, granularity, partitionId)
+      override def write(row: InternalRow): Unit = shard.write(decode(row))
+      override def finishAttempt(): BamShardDone = BamShardDone(shard.finish())
+      override def abortAttempt(): Unit = shard.abort()
+    }
+}
+
+// ------------------------------------------------------------------ BCF
+
+/** The BAM sink pattern applied to BCF2: per-task header-less BGZF
+  * shards through [[BcfIO.ShardWriter]], driver merge + shifted
+  * splitting index via [[BcfIO.mergeShardInfo]] (ref:
+  * KeyIgnoringBCFRecordWriter.java:1 copies a donor header the same
+  * way; the merge machinery here is graft's own v2-sidecar contract).
+  */
+case class BcfShardDone(info: BcfIO.ShardInfo) extends WriterCommitMessage
+
+class BcfBatchWrite(target: String, tmp: String, dicts: BcfIO.Dicts,
+                    granularity: Int, schema: StructType)
+    extends ShardedBatchWrite(tmp) {
+  override def createBatchWriterFactory(i: PhysicalWriteInfo): DataWriterFactory =
+    new BcfWriterFactory(tmp, dicts, granularity,
+      GraftDataSinks.decoder(ExpressionEncoder[VcfVariant]().schema, schema,
+        GraftDataSinks.RowCodecs.vcf))
+  override protected def merge(messages: Array[WriterCommitMessage]): Unit =
+    BcfIO.mergeShardInfo(target, dicts, tmp,
+      messages.map(_.asInstanceOf[BcfShardDone].info).sortBy(_.pid).toSeq, granularity)
+}
+
+class BcfWriterFactory(tmp: String, dicts: BcfIO.Dicts, granularity: Int,
+                       decode: InternalRow => VcfVariant)
+    extends DataWriterFactory {
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    new ShardingDataWriter[BcfShardDone](tmp, partitionId, taskId, "bcf") {
+      // streams record-by-record — a multi-GB partition never buffers
+      private val shard =
+        new BcfIO.ShardWriter(attemptPath.toString, dicts, granularity, partitionId)
+      override def write(row: InternalRow): Unit = shard.write(decode(row))
+      override def finishAttempt(): BcfShardDone = BcfShardDone(shard.finish())
+      override def abortAttempt(): Unit = shard.abort()
+    }
+}
+
+// ----------------------------------------------------------------- CRAM
+
+/** One commit message per shard of a format whose merge needs only
+  * the partition id (CRAM and the text formats). */
+case class ShardDone(pid: Int) extends WriterCommitMessage
+
+class CramBatchWrite(target: String, tmp: String, header: SamHeader,
+                     schema: StructType, profile: String)
+    extends ShardedBatchWrite(tmp) {
+  override def createBatchWriterFactory(i: PhysicalWriteInfo): DataWriterFactory =
+    new CramWriterFactory(tmp, header.refs.map(_.name).zipWithIndex.toMap,
+      GraftDataSinks.decoder(ExpressionEncoder[SamRecord]().schema, schema,
+        GraftDataSinks.RowCodecs.sam), profile)
+  override protected def merge(messages: Array[WriterCommitMessage]): Unit =
+    CramIO.mergeShards(target, header, tmp, GraftDataSinks.pidsOf(messages),
+      minor = if (profile.startsWith("spec31")) 1 else 0)
+}
+
+class CramWriterFactory(tmp: String, refIdx: Map[String, Int],
+                        decode: InternalRow => SamRecord,
+                        profile: String)
+    extends DataWriterFactory {
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+    new ShardingDataWriter[ShardDone](tmp, partitionId, taskId, "cram") {
+      // streams record-by-record into ~1 MB containers — a multi-GB
+      // partition never buffers
+      private val shard = CramIO.shardWriter(attemptPath.toString, refIdx, profile)
+      override def write(row: InternalRow): Unit = shard.write(decode(row))
+      override def finishAttempt(): ShardDone = { shard.finish(); ShardDone(partitionId) }
+      override def abortAttempt(): Unit = shard.abort()
+    }
+}
+
+// -------------------------------- text formats (SAM/FASTQ/QSEQ/VCF)
+
+class TextBatchWrite[T](target: String, tmp: String, header: GraftDataSinks.TextHeader,
+                        decode: InternalRow => T, format: T => String)
+    extends ShardedBatchWrite(tmp) {
+  override def createBatchWriterFactory(i: PhysicalWriteInfo): DataWriterFactory =
+    new TextWriterFactory[T](tmp, decode, format)
+  override protected def merge(messages: Array[WriterCommitMessage]): Unit =
+    GraftDataSinks.mergeTextShards(target, tmp, GraftDataSinks.pidsOf(messages), header)
+}
+
+object TextBatchWrite {
+  /** The text sink builder: `header` already resolved by the table. */
+  def builder[T](target: String, info: LogicalWriteInfo, fullSchema: StructType,
+                 fromRow: InternalRow => T, format: T => String,
+                 header: GraftDataSinks.TextHeader): WriteBuilder =
+    new GraftWriteBuilder(target, info, "single-file text", tmp =>
+      new TextBatchWrite[T](target, tmp, header,
+        GraftDataSinks.decoder(fullSchema, info.schema(), fromRow), format))
+}
+
+class TextWriterFactory[T](tmp: String, decode: InternalRow => T,
                            format: T => String) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new ShardingDataWriter[TextShardDone](tmp, partitionId, taskId, "txt") {
+    new ShardingDataWriter[ShardDone](tmp, partitionId, taskId, "txt") {
       // streams line-by-line — a multi-GB partition never buffers
       private val out = {
         val (fs, _) = Fs.get(tmp)
         new BufferedOutputStream(fs.create(attemptPath, true))
       }
       override def write(row: InternalRow): Unit = {
-        out.write(format(decoder.decode(row)).getBytes(UTF_8))
+        out.write(format(decode(row)).getBytes(UTF_8))
         out.write('\n')
       }
-      override def finishAttempt(): TextShardDone = {
+      override def finishAttempt(): ShardDone = {
         out.close()
-        TextShardDone(partitionId)
+        ShardDone(partitionId)
       }
       override def abortAttempt(): Unit =
         try out.close() catch { case _: java.io.IOException => () }
@@ -417,7 +401,7 @@ class TextWriterFactory[T](tmp: String, decoder: GraftDataSinks.RowDecoder[T],
 }
 
 object TextFormats {
-  /** SAM line formatter matching Sam.formatLines' expression chain. */
+  /** SAM line: the 11 mandatory fields, then the tags, tab-separated. */
   def samLine(r: SamRecord): String = {
     val base = Seq(r.qname, r.flag.toString, r.rname, r.pos.toString,
       r.mapq.toString, r.cigar, r.rnext, r.pnext.toString, r.tlen.toString,

@@ -8,11 +8,12 @@ import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjecti
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.model.{ReferenceFragment, SamRecord, SequencedFragment, VcfVariant}
+import graft.model.{ReferenceFragment, SamHeader, SamRecord, SequencedFragment, VcfVariant}
 import graft.sources.{BamIO, BcfIO, Fasta, Fastq, Fs, RangedText, Vcf}
 
 /** DataSource V2 façade over the graft format codecs — the Spark-first
@@ -166,7 +167,9 @@ class BamDataSource extends TableProvider with DataSourceRegister {
     new BamTable(new CaseInsensitiveStringMap(properties))
 }
 
-class BamTable(options: CaseInsensitiveStringMap)
+/** `header` = the typed writer's in-memory header; absent, a write
+  * resolves `option("header", path)`. */
+class BamTable(options: CaseInsensitiveStringMap, header: Option[SamHeader] = None)
     extends GraftDataSources.SingleTable(
       s"bam:${GraftDataSources.pathsOf(options).mkString(",")}",
       ExpressionEncoder[SamRecord]().schema) {
@@ -175,9 +178,13 @@ class BamTable(options: CaseInsensitiveStringMap)
       TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new BamScanBuilder(GraftDataSources.pathsOf(options), options)
-  override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new BamWriteBuilder(GraftDataSources.pathsOf(options).head, info)
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
+    val target = GraftDataSources.pathsOf(options).head
+    val h = header.getOrElse(GraftDataSinks.samHeaderFrom(Option(info.options.get("header"))))
+    val granularity = GraftDataSinks.granularityOf(info.options)
+    new GraftWriteBuilder(target, info, "bam",
+      new BamBatchWrite(target, _, h, granularity, info.schema()))
+  }
 }
 
 class BamScanBuilder(paths: Seq[String], options: CaseInsensitiveStringMap)
@@ -537,15 +544,19 @@ class CramDataSource extends TableProvider with DataSourceRegister {
     new CramTable(new CaseInsensitiveStringMap(properties))
 }
 
-class CramTable(options: CaseInsensitiveStringMap)
+class CramTable(options: CaseInsensitiveStringMap, header: Option[SamHeader] = None)
     extends GraftDataSources.SingleTable(
       s"cram:${GraftDataSources.pathsOf(options).mkString(",")}",
       ExpressionEncoder[SamRecord]().schema) {
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new CramScanBuilder(options)
-  override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new CramWriteBuilder(GraftDataSources.pathsOf(options).head, info)
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
+    val target = GraftDataSources.pathsOf(options).head
+    val h = header.getOrElse(GraftDataSinks.samHeaderFrom(Option(info.options.get("header"))))
+    val profile = GraftDataSinks.cramProfileOf(info.options)
+    new GraftWriteBuilder(target, info, "cram",
+      new CramBatchWrite(target, _, h, info.schema(), profile))
+  }
 }
 
 /** CRAM scan with container-level bounded traversal: `rname`
@@ -647,7 +658,8 @@ class FastqDataSource extends TableProvider with DataSourceRegister {
     new FastqTable(new CaseInsensitiveStringMap(properties))
 }
 
-class FastqTable(options: CaseInsensitiveStringMap)
+class FastqTable(options: CaseInsensitiveStringMap,
+                 header: Option[GraftDataSinks.TextHeader] = None)
     extends GraftDataSources.SingleTable(
       s"fastq:${GraftDataSources.pathsOf(options).mkString(",")}",
       ExpressionEncoder[SequencedFragment]().schema) {
@@ -657,11 +669,12 @@ class FastqTable(options: CaseInsensitiveStringMap)
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new TextFramedScanBuilder[SequencedFragment](options,
       ExpressionEncoder[SequencedFragment](), FastqFraming)
-  override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new TextWriteBuilder[SequencedFragment](GraftDataSources.pathsOf(options).head, info,
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
+    val target = GraftDataSources.pathsOf(options).head
+    TextBatchWrite.builder[SequencedFragment](target, info,
       ExpressionEncoder[SequencedFragment]().schema, GraftDataSinks.RowCodecs.fastq,
-      TextFormats.fastqRecord, () => Nil)
+      TextFormats.fastqRecord, header.getOrElse(GraftDataSinks.textHeader(target, Nil)))
+  }
 }
 
 object QseqFraming extends RangeFraming[SequencedFragment] {
@@ -779,7 +792,8 @@ class QseqDataSource extends TableProvider with DataSourceRegister {
     new QseqTable(new CaseInsensitiveStringMap(properties))
 }
 
-class QseqTable(options: CaseInsensitiveStringMap)
+class QseqTable(options: CaseInsensitiveStringMap,
+                header: Option[GraftDataSinks.TextHeader] = None)
     extends GraftDataSources.SingleTable(
       s"qseq:${GraftDataSources.pathsOf(options).mkString(",")}",
       ExpressionEncoder[SequencedFragment]().schema) {
@@ -789,11 +803,12 @@ class QseqTable(options: CaseInsensitiveStringMap)
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new TextFramedScanBuilder[SequencedFragment](options,
       ExpressionEncoder[SequencedFragment](), QseqFraming)
-  override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new TextWriteBuilder[SequencedFragment](GraftDataSources.pathsOf(options).head, info,
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
+    val target = GraftDataSources.pathsOf(options).head
+    TextBatchWrite.builder[SequencedFragment](target, info,
       ExpressionEncoder[SequencedFragment]().schema, GraftDataSinks.RowCodecs.fastq,
-      TextFormats.qseqLine, () => Nil)
+      TextFormats.qseqLine, header.getOrElse(GraftDataSinks.textHeader(target, Nil)))
+  }
 }
 
 class SamDataSource extends TableProvider with DataSourceRegister {
@@ -806,7 +821,8 @@ class SamDataSource extends TableProvider with DataSourceRegister {
     new SamTable(new CaseInsensitiveStringMap(properties))
 }
 
-class SamTable(options: CaseInsensitiveStringMap)
+class SamTable(options: CaseInsensitiveStringMap,
+               header: Option[GraftDataSinks.TextHeader] = None)
     extends GraftDataSources.SingleTable(
       s"sam:${GraftDataSources.pathsOf(options).mkString(",")}",
       ExpressionEncoder[SamRecord]().schema) {
@@ -816,15 +832,14 @@ class SamTable(options: CaseInsensitiveStringMap)
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new TextFramedScanBuilder[SamRecord](options,
       ExpressionEncoder[SamRecord](), SamFraming)
-  override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new TextWriteBuilder[SamRecord](GraftDataSources.pathsOf(options).head, info,
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
+    val target = GraftDataSources.pathsOf(options).head
+    TextBatchWrite.builder[SamRecord](target, info,
       ExpressionEncoder[SamRecord]().schema, GraftDataSinks.RowCodecs.sam,
-      TextFormats.samLine,
-      () => {
-        val h = GraftDataSinks.samHeaderFrom(Option(info.options.get("header")))
-        if (h.text.isEmpty) Nil else h.text.split("\n", -1).toSeq
-      })
+      TextFormats.samLine, header.getOrElse(GraftDataSinks.textHeader(target,
+        GraftDataSinks.samLines(
+          GraftDataSinks.samHeaderFrom(Option(info.options.get("header")))))))
+  }
 }
 
 /** VCF scan with tabix-backed bounded traversal: `chrom` equality/IN
@@ -977,7 +992,7 @@ class BcfDataSource extends TableProvider with DataSourceRegister {
     new BcfTable(new CaseInsensitiveStringMap(properties))
 }
 
-class BcfTable(options: CaseInsensitiveStringMap)
+class BcfTable(options: CaseInsensitiveStringMap, dicts: Option[BcfIO.Dicts] = None)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
   override def name(): String =
@@ -988,9 +1003,13 @@ class BcfTable(options: CaseInsensitiveStringMap)
       TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new BcfScanBuilder(options)
-  override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new BcfWriteBuilder(GraftDataSources.pathsOf(options).head, info)
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
+    val target = GraftDataSources.pathsOf(options).head
+    val d = dicts.getOrElse(GraftDataSinks.bcfDictsFrom(Option(info.options.get("header"))))
+    val granularity = GraftDataSinks.granularityOf(info.options)
+    new GraftWriteBuilder(target, info, "bcf",
+      new BcfBatchWrite(target, _, d, granularity, info.schema()))
+  }
 }
 
 class BcfScanBuilder(options: CaseInsensitiveStringMap)
@@ -1117,7 +1136,8 @@ class VcfDataSource extends TableProvider with DataSourceRegister {
     new VcfTable(new CaseInsensitiveStringMap(properties))
 }
 
-class VcfTable(options: CaseInsensitiveStringMap)
+class VcfTable(options: CaseInsensitiveStringMap,
+               header: Option[GraftDataSinks.TextHeader] = None)
     extends GraftDataSources.SingleTable(
       s"vcf:${GraftDataSources.pathsOf(options).mkString(",")}",
       ExpressionEncoder[VcfVariant]().schema) {
@@ -1126,15 +1146,16 @@ class VcfTable(options: CaseInsensitiveStringMap)
       TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
     new VcfScanBuilder(options)
-  override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new TextWriteBuilder[VcfVariant](GraftDataSources.pathsOf(options).head, info,
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
+    val target = GraftDataSources.pathsOf(options).head
+    TextBatchWrite.builder[VcfVariant](target, info,
       ExpressionEncoder[VcfVariant]().schema, GraftDataSinks.RowCodecs.vcf,
-      TextFormats.vcfLine,
-      // a header-less VCF is spec-invalid (no ##fileformat/#CHROM) and
-      // breaks foreign tooling — required, like the typed writer
-      () => Vcf.readHeader(Option(info.options.get("header"))
-        .getOrElse(throw new IllegalArgumentException(
-          "VCF writes need option(\"header\", <path to an existing .vcf/.vcf.bgz>) " +
-            "— a header-less VCF is spec-invalid"))).lines)
+      TextFormats.vcfLine, header.getOrElse(GraftDataSinks.textHeader(target,
+        // a header-less VCF is spec-invalid (no ##fileformat/#CHROM) and
+        // breaks foreign tooling — required, like the typed writer
+        Vcf.readHeader(Option(info.options.get("header"))
+          .getOrElse(throw new IllegalArgumentException(
+            "VCF writes need option(\"header\", <path to an existing .vcf/.vcf.bgz>) " +
+              "— a header-less VCF is spec-invalid"))).lines)))
+  }
 }

@@ -275,6 +275,43 @@ class DataSourceV2Spec extends SparkSpec {
     }
   }
 
+  test("bad granularity/profile values fail before any task runs, naming option and value") {
+    import spark.implicits._
+    val src = writeBam("dsv2wopt")
+    val dir = tmpDir("dsv2wopto")
+    // every row throws: an error from a task would name the bomb, not the option
+    val reads = spark.createDataset(sorted.take(20)).map { r =>
+      if (r.pos > 0) throw new IllegalStateException("a task ran"); r
+    }
+    val bcfSrc = s"$dir/src.bcf"
+    val dicts = BcfIO.Dicts(Array("chr1"), Array("PASS"), Array("DP"))
+    val v = Vcf.parseLine("chr1\t100\trs1\tA\tC\t50\tPASS\tDP=1")
+    BcfIO.write(spark.createDataset(Seq(v)), dicts, bcfSrc)
+    val sites = spark.createDataset(Seq(v)).map { x =>
+      if (x.pos > 0) throw new IllegalStateException("a task ran"); x
+    }
+    def fails(option: String, value: String)(write: => Unit): Unit = {
+      val e = intercept[Exception](write)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists {
+        case i: IllegalArgumentException =>
+          i.getMessage.contains(s"option $option = '$value'")
+        case _ => false
+      }, msgs(e).mkString(" | "))
+    }
+    def bam(g: String): Unit = reads.toDF().write.format("bam").option("header", src)
+      .option("granularity", g).mode("overwrite").save(s"$dir/o.bam")
+    fails("granularity", "x")(bam("x"))
+    fails("granularity", "0")(bam("0"))
+    fails("granularity", "-5")(sites.toDF().write.format("bcf").option("header", bcfSrc)
+      .option("granularity", "-5").mode("overwrite").save(s"$dir/o.bcf"))
+    fails("granularity", "0")(BamIO.write(reads, header, s"$dir/t.bam", granularity = 0))
+    fails("granularity", "-1")(BamIO.writeSorted(reads, header, s"$dir/s.bam", granularity = -1))
+    fails("granularity", "0")(BcfIO.write(sites, dicts, s"$dir/t.bcf", granularity = 0))
+    fails("profile", "spec3")(reads.toDF().write.format("cram").option("header", src)
+      .option("profile", "spec3").mode("overwrite").save(s"$dir/o.cram"))
+    fails("profile", "spec3")(CramIO.write(reads, header, s"$dir/t.cram", profile = "spec3"))
+  }
+
   test("append mode onto an existing file is rejected, not silently truncated") {
     val src = writeBam("dsv2wapp")
     val out = s"${tmpDir("dsv2wappo")}/o.bam"
