@@ -191,33 +191,30 @@ object BamIO {
            splitSize: Long = 64L * 1024 * 1024,
            includeUnmapped: Boolean = false,
            columns: Seq[String] = Nil): Dataset[SamRecord] = {
-    val (header, ranges) = planSplits(file, intervals, splitSize, includeUnmapped)
-    val refs = header.refs
-    val iv = intervals.toArray
     import spark.implicits._
-    val withUnmapped = includeUnmapped
-    val fields = BamCodec.maskFor(columns)
-    spark.sparkContext.parallelize(ranges, math.max(1, ranges.length))
-      .flatMap { case (startVo, endVo) =>
-        readRange(file, startVo, endVo, refs, iv, withUnmapped, fields)
-      }.toDS()
+    v2.GraftDataSources.typed(spark,
+      plan(file, splitSize, includeUnmapped, exact = true)(_ => intervals),
+      BamCodec.maskFor(columns))
   }
 
-  /** Driver-side split planning shared by the Dataset reader and the
-    * DataSource V2 scan: header + the virtual-offset ranges to read,
-    * from the sidecar index, a foreign .bai/.csi, or split guessing —
-    * pruned against `intervals` when the index allows (bounded
-    * traversal, ref: BAMInputFormat.java:150-190). */
-  private[sources] def planSplits(file: String,
-           intervals: Seq[(String, Int, Int)] = Nil,
-           splitSize: Long = 64L * 1024 * 1024,
-           includeUnmapped: Boolean = false): (SamHeader, Seq[(Long, Long)]) = {
+  /** The BAM planner of every read face (typed [[read]], the DSv2 scan,
+    * the micro-batch stream): one partition per virtual-offset range,
+    * from the sidecar index, a foreign .bai/.csi, or split guessing.
+    * `intervalsOf` resolves the intervals against the file's header;
+    * they prune chunks when the index allows (bounded traversal,
+    * ref: BAMInputFormat.java:150-190) and, with `exact`, also filter
+    * records by overlap. */
+  private[sources] def plan(file: String, splitSize: Long, includeUnmapped: Boolean,
+                            exact: Boolean)
+                           (intervalsOf: SamHeader => Seq[(String, Int, Int)])
+      : Seq[v2.BamPartition] = {
     val (fs, path) = Fs.get(file)
     val fileLen = fs.getFileStatus(path).getLen
     val in = new Bgzf.BgzfInputStream(new BufferedInputStream(fs.open(path)))
     val header = BamCodec.readHeader(in)
     val headerEndVo = in.virtualPos
     in.close()
+    val intervals = intervalsOf(header)
 
     val ranges: Seq[(Long, Long)] =
       SplittingIndex.read(fs, SplittingIndex.indexPath(path)) match {
@@ -270,7 +267,8 @@ object BamIO {
               bounds.sliding(2).collect { case Array(a, b) if a < b => (a, b) }.toSeq
           }
       }
-    (header, ranges)
+    val iv = if (exact) intervals.toArray else Array.empty[(String, Int, Int)]
+    ranges.map { case (s, e) => v2.BamPartition(file, s, e, header.refs, iv, includeUnmapped) }
   }
 
   /** Chunk boundaries from the sidecar index, pruned against intervals
@@ -414,16 +412,9 @@ object BamIO {
       ((window(o + 2) & 0xff) << 16) | ((window(o + 3) & 0xff) << 24)
   }
 
-  /** Task-side: iterate records with start VO in [startVo, endVo). */
-  private[sources] def readRange(file: String, startVo: Long, endVo: Long,
-                        refs: Array[graft.model.SamRef],
-                        intervals: Array[(String, Int, Int)],
-                        includeUnmapped: Boolean = false,
-                        fields: Int = BamCodec.AllFields): Iterator[SamRecord] =
-    openRange(file, startVo, endVo, refs, intervals, includeUnmapped, fields)._1
-
-  /** [[readRange]] plus an explicit closer for consumers that may
-    * abandon the iterator early (DataSource V2 readers under LIMIT). */
+  /** Task-side: records with start VO in [startVo, endVo), plus an
+    * explicit closer for consumers that may abandon the iterator early
+    * (DataSource V2 readers under LIMIT). */
   private[sources] def openRange(file: String, startVo: Long, endVo: Long,
                         refs: Array[graft.model.SamRef],
                         intervals: Array[(String, Int, Int)],

@@ -785,10 +785,11 @@ object BcfIO {
     }
   }
 
-  /** Decode every record of a plain (uncompressed) BCF body stream. */
-  private def plainRecordIterator(in: java.io.InputStream,
-                                  dicts: Dicts,
-                                  fields: Int = Vcf.AllFields): Iterator[VcfVariant] = {
+  /** Decode records from `in` until EOF or `atEnd` (a BGZF range's end
+    * VO; never, for a plain body).  The stream self-closes on
+    * exhaustion. */
+  private def recordIterator(in: java.io.InputStream, dicts: Dicts, fields: Int,
+                             atEnd: () => Boolean): Iterator[VcfVariant] = {
     val contigs = dicts.contigs; val filters = dicts.filterTable
     val infoKeys = dicts.infoTable; val fmtKeys = dicts.fmtTable
     val wantG = (fields & Vcf.FGenotypes) != 0
@@ -798,6 +799,7 @@ object BcfIO {
       private lazy val scratch = new Array[Byte](8192)
       private def fetch(): Unit = {
         while (nextV == null && !done) {
+          if (atEnd()) { done = true; in.close(); return }
           val a = in.read()
           if (a < 0) { done = true; in.close(); return }
           val lShared = a | (in.read() << 8) | (in.read() << 16) | (in.read() << 24)
@@ -840,16 +842,13 @@ object BcfIO {
     (Dicts.fromHeader(new String(ht, 0, lh - 1, UTF_8)), in)
   }
 
-  /** Plain BCF = the single-stream piping form: one task decodes the
-    * body (files at scale are BGZF; this path exists for interop). */
-  private def readPlain(spark: org.apache.spark.sql.SparkSession, file: String,
-                        fields: Int = Vcf.AllFields):
-      org.apache.spark.sql.Dataset[VcfVariant] = {
-    import spark.implicits._
-    spark.sparkContext.parallelize(Seq(file), 1).flatMap { f =>
-      val (dicts, in) = openPlainBody(f)
-      plainRecordIterator(in, dicts, fields)
-    }.toDS()
+  /** Every record of a plain BCF (the single-stream piping form), plus
+    * a closer for consumers that may abandon the iterator early. */
+  private[sources] def openPlain(file: String, fields: Int = Vcf.AllFields):
+      (Iterator[VcfVariant], () => Unit) = {
+    val (dicts, in) = openPlainBody(file)
+    (recordIterator(in, dicts, fields, () => false),
+      () => try in.close() catch { case _: java.io.IOException => () })
   }
 
   def readDicts(file: String): Dicts =
@@ -879,14 +878,9 @@ object BcfIO {
   }
 
   /** Records in virtual-offset range [startVo, endVo) — both bounds
-    * must be record starts (index-derived).  The stream self-closes
-    * on exhaustion; use [[openRangeWithCloser]] when the iterator may
-    * be abandoned early. */
+    * must be record starts (index-derived) — plus a closer for
+    * consumers that may abandon the iterator early. */
   private[sources] def openRange(file: String, startVo: Long, endVo: Long,
-                        dicts: Dicts, fields: Int = Vcf.AllFields): Iterator[VcfVariant] =
-    openRangeWithCloser(file, startVo, endVo, dicts, fields)._1
-
-  private[sources] def openRangeWithCloser(file: String, startVo: Long, endVo: Long,
                         dicts: Dicts, fields: Int = Vcf.AllFields):
       (Iterator[VcfVariant], () => Unit) = {
     val (tfs, tpath) = Fs.get(file)
@@ -895,131 +889,67 @@ object BcfIO {
     val in = new Bgzf.BgzfInputStream(
       new java.io.BufferedInputStream(raw), Bgzf.voCompressed(startVo))
     in.seekInBlock(Bgzf.voUncompressed(startVo))
-    val contigs = dicts.contigs; val filters = dicts.filterTable
-    val infoKeys = dicts.infoTable; val fmtKeys = dicts.fmtTable
-    val wantG = (fields & Vcf.FGenotypes) != 0
-    val it = new Iterator[VcfVariant] {
-      private var nextV: VcfVariant = _
-      private var done = false
-      private lazy val scratch = new Array[Byte](8192)
-      private def fetch(): Unit = {
-        while (nextV == null && !done) {
-          if (in.virtualPos >= endVo) { done = true; in.close(); return }
-          val a = in.read()
-          if (a < 0) { done = true; in.close(); return }
-          val lShared = a | (in.read() << 8) | (in.read() << 16) | (in.read() << 24)
-          var lIndiv = 0
-          (0 until 4).foreach(i => lIndiv |= in.read() << (8 * i))
-          val shared = new Array[Byte](lShared)
-          var o = 0
-          while (o < lShared) { val r = in.read(shared, o, lShared - o); require(r > 0); o += r }
-          val indiv =
-            if (wantG) {
-              val b = new Array[Byte](lIndiv)
-              var o2 = 0
-              while (o2 < lIndiv) { val r = in.read(b, o2, lIndiv - o2); require(r > 0); o2 += r }
-              b
-            } else { skipFully(in, lIndiv, scratch); Array.emptyByteArray }
-          nextV = Bcf.decode(shared, contigs, filters, infoKeys, indiv, fmtKeys, fields)
-        }
-      }
-      override def hasNext: Boolean = { if (nextV == null) fetch(); nextV != null }
-      override def next(): VcfVariant = {
-        if (!hasNext) throw new NoSuchElementException
-        val v = nextV; nextV = null; v
-      }
-    }
-    (it, () => try in.close() catch { case _: java.io.IOException => () })
+    (recordIterator(in, dicts, fields, () => in.virtualPos >= endVo),
+      () => try in.close() catch { case _: java.io.IOException => () })
   }
 
   def read(spark: org.apache.spark.sql.SparkSession, file: String,
            splitSize: Long = 64L * 1024 * 1024,
            columns: Seq[String] = Nil):
-      org.apache.spark.sql.Dataset[VcfVariant] = {
-    val fields = Vcf.maskFor(columns)
-    if (isPlainBcf(file)) readPlain(spark, file, fields)
-    else scanFull(spark, file, headerInfo(file), splitSize, fields)
-  }
-
-  /** Full scan of a BGZF BCF whose header is already read. */
-  private def scanFull(spark: org.apache.spark.sql.SparkSession, file: String,
-                       header: (Dicts, Long), splitSize: Long, fields: Int):
-      org.apache.spark.sql.Dataset[VcfVariant] = {
-    import spark.implicits._
-    val dicts = header._1
-    // foreign BCFs without a sidecar fall back to BGZF block discovery
-    // + record guessing, exactly the BAM shape (ref: BCFSplitGuesser.java)
-    val ranges = planFullRanges(file, header, splitSize)
-    spark.sparkContext.parallelize(ranges, math.max(1, ranges.size))
-      .flatMap { case (startVo, endVo2) => openRange(file, startVo, endVo2, dicts, fields) }
-      .toDS()
-  }
-
-  /** BCF record reference span for overlap filtering: REF length
-    * stretched to INFO END= — the same span our encode writes as rlen
-    * and htslib-written files index with (a <DEL> with END=3000 must
-    * be found by a query inside its span, not just at POS). */
-  private def bcfEnd(v: VcfVariant): Long = Vcf.spanEnd(v).toLong
+      org.apache.spark.sql.Dataset[VcfVariant] =
+    readIntervals(spark, file, Nil, splitSize, columns)
 
   /** Bounded-traversal BCF read (the CSI face of S11, mirroring the
-    * BAM/tabix paths): resolve intervals to disjoint virtual-offset
-    * ranges through the best available index, decode only those, and
-    * overlap-filter records exactly.
-    *
-    * Index preference: a `.csi` (ours via [[Csi.buildBcf]], or
-    * htslib-written) gives chunk-precise pruning; else the v2 sidecar
-    * splitting index prunes its granules by (refId, pos) keys padded
-    * with the file's max record span — only when the file was written
-    * coordinate-sorted (maxSpan >= 0, same contract as BAM).  With
-    * neither, the full scan runs and filters.
-    *
-    * Exactly-once by construction: every planned range is disjoint
-    * (CSI chunks are merged globally, then large chunks split ONLY at
-    * record-start offsets the index itself knows — bin chunk begs and
-    * linear-window loffsets), so no cross-task ownership rule is
-    * needed. */
+    * BAM/tabix paths): decode only the ranges [[plan]] keeps and
+    * overlap-filter records exactly (REF length stretched to INFO END=,
+    * the span our encode writes as rlen and htslib indexes with).
+    * Empty `intervals` = full read. */
   def readIntervals(spark: org.apache.spark.sql.SparkSession, file: String,
                     intervals: Seq[(String, Int, Int)],
                     splitSize: Long = 64L * 1024 * 1024,
                     columns: Seq[String] = Nil):
       org.apache.spark.sql.Dataset[VcfVariant] = {
     import spark.implicits._
-    if (intervals.isEmpty) return read(spark, file, splitSize, columns)
-    // the overlap filter needs INFO END= spans, so the INFO group
-    // always decodes on bounded paths; genotype masking still applies
-    val fields = Vcf.maskFor(columns) | Vcf.FInfo
-    if (isPlainBcf(file)) {
-      // no index can exist over an uncompressed body: exact filter
-      // over the single-stream read
-      val iv = intervals.toArray
-      return readPlain(spark, file, fields).filter { v =>
-        iv.exists { case (c, s, e) => v.chrom == c && v.pos <= e && bcfEnd(v) >= s }
-      }
-    }
-    val header = headerInfo(file)
-    val dicts = header._1
-    val merged = Vcf.mergeIntervals(intervals)
+    v2.GraftDataSources.typed(spark, plan(file, intervals, exact = true, splitSize),
+      Vcf.maskFor(columns))
+  }
 
-    def overlaps(v: VcfVariant): Boolean =
-      merged.get(v.chrom).exists(_.exists { case (s, e) =>
-        v.pos <= e && bcfEnd(v) >= s
-      })
-
-    planIntervalRanges(file, header, intervals, splitSize) match {
-      case Some(ranges) =>
-        spark.sparkContext.parallelize(ranges, math.max(1, ranges.size))
-          .flatMap { case (s0, e0) =>
-            openRange(file, s0, e0, dicts, fields).filter(overlaps) }
-          .toDS()
-      case None =>
-        // `fields` keeps INFO in the mask: overlaps() reads END= spans
-        scanFull(spark, file, header, splitSize, fields).filter(overlaps(_))
+  /** The BCF planner of every read face.  A plain (uncompressed) BCF is
+    * one single-stream partition: no index or split point can exist
+    * over it.  A BGZF BCF with intervals resolves them to disjoint
+    * record-aligned VO ranges through the best index
+    * ([[planIntervalRanges]]); without intervals or an index, the
+    * full-scan ranges ([[planFullRanges]]).  With `exact` the intervals
+    * also filter records by overlap. */
+  private[sources] def plan(file: String, intervals: Seq[(String, Int, Int)],
+                            exact: Boolean, splitSize: Long)
+      : Seq[v2.GraftPartition[VcfVariant]] = {
+    val iv = if (exact) intervals.toArray else Array.empty[(String, Int, Int)]
+    if (isPlainBcf(file)) Seq(v2.BcfPlainPartition(file, iv))
+    else {
+      val header = headerInfo(file)
+      val ranges =
+        (if (intervals.isEmpty) None else planIntervalRanges(file, header, intervals, splitSize))
+          .getOrElse(planFullRanges(file, header, splitSize))
+      ranges.map { case (s, e) => v2.BcfPartition(file, s, e, iv, header._1) }
     }
   }
 
-  /** Driver-side planning for [[readIntervals]] (shared with the DSv2
-    * scan): disjoint record-aligned VO ranges from the best index, or
-    * None for the full-scan fallback.  `header` is [[headerInfo]]. */
+  /** Bounded-traversal ranges for [[plan]]: disjoint record-aligned VO
+    * ranges from the best index, or None for the full-scan fallback.
+    * `header` is [[headerInfo]].
+    *
+    * Index preference: a `.csi` (ours via [[Csi.buildBcf]], or
+    * htslib-written) gives chunk-precise pruning; else the v2 sidecar
+    * splitting index prunes its granules by (refId, pos) keys padded
+    * with the file's max record span — only when the file was written
+    * coordinate-sorted (maxSpan >= 0, same contract as BAM).
+    *
+    * Exactly-once by construction: every planned range is disjoint
+    * (CSI chunks are merged globally, then large chunks split ONLY at
+    * record-start offsets the index itself knows — bin chunk begs and
+    * linear-window loffsets), so no cross-task ownership rule is
+    * needed. */
   private[sources] def planIntervalRanges(file: String, header: (Dicts, Long),
                     intervals: Seq[(String, Int, Int)],
                     splitSize: Long): Option[Seq[(Long, Long)]] = {
@@ -1107,18 +1037,10 @@ object BcfIO {
     rangesOpt
   }
 
-  /** Record-level interval overlap with the index's span semantics
-    * (rlen = REF length), for consumers applying the authoritative
-    * `intervals` option. */
-  private[sources] def overlapFilter(merged: Map[String, Seq[(Int, Int)]])
-      (v: VcfVariant): Boolean =
-    merged.get(v.chrom).exists(_.exists { case (s, e) =>
-      v.pos <= e && bcfEnd(v) >= s
-    })
-
-  /** Full-scan range planning (header end + sidecar granules or
-    * guessed splits), for consumers that need partitions rather than
-    * a Dataset.  `header` is [[headerInfo]]. */
+  /** Full-scan range planning (header end + sidecar granules or, for
+    * foreign BCFs without a sidecar, BGZF block discovery + record
+    * guessing, the BAM shape — ref: BCFSplitGuesser.java).  `header`
+    * is [[headerInfo]]. */
   private[sources] def planFullRanges(file: String, header: (Dicts, Long),
                                       splitSize: Long): Seq[(Long, Long)] = {
     val (fs, path) = Fs.get(file)

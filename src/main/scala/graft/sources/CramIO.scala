@@ -494,46 +494,32 @@ object CramIO {
     * thousands of tasks, not one per ~1 MB container. */
   def read(spark: SparkSession, file: String,
            splitSize: Long = 64L * 1024 * 1024,
-           reference: Option[String] = None): Dataset[SamRecord] = {
-    import spark.implicits._
-    val (header, groups, meta) = planGroups(file, splitSize)
-    val refs = header.refs
-    val rgIds = CramForeign.readGroupIds(header.text)
-    spark.sparkContext.parallelize(groups, math.max(1, groups.size))
-      .flatMap { offsets => readGroup(file, offsets, refs, meta, rgIds, reference) }
-      .toDS()
-  }
+           reference: Option[String] = None): Dataset[SamRecord] =
+    readIntervals(spark, file, Nil, splitSize, reference)
 
   /** Bounded-traversal read: only containers whose (refSeqId,
-    * startPos, span) header fields overlap `intervals` are decoded —
-    * pruned through the `.crai` when present (no per-container
-    * header seeks on the driver), else through the container walk.
-    * Multi-ref slices (refSeqId -2) and spanless containers are kept
-    * conservatively; records are overlap-filtered exactly, and
-    * containers are disjoint so output is exactly-once. */
+    * startPos, span) header fields overlap `intervals` are decoded;
+    * records are overlap-filtered exactly, and containers are disjoint
+    * so output is exactly-once.  Empty `intervals` = full read. */
   def readIntervals(spark: SparkSession, file: String,
                     intervals: Seq[(String, Int, Int)],
                     splitSize: Long = 64L * 1024 * 1024,
                     reference: Option[String] = None): Dataset[SamRecord] = {
     import spark.implicits._
-    if (intervals.isEmpty) return read(spark, file, splitSize, reference)
-    val (header, groups, meta) = planGroupsBounded(file, intervals, splitSize)
-    val refs = header.refs
-    val rgIds = CramForeign.readGroupIds(header.text)
-    val iv = intervals.toArray
-    spark.sparkContext.parallelize(groups, math.max(1, groups.size))
-      .flatMap { offsets =>
-        readGroup(file, offsets, refs, meta, rgIds, reference).iterator.filter { r =>
-          iv.exists { case (c, s, e) =>
-            r.rname == c && r.pos <= e && math.max(r.end, r.pos) >= s
-          }
-        }
-      }.toDS()
+    v2.GraftDataSources.typed(spark,
+      plan(file, intervals, exact = true, splitSize, reference), 0)
   }
 
-  private[sources] def planGroupsBounded(file: String,
-      intervals: Seq[(String, Int, Int)], splitSize: Long)
-      : (SamHeader, Seq[Seq[Long]], CramMeta) = {
+  /** The CRAM planner of every read face: container groups of about
+    * `splitSize` bytes.  With `intervals`, only containers whose header
+    * (refSeqId, startPos, span) overlaps them are planned — through the
+    * `.crai` when present (no per-container header seeks on the
+    * driver), else through the container walk; multi-ref slices
+    * (refSeqId -2) and spanless containers are kept conservatively.
+    * With `exact` the intervals also filter records by overlap. */
+  private[sources] def plan(file: String, intervals: Seq[(String, Int, Int)],
+                            exact: Boolean, splitSize: Long,
+                            reference: Option[String]): Seq[v2.CramPartition] = {
     val header = readHeader(file)
     val refIdx = header.refs.map(_.name).zipWithIndex.toMap
     val ivsById = intervals.flatMap { case (c, s, e) =>
@@ -545,18 +531,23 @@ object CramIO {
           ri == seqId && start <= e && start + math.max(span, 1) - 1 >= s
         }))
     val (fs, p) = Fs.get(file)
-    val offsets: Seq[(Long, Int)] = Crai.read(fs, Crai.indexPath(p)) match {
-      case Some(entries) =>
-        entries.filter(e => containerOverlaps(e.seqId, e.start, e.span))
-          .map(e => (e.containerOffset, e.sliceSize.toInt + e.sliceOffset.toInt))
-      case None =>
-        Cram.enumerateContainers(file)
-          .filter(c => c.nRecords > 0 && !isEof(c))
-          .filter(c => containerOverlaps(c.refSeqId, c.startPos, c.span))
-          .map(c => (c.offset, c.length))
+    def walk = Cram.enumerateContainers(file).filter(c => c.nRecords > 0 && !isEof(c))
+    val containers: Seq[(Long, Int)] =
+      if (intervals.isEmpty) walk.map(c => (c.offset, c.length))
+      else Crai.read(fs, Crai.indexPath(p)) match {
+        case Some(entries) =>
+          entries.filter(e => containerOverlaps(e.seqId, e.start, e.span))
+            .map(e => (e.containerOffset, e.sliceSize.toInt + e.sliceOffset.toInt))
+        case None =>
+          walk.filter(c => containerOverlaps(c.refSeqId, c.startPos, c.span))
+            .map(c => (c.offset, c.length))
+      }
+    val meta = detectMeta(file, containers.headOption.map(_._1))
+    val rgIds = CramForeign.readGroupIds(header.text)
+    val iv = if (exact) intervals.toArray else Array.empty[(String, Int, Int)]
+    groupOffsets(containers, splitSize).map { g =>
+      v2.CramPartition(file, g, header.refs, iv, meta.major, meta.foreign, rgIds, reference)
     }
-    val meta = detectMeta(file, offsets.headOption.map(_._1))
-    (header, groupOffsets(offsets, splitSize), meta)
   }
 
   private def groupOffsets(containers: Seq[(Long, Int)], splitSize: Long)
@@ -596,25 +587,6 @@ object CramIO {
       }
       CramMeta(major, foreign)
     } finally raw.close()
-  }
-
-  private[sources] def planGroups(file: String, splitSize: Long)
-      : (SamHeader, Seq[Seq[Long]], CramMeta) = {
-    val header = readHeader(file)
-    val containers = Cram.enumerateContainers(file)
-      .filter(c => c.nRecords > 0 && !isEof(c))
-    val meta = detectMeta(file, containers.headOption.map(_.offset))
-    val groups = scala.collection.mutable.ArrayBuffer[Seq[Long]]()
-    var cur = scala.collection.mutable.ArrayBuffer[Long]()
-    var acc = 0L
-    containers.foreach { c =>
-      if (cur.nonEmpty && acc + c.length > splitSize) {
-        groups += cur.toSeq; cur = scala.collection.mutable.ArrayBuffer[Long](); acc = 0L
-      }
-      cur += c.offset; acc += c.length
-    }
-    if (cur.nonEmpty) groups += cur.toSeq
-    (header, groups.toSeq, meta)
   }
 
   /** Task-side: decode all records of one container group.

@@ -165,7 +165,7 @@ object Fasta {
 
   /** One-seek subsequence read given an already-resolved index entry
     * (executor-side path: no sidecar read per task). */
-  private def fetch(path: String, e: FaiEntry, start1: Long, end1: Long): String = {
+  private[sources] def fetch(path: String, e: FaiEntry, start1: Long, end1: Long): String = {
     val s = math.max(1L, start1)
     val t = math.min(e.length, end1)
     if (t < s) return ""
@@ -209,9 +209,16 @@ object Fasta {
                   intervals: Seq[(String, Long, Long)],
                   splitSize: Long = 1L * 1024 * 1024): Dataset[ReferenceFragment] = {
     import spark.implicits._
-    val fai = readFai(path).getOrElse(buildFai(path))
-    val byName = fai.map(e => e.name -> e).toMap
-    val chunks = intervals.flatMap { case (c, s0, t0) =>
+    v2.GraftDataSources.typed(spark, planRegions(path, intervals, splitSize), 0)
+  }
+
+  /** The [[readRegions]] planner: one partition per ≤ splitSize chunk
+    * of each interval, its `.fai` entry in hand (no sidecar read per
+    * task). */
+  private[sources] def planRegions(path: String, intervals: Seq[(String, Long, Long)],
+                                   splitSize: Long): Seq[v2.FastaRegionPartition] = {
+    val byName = readFai(path).getOrElse(buildFai(path)).map(e => e.name -> e).toMap
+    intervals.flatMap { case (c, s0, t0) =>
       val e = byName.getOrElse(c,
         throw new IllegalArgumentException(s"$path: no contig $c in .fai"))
       val s = math.max(1L, s0)
@@ -219,12 +226,9 @@ object Fasta {
       val basesPerSplit = math.max(1L,
         splitSize / math.max(1, e.lineWidth) * e.lineBases)
       (s to t by basesPerSplit).map { pos =>
-        (c, pos, math.min(t, pos + basesPerSplit - 1))
+        v2.FastaRegionPartition(path, e, pos, math.min(t, pos + basesPerSplit - 1))
       }
     }
-    spark.sparkContext.parallelize(chunks, math.max(1, chunks.size))
-      .map { case (c, s, t) => ReferenceFragment(c, s, fetch(path, byName(c), s, t)) }
-      .toDS()
   }
 
   def planRanges(path: String, splitSize: Long): Seq[FastaRange] = {
@@ -358,10 +362,21 @@ object Fasta {
   def read(spark: SparkSession, path: String,
            splitSize: Long = 16L * 1024 * 1024): Dataset[ReferenceFragment] = {
     import spark.implicits._
-    val ranges = readFai(path).map(planRangesFai(_, splitSize))
-      .getOrElse(planRanges(path, splitSize))
-    spark.sparkContext.parallelize(ranges, math.max(1, ranges.size))
-      .flatMap(r => openRange(path, r)._1)
-      .toDS()
+    v2.GraftDataSources.typed(spark, plan(path, splitSize, Nil), 0)
+  }
+
+  /** The FASTA planner of every read face: line-aligned byte ranges
+    * from the `.fai` (pruned to the lines whose start falls in
+    * `intervals`, when given), else from one driver metadata scan with
+    * no pruning (the SQL face's residual filters keep results exact). */
+  private[sources] def plan(path: String, splitSize: Long,
+                            intervals: Seq[(String, Long, Long)]): Seq[v2.FastaPartition] = {
+    val ranges = readFai(path) match {
+      case Some(entries) if intervals.nonEmpty =>
+        planRangesFaiBounded(entries, splitSize, intervals)
+      case Some(entries) => planRangesFai(entries, splitSize)
+      case None => planRanges(path, splitSize)
+    }
+    ranges.map(v2.FastaPartition(path, _))
   }
 }

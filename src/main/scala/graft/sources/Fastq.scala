@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.model.SequencedFragment
@@ -89,14 +88,8 @@ object Fastq {
            filterFailedQc: Boolean = false,
            splitSize: Long = 64L * 1024 * 1024): Dataset[SequencedFragment] = {
     import spark.implicits._
-    val comp = RangedText.compression(path)
-    val rs = RangedText.ranges(path, splitSize)
-    val rdd: RDD[SequencedFragment] =
-      spark.sparkContext.parallelize(rs, math.max(1, rs.size)).flatMap { case (s, e) =>
-        val endBound = RangedText.endBound(e, comp)
-        frame(RangedText.readLines(path, s, e, comp, stopAtEnd = false), s, endBound)
-      }
-    val ds = rdd.toDS()
+    val ds = v2.GraftDataSources.typed(spark,
+      v2.TextRangePartition.plan(path, splitSize, v2.TextRangePartition.FastqText), 0)
     if (filterFailedQc) ds.filter(_.filterPassed) else ds
   }
 
@@ -147,10 +140,13 @@ object Qseq {
       if (s.filterPassed) "1" else "0").mkString("\t")
   }
 
+  /** Distributed QSEQ read over the splittable ranged-text scan (plain,
+    * BGZF or gzip). */
   def read(spark: SparkSession, path: String,
            filterFailedQc: Boolean = false): Dataset[SequencedFragment] = {
     import spark.implicits._
-    val ds = spark.read.textFile(path).filter(_.nonEmpty).map(parseLine)
+    val ds = v2.GraftDataSources.typed(spark, v2.TextRangePartition.plan(path,
+      RangedText.sparkSplitSize(spark, path), v2.TextRangePartition.QseqText), 0)
     if (filterFailedQc) ds.filter(_.filterPassed) else ds
   }
 

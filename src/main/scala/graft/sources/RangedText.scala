@@ -2,8 +2,8 @@ package graft.sources
 
 import java.io.{BufferedInputStream, InputStream}
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.internal.SQLConf
 
 /** Byte-range splittable line reading — the Hadoop text-split
   * discipline re-expressed without Hadoop InputFormats, for plain AND
@@ -76,6 +76,18 @@ object RangedText {
     bounds.sliding(2).collect { case Seq(a, b) if a < b => (a, b) }.toSeq
   }
 
+  /** The split size Spark's own file scan picks for `path` (its
+    * `maxSplitBytes` rule: the file's bytes plus the open cost, spread
+    * over the default parallelism, within [open cost, max partition
+    * bytes]), for typed readers whose signature takes no split size. */
+  def sparkSplitSize(spark: SparkSession, path: String): Long = {
+    val conf = SQLConf.get
+    val (fs, p) = Fs.get(path)
+    val perCore = (fs.getFileStatus(p).getLen + conf.filesOpenCostInBytes) /
+      math.max(1, spark.sparkContext.defaultParallelism)
+    math.min(conf.filesMaxPartitionBytes, math.max(conf.filesOpenCostInBytes, perCore))
+  }
+
   /** Upper bound on owned line-start positions for range [start, end)
     * in the reader's position domain (virtual offsets for BGZF,
     * decompressed offsets for gzip — where the single range owns
@@ -84,15 +96,6 @@ object RangedText {
     case BgzfText => Bgzf.virtualOffset(end, 0)
     case GzipText => Long.MaxValue
     case PlainText => end
-  }
-
-  /** RDD of owned lines with positions, split into ~splitSize ranges. */
-  def lines(spark: SparkSession, path: String,
-            splitSize: Long = 64L * 1024 * 1024): RDD[Line] = {
-    val rs = ranges(path, splitSize)
-    val comp = compression(path)
-    spark.sparkContext.parallelize(rs, math.max(1, rs.size))
-      .flatMap { case (start, end) => readLines(path, start, end, comp) }
   }
 
   /** BGZF: place range bounds on verified block starts near each
@@ -182,6 +185,45 @@ object RangedText {
     (it, () => try in.close() catch { case _: java.io.IOException => () })
   }
 
+  /** Line reading for plain and gzip text: scans a buffer for '\n'
+    * rather than reading byte by byte (`BufferedInputStream.read()`
+    * takes a lock per byte, a gzip stream inflates one byte per call).
+    * One char per byte, as the BGZF loop decodes. */
+  private final class LineBuffer(in: InputStream) {
+    private val buf = new Array[Byte](1 << 16)
+    private var pos = 0
+    private var lim = 0
+    /** Bytes the last [[readLine]] consumed, its '\n' included. */
+    var consumed = 0L
+
+    /** The next line without its '\n', or null at EOF. */
+    def readLine(): String = {
+      consumed = 0
+      var sb: java.lang.StringBuilder = null
+      while (true) {
+        if (pos == lim) {
+          lim = math.max(0, in.read(buf, 0, buf.length))
+          pos = 0
+          if (lim == 0) return if (sb == null) null else sb.toString
+        }
+        var i = pos
+        while (i < lim && buf(i) != '\n') i += 1
+        val part = new String(buf, pos, i - pos, java.nio.charset.StandardCharsets.ISO_8859_1)
+        consumed += i - pos
+        if (i < lim) {
+          pos = i + 1
+          consumed += 1
+          return if (sb == null) part else sb.append(part).toString
+        }
+        pos = lim
+        sb = if (sb == null) new java.lang.StringBuilder(part) else sb.append(part)
+      }
+      null
+    }
+
+    def close(): Unit = in.close()
+  }
+
   /** [[readLines]] plus an explicit closer for consumers that may
     * abandon the iterator early (DataSource V2 readers under LIMIT):
     * the stream otherwise closes only at range end / EOF. */
@@ -192,17 +234,17 @@ object RangedText {
     val (fs, p) = Fs.get(path)
     val raw = fs.open(p)
     raw.seek(start)
-    val bgzf = comp == BgzfText
+    // BGZF reads byte by byte so each line's virtual offset is exact
+    val bgzf = if (comp == BgzfText)
+      new Bgzf.BgzfInputStream(new BufferedInputStream(raw), start) else null
+    val text = comp match {
+      case GzipText => new LineBuffer(new java.util.zip.GZIPInputStream(new BufferedInputStream(raw)))
+      case PlainText => new LineBuffer(raw)
+      case BgzfText => null
+    }
     var plainPos = start // byte offset (plain) / decompressed offset (gzip)
-    val in: InputStream = comp match {
-      case BgzfText => new Bgzf.BgzfInputStream(new BufferedInputStream(raw), start)
-      case GzipText => new java.util.zip.GZIPInputStream(new BufferedInputStream(raw))
-      case PlainText => new BufferedInputStream(raw)
-    }
-    def position: Long = in match {
-      case b: Bgzf.BgzfInputStream => b.virtualPos
-      case _ => plainPos
-    }
+    def position: Long = if (bgzf != null) bgzf.virtualPos else plainPos
+    def close(): Unit = if (bgzf != null) bgzf.close() else text.close()
     val endBound: Long = RangedText.endBound(end, comp)
 
     val it = new Iterator[Line] {
@@ -213,18 +255,19 @@ object RangedText {
       /** Read the line at the current position, or null at EOF. */
       private def readOne(): Line = {
         val lineStart = position
-        var c = in.read()
-        if (c < 0) return null
-        if (!bgzf) plainPos += 1
-        val sb = new java.lang.StringBuilder(120)
-        while (c >= 0 && c != '\n') {
-          sb.append(c.toChar)
-          c = in.read()
-          if (c >= 0 && !bgzf) plainPos += 1
-        }
-        if (sb.length() > 0 && sb.charAt(sb.length() - 1) == '\r')
-          sb.setLength(sb.length() - 1)
-        Line(lineStart, sb.toString)
+        val s =
+          if (bgzf == null) { val t = text.readLine(); plainPos += text.consumed; t }
+          else {
+            var c = bgzf.read()
+            if (c < 0) null
+            else {
+              val sb = new java.lang.StringBuilder(120)
+              while (c >= 0 && c != '\n') { sb.append(c.toChar); c = bgzf.read() }
+              sb.toString
+            }
+          }
+        if (s == null) null
+        else Line(lineStart, if (s.endsWith("\r")) s.substring(0, s.length - 1) else s)
       }
 
       private def fetch(): Unit = {
@@ -234,9 +277,9 @@ object RangedText {
           if (start > 0) readOne() // discard the unowned first line
         }
         val pos = position
-        if (stopAtEnd && pos > endBound) { finished = true; in.close(); return }
+        if (stopAtEnd && pos > endBound) { finished = true; close(); return }
         val l = readOne()
-        if (l == null) { finished = true; in.close() } else nextLine = l
+        if (l == null) { finished = true; close() } else nextLine = l
       }
       override def hasNext: Boolean = {
         if (nextLine == null && !finished) fetch()
@@ -247,6 +290,6 @@ object RangedText {
         val l = nextLine; nextLine = null; l
       }
     }
-    (it, () => try in.close() catch { case _: java.io.IOException => () })
+    (it, () => try close() catch { case _: java.io.IOException => () })
   }
 }

@@ -3,17 +3,16 @@ package graft.sources
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.model.{SamHeader, SamRecord, SamRef}
 
 /** SAM text source/sink (S1, S2, S15).
   *
-  * Read: Spark's own splittable text scan (predicate pushdown + whole
-  * stage codegen preserved) + a native SQL-expression parser — no
-  * UDFs, no per-record JVM lambdas (field semantics per
-  * SAMRecordReader.java; header reading per util/SAMHeaderReader.java).
+  * Read: the ranged-text scan every line format shares (the `sam`
+  * DataSource V2 table and [[read]] plan the same partitions), one
+  * [[parseLine]] per record; header reading per
+  * util/SAMHeaderReader.java.
   *
   * Write: the `format("sam")` sink — partition shards (header-less)
   * + driver-side merge that prepends one header — the
@@ -50,40 +49,24 @@ object Sam {
     SamHeader(text, refs)
   }
 
-  /** Records as a typed Dataset; the parse is pure Catalyst
-    * expressions over the splittable text scan.  BGZF-compressed SAM
-    * (.sam.bgz — S14) rides the graft ranged-BGZF line reader with the
-    * same expression parse. */
+  /** Records as a typed Dataset over the splittable ranged-text scan
+    * (plain text, BGZF-compressed .sam.bgz — S14 — or plain gzip as one
+    * whole-file range, the BGZFEnhancedGzipCodec fallback). */
   def read(spark: SparkSession, path: String): Dataset[SamRecord] = {
     import spark.implicits._
-    val lines: org.apache.spark.sql.DataFrame =
-      RangedText.compression(path) match {
-        case RangedText.PlainText => spark.read.textFile(path).toDF("value")
-        // BGZF splits at block bounds; plain gzip decodes as one
-        // whole-file range (the BGZFEnhancedGzipCodec fallback)
-        case _ => RangedText.lines(spark, path).map(_.text).toDF("value")
-      }
-    parseLines(lines).as[SamRecord]
+    v2.GraftDataSources.typed(spark, v2.TextRangePartition.plan(path,
+      RangedText.sparkSplitSize(spark, path), v2.TextRangePartition.SamText), 0)
   }
 
-  /** Parse SAM record lines out of a text DataFrame (header filtered). */
-  def parseLines(lines: DataFrame): DataFrame =
-    lines.filter(!col("value").startsWith("@") && length(col("value")) > 0)
-      .select(expr("split(value, '\t')").as("p"))
-      .select(
-        expr("element_at(p, 1)").as("qname"),
-        expr("CAST(element_at(p, 2) AS INT)").as("flag"),
-        expr("element_at(p, 3)").as("rname"),
-        expr("CAST(element_at(p, 4) AS INT)").as("pos"),
-        expr("CAST(element_at(p, 5) AS INT)").as("mapq"),
-        expr("element_at(p, 6)").as("cigar"),
-        expr("element_at(p, 7)").as("rnext"),
-        expr("CAST(element_at(p, 8) AS INT)").as("pnext"),
-        expr("CAST(element_at(p, 9) AS INT)").as("tlen"),
-        expr("element_at(p, 10)").as("seq"),
-        expr("element_at(p, 11)").as("qual"),
-        expr("CASE WHEN size(p) > 11 THEN slice(p, 12, size(p) - 11) " +
-          "ELSE CAST(array() AS ARRAY<STRING>) END").as("tags"))
+  /** One SAM record line (field semantics per SAMRecordReader.java).
+    * limit -1 like SQL split: a trailing empty field (e.g. empty qual)
+    * must survive, not throw ArrayIndexOutOfBounds. */
+  def parseLine(l: String): SamRecord = {
+    val p = l.split("\t", -1)
+    SamRecord(p(0), p(1).toInt, p(2), p(3).toInt, p(4).toInt, p(5), p(6),
+      p(7).toInt, p(8).toInt, p(9), p(10),
+      if (p.length > 11) p.slice(11, p.length) else Array.empty[String])
+  }
 
   /** Write records as-is (partition order preserved, no sort; the
     * reference's KeyIgnoringSAMRecordWriter shape): the

@@ -149,12 +149,42 @@ object Vcf {
            splitSize: Long = 64L * 1024 * 1024,
            columns: Seq[String] = Nil): Dataset[VcfVariant] = {
     import spark.implicits._
-    val mask = maskFor(columns)
-    RangedText.lines(spark, path, splitSize)
-      .filter(l => l.text.nonEmpty && !l.text.startsWith("#"))
-      .map(l => parseLine(l.text, mask))
-      .toDS()
+    v2.GraftDataSources.typed(spark, plan(path, Nil, exact = false, splitSize),
+      maskFor(columns))
   }
+
+  /** The VCF planner of every read face: with intervals and a `.tbi`
+    * over a BGZF file, the bounded-traversal chunk tasks
+    * ([[planBounded]]; their ownership rule applies the intervals to
+    * records); else the ranged-text split of the whole file, where
+    * `exact` intervals filter records by overlap. */
+  private[sources] def plan(path: String, intervals: Seq[(String, Int, Int)],
+                            exact: Boolean, splitSize: Long)
+      : Seq[v2.GraftPartition[VcfVariant]] =
+    planBounded(path, intervals, splitSize) match {
+      case Some(tasks) => tasks.map(v2.VcfChunkPartition)
+      case None =>
+        val comp = RangedText.compression(path)
+        val iv = if (exact) intervals.toArray else Array.empty[(String, Int, Int)]
+        RangedText.ranges(path, splitSize).map { case (s, e) =>
+          v2.VcfRangePartition(path, s, e, comp, iv)
+        }
+    }
+
+  /** The record-level interval filter of the VCF and BCF partitions:
+    * `open` with the decode mask, keeping records overlapping
+    * `intervals` (POS..[[spanEnd]]; empty = all).  The overlap test
+    * reads INFO END=, so INFO always decodes when it applies. */
+  private[sources] def openOverlapping(intervals: Array[(String, Int, Int)], fields: Int)
+      (open: Int => (Iterator[VcfVariant], () => Unit)): (Iterator[VcfVariant], () => Unit) =
+    if (intervals.isEmpty) open(fields)
+    else {
+      val merged = mergeIntervals(intervals.toSeq)
+      val (it, closer) = open(fields | FInfo)
+      (it.filter(v => merged.get(v.chrom).exists(_.exists { case (s, e) =>
+        v.pos <= e && spanEnd(v) >= s
+      })), closer)
+    }
 
   // ------------------------------------------- bounded traversal (.tbi)
 
@@ -237,12 +267,9 @@ object Vcf {
     * POS; a record STARTING BEFORE the merged interval (spanning in
     * from outside) is owned by the interval's first task, and only
     * when no earlier merged interval on the contig already overlaps
-    * it (that interval reported it). */
-  def readTask(t: ChunkTask): Iterator[VcfVariant] = openTask(t)._1
-
-  /** [[readTask]] plus a closer for consumers that may abandon the
-    * iterator early (DSv2 readers under LIMIT): chunks self-close on
-    * exhaustion, the closer releases the one in flight. */
+    * it (that interval reported it).  The closer is for consumers that
+    * may abandon the iterator early (DSv2 readers under LIMIT): chunks
+    * self-close on exhaustion, the closer releases the one in flight. */
   def openTask(t: ChunkTask, fields: Int = AllFields): (Iterator[VcfVariant], () => Unit) = {
     val (ivS, _) = t.contigIvs(t.ivIdx)
     var inFlight: () => Unit = () => ()
@@ -275,19 +302,8 @@ object Vcf {
                     intervals: Seq[(String, Int, Int)],
                     splitSize: Long = 64L * 1024 * 1024): Dataset[VcfVariant] = {
     import spark.implicits._
-    planBounded(path, intervals, splitSize) match {
-      case Some(tasks) =>
-        spark.sparkContext.parallelize(tasks, math.max(1, tasks.length))
-          .flatMap(readTask)
-          .toDS()
-      case None =>
-        val merged = mergeIntervals(intervals)
-        read(spark, path, splitSize).filter { v =>
-          merged.get(v.chrom).exists(_.exists { case (s, e) =>
-            v.pos <= e && spanEnd(v) >= s
-          })
-        }
-    }
+    v2.GraftDataSources.typed(spark, plan(path, intervals, exact = true, splitSize),
+      AllFields)
   }
 
   /** Write a BGZF-compressed VCF (.vcf.bgz) with terminator — the

@@ -49,11 +49,11 @@ class CraiSpec extends SparkSpec {
       .map(r => (r.rname, r.pos)).sorted.toSeq
     assert(bounded === full)
     assert(bounded.nonEmpty)
-    val (hdr, prunedGroups, _) = CramIO.planGroupsBounded(cram, intervals, 1L << 20)
-    val (_, allGroups, _) = CramIO.planGroups(cram, 1L << 20)
+    val prunedGroups = CramIO.plan(cram, intervals, exact = true, 1L << 20, None).map(_.offsets)
+    val allGroups = CramIO.plan(cram, Nil, exact = false, 1L << 20, None).map(_.offsets)
     assert(prunedGroups.map(_.size).sum < allGroups.map(_.size).sum,
       s"pruning read all ${allGroups.map(_.size).sum} containers")
-    assert(hdr.refs.length === 2)
+    assert(CramIO.plan(cram, intervals, exact = true, 1L << 20, None).head.refs.length === 2)
   }
 
   test("records spanning into the interval from before are kept") {

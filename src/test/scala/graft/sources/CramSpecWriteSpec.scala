@@ -58,7 +58,7 @@ class CramSpecWriteSpec extends SparkSpec {
     CramIO.write(spark.createDataset(recs).repartition(3), header, file,
       profile = "spec")
     // no graft marker → the planner must classify the file as foreign
-    val (_, _, meta) = CramIO.planGroups(file, 1L << 20)
+    val meta = CramIO.plan(file, Nil, exact = false, 1L << 20, None).head
     assert(meta.foreign, "spec-profile output must read through the foreign path")
     assert(meta.major === 3)
     val back = CramIO.read(spark, file).collect()
@@ -318,7 +318,7 @@ class CramSpecWriteSpec extends SparkSpec {
       .option("profile", "spec")
       .mode("overwrite")
       .save(file)
-    val (_, _, meta) = CramIO.planGroups(file, 1L << 20)
+    val meta = CramIO.plan(file, Nil, exact = false, 1L << 20, None).head
     assert(meta.foreign)
     val back = spark.read.format("cram").load(file)
       .selectExpr("qname", "seq").as[(String, String)].collect().toMap

@@ -427,4 +427,57 @@ class DataSourceV2Spec extends SparkSpec {
       .select("pos").collect().map(_.getLong(0)).sorted
     assert(v2 === typed)
   }
+
+  private def res(name: String): String =
+    getClass.getClassLoader.getResource(name).getFile
+
+  private def rowStrings(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("format(\"bcf\") reads an uncompressed BCF like BcfIO.read, with and without a chrom filter") {
+    val f = res("test.uncompressed.bcf")
+    val typed = BcfIO.read(spark, f).toDF()
+    assert(typed.count() === 5)
+    assert(rowStrings(spark.read.format("bcf").load(f)) === rowStrings(typed))
+    val filtered = spark.read.format("bcf").load(f).filter(col("chrom") === "20")
+    assert(rowStrings(filtered) === rowStrings(typed.filter(col("chrom") === "20")))
+    assert(filtered.count() === 5)
+  }
+
+  test("each batch scan plans its partitions once; a new load sees a rewritten file") {
+    import spark.implicits._
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    val dir = tmpDir("dsv2plan")
+    val bam = writeBam("dsv2planbam")
+    val cram = s"$dir/t.cram"
+    CramIO.write(spark.createDataset(sorted.take(300)).repartition(2), header, cram)
+    val sam = s"$dir/t.sam"
+    Sam.write(spark.createDataset(sorted.take(300)), header, sam)
+    val fastq = s"$dir/t.fastq"
+    Fastq.write(spark.createDataset((0 until 50).map(i =>
+      Fastq.parseName(s"@r$i 1:N:0:1", "").copy(sequence = "ACGT", quality = "IIII"))), fastq)
+    val qseq = s"$dir/t.qseq"
+    Qseq.write(Fastq.read(spark, fastq), qseq)
+    val fasta = s"$dir/t.fa"
+    java.nio.file.Files.write(java.nio.file.Paths.get(fasta),
+      ">c1\nACGTACGT\nACGT\n>c2\nGGGG\n".getBytes("UTF-8"))
+    val tables: Seq[(String, CaseInsensitiveStringMap => org.apache.spark.sql.connector.catalog.SupportsRead)] = Seq(
+      (bam, new v2.BamTable(_)), (cram, new v2.CramTable(_)),
+      (res("test.vcf.bgz"), new v2.VcfTable(_)), (res("test.bgzf.bcf"), new v2.BcfTable(_)),
+      (res("test.uncompressed.bcf"), new v2.BcfTable(_)), (fasta, new v2.FastaTable(_)),
+      (fastq, new v2.FastqTable(_)), (sam, new v2.SamTable(_)), (qseq, new v2.QseqTable(_)))
+    tables.foreach { case (path, table) =>
+      val opts = v2.GraftDataSinks.at(path)
+      val batch = table(opts).newScanBuilder(opts).build().toBatch
+      val first = batch.planInputPartitions()
+      assert(first.nonEmpty, path)
+      assert(batch.planInputPartitions() eq first, path)
+    }
+    // Spark builds a new Scan per query: a rewrite is seen by the next load
+    val before = spark.read.format("bam").load(bam).count()
+    BamIO.writeSorted(spark.createDataset(sorted.take(123)), header, bam)
+    assert(before === sorted.length)
+    assert(spark.read.format("bam").load(bam).select("qname").collect()
+      .map(_.getString(0)).sorted === sorted.take(123).map(_.qname).sorted.toArray)
+  }
 }

@@ -215,7 +215,7 @@ class PropertySpec extends AnyFunSuite {
           })
         }.map(_.id).sorted
         val indexed = Vcf.planBounded(f, ivs, splitSize) match {
-          case Some(tasks) => tasks.flatMap(Vcf.readTask).map(_.id)
+          case Some(tasks) => tasks.flatMap(Vcf.openTask(_)._1).map(_.id)
           case None => fail("index written but planBounded returned None")
         }
         assert(indexed.length === indexed.distinct.length,
@@ -295,7 +295,7 @@ class PropertySpec extends AnyFunSuite {
         BcfIO.planIntervalRanges(f, header, ivs, splitSize) match {
           case Some(ranges) =>
             val got = ranges.flatMap { case (s0, e0) =>
-              BcfIO.openRange(f, s0, e0, dicts)
+              BcfIO.openRange(f, s0, e0, dicts)._1
             }.filter { v =>
               merged.get(v.chrom).exists(_.exists { case (s, e) =>
                 v.pos <= e && v.pos + math.max(1, v.ref.length) - 1 >= s

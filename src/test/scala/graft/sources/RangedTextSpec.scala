@@ -7,6 +7,14 @@ import graft.SparkSpec
 
 class RangedTextSpec extends SparkSpec {
 
+  /** Every line of `f` as its planned ranges own them, range by range. */
+  private def ownedLines(f: String, splitSize: Long): Array[String] = {
+    val comp = RangedText.compression(f)
+    RangedText.ranges(f, splitSize).flatMap { case (s, e) =>
+      RangedText.readLines(f, s, e, comp).map(_.text)
+    }.toArray
+  }
+
   test("ownership protocol: every line owned by exactly one range, any bounds") {
     val dir = tmpDir("rt")
     val f = s"$dir/t.txt"
@@ -34,7 +42,7 @@ class RangedTextSpec extends SparkSpec {
     val out = new Bgzf.BgzfOutputStream(new java.io.FileOutputStream(f), blockSize = 256)
     out.write((lines.mkString("\n") + "\n").getBytes(UTF_8))
     out.close()
-    val got = RangedText.lines(spark, f, splitSize = 700).map(_.text).collect()
+    val got = ownedLines(f, splitSize = 700)
     assert(got.sorted === lines.sorted.toArray)
     // many ranges actually used
     assert(RangedText.ranges(f, 700).size > 3)
@@ -52,7 +60,7 @@ class RangedTextSpec extends SparkSpec {
     assert(RangedText.compression(f) === RangedText.GzipText)
     assert(!RangedText.isBgzf(f))
     assert(RangedText.ranges(f, 64).size === 1) // never split mid-stream
-    val got = RangedText.lines(spark, f, splitSize = 64).map(_.text).collect()
+    val got = ownedLines(f, splitSize = 64)
     assert(got.toSeq === lines)
     // decoded-stream opener serves header sniffing on gzip too
     val dec = new java.io.BufferedReader(new java.io.InputStreamReader(
@@ -80,7 +88,7 @@ class RangedTextSpec extends SparkSpec {
     }
     val withIndex = RangedText.ranges(f, 700)
     assert(withIndex.size > 3)
-    val got = RangedText.lines(spark, f, splitSize = 700).map(_.text).collect()
+    val got = ownedLines(f, splitSize = 700)
     assert(got.sorted === lines.sorted.toArray)
     val _ = noIndex
   }

@@ -160,4 +160,50 @@ class StreamingV2Spec extends SparkSpec {
     assert(streamed.orderBy(key).collect().toSeq ===
       batch.orderBy(key).collect().toSeq)
   }
+
+  test("streaming plans each landed file exactly like the batch scan") {
+    import spark.implicits._
+    import org.apache.spark.sql.connector.catalog.SupportsRead
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import graft.model.{SamHeader, SamRecord, SamRef, VcfVariant}
+    /** Array-deep rendering: partitions carry arrays (refs, dicts). */
+    def canon(x: Any): String = x match {
+      case a: Array[_] => a.map(canon).mkString("[", ",", "]")
+      case o: Option[_] => o.map(canon).toString
+      case p: Product => p.productIterator.map(canon).mkString(s"${p.productPrefix}(", ",", ")")
+      case v => String.valueOf(v)
+    }
+    def opts(path: String) = new CaseInsensitiveStringMap(
+      java.util.Map.of("path", path, "splitsize", "1024"))
+    def scan(table: CaseInsensitiveStringMap => SupportsRead, path: String) =
+      table(opts(path)).newScanBuilder(opts(path)).build()
+
+    val header = SamHeader("@HD\tVN:1.6\tSO:coordinate\n@SQ\tSN:chr1\tLN:100000",
+      Array(SamRef("chr1", 100000)))
+    val dicts = BcfIO.Dicts(Array("c1"), Array("PASS"), Array("DP"), Array("GT", "DP"))
+    val (bamDir, bcfDir, fqDir) = (tmpDir("bam_plan"), tmpDir("bcf_plan"), tmpDir("fq_plan"))
+    BamIO.writeSorted(spark.createDataset((0 until 3000).map(i =>
+      SamRecord(s"r$i", 0, "chr1", 1 + i, 60, "10M", "*", 0, 0, "ACGTACGTAC", "IIIIIIIIII",
+        Array.empty[String]))).coalesce(1), header, s"$bamDir/shard-000.bam", granularity = 50)
+    BcfIO.write(spark.createDataset((0 until 3000).map(i =>
+      VcfVariant("c1", 100L + i, s"v$i", "A", Array("C"), Some(30.0), "PASS", Array("DP"),
+        Array(i.toString), Array("GT", "DP"), Array(s"0/1:$i", s"1/1:${i * 2}")))).coalesce(1),
+      dicts, s"$bcfDir/shard-000.bcf", granularity = 50)
+    writeFile(fqDir, "part-00000.fastq", 0 until 3000)
+
+    val formats: Seq[(String, String, CaseInsensitiveStringMap => SupportsRead)] = Seq(
+      (bamDir, "shard-000.bam", new v2.BamTable(_)),
+      (bcfDir, "shard-000.bcf", new v2.BcfTable(_)),
+      (fqDir, "part-00000.fastq", new v2.FastqTable(_)))
+    formats.foreach { case (dir, name, table) =>
+      val stream = scan(table, dir).toMicroBatchStream(tmpDir("plan_ckpt"))
+      val streamed = stream.planInputPartitions(stream.initialOffset(), stream.latestOffset())
+      // the stream logs the listed (qualified) path: plan the batch scan on the same string
+      val file = org.apache.hadoop.fs.FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
+        .makeQualified(new org.apache.hadoop.fs.Path(s"$dir/$name")).toString
+      val batch = scan(table, file).toBatch.planInputPartitions()
+      assert(batch.length > 1, s"$name: fixture too small to split")
+      assert(streamed.map(canon).toSeq === batch.map(canon).toSeq, name)
+    }
+  }
 }
