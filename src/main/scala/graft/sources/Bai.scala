@@ -1,177 +1,39 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException}
-
-import scala.collection.mutable
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** BAI (BAM binning index) reader/writer — SAM spec §5 (public).
+/** BAI layout (SAM spec §5, public): raw little-endian, magic `BAI\1`,
+  * n_ref, then per contig the bins with their chunks and the 16 kbp
+  * linear index — [[BinIndex]] at min_shift=14, depth=5.
   *
-  * This is the interop path for FOREIGN coordinate-sorted BAMs that
-  * ship with a `.bai` instead of the graft sidecar index: bounded
-  * traversal resolves query intervals to merged chunk ranges via the
-  * binning index, lower-bounded by the 16 kbp linear index — the role
-  * LinearBAMIndex.java plays in the reference.  The indexer builds a
+  * The interop path for FOREIGN coordinate-sorted BAMs that ship with a
+  * `.bai` instead of the graft sidecar index (the role
+  * LinearBAMIndex.java plays in the reference); the indexer builds a
   * spec-conformant `.bai` from any graft-readable BAM in one driver
   * pass (the SplittingBAMIndexer.java shape).
   */
 object Bai {
 
-  final case class Chunk(beg: Long, end: Long) // virtual offsets
-  final case class RefIndex(bins: Map[Int, Seq[Chunk]], linear: Array[Long])
-  final case class Index(refs: Array[RefIndex])
+  /** BAI's metadata pseudo-bin (htsjdk and samtools write record counts
+    * there, not chunk ranges). */
+  val PseudoBin: Int = BinIndex.pseudoBin(5)
 
-  /** htsjdk/samtools write a metadata pseudo-bin per ref: its "chunks"
-    * are (unmapped-region VOs) and (mapped count, unmapped count) —
-    * NOT real chunk ranges.  It must never feed chunk resolution. */
-  val PseudoBin = 37450
-
-  private val Magic = Array[Byte]('B', 'A', 'I', 1)
+  private val Magic = "BAI\u0001"
 
   def indexPath(bam: Path): Path = new Path(bam.getParent, bam.getName + ".bai")
 
-  // ---------------------------------------------------------------- I/O
-
-  def write(fs: FileSystem, path: Path, idx: Index): Unit = {
-    val out = new DataOutputStream(new BufferedOutputStream(fs.create(path, true)))
-    def w32(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff); out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff) }
-    def w64(v: Long): Unit = { w32(v.toInt); w32((v >>> 32).toInt) }
-    out.write(Magic)
-    w32(idx.refs.length)
-    idx.refs.foreach { r =>
-      w32(r.bins.size)
-      r.bins.toSeq.sortBy(_._1).foreach { case (bin, chunks) =>
-        w32(bin)
-        w32(chunks.length)
-        chunks.foreach { c => w64(c.beg); w64(c.end) }
-      }
-      w32(r.linear.length)
-      r.linear.foreach(w64)
+  def write(fs: FileSystem, path: Path, idx: BinIndex.Index): Unit =
+    BinIndex.writeFile(fs, path, Magic, bgzf = false) { out =>
+      out.int32(idx.refs.length)
+      out.refs(idx, csi = false)
     }
-    out.close()
-  }
 
-  def read(fs: FileSystem, path: Path): Option[Index] = {
-    if (!fs.exists(path)) return None
-    val in = new DataInputStream(new BufferedInputStream(fs.open(path)))
-    try {
-      val magic = new Array[Byte](4)
-      in.readFully(magic)
-      if (!java.util.Arrays.equals(magic, Magic)) return None
-      def r32(): Int = {
-        val a = in.read(); val b = in.read(); val c = in.read(); val d = in.read()
-        if ((a | b | c | d) < 0) throw new EOFException()
-        a | (b << 8) | (c << 16) | (d << 24)
-      }
-      def r64(): Long = (r32().toLong & 0xffffffffL) | (r32().toLong << 32)
-      val nRef = r32()
-      val refs = Array.fill(nRef) {
-        val nBin = r32()
-        val bins = (0 until nBin).map { _ =>
-          val bin = r32()
-          val nChunk = r32()
-          bin -> (0 until nChunk).map(_ => Chunk(r64(), r64()))
-        }.toMap
-        val nIntv = r32()
-        RefIndex(bins.map { case (k, v) => k -> (v: Seq[Chunk]) },
-          Array.fill(nIntv)(r64()))
-      }
-      Some(Index(refs))
-    } finally in.close()
-  }
-
-  // ----------------------------------------------------------- querying
-
-  /** Bins overlapping [beg, end) 0-based (SAM spec §5.3 reg2bins) —
-    * BAI is CSI binning fixed at min_shift=14, depth=5, so the one
-    * parameterized implementation serves both. */
-  def reg2bins(beg: Int, end0: Int): Seq[Int] = Csi.reg2bins(beg, end0, 14, 5)
-
-  /** Merged chunk ranges for one interval (1-based inclusive), linear
-    * index applied as a lower bound. */
-  def chunksFor(idx: Index, refId: Int, start1: Int, end1: Int): Seq[Chunk] = {
-    if (refId < 0 || refId >= idx.refs.length) return Nil
-    val r = idx.refs(refId)
-    val beg = start1 - 1
-    val minVo =
-      if (r.linear.isEmpty) 0L
-      else r.linear(math.min(beg >> 14, r.linear.length - 1))
-    val raw = reg2bins(beg, end1).filter(_ != PseudoBin)
-      .flatMap(b => r.bins.getOrElse(b, Nil))
-      .filter(_.end > minVo)
-      .map(c => Chunk(math.max(c.beg, minVo), c.end))
-      .sortBy(_.beg)
-    merge(raw)
-  }
-
-  def merge(chunks: Seq[Chunk]): Seq[Chunk] = {
-    val out = mutable.ArrayBuffer[Chunk]()
-    chunks.sortBy(_.beg).foreach { c =>
-      if (out.nonEmpty && c.beg <= out.last.end)
-        out(out.length - 1) = Chunk(out.last.beg, math.max(out.last.end, c.end))
-      else out += c
+  def read(fs: FileSystem, path: Path): Option[BinIndex.Index] =
+    BinIndex.readFile(fs, path, Magic, bgzf = false) { in =>
+      BinIndex.Index(14, 5, in.refs(in.count("n_ref"), 5, csi = false))
     }
-    out.toSeq
-  }
 
-  // ----------------------------------------------------------- indexing
-
-  /** Build a .bai from a coordinate-sorted BAM in one sequential pass
-    * (driver-side tool, like the reference's SplittingBAMIndexer). */
-  def build(file: String): Index = {
-    val (fs, path) = Fs.get(file)
-    val in = new Bgzf.BgzfInputStream(new BufferedInputStream(fs.open(path)))
-    val header = BamCodec.readHeader(in)
-    val nRef = header.refs.length
-    val bins = Array.fill(nRef)(mutable.Map[Int, mutable.ArrayBuffer[Chunk]]())
-    val linear = Array.fill(nRef)(mutable.ArrayBuffer[Long]())
-
-    var recStart = in.virtualPos
-    var ok = true
-    while (ok) {
-      val a = in.read()
-      if (a < 0) ok = false
-      else {
-        val b1 = in.read(); val b2 = in.read(); val b3 = in.read()
-        if ((b1 | b2 | b3) < 0) throw new EOFException("truncated BAM record length")
-        val sz = a | (b1 << 8) | (b2 << 16) | (b3 << 24)
-        val data = new Array[Byte](sz)
-        var o = 0
-        while (o < sz) {
-          val r = in.read(data, o, sz - o)
-          if (r < 0) throw new EOFException("truncated BAM record")
-          o += r
-        }
-        val recEnd = in.virtualPos
-        val rec = BamCodec.decode(data, header.refs)
-        val refId = header.refs.indexWhere(_.name == rec.rname)
-        if (refId >= 0 && rec.pos > 0) {
-          val beg0 = rec.pos - 1
-          val end0 = math.max(rec.end, rec.pos) // 1-based inclusive end
-          val bin = BamCodec.reg2bin(beg0, end0)
-          val bs = bins(refId).getOrElseUpdate(bin, mutable.ArrayBuffer())
-          if (bs.nonEmpty && bs.last.end == recStart)
-            bs(bs.length - 1) = Chunk(bs.last.beg, recEnd)
-          else bs += Chunk(recStart, recEnd)
-          // linear: min VO per 16kbp window the record overlaps
-          val wBeg = beg0 >> 14
-          val wEnd = (end0 - 1) >> 14
-          val lin = linear(refId)
-          while (lin.length <= wEnd) lin += 0L
-          (wBeg to wEnd).foreach { w =>
-            if (lin(w) == 0L || recStart < lin(w)) lin(w) = recStart
-          }
-        }
-        recStart = recEnd
-      }
-    }
-    in.close()
-    Index((0 until nRef).map { i =>
-      RefIndex(bins(i).map { case (k, v) => k -> (v.toSeq: Seq[Chunk]) }.toMap,
-        linear(i).toArray)
-    }.toArray)
-  }
+  def build(file: String): BinIndex.Index = BinIndex.buildBam(file, 14, 5)
 
   /** Build and write the sidecar .bai. */
   def buildAndWrite(file: String): Unit = {

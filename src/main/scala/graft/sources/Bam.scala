@@ -297,7 +297,7 @@ object BamCodec {
   }
 
   /** SAM spec reg2bin (§5.3, public pseudo-code). */
-  def reg2bin(beg: Int, end0: Int): Int = Csi.reg2bin(beg, end0, 14, 5)
+  def reg2bin(beg: Int, end0: Int): Int = BinIndex.reg2bin(beg, end0, 14, 5)
 
   // ------------------------------------------------- boundary discovery
 

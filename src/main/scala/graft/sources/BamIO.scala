@@ -90,7 +90,71 @@ object SplittingIndex {
     * RNA-seq reads (CIGAR N over megabase introns) and ultralong reads
     * make any fixed guess unsafe. */
   final case class Index(granularity: Int, entries: Array[Entry],
-                         endVo: Long, maxSpan: Int)
+                         endVo: Long, maxSpan: Int) {
+
+    /** The `.sidx` plan of BAM and BCF: granules [entry, next entry)
+      * from the header end, pruned against `queries` ((refId, start1,
+      * end1), 1-based inclusive) when given, then coalesced while
+      * contiguous up to `splitSize` compressed bytes (bounded
+      * traversal, ref: BAMInputFormat.java:150-190).  Pruning needs the
+      * file-wide max read span (v2 index) to pad granule starts — with
+      * an unknown bound a spliced/ultralong read could span from a
+      * pruned granule into an interval, so nothing is pruned.
+      * `keepUnmapped` keeps the granules reaching into the unmapped
+      * tail. */
+    def ranges(headerEndVo: Long, queries: Option[Seq[(Int, Int, Int)]],
+               splitSize: Long, keepUnmapped: Boolean): Seq[(Long, Long)] = {
+      val all = Entry(headerEndVo, entries.headOption.map(_.refId).getOrElse(-1),
+        entries.headOption.map(_.pos).getOrElse(-1)) +: entries.toSeq
+      val granules: Seq[(Entry, Long)] =
+        all.zip(all.drop(1).map(_.vo) :+ endVo).filter { case (e, end) => e.vo < end }
+      val kept = queries.filter(_ => maxSpan >= 0) match {
+        case None => granules
+        case Some(ivs) =>
+          granules.zipWithIndex.filter { case ((e, _), i) =>
+            val nextKey =
+              if (i + 1 < granules.length) Some((granules(i + 1)._1.refId, granules(i + 1)._1.pos))
+              else None
+            overlaps(e.refId, e.pos, nextKey, ivs) ||
+              // the unmapped tail sorts last: a granule reaches into it
+              // iff its next granule starts unmapped (or it is the last)
+              (keepUnmapped && nextKey.forall(_._1 < 0))
+          }.map(_._1)
+      }
+      val out = new ArrayBuffer[(Long, Long)]()
+      var curStart = -1L
+      var curEnd = -1L
+      kept.foreach { case (e, end) =>
+        val contiguous = curStart >= 0 && e.vo == curEnd
+        val full = curStart >= 0 &&
+          Bgzf.voCompressed(curEnd) - Bgzf.voCompressed(curStart) >= splitSize
+        if (curStart < 0) { curStart = e.vo; curEnd = end }
+        else if (contiguous && !full) curEnd = end
+        else { out += ((curStart, curEnd)); curStart = e.vo; curEnd = end }
+      }
+      if (curStart >= 0) out += ((curStart, curEnd))
+      out.toSeq
+    }
+
+    /** A granule [first record key, next granule's first key) can hold
+      * a record overlapping `ivs`?  Keys are 0-based (rec.pos - 1);
+      * intervals 1-based inclusive.  A record starting up to
+      * maxSpan-1 bases before an interval can still reach into it, so
+      * the granule's last possible start (next key) is padded by it.
+      * Unknown next keys and the unmapped tail keep the granule. */
+    private def overlaps(refId: Int, pos0: Int, nextKey: Option[(Int, Int)],
+                         ivs: Seq[(Int, Int, Int)]): Boolean = {
+      if (refId < 0) return true
+      ivs.exists { case (ri, s, e) =>
+        val startsBeforeEnd = refId < ri || (refId == ri && pos0 + 1 <= e)
+        val endsAfterStart = nextKey match {
+          case Some((nr, np0)) => nr > ri || nr < 0 || (nr == ri && np0.toLong + maxSpan >= s)
+          case None => true
+        }
+        startsBeforeEnd && endsAfterStart
+      }
+    }
+  }
   private val Magic = 0x47534958 // "GSIX"
 
   def write(fs: FileSystem, path: Path, granularity: Int,
@@ -216,51 +280,30 @@ object BamIO {
     in.close()
     val intervals = intervalsOf(header)
 
+    val refIdx = header.refs.map(_.name).zipWithIndex.toMap
+    val queries = intervals.flatMap { case (c, s, e) => refIdx.get(c).map(ri => (ri, s, e)) }
     val ranges: Seq[(Long, Long)] =
       SplittingIndex.read(fs, SplittingIndex.indexPath(path)) match {
         case Some(idx) =>
-          splitsFromIndex(header, idx, headerEndVo, intervals, splitSize, includeUnmapped)
+          idx.ranges(headerEndVo,
+            Some(queries).filter(_ => intervals.nonEmpty && header.sortOrder == "coordinate"),
+            splitSize, includeUnmapped)
         case None =>
           // foreign BAM: a spec .bai or .csi + intervals gives exact
-          // bounded traversal (chunk ranges from the binning index,
-          // linear/loffset lower bound); otherwise split guessing
-          val refIdx = header.refs.map(_.name).zipWithIndex.toMap
-          val baiChunks: Option[(Seq[Bai.Chunk], Long)] =
+          // bounded traversal; otherwise split guessing
+          val binning =
             if (intervals.isEmpty) None
-            else Bai.read(fs, Bai.indexPath(path)).map { idx =>
-              // pseudo-bin 37450 carries counts, not VOs — exclude it
-              // from the mapped-end fold as well as chunk resolution
-              (intervals.flatMap { case (c, s0, e0) =>
-                refIdx.get(c).map(ri => Bai.chunksFor(idx, ri, s0, e0)).getOrElse(Nil)
-              }, idx.refs.iterator
-                .flatMap(_.bins.iterator.collect {
-                  case (bin, cs) if bin != Bai.PseudoBin => cs
-                }.flatten)
-                .map(_.end).foldLeft(headerEndVo)(math.max))
-            }.orElse(Csi.read(fs, Csi.indexPath(path)).map { idx =>
-              // as with BAI's 37450, exclude the CSI metadata
-              // pseudo-bin (maxBin+1 at this depth): an htslib-written
-              // .csi stores file-span VOs there, which would drag
-              // mappedEndVo to EOF and zero out the unmapped tail
-              val pseudo = Csi.pseudoBin(idx.depth)
-              (intervals.flatMap { case (c, s0, e0) =>
-                refIdx.get(c).map(ri => Csi.chunksFor(idx, ri, s0, e0)).getOrElse(Nil)
-              }, idx.refs.iterator
-                .flatMap(_.bins.iterator.collect {
-                  case (bin, e) if bin != pseudo => e.chunks
-                }.flatten)
-                .map(_.end).foldLeft(headerEndVo)(math.max))
-            })
-          baiChunks match {
-            case Some((chunks, mappedEndVo)) =>
+            else Bai.read(fs, Bai.indexPath(path)).orElse(Csi.read(fs, Csi.indexPath(path)))
+          binning match {
+            case Some(idx) =>
               // unplaced-unmapped records sort after every mapped
               // chunk in a coordinate-sorted BAM; the binning index
               // has no entries for them, so bounded traversal with
               // includeUnmapped appends the tail range
-              val tail =
-                if (includeUnmapped) Seq((mappedEndVo, Bgzf.virtualOffset(fileLen, 0)))
-                else Nil
-              Bai.merge(chunks).map(c => (c.beg, c.end)) ++ tail
+              val mappedEndVo = idx.refs.iterator.flatMap(idx.dataBins).flatMap(_._2)
+                .map(_.end).foldLeft(headerEndVo)(math.max)
+              idx.ranges(queries, splitSize) ++
+                (if (includeUnmapped) Seq((mappedEndVo, Bgzf.virtualOffset(fileLen, 0))) else Nil)
             case None =>
               val bounds = splitsByGuessing(fs, path, fileLen, headerEndVo, splitSize,
                 data => BamCodec.guessRecordStart(data, header.refs.length))
@@ -269,76 +312,6 @@ object BamIO {
       }
     val iv = if (exact) intervals.toArray else Array.empty[(String, Int, Int)]
     ranges.map { case (s, e) => v2.BamPartition(file, s, e, header.refs, iv, includeUnmapped) }
-  }
-
-  /** Chunk boundaries from the sidecar index, pruned against intervals
-    * when the BAM is coordinate-sorted (bounded traversal,
-    * ref: BAMInputFormat.java:150-190).  Pruning requires a known
-    * file-wide max read span (v2 index) to pad chunk starts — with an
-    * unknown bound a spliced/ultralong read could span from a pruned
-    * chunk into an interval, so pruning is disabled entirely. */
-  private def splitsFromIndex(header: SamHeader, index: SplittingIndex.Index,
-                              headerEndVo: Long,
-                              intervals: Seq[(String, Int, Int)],
-                              splitSize: Long,
-                              includeUnmapped: Boolean = false): Seq[(Long, Long)] = {
-    val entries = index.entries
-    val endVo = index.endVo
-    val all = SplittingIndex.Entry(headerEndVo,
-      entries.headOption.map(_.refId).getOrElse(-1),
-      entries.headOption.map(_.pos).getOrElse(-1)) +: entries.toSeq
-    val chunks: Seq[(SplittingIndex.Entry, Long)] =
-      all.zip(all.drop(1).map(_.vo) :+ endVo).filter { case (e, end) => e.vo < end }
-    val pruned =
-      if (intervals.isEmpty || header.sortOrder != "coordinate" || index.maxSpan < 0) chunks
-      else {
-        val refIdx = header.refs.map(_.name).zipWithIndex.toMap
-        val ivs = intervals.flatMap { case (c, s, e) => refIdx.get(c).map(ri => (ri, s, e)) }
-        chunks.zipWithIndex.filter { case ((e, _), i) =>
-          val nextKey = if (i + 1 < chunks.length) Some((chunks(i + 1)._1.refId, chunks(i + 1)._1.pos)) else None
-          chunkOverlaps(e.refId, e.pos, nextKey, ivs, index.maxSpan) ||
-            // the unmapped tail sorts last: a chunk reaches into it iff
-            // its next chunk starts unmapped (or it is the last chunk)
-            (includeUnmapped && nextKey.forall(_._1 < 0))
-        }.map(_._1)
-      }
-    // coalesce contiguous chunks up to splitSize compressed bytes
-    val out = new ArrayBuffer[(Long, Long)]()
-    var curStart = -1L
-    var curEnd = -1L
-    pruned.foreach { case (e, end) =>
-      val contiguous = curStart >= 0 && e.vo == curEnd
-      val full = curStart >= 0 &&
-        Bgzf.voCompressed(curEnd) - Bgzf.voCompressed(curStart) >= splitSize
-      if (curStart < 0) { curStart = e.vo; curEnd = end }
-      else if (contiguous && !full) curEnd = end
-      else { out += ((curStart, curEnd)); curStart = e.vo; curEnd = end }
-    }
-    if (curStart >= 0) out += ((curStart, curEnd))
-    out.toSeq
-  }
-
-  /** A chunk [first record key, next chunk's first key) can contain a
-    * record overlapping the intervals?  Index keys are 0-based
-    * (stored as rec.pos - 1); intervals are 1-based inclusive.
-    * `maxSpan` is the file-wide bound on record reference span from
-    * the v2 sidecar index: a record starting up to maxSpan-1 bases
-    * before an interval can still reach into it, so the chunk's last
-    * possible start (next chunk's first key) is padded by it.
-    * Unknown next keys keep the chunk. */
-  private def chunkOverlaps(refId: Int, pos0: Int, nextKey: Option[(Int, Int)],
-                            ivs: Seq[(Int, Int, Int)], maxSpan: Int): Boolean = {
-    if (refId < 0) return true // unmapped tail — kept (optional in ref)
-    val pos1 = pos0 + 1 // 1-based start of chunk's first record
-    ivs.exists { case (ri, s, e) =>
-      val startsBeforeEnd = refId < ri || (refId == ri && pos1 <= e)
-      val endsAfterStart = nextKey match {
-        case Some((nr, np0)) =>
-          nr > ri || nr < 0 || (nr == ri && np0.toLong + maxSpan >= s)
-        case None => true
-      }
-      startsBeforeEnd && endsAfterStart
-    }
   }
 
   /** No index: fixed byte-range split targets; at each target the
@@ -421,11 +394,7 @@ object BamIO {
                         includeUnmapped: Boolean = false,
                         fields: Int = BamCodec.AllFields)
       : (Iterator[SamRecord], () => Unit) = {
-    val (fs, path) = Fs.get(file)
-    val raw = fs.open(path)
-    raw.seek(Bgzf.voCompressed(startVo))
-    val in = new Bgzf.BgzfInputStream(new BufferedInputStream(raw), Bgzf.voCompressed(startVo))
-    in.seekInBlock(Bgzf.voUncompressed(startVo))
+    val in = Bgzf.openAt(file, startVo)
     val it = new Iterator[SamRecord] {
       private var nextRec: SamRecord = _
       private var finished = false
@@ -463,7 +432,8 @@ object BamIO {
   private def overlaps(r: SamRecord, ivs: Array[(String, Int, Int)]): Boolean =
     ivs.exists { case (c, s, e) => r.rname == c && r.pos <= e && r.end >= s }
 
-  private def readIntLe(in: java.io.InputStream): Int = {
+  /** Little-endian int32, or -1 at a clean end of stream. */
+  private[sources] def readIntLe(in: java.io.InputStream): Int = {
     val a = in.read()
     if (a < 0) return -1
     val b = in.read(); val c = in.read(); val d = in.read()

@@ -883,12 +883,7 @@ object BcfIO {
   private[sources] def openRange(file: String, startVo: Long, endVo: Long,
                         dicts: Dicts, fields: Int = Vcf.AllFields):
       (Iterator[VcfVariant], () => Unit) = {
-    val (tfs, tpath) = Fs.get(file)
-    val raw = tfs.open(tpath)
-    raw.seek(Bgzf.voCompressed(startVo))
-    val in = new Bgzf.BgzfInputStream(
-      new java.io.BufferedInputStream(raw), Bgzf.voCompressed(startVo))
-    in.seekInBlock(Bgzf.voUncompressed(startVo))
+    val in = Bgzf.openAt(file, startVo)
     (recordIterator(in, dicts, fields, () => in.virtualPos >= endVo),
       () => try in.close() catch { case _: java.io.IOException => () })
   }
@@ -937,104 +932,26 @@ object BcfIO {
 
   /** Bounded-traversal ranges for [[plan]]: disjoint record-aligned VO
     * ranges from the best index, or None for the full-scan fallback.
-    * `header` is [[headerInfo]].
-    *
-    * Index preference: a `.csi` (ours via [[Csi.buildBcf]], or
-    * htslib-written) gives chunk-precise pruning; else the v2 sidecar
-    * splitting index prunes its granules by (refId, pos) keys padded
-    * with the file's max record span — only when the file was written
-    * coordinate-sorted (maxSpan >= 0, same contract as BAM).
-    *
-    * Exactly-once by construction: every planned range is disjoint
-    * (CSI chunks are merged globally, then large chunks split ONLY at
-    * record-start offsets the index itself knows — bin chunk begs and
-    * linear-window loffsets), so no cross-task ownership rule is
-    * needed. */
+    * `header` is [[headerInfo]].  A `.csi` (ours via [[Csi.buildBcf]],
+    * or htslib-written) gives chunk-precise ranges
+    * ([[BinIndex.Index.ranges]]); else the v2 sidecar splitting index
+    * prunes its granules ([[SplittingIndex.Index.ranges]]) — only when
+    * the file was written coordinate-sorted (maxSpan >= 0, same
+    * contract as BAM). */
   private[sources] def planIntervalRanges(file: String, header: (Dicts, Long),
                     intervals: Seq[(String, Int, Int)],
                     splitSize: Long): Option[Seq[(Long, Long)]] = {
     val (fs, path) = Fs.get(file)
     val (dicts, headerEndVo) = header
     val refIdOf = dicts.contigs.zipWithIndex.toMap
-    val merged = Vcf.mergeIntervals(intervals)
-
-    val rangesOpt: Option[Seq[(Long, Long)]] =
-      Csi.read(fs, Csi.indexPath(path)).map { idx =>
-        val pseudo = Csi.pseudoBin(idx.depth)
-        val chunks = merged.toSeq.flatMap { case (c, ivs) =>
-          refIdOf.get(c).toSeq.flatMap { ri =>
-            ivs.flatMap { case (s, e) => Csi.chunksFor(idx, ri, s, e) }
-          }
-        }
-        val disjoint = Bai.merge(chunks.sortBy(_.beg))
-        // every record-start VO the index knows, for splitting large
-        // chunks without any mid-record guessing
-        val starts = idx.refs.iterator.flatMap(_.bins.iterator)
-          .filter { case (bin, _) => bin != pseudo }
-          .flatMap { case (_, b) => b.loffset +: b.chunks.map(_.beg) }
-          .filter(_ > 0).toArray.distinct.sorted
-        disjoint.flatMap { c =>
-          val out = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-          var segStart = c.beg
-          var i = java.util.Arrays.binarySearch(starts, c.beg + 1) match {
-            case neg if neg < 0 => -neg - 1
-            case exact => exact
-          }
-          while (i < starts.length && starts(i) < c.end) {
-            if (Bgzf.voCompressed(starts(i)) - Bgzf.voCompressed(segStart) >= splitSize) {
-              out += ((segStart, starts(i)))
-              segStart = starts(i)
-            }
-            i += 1
-          }
-          out += ((segStart, c.end))
-          out.toSeq
-        }
-      }.orElse {
-        SplittingIndex.read(fs, SplittingIndex.indexPath(path)).flatMap { sidx =>
-          if (sidx.maxSpan < 0) None // unsorted or v1 sidecar: no pruning
-          else {
-            val ivs = merged.toSeq.flatMap { case (c, rs) =>
-              refIdOf.get(c).toSeq.flatMap(ri => rs.map { case (s, e) => (ri, s, e) })
-            }
-            val all = SplittingIndex.Entry(headerEndVo,
-              sidx.entries.headOption.map(_.refId).getOrElse(-1),
-              sidx.entries.headOption.map(_.pos).getOrElse(-1)) +: sidx.entries.toSeq
-            val granules = all.zip(all.drop(1).map(_.vo) :+ sidx.endVo)
-              .filter { case (en, end) => en.vo < end }
-            val kept = granules.zipWithIndex.filter { case ((en, _), i) =>
-              val nextKey =
-                if (i + 1 < granules.length)
-                  Some((granules(i + 1)._1.refId, granules(i + 1)._1.pos))
-                else None
-              ivs.exists { case (ri, s, e) =>
-                val startsBeforeEnd = en.refId < ri || (en.refId == ri && en.pos + 1 <= e)
-                val endsAfterStart = nextKey match {
-                  case Some((nr, np0)) =>
-                    nr > ri || nr < 0 || (nr == ri && np0.toLong + sidx.maxSpan >= s)
-                  case None => true
-                }
-                startsBeforeEnd && endsAfterStart
-              }
-            }.map(_._1)
-            // coalesce contiguous granules up to splitSize
-            val out = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-            var curStart = -1L
-            var curEnd = -1L
-            kept.foreach { case (en, end) =>
-              val contiguous = curStart >= 0 && en.vo == curEnd
-              val full = curStart >= 0 &&
-                Bgzf.voCompressed(curEnd) - Bgzf.voCompressed(curStart) >= splitSize
-              if (curStart < 0) { curStart = en.vo; curEnd = end }
-              else if (contiguous && !full) curEnd = end
-              else { out += ((curStart, curEnd)); curStart = en.vo; curEnd = end }
-            }
-            if (curStart >= 0) out += ((curStart, curEnd))
-            Some(out.toSeq)
-          }
-        }
-      }
-    rangesOpt
+    val queries = Vcf.mergeIntervals(intervals).toSeq.flatMap { case (c, ivs) =>
+      refIdOf.get(c).toSeq.flatMap(ri => ivs.map { case (s, e) => (ri, s, e) })
+    }
+    Csi.read(fs, Csi.indexPath(path)).map(_.ranges(queries, splitSize)).orElse {
+      SplittingIndex.read(fs, SplittingIndex.indexPath(path))
+        .filter(_.maxSpan >= 0) // unsorted or v1 sidecar: no pruning
+        .map(_.ranges(headerEndVo, Some(queries), splitSize, keepUnmapped = false))
+    }
   }
 
   /** Full-scan range planning (header end + sidecar granules or, for

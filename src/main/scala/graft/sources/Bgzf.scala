@@ -108,6 +108,10 @@ object Bgzf {
       val o = rest.length - 4
       u8(rest(o)) | (u8(rest(o + 1)) << 8) | (u8(rest(o + 2)) << 16) | (u8(rest(o + 3)) << 24)
     }
+    // the spec caps ISIZE at 64 KiB: never size a buffer from a
+    // corrupt one
+    if (isize < 0 || isize > MaxBlockSize) throw new IllegalStateException(
+      f"BGZF block at offset $coffset%d claims ISIZE $isize")
     val out = new Array[Byte](isize)
     if (isize > 0) {
       // per-thread Inflater reuse: this runs once per 64 KB block on
@@ -116,15 +120,36 @@ object Bgzf {
       inf.reset()
       inf.setInput(cdata)
       var n = 0
-      while (n < isize && !inf.finished()) n += inf.inflate(out, n, isize - n)
+      var stalled = false
+      // a corrupt stream can end early: inflate then returns 0 forever
+      while (n < isize && !inf.finished() && !stalled) {
+        val got = inf.inflate(out, n, isize - n)
+        n += got
+        stalled = got == 0 && (inf.needsInput() || inf.needsDictionary())
+      }
       if (n != isize) throw new IllegalStateException(
         s"BGZF inflate: expected $isize bytes, got $n")
     }
     Block(coffset, bsize, out)
   }
 
-  /** Decompressing InputStream over BGZF with virtual-offset tracking. */
-  final class BgzfInputStream(raw: InputStream, startOffset: Long = 0L) extends InputStream {
+  /** A stream over `file` positioned at virtual offset `vo`. */
+  def openAt(file: String, vo: Long): BgzfInputStream = {
+    val (fs, p) = Fs.get(file)
+    val raw = fs.open(p)
+    try {
+      raw.seek(voCompressed(vo))
+      val in = new BgzfInputStream(new java.io.BufferedInputStream(raw), voCompressed(vo))
+      in.seekInBlock(voUncompressed(vo))
+      in
+    } catch { case e: Throwable => raw.close(); throw e }
+  }
+
+  /** Decompressing InputStream over BGZF with virtual-offset tracking.
+    * As a [[RangedText.ByteWindow]] it lends the line loop the current
+    * block, so [[virtualPos]] stays exact line by line. */
+  final class BgzfInputStream(raw: InputStream, startOffset: Long = 0L) extends InputStream
+      with RangedText.ByteWindow {
     private var blockStart = startOffset
     private var nextBlockStart = startOffset
     private var data: Array[Byte] = Array.emptyByteArray
@@ -168,6 +193,12 @@ object Bgzf {
       pos += n
       n
     }
+
+    def fill(): Boolean = !eof && (pos < data.length || advance())
+    def window: Array[Byte] = data
+    def windowPos: Int = pos
+    def windowLim: Int = data.length
+    def consume(n: Int): Unit = pos += n
 
     /** Skip to an uncompressed offset within the CURRENT block (used
       * when seeking to a virtual offset after positioning the raw

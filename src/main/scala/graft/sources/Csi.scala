@@ -1,340 +1,57 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, DataOutputStream, EOFException}
-
-import scala.collection.mutable
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** CSI (coordinate-sorted index) reader/writer — the generalized-depth
-  * successor of BAI from the public CSIv1 spec (htslib).  BAI's fixed
-  * 5-level / 14-bit-leaf binning caps contigs at 512 Mbp; CSI
-  * parameterizes `min_shift` and `depth`, so long contigs (plant
-  * genomes, concatenated pan-genomes) index fine.  File layout is the
-  * spec's: BGZF-wrapped, per-bin chunk lists, and a per-bin `loffset`
-  * virtual-offset lower bound replacing BAI's separate linear index.
-  *
-  * Role mirror of the reference's index use (LinearBAMIndex.java /
-  * BAMInputFormat bounded traversal), at CSI generality.  With
+/** CSI layout (CSIv1, htslib): BGZF-wrapped, magic `CSI\1`,
+  * min_shift, depth, l_aux (+ aux bytes, skipped), n_ref, then per
+  * contig the bins, each with its `loffset` lower bound and chunks —
+  * [[BinIndex]] at any min_shift and depth.  BAI's fixed 5-level /
+  * 14-bit-leaf binning caps contigs at 512 Mbp; CSI's deeper trees index
+  * long contigs (plant genomes, concatenated pan-genomes).  With
   * min_shift=14, depth=5 the binning is bit-identical to BAI.
   */
 object Csi {
 
-  import Bai.Chunk
+  private val Magic = "CSI\u0001"
 
-  /** `loffset` = virtual-offset lower bound for records overlapping
-    * the bin's interval (min record-start VO of the bin's first
-    * 2^min_shift window; 0 = unknown). */
-  final case class BinEntry(loffset: Long, chunks: Seq[Chunk])
-  final case class RefIndex(bins: Map[Int, BinEntry])
-  final case class Index(minShift: Int, depth: Int, refs: Array[RefIndex])
+  def indexPath(file: Path): Path = new Path(file.getParent, file.getName + ".csi")
 
-  private val Magic = Array[Byte]('C', 'S', 'I', 1)
-
-  /** Metadata pseudo-bin number for an index of `depth` levels
-    * (htslib stores per-ref record counts there; its "chunks" are
-    * counters/file-span VOs, not seekable ranges).  maxBin+1 — 37450
-    * at depth 5, matching BAI's fixed pseudo-bin. */
-  def pseudoBin(depth: Int): Int = ((1 << (3 * (depth + 1))) - 1) / 7 + 1
-
-  def indexPath(bam: Path): Path = new Path(bam.getParent, bam.getName + ".csi")
-
-  // ------------------------------------------------------------ binning
-
-  /** Coordinates at or past the tree capacity 2^(minShift+3·depth)
-    * are clamped to the last position: without this, the level-0 term
-    * `beg >> s` exceeds 0 and produces bin numbers that collide with
-    * bins of OTHER levels (garbage chunk lookups for queries past a
-    * contig end).  Indexing rejects such records outright ([[build]]);
-    * clamping keeps querying total and collision-free. */
-  private def clampPos(pos: Int, minShift: Int, depth: Int): Int = {
-    val cap = 1L << (minShift + 3 * depth)
-    if (pos >= cap) (cap - 1).toInt else math.max(pos, 0)
-  }
-
-  /** Smallest bin fully containing [beg, end0) 0-based half-open
-    * (htslib reg2bin_level generalization).  All shifts are done in
-    * Long: minShift + 3·depth reaches 32 at the auto-depth for
-    * >512 Mbp contigs, and a JVM Int shift would silently wrap
-    * (shift count mod 32), emitting colliding bin numbers. */
-  def reg2bin(beg0: Int, end1: Int, minShift: Int, depth: Int): Int = {
-    val beg = clampPos(beg0, minShift, depth).toLong
-    val end = clampPos(end1 - 1, minShift, depth).toLong
-    var l = depth
-    var s = minShift
-    var t = ((1 << (depth * 3)) - 1) / 7
-    while (l > 0) {
-      if ((beg >> s) == (end >> s)) return t + (beg >> s).toInt
-      l -= 1
-      s += 3
-      t -= 1 << (l * 3)
-    }
-    0
-  }
-
-  /** All bins overlapping [beg, end0) 0-based half-open. */
-  def reg2bins(beg0: Int, end1: Int, minShift: Int, depth: Int): Seq[Int] = {
-    val beg = clampPos(beg0, minShift, depth).toLong
-    val end = clampPos(end1 - 1, minShift, depth).toLong
-    val out = mutable.ArrayBuffer[Int]()
-    var l = 0
-    var t = 0
-    var s = minShift + depth * 3
-    while (l <= depth) {
-      out ++= (t + (beg >> s).toInt) to (t + (end >> s).toInt)
-      s -= 3
-      t += 1 << (l * 3)
-      l += 1
-    }
-    out.toSeq
-  }
-
-  /** 0-based start position of a bin's interval (clamped to Int range
-    * for the capacity-2^32 case). */
-  def binStart(bin: Int, minShift: Int, depth: Int): Int = {
-    var l = depth
-    var t = ((1 << (depth * 3)) - 1) / 7
-    while (l > 0 && bin < t) { l -= 1; t -= 1 << (l * 3) }
-    val v = (bin - t).toLong << (minShift + 3 * (depth - l))
-    math.min(v, Int.MaxValue.toLong).toInt
-  }
-
-  // ---------------------------------------------------------------- I/O
-
-  def write(fs: FileSystem, path: Path, idx: Index): Unit = {
-    val out = new DataOutputStream(new Bgzf.BgzfOutputStream(fs.create(path, true)))
-    def w32(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff); out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff) }
-    def w64(v: Long): Unit = { w32(v.toInt); w32((v >>> 32).toInt) }
-    out.write(Magic)
-    w32(idx.minShift)
-    w32(idx.depth)
-    w32(0) // l_aux
-    w32(idx.refs.length)
-    idx.refs.foreach { r =>
-      w32(r.bins.size)
-      r.bins.toSeq.sortBy(_._1).foreach { case (bin, e) =>
-        w32(bin)
-        w64(e.loffset)
-        w32(e.chunks.length)
-        e.chunks.foreach { c => w64(c.beg); w64(c.end) }
-      }
-    }
-    out.close()
-  }
-
-  def read(fs: FileSystem, path: Path): Option[Index] = {
-    if (!fs.exists(path)) return None
-    val in = new Bgzf.BgzfInputStream(new BufferedInputStream(fs.open(path)))
-    try {
-      val magic = new Array[Byte](4)
-      var got = 0
-      while (got < 4) {
-        val r = in.read(magic, got, 4 - got)
-        if (r < 0) return None
-        got += r
-      }
-      if (!java.util.Arrays.equals(magic, Magic)) return None
-      def r32(): Int = {
-        val a = in.read(); val b = in.read(); val c = in.read(); val d = in.read()
-        if ((a | b | c | d) < 0) throw new EOFException("truncated CSI")
-        a | (b << 8) | (c << 16) | (d << 24)
-      }
-      def r64(): Long = (r32().toLong & 0xffffffffL) | (r32().toLong << 32)
-      val minShift = r32()
-      val depth = r32()
-      val lAux = r32()
-      if (lAux > 0) { var i = 0; while (i < lAux) { if (in.read() < 0) throw new EOFException(); i += 1 } }
-      val nRef = r32()
-      val refs = Array.fill(nRef) {
-        val nBin = r32()
-        RefIndex((0 until nBin).map { _ =>
-          val bin = r32()
-          val loffset = r64()
-          val nChunk = r32()
-          bin -> BinEntry(loffset, (0 until nChunk).map(_ => Chunk(r64(), r64())))
-        }.toMap)
-      }
-      Some(Index(minShift, depth, refs))
-    } finally in.close()
-  }
-
-  // ----------------------------------------------------------- querying
-
-  /** Merged chunk ranges for one interval (1-based inclusive).  The
-    * lower bound is the max loffset over the bins containing `start`
-    * (the chain of `start`'s leaf) — valid because loffset is a
-    * window-min: any record overlapping the query either overlaps that
-    * bin's first window (VO ≥ its min) or starts after it (VO ≥ by
-    * coordinate order). */
-  def chunksFor(idx: Index, refId: Int, start1: Int, end1: Int): Seq[Chunk] = {
-    if (refId < 0 || refId >= idx.refs.length) return Nil
-    val r = idx.refs(refId)
-    val beg = start1 - 1
-    val minVo = reg2bins(beg, beg + 1, idx.minShift, idx.depth)
-      .flatMap(b => r.bins.get(b)).map(_.loffset).foldLeft(0L)(math.max)
-    val raw = reg2bins(beg, end1, idx.minShift, idx.depth)
-      .flatMap(b => r.bins.getOrElse(b, BinEntry(0L, Nil)).chunks)
-      .filter(_.end > minVo)
-      .map(c => Chunk(math.max(c.beg, minVo), c.end))
-      .sortBy(_.beg)
-    Bai.merge(raw)
-  }
-
-  // ----------------------------------------------------------- indexing
-
-  /** Smallest depth whose bin tree spans `maxRefLen` bases at
-    * `minShift` (htslib derives depth from the longest contig the
-    * same way). */
-  def depthFor(maxRefLen: Long, minShift: Int = 14): Int = {
-    var depth = 0
-    while (depth < 16 && (maxRefLen - 1) >> (minShift + 3 * depth) != 0) depth += 1
-    math.max(depth, 1)
-  }
-
-  /** Shared binning accumulator for the index builders (BAM walk
-    * below, BCF walk in [[buildBcf]]): feed coordinate-sorted records
-    * as (refId, 0-based beg, 1-based-inclusive end, start/end VOs). */
-  final class Accumulator(minShift: Int, depth: Int, nRef: Int) {
-    private val maxPos = (1L << (minShift + 3 * depth)) - 1
-    private val bins = Array.fill(nRef)(mutable.Map[Int, mutable.ArrayBuffer[Chunk]]())
-    private val winMin = Array.fill(nRef)(mutable.ArrayBuffer[Long]())
-
-    def add(refId: Int, beg0: Int, end1: Int, startVo: Long, endVo: Long): Unit = {
-      val end0 = math.max(end1, beg0 + 1)
-      require(end0 <= maxPos,
-        s"record at ref $refId:${beg0 + 1} spans past index capacity $maxPos " +
-          s"(min_shift=$minShift depth=$depth); increase depth")
-      val bin = reg2bin(beg0, end0, minShift, depth)
-      val bs = bins(refId).getOrElseUpdate(bin, mutable.ArrayBuffer())
-      if (bs.nonEmpty && bs.last.end == startVo)
-        bs(bs.length - 1) = Chunk(bs.last.beg, endVo)
-      else bs += Chunk(startVo, endVo)
-      val wBeg = beg0 >> minShift
-      val wEnd = (end0 - 1) >> minShift
-      val lin = winMin(refId)
-      while (lin.length <= wEnd) lin += 0L
-      (wBeg to wEnd).foreach { w =>
-        if (lin(w) == 0L || startVo < lin(w)) lin(w) = startVo
-      }
+  def write(fs: FileSystem, path: Path, idx: BinIndex.Index): Unit =
+    BinIndex.writeFile(fs, path, Magic, bgzf = true) { out =>
+      out.int32(idx.minShift)
+      out.int32(idx.depth)
+      out.int32(0) // l_aux
+      out.int32(idx.refs.length)
+      out.refs(idx, csi = true)
     }
 
-    def result(): Index =
-      Index(minShift, depth, (0 until nRef).map { i =>
-        RefIndex(bins(i).map { case (bin, chunks) =>
-          val w = binStart(bin, minShift, depth) >> minShift
-          val loff = if (w < winMin(i).length) winMin(i)(w) else 0L
-          bin -> BinEntry(loff, chunks.toSeq)
-        }.toMap)
-      }.toArray)
-  }
+  def read(fs: FileSystem, path: Path): Option[BinIndex.Index] =
+    BinIndex.readFile(fs, path, Magic, bgzf = true) { in =>
+      val minShift = in.int32("min_shift")
+      val depth = in.int32("depth")
+      // positions are Int: deeper or wider trees hold nothing
+      if (minShift < 0 || minShift > 30) in.fail(s"min_shift = $minShift")
+      if (depth < 0 || depth > 9) in.fail(s"depth = $depth")
+      in.bytes(in.count("l_aux"), "aux")
+      BinIndex.Index(minShift, depth, in.refs(in.count("n_ref"), depth, csi = true))
+    }
 
   /** Build a CSI from a coordinate-sorted BAM in one sequential driver
-    * pass (Bai.build generalized to parameterized binning).  `depth`
-    * <= 0 derives the depth from the header's longest contig — a
-    * fixed default would silently mis-bin records past its capacity
-    * (cross-level bin-number collisions) on long contigs. */
-  def build(file: String, minShift: Int = 14, depth: Int = 0): Index = {
-    val (fs, path) = Fs.get(file)
-    val in = new Bgzf.BgzfInputStream(new BufferedInputStream(fs.open(path)))
-    val header = BamCodec.readHeader(in)
-    val nRef = header.refs.length
-    val d = if (depth > 0) depth
-      else depthFor(math.max(1L, header.refs.map(_.length.toLong).foldLeft(0L)(math.max)), minShift)
-    val acc = new Accumulator(minShift, d, nRef)
-    val refIdxByName = header.refs.map(_.name).zipWithIndex.toMap
-
-    var recStart = in.virtualPos
-    var ok = true
-    while (ok) {
-      val a = in.read()
-      if (a < 0) ok = false
-      else {
-        val b1 = in.read(); val b2 = in.read(); val b3 = in.read()
-        if ((b1 | b2 | b3) < 0) throw new EOFException("truncated BAM record length")
-        val sz = a | (b1 << 8) | (b2 << 16) | (b3 << 24)
-        val data = new Array[Byte](sz)
-        var o = 0
-        while (o < sz) {
-          val r = in.read(data, o, sz - o)
-          if (r < 0) throw new EOFException("truncated BAM record")
-          o += r
-        }
-        val recEnd = in.virtualPos
-        val rec = BamCodec.decode(data, header.refs)
-        val refId = refIdxByName.getOrElse(rec.rname, -1)
-        if (refId >= 0 && rec.pos > 0)
-          acc.add(refId, rec.pos - 1, math.max(rec.end, rec.pos), recStart, recEnd)
-        recStart = recEnd
-      }
-    }
-    in.close()
-    acc.result()
-  }
+    * pass.  `depth` <= 0 derives the depth from the header's longest
+    * contig. */
+  def build(file: String, minShift: Int = 14, depth: Int = 0): BinIndex.Index =
+    BinIndex.buildBam(file, minShift, depth)
 
   def buildAndWrite(file: String, minShift: Int = 14, depth: Int = 0): Unit = {
     val (fs, path) = Fs.get(file)
     write(fs, indexPath(path), build(file, minShift, depth))
   }
 
-  /** Build a CSI from a coordinate-sorted BCF in one driver pass —
-    * the role of htslib's `bcftools index` for the foreign-index
-    * bounded-traversal path (the record walk mirrors
-    * BCFSplitGuesser.java's framing: l_shared/l_indiv prefix, then
-    * CHROM/POS/rlen lead the shared block). */
-  def buildBcf(file: String, minShift: Int = 14, depth: Int = 5): Index = {
-    val dicts = BcfIO.readDicts(file)
-    val nRef = math.max(1, dicts.contigs.length)
-    val (fs, path) = Fs.get(file)
-    val in = new Bgzf.BgzfInputStream(new BufferedInputStream(fs.open(path)))
-    try {
-      // skip magic + header text
-      val magic = new Array[Byte](5)
-      var got = 0
-      while (got < 5) { val r = in.read(magic, got, 5 - got); require(r > 0); got += r }
-      var lh = 0
-      (0 until 4).foreach(i => lh |= in.read() << (8 * i))
-      var skipped = 0
-      val buf = new Array[Byte](8192)
-      while (skipped < lh) {
-        val r = in.read(buf, 0, math.min(buf.length, lh - skipped))
-        require(r > 0, "truncated BCF header")
-        skipped += r
-      }
-      val acc = new Accumulator(minShift, depth, nRef)
-      var lastRef = -1
-      var lastPos = Int.MinValue
-      var recStart = in.virtualPos
-      var a = in.read()
-      while (a >= 0) {
-        val lShared = a | (in.read() << 8) | (in.read() << 16) | (in.read() << 24)
-        var lIndiv = 0
-        (0 until 4).foreach(i => lIndiv |= in.read() << (8 * i))
-        val payload = new Array[Byte](lShared + lIndiv)
-        var o = 0
-        while (o < payload.length) {
-          val r = in.read(payload, o, payload.length - o)
-          require(r > 0, "truncated BCF record")
-          o += r
-        }
-        val bb = java.nio.ByteBuffer.wrap(payload, 0, 12)
-          .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        val refId = bb.getInt
-        val pos0 = bb.getInt
-        val rlen = bb.getInt
-        val recEnd = in.virtualPos
-        if (refId >= 0 && pos0 >= 0) {
-          require(refId > lastRef || (refId == lastRef && pos0 >= lastPos),
-            s"CSI indexing needs a coordinate-sorted BCF; ref $refId pos ${pos0 + 1} " +
-              s"after ref $lastRef pos ${lastPos + 1}")
-          lastRef = refId; lastPos = pos0
-          acc.add(refId, pos0, pos0 + math.max(1, rlen), recStart, recEnd)
-        }
-        recStart = recEnd
-        a = in.read()
-      }
-      acc.result()
-    } finally in.close()
-  }
+  /** Build a CSI from a coordinate-sorted BCF in one driver pass — the
+    * role of htslib's `bcftools index` for the foreign-index
+    * bounded-traversal path. */
+  def buildBcf(file: String, minShift: Int = 14, depth: Int = 5): BinIndex.Index =
+    BinIndex.buildBcf(file, minShift, depth)
 
   def buildAndWriteBcf(file: String, minShift: Int = 14, depth: Int = 5): Unit = {
     val (fs, path) = Fs.get(file)

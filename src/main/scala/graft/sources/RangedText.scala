@@ -152,26 +152,17 @@ object RangedText {
     * point at record boundaries. */
   def openLinesAtVo(path: String, startVo: Long, endVo: Long)
       : (Iterator[Line], () => Unit) = {
-    val (fs, p) = Fs.get(path)
-    val raw = fs.open(p)
-    raw.seek(Bgzf.voCompressed(startVo))
-    val in = new Bgzf.BgzfInputStream(new BufferedInputStream(raw),
-      Bgzf.voCompressed(startVo))
-    in.seekInBlock(Bgzf.voUncompressed(startVo))
+    val in = Bgzf.openAt(path, startVo)
+    val lines = new LineBuffer(in)
     val it = new Iterator[Line] {
       private var nextLine: Line = _
       private var finished = false
       private def fetch(): Unit = {
         if (finished) return
         val lineStart = in.virtualPos
-        if (lineStart >= endVo) { finished = true; in.close(); return }
-        var c = in.read()
-        if (c < 0) { finished = true; in.close(); return }
-        val sb = new java.lang.StringBuilder(120)
-        while (c >= 0 && c != '\n') { sb.append(c.toChar); c = in.read() }
-        if (sb.length() > 0 && sb.charAt(sb.length() - 1) == '\r')
-          sb.setLength(sb.length() - 1)
-        nextLine = Line(lineStart, sb.toString)
+        val s = if (lineStart >= endVo) null else lines.readLine()
+        if (s == null) { finished = true; in.close() }
+        else nextLine = Line(lineStart, s)
       }
       override def hasNext: Boolean = {
         if (nextLine == null && !finished) fetch()
@@ -185,43 +176,84 @@ object RangedText {
     (it, () => try in.close() catch { case _: java.io.IOException => () })
   }
 
-  /** Line reading for plain and gzip text: scans a buffer for '\n'
-    * rather than reading byte by byte (`BufferedInputStream.read()`
-    * takes a lock per byte, a gzip stream inflates one byte per call).
-    * One char per byte, as the BGZF loop decodes. */
-  private final class LineBuffer(in: InputStream) {
-    private val buf = new Array[Byte](1 << 16)
-    private var pos = 0
-    private var lim = 0
+  /** Bytes the line loop scans in place: [[fill]] makes some available
+    * (false at the end), `window(windowPos until windowLim)` are they,
+    * [[consume]] takes the first `n`. */
+  private[sources] trait ByteWindow {
+    def fill(): Boolean
+    def window: Array[Byte]
+    def windowPos: Int
+    def windowLim: Int
+    def consume(n: Int): Unit
+    def close(): Unit
+  }
+
+  /** A plain or gzip stream read through a 64 KiB buffer (one bulk
+    * read per fill: `BufferedInputStream.read()` takes a lock per byte,
+    * a gzip stream inflates one byte per call). */
+  private[sources] final class StreamWindow(in: java.io.InputStream) extends ByteWindow {
+    val window = new Array[Byte](1 << 16)
+    var windowPos = 0
+    var windowLim = 0
+    def fill(): Boolean = windowPos < windowLim || {
+      windowLim = math.max(0, in.read(window, 0, window.length))
+      windowPos = 0
+      windowLim > 0
+    }
+    def consume(n: Int): Unit = windowPos += n
+    def close(): Unit = in.close()
+  }
+
+  /** The one text-line loop of every line read (plain, gzip and BGZF
+    * ranges, index chunks, the `.tbi` builder): scans the source's
+    * window for '\n', gathers a line's bytes across window edges — so
+    * a multi-byte character split by an edge reassembles — and decodes
+    * them as UTF-8, one trailing '\r' dropped.  Positions stay byte
+    * based: [[consumed]] counts bytes, a BGZF source's virtual offset
+    * moves line by line. */
+  private[sources] final class LineBuffer(src: ByteWindow) {
+    private var acc = new Array[Byte](256)
+    private var n = 0
     /** Bytes the last [[readLine]] consumed, its '\n' included. */
     var consumed = 0L
 
     /** The next line without its '\n', or null at EOF. */
     def readLine(): String = {
       consumed = 0
-      var sb: java.lang.StringBuilder = null
-      while (true) {
-        if (pos == lim) {
-          lim = math.max(0, in.read(buf, 0, buf.length))
-          pos = 0
-          if (lim == 0) return if (sb == null) null else sb.toString
-        }
-        var i = pos
+      n = 0
+      var gathered = false
+      while (src.fill()) {
+        val buf = src.window
+        val p = src.windowPos
+        val lim = src.windowLim
+        var i = p
         while (i < lim && buf(i) != '\n') i += 1
-        val part = new String(buf, pos, i - pos, java.nio.charset.StandardCharsets.ISO_8859_1)
-        consumed += i - pos
         if (i < lim) {
-          pos = i + 1
-          consumed += 1
-          return if (sb == null) part else sb.append(part).toString
+          src.consume(i - p + 1)
+          consumed += i - p + 1
+          if (!gathered) return decode(buf, p, i - p)
+          append(buf, p, i - p)
+          return decode(acc, 0, n)
         }
-        pos = lim
-        sb = if (sb == null) new java.lang.StringBuilder(part) else sb.append(part)
+        append(buf, p, i - p)
+        gathered = true
+        src.consume(i - p)
+        consumed += i - p
       }
-      null
+      if (gathered) decode(acc, 0, n) else null
     }
 
-    def close(): Unit = in.close()
+    private def append(b: Array[Byte], off: Int, len: Int): Unit = {
+      if (n + len > acc.length) acc = java.util.Arrays.copyOf(acc, math.max(2 * acc.length, n + len))
+      System.arraycopy(b, off, acc, n, len)
+      n += len
+    }
+
+    private def decode(b: Array[Byte], off: Int, len: Int): String =
+      new String(b, off, if (len > 0 && b(off + len - 1) == '\r') len - 1 else len,
+        java.nio.charset.StandardCharsets.UTF_8)
+
+    def close(): Unit = src.close()
   }
 
   /** [[readLines]] plus an explicit closer for consumers that may
@@ -234,17 +266,16 @@ object RangedText {
     val (fs, p) = Fs.get(path)
     val raw = fs.open(p)
     raw.seek(start)
-    // BGZF reads byte by byte so each line's virtual offset is exact
     val bgzf = if (comp == BgzfText)
       new Bgzf.BgzfInputStream(new BufferedInputStream(raw), start) else null
-    val text = comp match {
-      case GzipText => new LineBuffer(new java.util.zip.GZIPInputStream(new BufferedInputStream(raw)))
-      case PlainText => new LineBuffer(raw)
-      case BgzfText => null
-    }
+    val text = new LineBuffer(comp match {
+      case GzipText => new StreamWindow(new java.util.zip.GZIPInputStream(new BufferedInputStream(raw)))
+      case PlainText => new StreamWindow(raw)
+      case BgzfText => bgzf
+    })
     var plainPos = start // byte offset (plain) / decompressed offset (gzip)
     def position: Long = if (bgzf != null) bgzf.virtualPos else plainPos
-    def close(): Unit = if (bgzf != null) bgzf.close() else text.close()
+    def close(): Unit = text.close()
     val endBound: Long = RangedText.endBound(end, comp)
 
     val it = new Iterator[Line] {
@@ -255,19 +286,9 @@ object RangedText {
       /** Read the line at the current position, or null at EOF. */
       private def readOne(): Line = {
         val lineStart = position
-        val s =
-          if (bgzf == null) { val t = text.readLine(); plainPos += text.consumed; t }
-          else {
-            var c = bgzf.read()
-            if (c < 0) null
-            else {
-              val sb = new java.lang.StringBuilder(120)
-              while (c >= 0 && c != '\n') { sb.append(c.toChar); c = bgzf.read() }
-              sb.toString
-            }
-          }
-        if (s == null) null
-        else Line(lineStart, if (s.endsWith("\r")) s.substring(0, s.length - 1) else s)
+        val s = text.readLine()
+        plainPos += text.consumed
+        if (s == null) null else Line(lineStart, s)
       }
 
       private def fetch(): Unit = {

@@ -1,256 +1,69 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, DataOutputStream, EOFException}
-
-import scala.collection.mutable
-
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Tabix (`.tbi`) index reader/writer/builder for coordinate-sorted
-  * BGZF-compressed text files — the generic-text sibling of
-  * [[Bai]]/[[Csi]], from the public tabix spec (htslib).  The
-  * reference filters VCF splits through exactly this index
-  * (ref: VCFInputFormat.java:388-460 `filterByInterval`; shards are
-  * named with the standard `.tbi` extension in
-  * util/VCFFileMerger.java:54-60), which is what our bounded-traversal
-  * VCF read re-expresses.
-  *
-  * Layout: BGZF-wrapped; magic `TBI\1`; column configuration
-  * (sequence/begin/end column numbers, comment char, skip count); a
-  * concatenated NUL-terminated contig-name table (tabix maps names →
-  * ids itself, unlike BAI which leans on the BAM header); then per
-  * contig the BAI-shaped binning index (fixed 14-bit-leaf / 5-level
-  * tree) plus a 16 kb-window linear index of virtual-offset lower
-  * bounds.  htslib's metadata pseudo-bin 37450 (record counts framed
-  * as fake chunks) is written for compatibility and excluded from
-  * query resolution.
+/** Tabix (`.tbi`) layout for coordinate-sorted BGZF text, from the
+  * public tabix spec (htslib): BGZF-wrapped, magic `TBI\1`, n_ref, the
+  * column configuration (format, sequence/begin/end columns, comment
+  * char, skip count), a NUL-terminated contig-name table (tabix maps
+  * names to ids itself, unlike BAI which leans on the BAM header), then
+  * per contig the bins and 16 kbp linear index of [[BinIndex]] at
+  * min_shift=14, depth=5, and a trailing n_no_coor.  The builder writes
+  * htslib's metadata pseudo-bin per contig.  The reference filters VCF
+  * splits through exactly this index (VCFInputFormat.java:388-460
+  * `filterByInterval`; shards use the `.tbi` extension,
+  * util/VCFFileMerger.java:54-60), which the bounded-traversal VCF read
+  * re-expresses.
   */
 object Tabix {
 
-  import Bai.Chunk
-
-  /** `format` field values from the spec (bit 0x10000 = coordinates
-    * are 0-based half-open, BED-style). */
-  val FormatGeneric = 0
-  val FormatSam = 1
+  /** `format` value for VCF in the spec's column configuration. */
   val FormatVcf = 2
-  val FlagZeroBased = 0x10000
 
-  val MinShift = 14
-  val Depth = 5
-
-  private val Magic = Array[Byte]('T', 'B', 'I', 1)
-
-  final case class RefIndex(bins: Map[Int, Seq[Chunk]], linear: Array[Long])
+  private val Magic = "TBI\u0001"
 
   final case class Index(format: Int, colSeq: Int, colBeg: Int, colEnd: Int,
                          meta: Int, skip: Int, names: Seq[String],
-                         refs: Array[RefIndex], nNoCoor: Long = 0L) {
+                         binning: BinIndex.Index, nNoCoor: Long = 0L) {
+    def refs: Array[BinIndex.RefIndex] = binning.refs
     lazy val refIdOf: Map[String, Int] = names.zipWithIndex.toMap
   }
 
   def indexPath(file: Path): Path = new Path(file.getParent, file.getName + ".tbi")
 
-  // ---------------------------------------------------------------- I/O
-
   def write(fs: FileSystem, path: Path, idx: Index): Unit = {
-    val out = new DataOutputStream(new Bgzf.BgzfOutputStream(fs.create(path, true)))
-    def w32(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff); out.write((v >> 16) & 0xff); out.write((v >> 24) & 0xff) }
-    def w64(v: Long): Unit = { w32(v.toInt); w32((v >>> 32).toInt) }
     require(idx.names.length == idx.refs.length,
       s"name table (${idx.names.length}) and ref indexes (${idx.refs.length}) disagree")
-    out.write(Magic)
-    w32(idx.refs.length)
-    w32(idx.format)
-    w32(idx.colSeq); w32(idx.colBeg); w32(idx.colEnd)
-    w32(idx.meta); w32(idx.skip)
-    val nameBytes = idx.names.flatMap(n => n.getBytes("UTF-8").toSeq :+ 0.toByte).toArray
-    w32(nameBytes.length)
-    out.write(nameBytes)
-    idx.refs.foreach { r =>
-      w32(r.bins.size)
-      r.bins.toSeq.sortBy(_._1).foreach { case (bin, chunks) =>
-        w32(bin)
-        w32(chunks.length)
-        chunks.foreach { c => w64(c.beg); w64(c.end) }
-      }
-      w32(r.linear.length)
-      r.linear.foreach(w64)
+    BinIndex.writeFile(fs, path, Magic, bgzf = true) { out =>
+      out.int32(idx.refs.length)
+      Seq(idx.format, idx.colSeq, idx.colBeg, idx.colEnd, idx.meta, idx.skip).foreach(out.int32)
+      val nameBytes = idx.names.flatMap(n => n.getBytes("UTF-8").toSeq :+ 0.toByte).toArray
+      out.int32(nameBytes.length)
+      out.bytes(nameBytes)
+      out.refs(idx.binning, csi = false)
+      out.int64(idx.nNoCoor)
     }
-    w64(idx.nNoCoor)
-    out.close()
   }
 
-  def read(fs: FileSystem, path: Path): Option[Index] = {
-    if (!fs.exists(path)) return None
-    val in = new Bgzf.BgzfInputStream(new BufferedInputStream(fs.open(path)))
-    try {
-      val magic = new Array[Byte](4)
-      var got = 0
-      while (got < 4) {
-        val r = in.read(magic, got, 4 - got)
-        if (r < 0) return None
-        got += r
-      }
-      if (!java.util.Arrays.equals(magic, Magic)) return None
-      def r32(): Int = {
-        val a = in.read(); val b = in.read(); val c = in.read(); val d = in.read()
-        if ((a | b | c | d) < 0) throw new EOFException("truncated tabix index")
-        a | (b << 8) | (c << 16) | (d << 24)
-      }
-      def r64(): Long = (r32().toLong & 0xffffffffL) | (r32().toLong << 32)
-      val nRef = r32()
-      val format = r32()
-      val colSeq = r32(); val colBeg = r32(); val colEnd = r32()
-      val meta = r32(); val skip = r32()
-      val lNm = r32()
-      val nameBytes = new Array[Byte](lNm)
-      var o = 0
-      while (o < lNm) {
-        val r = in.read(nameBytes, o, lNm - o)
-        if (r < 0) throw new EOFException("truncated tabix name table")
-        o += r
-      }
-      val names = new String(nameBytes, "UTF-8").split("\u0000", -1).toSeq
-        .filter(_.nonEmpty)
-      val refs = Array.fill(nRef) {
-        val nBin = r32()
-        val bins = (0 until nBin).map { _ =>
-          val bin = r32()
-          val nChunk = r32()
-          bin -> (0 until nChunk).map(_ => Chunk(r64(), r64()))
-        }.toMap
-        val nIntv = r32()
-        RefIndex(bins, Array.fill(nIntv)(r64()))
-      }
+  def read(fs: FileSystem, path: Path): Option[Index] =
+    BinIndex.readFile(fs, path, Magic, bgzf = true) { in =>
+      val nRef = in.count("n_ref")
+      val Seq(format, colSeq, colBeg, colEnd, meta, skip) =
+        Seq("format", "col_seq", "col_beg", "col_end", "meta", "skip").map(in.int32)
+      val names = new String(in.bytes(in.count("l_nm"), "names"), "UTF-8")
+        .split("\u0000", -1).toSeq.filter(_.nonEmpty)
+      val refs = in.refs(nRef, 5, csi = false)
       // optional trailing n_no_coor (htslib appends it; older writers don't)
-      val nNoCoor = try r64() catch { case _: EOFException => 0L }
-      Some(Index(format, colSeq, colBeg, colEnd, meta, skip, names, refs, nNoCoor))
-    } finally in.close()
-  }
-
-  // ----------------------------------------------------------- querying
-
-  /** Merged chunk ranges possibly containing records overlapping
-    * `contig:start1-end1` (1-based inclusive), lower-bounded by the
-    * linear index window of `start1` — the same resolution
-    * `TabixIndex.getBlocks` performs for the reference's split filter
-    * (VCFInputFormat.java:417-424).  Empty when the contig isn't in
-    * the index (no records → nothing to read). */
-  def chunksFor(idx: Index, contig: String, start1: Int, end1: Int): Seq[Chunk] = {
-    idx.refIdOf.get(contig) match {
-      case None => Nil
-      case Some(ri) =>
-        val r = idx.refs(ri)
-        val beg0 = math.max(0, start1 - 1)
-        val w = beg0 >>> MinShift
-        val minVo = if (w < r.linear.length) r.linear(w) else 0L
-        val raw = Csi.reg2bins(beg0, end1, MinShift, Depth)
-          .filter(_ != Bai.PseudoBin)
-          .flatMap(b => r.bins.getOrElse(b, Nil))
-          .filter(_.end > minVo)
-          .map(c => Chunk(math.max(c.beg, minVo), c.end))
-          .sortBy(_.beg)
-        Bai.merge(raw)
+      val nNoCoor = if (in.atEnd) 0L else in.int64("n_no_coor")
+      Index(format, colSeq, colBeg, colEnd, meta, skip, names,
+        BinIndex.Index(14, 5, refs), nNoCoor)
     }
-  }
-
-  // ----------------------------------------------------------- indexing
-
-  /** 1-based inclusive [start, end] span of one VCF record for
-    * binning: POS through POS+len(REF)-1, stretched to INFO `END=`
-    * when present (symbolic/structural alleles carry their span
-    * there, not in REF). */
-  def vcfSpan(line: String): (String, Int, Int) = {
-    val f = line.split("\t", 9)
-    val chrom = f(0)
-    val pos = f(1).toInt
-    var end = pos + math.max(1, f(3).length) - 1
-    val info = if (f.length > 7) f(7) else ""
-    val m = InfoEnd.findFirstMatchIn(info)
-    m.foreach(g => end = math.max(end, g.group(1).toInt))
-    (chrom, pos, end)
-  }
-  private val InfoEnd = "(?:^|;)END=(\\d+)".r
 
   /** Build a `.tbi` for a coordinate-sorted `.vcf.bgz` in one
-    * sequential driver pass — the indexing mirror of [[Csi.build]]'s
-    * BAM walk, over text lines with their BGZF virtual offsets
-    * (recStart = VO before the line, recEnd = VO after its newline). */
+    * sequential driver pass. */
   def buildVcf(file: String): Index = {
-    val bins = mutable.ArrayBuffer[mutable.Map[Int, mutable.ArrayBuffer[Chunk]]]()
-    val linear = mutable.ArrayBuffer[mutable.ArrayBuffer[Long]]()
-    val names = mutable.ArrayBuffer[String]()
-    val refIdOf = mutable.Map[String, Int]()
-    val counts = mutable.ArrayBuffer[Long]()
-    val spanBeg = mutable.ArrayBuffer[Long]()
-    val spanEnd = mutable.ArrayBuffer[Long]()
-    var lastRef = -1
-    var lastPos = 0
-
-    val (fs, p) = Fs.get(file)
-    val in = new Bgzf.BgzfInputStream(new BufferedInputStream(fs.open(p)))
-    try {
-      val sb = new java.lang.StringBuilder(256)
-      var eof = false
-      while (!eof) {
-        val recStart = in.virtualPos
-        sb.setLength(0)
-        var c = in.read()
-        if (c < 0) eof = true
-        else {
-          while (c >= 0 && c != '\n') { sb.append(c.toChar); c = in.read() }
-          val recEnd = in.virtualPos
-          if (sb.length() > 0 && sb.charAt(sb.length() - 1) == '\r')
-            sb.setLength(sb.length() - 1)
-          val line = sb.toString
-          if (line.nonEmpty && line.charAt(0) != '#') {
-            val (chrom, pos, end) = vcfSpan(line)
-            val isNewContig = !refIdOf.contains(chrom)
-            val ri = refIdOf.getOrElseUpdate(chrom, {
-              names += chrom
-              bins += mutable.Map()
-              linear += mutable.ArrayBuffer()
-              counts += 0L
-              spanBeg += recStart
-              spanEnd += recStart
-              names.length - 1
-            })
-            if (ri == lastRef)
-              require(pos >= lastPos,
-                s"tabix indexing needs a coordinate-sorted file; " +
-                  s"$chrom:$pos after $chrom:$lastPos")
-            else
-              require(isNewContig,
-                s"contig $chrom appears in two separate runs — not coordinate-sorted")
-            lastRef = ri; lastPos = pos
-            counts(ri) += 1
-            spanEnd(ri) = recEnd
-            val beg0 = pos - 1
-            val bin = Csi.reg2bin(beg0, end, MinShift, Depth)
-            val bs = bins(ri).getOrElseUpdate(bin, mutable.ArrayBuffer())
-            if (bs.nonEmpty && bs.last.end == recStart)
-              bs(bs.length - 1) = Chunk(bs.last.beg, recEnd)
-            else bs += Chunk(recStart, recEnd)
-            val lin = linear(ri)
-            val wBeg = beg0 >>> MinShift
-            val wEnd = math.max(beg0, end - 1) >>> MinShift
-            while (lin.length <= wEnd) lin += 0L
-            (wBeg to wEnd).foreach { w =>
-              if (lin(w) == 0L || recStart < lin(w)) lin(w) = recStart
-            }
-          }
-        }
-      }
-    } finally in.close()
-
-    Index(FormatVcf, 1, 2, 0, '#'.toInt, 0, names.toSeq,
-      names.indices.map { i =>
-        // htslib-compatible metadata pseudo-bin: file span + counts
-        val withMeta = bins(i).map { case (b, cs) => b -> cs.toSeq }.toMap +
-          (Bai.PseudoBin -> Seq(Chunk(spanBeg(i), spanEnd(i)), Chunk(counts(i), 0L)))
-        RefIndex(withMeta, linear(i).toArray)
-      }.toArray)
+    val (names, binning) = BinIndex.buildVcf(file)
+    Index(FormatVcf, 1, 2, 0, '#'.toInt, 0, names, binning)
   }
 
   def buildAndWriteVcf(file: String): Unit = {

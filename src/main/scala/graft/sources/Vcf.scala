@@ -189,9 +189,9 @@ object Vcf {
   // ------------------------------------------- bounded traversal (.tbi)
 
   /** 1-based inclusive end of a variant's reference span (POS through
-    * POS+len(REF)-1, stretched to INFO END= for symbolic alleles) —
-    * must agree with [[Tabix.vcfSpan]] or indexed reads would miss
-    * records the full scan keeps. */
+    * POS+len(REF)-1, stretched to the largest all-digit INFO END= for
+    * symbolic alleles) — the one span rule: the `.tbi` builder bins
+    * records by it and every bounded read filters by it. */
   def spanEnd(v: VcfVariant): Int = {
     var end = v.pos.toInt + math.max(1, v.ref.length) - 1
     var i = 0
@@ -242,13 +242,14 @@ object Vcf {
     Tabix.read(fs, Tabix.indexPath(p)).map { idx =>
       val merged = mergeIntervals(intervals)
       merged.toSeq.sortBy(_._1).flatMap { case (contig, ivs) =>
+        val ri = idx.refIdOf.getOrElse(contig, -1)
         ivs.zipWithIndex.flatMap { case ((s, e), i) =>
-          def span(chunks: Seq[Bai.Chunk]): Long =
+          def span(chunks: Seq[BinIndex.Chunk]): Long =
             chunks.map(c => Bgzf.voCompressed(c.end) - Bgzf.voCompressed(c.beg) + 1).sum
           def tasks(lo: Int, hi: Int): Seq[ChunkTask] = {
-            val chunks = Tabix.chunksFor(idx, contig, lo, hi)
+            val chunks = idx.binning.chunksFor(ri, lo, hi)
             if (chunks.isEmpty) Nil
-            else if (span(chunks) <= splitSize || hi - lo < (1 << Tabix.MinShift))
+            else if (span(chunks) <= splitSize || hi - lo < (1 << idx.binning.minShift))
               Seq(ChunkTask(path, chunks.map(c => (c.beg, c.end)), contig,
                 lo, hi, i, ivs))
             else {

@@ -104,15 +104,15 @@ class PropertySpec extends AnyFunSuite {
       len <- Gen.choose(1, 1 << 20)
     } yield (minShift, depth, beg, beg + len)
     forSamples(gen, 500) { case (ms, d, beg, end) =>
-      val bin = Csi.reg2bin(beg, end, ms, d)
-      val bins = Csi.reg2bins(beg, end, ms, d)
+      val bin = BinIndex.reg2bin(beg, end, ms, d)
+      val bins = BinIndex.reg2bins(beg, end, ms, d)
       // the assigned bin is among the overlapping bins
       assert(bins.contains(bin), s"bin $bin not in reg2bins [$beg,$end) ms=$ms d=$d")
       // the assigned bin's interval starts at or before the record
-      assert(Csi.binStart(bin, ms, d) <= beg)
+      assert(BinIndex.binStart(bin, ms, d) <= beg)
       // an in-capacity point query at beg must fetch the record's bin
       if (end.toLong <= (1L << (ms + 3 * d)))
-        assert(Csi.reg2bins(beg, beg + 1, ms, d).contains(bin),
+        assert(BinIndex.reg2bins(beg, beg + 1, ms, d).contains(bin),
           s"point query at $beg misses bin $bin ms=$ms d=$d")
     }
   }
@@ -374,5 +374,176 @@ class PropertySpec extends AnyFunSuite {
           s"offset $off guessed non-boundary ${off + guess}")
       }
     }
+  }
+
+  private val sortedHeader = SamHeader(
+    "@HD\tVN:1.6\tSO:coordinate\n@SQ\tSN:c1\tLN:100000\n@SQ\tSN:c2\tLN:100000",
+    header.refs)
+
+  /** A BAM of `recs` (in the given order) in 512-byte BGZF blocks, with
+    * no graft sidecar index. */
+  private def writeBam(f: String, recs: Seq[SamRecord]): Unit = {
+    val (fs, p) = Fs.get(f)
+    val out = new Bgzf.BgzfOutputStream(fs.create(p, true), blockSize = 512)
+    BamCodec.writeHeader(out, sortedHeader)
+    recs.foreach { r =>
+      val b = BamCodec.encode(r, refIdx)
+      out.write(Array(b.length, b.length >> 8, b.length >> 16, b.length >> 24).map(_.toByte))
+      out.write(b)
+    }
+    out.close()
+  }
+
+  /** Coordinate-sorted placed reads on c1/c2 (some spliced across
+    * kilobases), then unplaced unmapped ones. */
+  private val genSortedBam: Gen[Seq[SamRecord]] = for {
+    placed <- Gen.listOfN(2, Gen.choose(0, 300)).flatMap { ns =>
+      Gen.sequence[Seq[Seq[SamRecord]], Seq[SamRecord]](ns.zipWithIndex.map { case (n, ci) =>
+        Gen.listOfN(n, for {
+          pos <- Gen.choose(1, 95000)
+          len <- Gen.choose(10, 60)
+          intron <- Gen.frequency((9, Gen.const(0)), (1, Gen.choose(1000, 4000)))
+        } yield (pos, len, intron)).map(_.sortBy(_._1).zipWithIndex.map {
+          case ((pos, len, intron), i) =>
+            SamRecord(s"r${ci}_$i", 0, s"c${ci + 1}", pos, 60,
+              if (intron > 0) s"${len / 2}M${intron}N${len - len / 2}M" else s"${len}M",
+              "*", 0, 0, "A" * len, "I" * len, Array.empty)
+        })
+      })
+    }
+    nUnmapped <- Gen.choose(0, 20)
+  } yield placed.flatten ++ (0 until nUnmapped).map(i =>
+    SamRecord(s"u$i", 4, "*", 0, 0, "*", "*", 0, 0, "ACGT", "IIII", Array.empty))
+
+  test("BAM bounded reads through a .bai or a .csi equal naive overlap " +
+    "filtering for arbitrary sorted files, intervals and split sizes") {
+    val genQuery = for {
+      nIv <- Gen.choose(1, 3)
+      ivs <- Gen.listOfN(nIv, for {
+        c <- Gen.oneOf("c1", "c2", "c3")
+        s <- Gen.choose(1, 100000)
+        w <- Gen.choose(0, 30000)
+      } yield (c, s, s + w))
+      splitSize <- Gen.oneOf(512L, 4096L, 1L << 20)
+      includeUnmapped <- Gen.oneOf(false, true)
+    } yield (ivs, splitSize, includeUnmapped)
+
+    forSamples(Gen.zip(genSortedBam, Gen.listOfN(5, genQuery)), 20) { case (recs, queries) =>
+      val dir = java.nio.file.Files.createTempDirectory("bamprop").toString
+      val f = s"$dir/t.bam"
+      val (fs, p) = Fs.get(f)
+      writeBam(f, recs)
+      Seq[String => Unit](Bai.buildAndWrite, Csi.buildAndWrite(_)).foreach { build =>
+        fs.delete(Bai.indexPath(p), false)
+        fs.delete(Csi.indexPath(p), false)
+        build(f)
+        queries.foreach { case (ivs, splitSize, includeUnmapped) =>
+          val naive = recs.filter { r =>
+            ivs.exists { case (c, s, e) => r.rname == c && r.pos <= e && r.end >= s } ||
+              (includeUnmapped && r.rname == "*")
+          }.map(_.qname).sorted
+          val got = BamIO.plan(f, splitSize, includeUnmapped, exact = true)(_ => ivs)
+            .flatMap(_.open(BamCodec.AllFields)._1).map(_.qname)
+          assert(got.length === got.distinct.length,
+            s"duplicates (splitSize=$splitSize ivs=$ivs unmapped=$includeUnmapped)")
+          assert(got.sorted === naive,
+            s"mismatch (splitSize=$splitSize ivs=$ivs unmapped=$includeUnmapped)")
+        }
+      }
+      fs.delete(new org.apache.hadoop.fs.Path(dir), true)
+    }
+  }
+
+  test("a whole-contig BAM read through a .bai or a .csi spreads over " +
+    "splitSize partitions") {
+    val dir = java.nio.file.Files.createTempDirectory("bamsplit").toString
+    val f = s"$dir/t.bam"
+    val (fs, p) = Fs.get(f)
+    writeBam(f, (0 until 400).map(i => SamRecord(s"r$i", 0, "c1", 1 + i * 240, 60, "50M",
+      "*", 0, 0, "A" * 50, "I" * 50, Array.empty)))
+    Seq[String => Unit](Bai.buildAndWrite, Csi.buildAndWrite(_)).foreach { build =>
+      fs.delete(Bai.indexPath(p), false)
+      fs.delete(Csi.indexPath(p), false)
+      build(f)
+      val parts = BamIO.plan(f, 512L, includeUnmapped = false, exact = true)(
+        _ => Seq(("c1", 1, 100000)))
+      assert(parts.length > 1, s"one partition for a whole contig at a 512 B split")
+      assert(parts.flatMap(_.open(BamCodec.AllFields)._1).map(_.qname).sorted ===
+        (0 until 400).map(i => s"r$i").sorted)
+    }
+    fs.delete(new org.apache.hadoop.fs.Path(dir), true)
+  }
+
+  test("a truncated or byte-flipped .bai/.csi/.tbi reads back equal or " +
+    "fails naming its path, never exhausting memory or hanging") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val dir = java.nio.file.Files.createTempDirectory("idxcorrupt").toString
+    // graft-built indexes over small generated files, and htslib's .tbi
+    val bam = s"$dir/t.bam"
+    writeBam(bam, genSortedBam.apply(Gen.Parameters.default, Seed(7L)).get)
+    Bai.buildAndWrite(bam)
+    Csi.buildAndWrite(bam)
+    val bcf = s"$dir/t.bcf"
+    val contigs = Array("c1", "c2")
+    Bcf.write(bcf, BcfIO.Dicts(contigs, Array("PASS"), Array("DP")).headerText,
+      (0 until 300).map(i => graft.model.VcfVariant(contigs(i / 150), 1L + (i % 150) * 300,
+        s"v$i", "A" * (1 + i % 40), Array("C"), None, "PASS", Array("DP"), Array("7"),
+        Array.empty, Array.empty)), contigs, Array("PASS"), Array("DP"))
+    Csi.buildAndWriteBcf(bcf)
+    val vcf = s"$dir/t.vcf.bgz"
+    val (fs, _) = Fs.get(vcf)
+    val out = new Bgzf.BgzfOutputStream(fs.create(new org.apache.hadoop.fs.Path(vcf), true),
+      blockSize = 512)
+    out.write("##fileformat=VCFv4.3\n#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO\n"
+      .getBytes("UTF-8"))
+    (0 until 300).foreach(i => out.write(
+      s"c${1 + i / 150}\t${1 + (i % 150) * 300}\tv$i\tA\tC\t.\tPASS\tEND=${(i % 150) * 300 + 900}\n"
+        .getBytes("UTF-8")))
+    out.close()
+    Tabix.buildAndWriteVcf(vcf)
+    val htslib = getClass.getClassLoader.getResource("HiSeq.10000.vcf.bgz.tbi").getFile
+
+    def canon(b: BinIndex.Index): Any = (b.minShift, b.depth,
+      b.refs.toSeq.map(r => (r.bins, r.linear.toSeq, r.loffsets)))
+    def tabix(p: org.apache.hadoop.fs.Path): Option[Any] = Tabix.read(fs, p).map(t =>
+      (t.format, t.colSeq, t.colBeg, t.colEnd, t.meta, t.skip, t.names, t.nNoCoor, canon(t.binning)))
+    val cases: Seq[(String, org.apache.hadoop.fs.Path => Option[Any])] = Seq(
+      (s"$bam.bai", p => Bai.read(fs, p).map(canon)),
+      (s"$bam.csi", p => Csi.read(fs, p).map(canon)),
+      (s"$bcf.csi", p => Csi.read(fs, p).map(canon)),
+      (s"$vcf.tbi", tabix),
+      (htslib, tabix))
+    cases.zipWithIndex.foreach { case ((file, read), ci) =>
+      val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file))
+      val original = read(new org.apache.hadoop.fs.Path(file)).get
+      val gen = Gen.oneOf(
+        Gen.choose(0, bytes.length - 1).map(n => (s"truncated to $n", bytes.take(n), true)),
+        for {
+          at <- Gen.choose(0, bytes.length - 1)
+          mask <- Gen.choose(1, 255)
+        } yield {
+          val b = bytes.clone()
+          b(at) = (b(at) ^ mask).toByte
+          (s"byte $at ^ $mask", b, false)
+        })
+      forSamples(gen, 80) { case (what, mutated, truncated) =>
+        val p = new org.apache.hadoop.fs.Path(s"$dir/m$ci-${file.split('.').last}")
+        java.nio.file.Files.write(java.nio.file.Paths.get(p.toString), mutated)
+        try {
+          val got = try Await.result(Future(read(p)), 60.seconds) catch {
+            case _: java.util.concurrent.TimeoutException => fail(s"$file $what: no answer in 60 s")
+          }
+          // a flipped bit may land in a value no layout can check (a
+          // virtual offset); a cut file must read whole or fail
+          if (truncated) assert(got === Some(original), s"$file $what")
+        } catch {
+          case e: java.io.IOException =>
+            assert(e.getMessage.contains(p.toString), s"$file $what: $e")
+        }
+      }
+    }
+    fs.delete(new org.apache.hadoop.fs.Path(dir), true)
   }
 }

@@ -35,6 +35,45 @@ class RangedTextSpec extends SparkSpec {
     }
   }
 
+  test("UTF-8 lines decode whole through plain, gzip and BGZF reads and " +
+    "through a .tbi, a character split across the 64 KiB edge included") {
+    val dir = tmpDir("utf8")
+    val head = Seq("##fileformat=VCFv4.3",
+      "##INFO=<ID=NOTE,Number=1,Type=String,Description=\"Note\">",
+      "#CHROM\tPOS\tID\tREF\tALT\tQUAL\tFILTER\tINFO").mkString("", "\n", "\n")
+    val prefix = "chr1\t100\trs0\tA\tC\t.\tPASS\tNOTE="
+    // pad the first note so its 'é' takes bytes 65535 and 65536: the
+    // edge of the 64 KiB line buffer and of 32 KiB BGZF blocks
+    val pad = "x" * (65535 - head.getBytes(UTF_8).length - prefix.length)
+    val notes = (pad + "é!") +: (1 to 300).map(i => s"café-$i-ünï-€-𝄞")
+    val lines = notes.zipWithIndex.map { case (n, i) =>
+      s"chr1\t${100 + i * 10}\trs$i\tA\tC\t.\tPASS\tNOTE=$n" }
+    val bytes = (head + lines.mkString("", "\n", "\n")).getBytes(UTF_8)
+    assert(new String(bytes, 65535, 2, UTF_8) === "é")
+    val plain = s"$dir/u.vcf"
+    Files.write(Paths.get(plain), bytes)
+    val gz = s"$dir/u.vcf.gz"
+    val gzo = new java.util.zip.GZIPOutputStream(Files.newOutputStream(Paths.get(gz)))
+    gzo.write(bytes); gzo.close()
+    val bgz = s"$dir/u.vcf.bgz"
+    val bo = new Bgzf.BgzfOutputStream(Files.newOutputStream(Paths.get(bgz)), blockSize = 32768)
+    bo.write(bytes); bo.close()
+    Tabix.buildAndWriteVcf(bgz)
+    // line positions stay byte offsets
+    val starts = (head.split("\n").toSeq ++ lines).scanLeft(0L)(_ + _.getBytes(UTF_8).length + 1)
+    assert(RangedText.readLines(plain, 0, bytes.length, RangedText.PlainText)
+      .map(_.offset).toSeq === starts.init)
+    Seq(plain, gz, bgz).foreach { f =>
+      assert(Vcf.read(spark, f).collect().sortBy(_.pos).map(_.infoValues.head).toSeq === notes, f)
+      assert(spark.read.format("vcf").load(f).select("infoValues").collect()
+        .map(_.getSeq[String](0).head).sorted.toSeq === notes.sorted, f)
+      assert(ownedLines(f, 4096).toSeq === head.split("\n").toSeq ++ lines, f)
+    }
+    val bounded = Vcf.readIntervals(spark, bgz, Seq(("chr1", 100, 150), ("chr1", 3000, 3050)))
+      .collect().sortBy(_.pos).map(_.infoValues.head).toSeq
+    assert(bounded === notes.take(6) ++ notes.slice(290, 296))
+  }
+
   test("ownership protocol holds over BGZF with block-aligned bounds") {
     val dir = tmpDir("rtb")
     val f = s"$dir/t.txt.bgz"
@@ -240,22 +279,33 @@ class BcfIOSpec extends SparkSpec {
 class CsiSpec extends SparkSpec {
   import graft.model.{SamHeader, SamRecord, SamRef}
 
+  /** SAM spec §5.3 `reg2bins`, literally (fixed 14-bit leaves, 5
+    * levels): the reference the parameterized binning must match. */
+  private def samSpecReg2bins(beg: Int, end0: Int): Seq[Int] = {
+    val end = end0 - 1
+    Seq(0) ++ ((1 + (beg >> 26)) to (1 + (end >> 26))) ++
+      ((9 + (beg >> 23)) to (9 + (end >> 23))) ++
+      ((73 + (beg >> 20)) to (73 + (end >> 20))) ++
+      ((585 + (beg >> 17)) to (585 + (end >> 17))) ++
+      ((4681 + (beg >> 14)) to (4681 + (end >> 14)))
+  }
+
   test("reg2bin/reg2bins at min_shift=14, depth=5 are bit-identical to BAI") {
     val cases = Seq((0, 100), (16383, 16385), (100000, 200000),
       (1 << 20, (1 << 20) + 50000), (536870000, 536870911))
     cases.foreach { case (b, e) =>
-      assert(Csi.reg2bins(b, e, 14, 5).sorted === Bai.reg2bins(b, e).sorted, s"[$b,$e)")
+      assert(BinIndex.reg2bins(b, e, 14, 5).sorted === samSpecReg2bins(b, e).sorted, s"[$b,$e)")
     }
-    assert(Csi.reg2bin(16000, 16100, 14, 5) === BamCodec.reg2bin(16000, 16100))
-    assert(Csi.reg2bin(0, 1 << 26, 14, 5) === BamCodec.reg2bin(0, 1 << 26))
+    assert(BinIndex.reg2bin(16000, 16100, 14, 5) === BamCodec.reg2bin(16000, 16100))
+    assert(BinIndex.reg2bin(0, 1 << 26, 14, 5) === BamCodec.reg2bin(0, 1 << 26))
   }
 
   test("binStart inverts reg2bin level placement") {
     Seq((14, 5), (14, 6), (12, 4)).foreach { case (ms, d) =>
       Seq((0, 1), (5000, 5100), (1 << 20, (1 << 20) + 10), (1 << 28, (1 << 28) + 5))
         .foreach { case (b, e) =>
-          val bin = Csi.reg2bin(b, e, ms, d)
-          val start = Csi.binStart(bin, ms, d)
+          val bin = BinIndex.reg2bin(b, e, ms, d)
+          val start = BinIndex.binStart(bin, ms, d)
           assert(start <= b, s"bin $bin start $start beg $b")
         }
     }
@@ -287,7 +337,7 @@ class CsiSpec extends SparkSpec {
       .map(_.qname).sorted.toArray
     assert(got === expect)
     assert(got.nonEmpty)
-    val chunks = Csi.chunksFor(idx, 0, 30000, 60000)
+    val chunks = idx.chunksFor(0, 30000, 60000)
     assert(chunks.nonEmpty)
   }
 
@@ -320,10 +370,10 @@ class CsiSpec extends SparkSpec {
 
   test("depthFor matches capacity boundaries; undersized explicit depth errors") {
     import spark.implicits._
-    assert(Csi.depthFor(1L << 14) === 1)
-    assert(Csi.depthFor((1L << 29)) === 5)
-    assert(Csi.depthFor((1L << 29) + 1) === 6)
-    assert(Csi.depthFor(1200000000L) === 6)
+    assert(BinIndex.depthFor(1L << 14) === 1)
+    assert(BinIndex.depthFor((1L << 29)) === 5)
+    assert(BinIndex.depthFor((1L << 29) + 1) === 6)
+    assert(BinIndex.depthFor(1200000000L) === 6)
     // an explicit depth too small for the data must fail loudly, not
     // silently mis-bin
     val header = SamHeader(
@@ -371,27 +421,44 @@ class BaiSpec extends SparkSpec {
     assert(got === expect)
     assert(got.nonEmpty)
     // chunks must actually prune: far fewer than a full scan would read
-    val chunks = Bai.chunksFor(idx, 0, 30000, 60000)
+    val chunks = idx.chunksFor(0, 30000, 60000)
     assert(chunks.nonEmpty)
   }
 
   test("metadata pseudo-bin 37450 never feeds chunk resolution") {
     // htsjdk-style index: a real bin plus the pseudo-bin whose "chunks"
     // are counts, not virtual offsets
-    val real = Bai.Chunk(1L << 16, 2L << 16)
-    val pseudo = Seq(Bai.Chunk(0L, 0L), Bai.Chunk(12345L, 7L)) // counts
-    val idx = Bai.Index(Array(Bai.RefIndex(
+    val real = BinIndex.Chunk(1L << 16, 2L << 16)
+    val pseudo = Seq(BinIndex.Chunk(0L, 0L), BinIndex.Chunk(12345L, 7L)) // counts
+    val idx = BinIndex.Index(14, 5, Array(BinIndex.RefIndex(
       Map(4681 -> Seq(real), Bai.PseudoBin -> pseudo), Array(0L))))
-    val chunks = Bai.chunksFor(idx, 0, 1, 16384)
+    val chunks = idx.chunksFor(0, 1, 16384)
     assert(chunks === Seq(real))
+  }
+
+  test("BAI building rejects a record past 2^29 and an unsorted BAM, as htslib does") {
+    import spark.implicits._
+    val big = SamHeader(
+      "@HD\tVN:1.6\tSO:coordinate\n@SQ\tSN:big1\tLN:1200000000",
+      Array(SamRef("big1", 1200000000)))
+    def read(i: Int, pos: Int): SamRecord = SamRecord(s"q$i", 0, "big1", pos, 60, "30M",
+      "*", 0, 0, "ACGTACGTACGTACGTACGTACGTACGTAC", "I" * 30, Array.empty)
+    val far = s"${tmpDir("baibig")}/far.bam"
+    BamIO.writeSorted(spark.createDataset(Seq(read(0, 900000000))).coalesce(1), big, far)
+    assert(intercept[IllegalArgumentException](Bai.build(far)).getMessage
+      .contains("index capacity"))
+    val unsorted = s"${tmpDir("baiunsorted")}/u.bam"
+    BamIO.write(spark.createDataset(Seq(read(0, 5000), read(1, 100))).coalesce(1), big, unsorted)
+    assert(intercept[IllegalArgumentException](Bai.build(unsorted)).getMessage
+      .contains("sorted"))
   }
 
   test("CSI pseudo-bin number matches the spec at every depth") {
     // depth 5 must reproduce BAI's fixed 37450; each extra level
     // multiplies the regular-bin count by 8
-    assert(Csi.pseudoBin(5) === Bai.PseudoBin)
-    assert(Csi.pseudoBin(6) === ((1 << 21) - 1) / 7 + 1)
-    assert(Csi.reg2bins(0, 1 << (14 + 15), 14, 5).max < Csi.pseudoBin(5))
+    assert(BinIndex.pseudoBin(5) === Bai.PseudoBin)
+    assert(BinIndex.pseudoBin(6) === ((1 << 21) - 1) / 7 + 1)
+    assert(BinIndex.reg2bins(0, 1 << (14 + 15), 14, 5).max < BinIndex.pseudoBin(5))
   }
 }
 

@@ -182,6 +182,70 @@ class TabixSpec extends SparkSpec {
     assert(opt.length === rows.length)
   }
 
+  test("the .tbi builder bins by Vcf.spanEnd: INFO END= edge cases") {
+    import spark.implicits._
+    def site(pos: Int, i: Int, info: Seq[(String, String)]): VcfVariant =
+      VcfVariant("chr1", pos.toLong, s"e$i", "A", Array("C"), None, "PASS",
+        info.map(_._1).toArray, info.map(_._2).toArray, Array.empty, Array.empty)
+    // filler every 250 bases keeps the linear index populated; the edge
+    // cases sit among it
+    val filler = (0 until 400).map(i => site(100 + i * 250, i, Seq("DP" -> "5")))
+    val edges = Seq(
+      site(1000, 1000, Seq("END" -> "12abc", "END" -> "70000")), // digits-only END wins
+      site(2000, 1001, Seq("END" -> "50000x")), // not a number: REF span
+      site(3000, 1002, Seq("END" -> "")), // empty: REF span
+      site(4000, 1003, Seq("XEND" -> "90000")), // another key
+      site(5000, 1004, Seq("END" -> "80000")), // plain symbolic span
+      site(6000, 1005, Seq("END" -> "10"))) // END before POS: REF span
+    val vs = (filler ++ edges).sortBy(_.pos)
+    val f = s"${tmpDir("tbxend")}/end.vcf.bgz"
+    Vcf.writeBgzf(spark.createDataset(vs).coalesce(1), header, f, tabix = true)
+    Seq(("chr1", 60000, 65000), ("chr1", 40000, 45000), ("chr1", 75000, 76000),
+      ("chr1", 85000, 95000), ("chr1", 1, 999), ("chr1", 5500, 5600)).foreach { iv =>
+      val naive = vs.filter(v => v.pos <= iv._3 && Vcf.spanEnd(v) >= iv._2).map(_.id).sorted
+      val got = Vcf.readIntervals(spark, f, Seq(iv), splitSize = 4096).collect().map(_.id).sorted
+      assert(got.toSeq === naive, s"$iv")
+    }
+    // the record whose span only the second END= gives is found far away
+    assert(Vcf.readIntervals(spark, f, Seq(("chr1", 60000, 65000))).collect()
+      .exists(_.id == "e1000"))
+  }
+
+  test("graft-built .bai, BAM .csi, BCF .csi and .tbi bytes are pinned") {
+    // SHA-256 of each index as the builders wrote it at commit a8983cb,
+    // before the three formats shared one binning module; the spec
+    // layouts must not change silently
+    def sha(f: String): String =
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f)))
+        .map(b => f"$b%02x").mkString
+    def fixture(name: String): String = {
+      val f = s"${tmpDir("golden")}/$name"
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(getClass.getClassLoader.getResource(name).getFile),
+        java.nio.file.Paths.get(f))
+      f
+    }
+    val bam = fixture("test.bam")
+    Bai.buildAndWrite(bam)
+    Csi.buildAndWrite(bam)
+    val bcf = fixture("test.bgzf.bcf")
+    Csi.buildAndWriteBcf(bcf)
+    assert(sha(s"$bam.bai") === "ab40a35ff9e49a9a532eb23407d07d390cb9fea8e6aaa110f7d722006b49c644")
+    assert(sha(s"$bam.csi") === "51fd467674d2a33ec055c2afd36f290b908d4480291ee07c81671f17998512f4")
+    assert(sha(s"$bcf.csi") === "a95c064441495024b7ceb2d106b3d3f395b8490a5505b83e8371cdd704e5ef16")
+    assert(sha(s"$vcfBgz.tbi") === "49452800ecd7749197576d9a181c674824ff860ac936ae13937ffd25dbe95e4b")
+  }
+
+  test("indexing rejects a record past the 2^29 capacity of tabix binning") {
+    import spark.implicits._
+    val f = s"${tmpDir("tbxbig")}/big.vcf.bgz"
+    Vcf.writeBgzf(spark.createDataset(Seq(variant("chr1", 600000000, 0))).coalesce(1),
+      header, f)
+    val e = intercept[IllegalArgumentException](Tabix.buildVcf(f))
+    assert(e.getMessage.contains("index capacity"))
+  }
+
   test("indexing rejects an unsorted file") {
     import spark.implicits._
     val f = s"${tmpDir("tbxbad")}/bad.vcf.bgz"
