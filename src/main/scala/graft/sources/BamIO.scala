@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream, EOFException, OutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayOutputStream, DataOutputStream, OutputStream}
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -85,7 +85,9 @@ object SplittingIndex {
   final case class Entry(vo: Long, refId: Int, pos: Int)
 
   /** `maxSpan` = file-wide maximum reference span of any mapped record
-    * (end - pos + 1), recorded at write time; -1 = unknown (v1 index).
+    * (end - pos + 1), recorded at write time; -1 = no pruning: a v1
+    * index, or records not written in coordinate order (whatever the
+    * header claims, [[BgzfRecords.merge]]).
     * It is the exact pad needed for start-key chunk pruning — spliced
     * RNA-seq reads (CIGAR N over megabase introns) and ultralong reads
     * make any fixed guess unsafe. */
@@ -168,19 +170,31 @@ object SplittingIndex {
     out.close()
   }
 
-  def read(fs: FileSystem, path: Path): Option[Index] = {
-    if (!fs.exists(path)) return None
-    val in = new DataInputStream(new BufferedInputStream(fs.open(path)))
-    try {
-      if (in.readInt() != Magic) return None
-      val version = in.readInt()
-      val gran = in.readInt()
-      val maxSpan = if (version >= 2) in.readInt() else -1
-      val n = in.readInt()
-      val es = Array.fill(n)(Entry(in.readLong(), in.readInt(), in.readInt()))
-      Some(Index(gran, es, in.readLong(), maxSpan))
-    } finally in.close()
-  }
+  /** The `.sidx` at `path`, None when there is none.  Read through the
+    * checked index codec ([[BinIndex.readFile]], big-endian): nothing is
+    * sized from a count in the file, and a wrong magic or version,
+    * truncation, entries out of order or bytes past the end throw an
+    * IOException naming the path and the field. */
+  def read(fs: FileSystem, path: Path): Option[Index] =
+    BinIndex.readFile(fs, path, "GSIX", bgzf = false, bigEndian = true) { in =>
+      val version = in.int32("version")
+      if (version != 1 && version != 2) in.fail(s"version = $version")
+      val granularity = in.int32("granularity")
+      if (granularity <= 0) in.fail(s"granularity = $granularity")
+      val maxSpan = if (version >= 2) in.int32("max_span") else -1
+      if (maxSpan < -1) in.fail(s"max_span = $maxSpan")
+      val n = in.count("n_entry")
+      val entries = new ArrayBuffer[Entry]()
+      while (entries.length < n) {
+        val e = Entry(in.int64("entry_vo"), in.int32("entry_ref_id"), in.int32("entry_pos"))
+        if (entries.nonEmpty && e.vo < entries.last.vo) in.fail(s"entry ${entries.length} out of order")
+        entries += e
+      }
+      val endVo = in.int64("end_vo")
+      if (entries.nonEmpty && endVo < entries.last.vo) in.fail("end_vo before the last entry")
+      if (!in.atEnd) in.fail("bytes past end_vo")
+      Index(granularity, entries.toArray, endVo, maxSpan)
+    }
 
   def indexPath(bam: Path): Path = new Path(bam.getParent, bam.getName + ".sidx")
 
@@ -188,24 +202,22 @@ object SplittingIndex {
     * [[Fs.commitFile]]: `header` as BGZF blocks + the
     * `part-<pid>.<ext>` shards under `tmpDir` in the given order + the
     * EOF terminator, then the v2 sidecar, each shard's entries shifted
-    * by the compressed bytes before it.  `shards` = (pid, compressed
-    * length, shard-relative (vo, refId, pos0) entries). */
+    * by the compressed bytes before it. */
   private[sources] def mergeShards(file: String, header: Array[Byte], tmpDir: String,
-                                   ext: String,
-                                   shards: Seq[(Int, Long, Array[(Long, Int, Int)])],
+                                   ext: String, shards: Seq[BgzfRecords.Shard],
                                    granularity: Int, maxSpan: Int): Unit = {
     val (fs, path) = Fs.get(file)
     Fs.commitFile(file) { out =>
       var coffset = Bgzf.writeBlocksTo(out, header, 0, header.length)
-      val entries = shards.flatMap { case (_, len, es) =>
+      val entries = shards.flatMap { s =>
         val base = coffset
-        coffset += len
-        es.toSeq.map { case (vo, refId, pos) =>
+        coffset += s.length
+        s.entries.toSeq.map { case (vo, refId, pos) =>
           Entry(Bgzf.virtualOffset(Bgzf.voCompressed(vo) + base, Bgzf.voUncompressed(vo)),
             refId, pos)
         }
       }
-      Fs.concatParts(fs, shards.map(s => Fs.partPath(tmpDir, s._1, ext)), out)
+      Fs.concatParts(fs, shards.map(s => Fs.partPath(tmpDir, s.pid, ext)), out)
       out.write(Bgzf.EofMarker)
       (entries, Bgzf.virtualOffset(coffset, 0))
     } { case (entries, endVo) =>
@@ -214,26 +226,31 @@ object SplittingIndex {
   }
 }
 
-/** Distributed BAM read/write (S3-S5).
+/** Distributed BAM read/write (S3-S5): the BAM side of the shared
+  * BGZF record layer ([[BgzfRecords]]).  What is BAM's own: the header
+  * codec, single-length framing over [[BamCodec]], the (refId, pos0,
+  * end) key, the record guesser, the `.bai`-then-`.csi` lookup, the
+  * header's `SO:coordinate` as a second condition for `.sidx` pruning,
+  * and the record-level overlap and unmapped filter.
   *
-  * Read path: the DRIVER places all split boundaries up front —
-  * constant-time from the sidecar index when present, otherwise by
-  * block-guessing + record-guessing at each target byte offset
-  * (BAMInputFormat.getSplits + BAMSplitGuesser semantics) — then each
-  * task reads exactly the records whose start virtual offset falls in
-  * its [startVo, endVo) range.  Boundaries are computed once centrally,
-  * so neighbors can never disagree about record ownership.
+  * Read path: the DRIVER places all split boundaries up front
+  * ([[BgzfRecords.plan]]: the binning index for intervals, else the
+  * `.sidx`, else block-guessing + record-guessing at each target byte
+  * offset — BAMInputFormat.getSplits + BAMSplitGuesser semantics), then
+  * each task reads exactly the records whose start virtual offset falls
+  * in its [startVo, endVo) range.  Boundaries are computed once
+  * centrally, so neighbors can never disagree about record ownership.
   *
   * Write path: [[write]] is the `format("bam")` batch write
   * (v2.GraftDataSinks) with the header in memory.  Each task attempt
   * streams a header-less BGZF shard + its local splitting-index
   * entries into its own attempt file, renamed into place on task
-  * commit; the driver commit ([[Fs.commitFile]]) concatenates header +
-  * shards + EOF terminator (BGZF concatenation is valid) into a temp
-  * sibling, shifting the index entries, drops the target's old
-  * sidecars, moves the temp over the target and writes the new
-  * `.sidx` — the reference's SAMFileMerger.java:32 shape without a
-  * second pass over the data.
+  * commit; the driver commit ([[BgzfRecords.merge]] through
+  * [[Fs.commitFile]]) concatenates header + shards + EOF terminator
+  * (BGZF concatenation is valid) into a temp sibling, shifting the
+  * index entries, drops the target's old sidecars, moves the temp over
+  * the target and writes the new `.sidx` — the reference's
+  * SAMFileMerger.java:32 shape without a second pass over the data.
   */
 object BamIO {
 
@@ -262,10 +279,9 @@ object BamIO {
   }
 
   /** The BAM planner of every read face (typed [[read]], the DSv2 scan,
-    * the micro-batch stream): one partition per virtual-offset range,
-    * from the sidecar index, a foreign .bai/.csi, or split guessing.
-    * `intervalsOf` resolves the intervals against the file's header;
-    * they prune chunks when the index allows (bounded traversal,
+    * the micro-batch stream): one partition per virtual-offset range of
+    * [[BgzfRecords.plan]].  `intervalsOf` resolves the intervals against
+    * the file's header; they prune chunks (bounded traversal,
     * ref: BAMInputFormat.java:150-190) and, with `exact`, also filter
     * records by overlap. */
   private[sources] def plan(file: String, splitSize: Long, includeUnmapped: Boolean,
@@ -273,173 +289,42 @@ object BamIO {
                            (intervalsOf: SamHeader => Seq[(String, Int, Int)])
       : Seq[v2.BamPartition] = {
     val (fs, path) = Fs.get(file)
-    val fileLen = fs.getFileStatus(path).getLen
     val in = new Bgzf.BgzfInputStream(new BufferedInputStream(fs.open(path)))
-    val header = BamCodec.readHeader(in)
-    val headerEndVo = in.virtualPos
-    in.close()
+    val (header, headerEndVo) = try (BamCodec.readHeader(in), in.virtualPos) finally in.close()
     val intervals = intervalsOf(header)
-
-    val refIdx = header.refs.map(_.name).zipWithIndex.toMap
-    val queries = intervals.flatMap { case (c, s, e) => refIdx.get(c).map(ri => (ri, s, e)) }
-    val ranges: Seq[(Long, Long)] =
-      SplittingIndex.read(fs, SplittingIndex.indexPath(path)) match {
-        case Some(idx) =>
-          idx.ranges(headerEndVo,
-            Some(queries).filter(_ => intervals.nonEmpty && header.sortOrder == "coordinate"),
-            splitSize, includeUnmapped)
-        case None =>
-          // foreign BAM: a spec .bai or .csi + intervals gives exact
-          // bounded traversal; otherwise split guessing
-          val binning =
-            if (intervals.isEmpty) None
-            else Bai.read(fs, Bai.indexPath(path)).orElse(Csi.read(fs, Csi.indexPath(path)))
-          binning match {
-            case Some(idx) =>
-              // unplaced-unmapped records sort after every mapped
-              // chunk in a coordinate-sorted BAM; the binning index
-              // has no entries for them, so bounded traversal with
-              // includeUnmapped appends the tail range
-              val mappedEndVo = idx.refs.iterator.flatMap(idx.dataBins).flatMap(_._2)
-                .map(_.end).foldLeft(headerEndVo)(math.max)
-              idx.ranges(queries, splitSize) ++
-                (if (includeUnmapped) Seq((mappedEndVo, Bgzf.virtualOffset(fileLen, 0))) else Nil)
-            case None =>
-              val bounds = splitsByGuessing(fs, path, fileLen, headerEndVo, splitSize,
-                data => BamCodec.guessRecordStart(data, header.refs.length))
-              bounds.sliding(2).collect { case Array(a, b) if a < b => (a, b) }.toSeq
-          }
-      }
+    val ranges = BgzfRecords.plan(file, headerEndVo, header.refs.map(_.name).toSeq, intervals,
+      splitSize, includeUnmapped, sidxPrunable = header.sortOrder == "coordinate")(
+      (fs, p) => Bai.read(fs, Bai.indexPath(p)).orElse(Csi.read(fs, Csi.indexPath(p))),
+      BamCodec.guessRecordStart(_, header.refs.length))
     val iv = if (exact) intervals.toArray else Array.empty[(String, Int, Int)]
     ranges.map { case (s, e) => v2.BamPartition(file, s, e, header.refs, iv, includeUnmapped) }
   }
 
-  /** No index: fixed byte-range split targets; at each target the
-    * driver finds the next BGZF block, inflates a window, and asks
-    * `guessRecord` for the first record-start offset within it
-    * (BAMSplitGuesser.java re-expression; the BCF reader reuses this
-    * scaffold with its own record guesser, like BCFSplitGuesser). */
-  private[sources] def splitsByGuessing(fs: FileSystem, path: Path, fileLen: Long,
-                               headerEndVo: Long, splitSize: Long,
-                               guessRecord: Array[Byte] => Int): Array[Long] = {
-    val targets = (Bgzf.voCompressed(headerEndVo) + splitSize) until fileLen by splitSize
-    val bounds = new ArrayBuffer[Long]()
-    bounds += headerEndVo
-    val raw = fs.open(path)
-    try {
-      targets.foreach { t =>
-        val window = new Array[Byte](512 * 1024)
-        raw.seek(t)
-        var n = 0
-        var r = 0
-        while (n < window.length && r >= 0) {
-          r = raw.read(window, n, window.length - n)
-          if (r > 0) n += r
-        }
-        val blockOff = Bgzf.findBlockStart(java.util.Arrays.copyOf(window, n), 0)
-        if (blockOff >= 0) {
-          // inflate a couple blocks and guess the record boundary
-          val bis = new Bgzf.BgzfInputStream(
-            new java.io.ByteArrayInputStream(window, blockOff, n - blockOff), t + blockOff)
-          val buf = new ByteArrayOutputStream()
-          try {
-            val tmp = new Array[Byte](8192)
-            var got = 0
-            while (buf.size < 2 * Bgzf.MaxBlockSize && got >= 0) {
-              got = bis.read(tmp)
-              if (got > 0) buf.write(tmp, 0, got)
-            }
-          } catch { case _: EOFException => () } // window may cut a block
-          val rec = guessRecord(buf.toByteArray)
-          if (rec >= 0) {
-            // rec is an uncompressed offset from blockOff's block start;
-            // walk blocks to express it as a virtual offset
-            var co = t + blockOff
-            var remaining = rec
-            var done = false
-            while (!done) {
-              val bsize = blockSizeAt(window, (co - t).toInt, n)
-              val inflated = inflatedSizeOfBlock(window, (co - t).toInt, n)
-              if (bsize > 0 && remaining >= inflated && inflated > 0) {
-                remaining -= inflated; co += bsize
-              } else done = true
-            }
-            bounds += Bgzf.virtualOffset(co, remaining)
-          }
-        }
-      }
-    } finally raw.close()
-    bounds += Bgzf.virtualOffset(fileLen, 0)
-    bounds.distinct.sorted.toArray
-  }
-
-  private def blockSizeAt(window: Array[Byte], off: Int, len: Int): Int =
-    if (off < 0 || off > len - 18) -1 else Bgzf.parseBsize(window, off)
-
-  private def inflatedSizeOfBlock(window: Array[Byte], off: Int, len: Int): Int = {
-    val bsize = blockSizeAt(window, off, len)
-    if (bsize < 0 || off + bsize > len) return -1
-    // ISIZE = last 4 bytes of the member
-    val o = off + bsize - 4
-    (window(o) & 0xff) | ((window(o + 1) & 0xff) << 8) |
-      ((window(o + 2) & 0xff) << 16) | ((window(o + 3) & 0xff) << 24)
-  }
-
-  /** Task-side: records with start VO in [startVo, endVo), plus an
-    * explicit closer for consumers that may abandon the iterator early
-    * (DataSource V2 readers under LIMIT). */
+  /** Task-side: records with start VO in [startVo, endVo)
+    * ([[BgzfRecords.openRange]]) — with `intervals`, only those
+    * overlapping one, plus the unplaced-unmapped ones when
+    * `includeUnmapped`. */
   private[sources] def openRange(file: String, startVo: Long, endVo: Long,
                         refs: Array[graft.model.SamRef],
                         intervals: Array[(String, Int, Int)],
                         includeUnmapped: Boolean = false,
                         fields: Int = BamCodec.AllFields)
       : (Iterator[SamRecord], () => Unit) = {
-    val in = Bgzf.openAt(file, startVo)
-    val it = new Iterator[SamRecord] {
-      private var nextRec: SamRecord = _
-      private var finished = false
-      private def fetch(): Unit = {
-        if (finished) return
-        while (nextRec == null && !finished) {
-          if (in.virtualPos >= endVo) { finished = true; in.close(); return }
-          val sz = readIntLe(in)
-          if (sz < 0) { finished = true; in.close(); return }
-          val data = new Array[Byte](sz)
-          var o = 0
-          while (o < sz) {
-            val r = in.read(data, o, sz - o)
-            if (r < 0) throw new EOFException("truncated BAM record")
-            o += r
-          }
-          // interval overlap needs `end`, i.e. the CIGAR ref length —
-          // force it into the mask whenever records are being filtered
-          val rec = BamCodec.decode(data, refs,
-            if (intervals.isEmpty) fields else fields | BamCodec.FCigar)
-          if (intervals.isEmpty || overlaps(rec, intervals) ||
-            (includeUnmapped && rec.isUnmapped && (rec.rname == "*" || rec.pos == 0)))
-            nextRec = rec
-        }
-      }
-      override def hasNext: Boolean = { if (nextRec == null) fetch(); nextRec != null }
-      override def next(): SamRecord = {
-        if (!hasNext) throw new NoSuchElementException
-        val r = nextRec; nextRec = null; r
-      }
+    // interval overlap needs `end`, i.e. the CIGAR ref length — force
+    // it into the mask whenever records are being filtered
+    val mask = if (intervals.isEmpty) fields else fields | BamCodec.FCigar
+    val (it, closer) = BgzfRecords.openRange[SamRecord](file, startVo, endVo) { in =>
+      val sz = BgzfRecords.readIntLe(in)
+      if (sz < 0) null
+      else BamCodec.decode(BgzfRecords.readFully(in, sz, "BAM record"), refs, mask)
     }
-    (it, () => try in.close() catch { case _: java.io.IOException => () })
+    (if (intervals.isEmpty) it
+     else it.filter(rec => overlaps(rec, intervals) ||
+       (includeUnmapped && rec.isUnmapped && (rec.rname == "*" || rec.pos == 0))), closer)
   }
 
   private def overlaps(r: SamRecord, ivs: Array[(String, Int, Int)]): Boolean =
     ivs.exists { case (c, s, e) => r.rname == c && r.pos <= e && r.end >= s }
-
-  /** Little-endian int32, or -1 at a clean end of stream. */
-  private[sources] def readIntLe(in: java.io.InputStream): Int = {
-    val a = in.read()
-    if (a < 0) return -1
-    val b = in.read(); val c = in.read(); val d = in.read()
-    if ((b | c | d) < 0) throw new EOFException("truncated record length")
-    a | (b << 8) | (c << 16) | (d << 24)
-  }
 
   /** Parse "chr1:100-200" interval strings (1-based inclusive;
     * "chr1" alone = whole contig; ref: util/IntervalUtil.java +
@@ -473,39 +358,27 @@ object BamIO {
     * The sort key is ONE packed long, `refIdx·2^32 + (pos + 2^31)` —
     * unlike the ranked packed PREFIX this is an injective,
     * order-EXACT image of (refIdx ASC, pos ASC): both components are
-    * 32-bit, so nothing coarsens and no fallback comparison ever
-    * runs.  The two-column spelling instead gives SortExec only the
-    * leading refIdx as its sort prefix, which TIES on ~every
-    * comparison of a single-contig shard (the SKEWPROBE r12 class:
-    * each tie falls back to the row comparator) — the packed single
-    * long keeps the whole sort in the radix/prefix path and the
-    * range exchange samples one word per row.  Kill switch shared
-    * with the ranked packing: `spark.graft.ranked.packedSortPrefix`. */
+    * 32-bit, so nothing coarsens and there is nothing to fall back to.
+    * A two-column key would give SortExec only the leading refIdx as
+    * its sort prefix, which TIES on ~every comparison of a
+    * single-contig shard (the SKEWPROBE r12 class: each tie falls back
+    * to the row comparator) — the packed single long keeps the whole
+    * sort in the radix/prefix path and the range exchange samples one
+    * word per row. */
   private[sources] def coordinateSorted(ds: Dataset[SamRecord],
                                         header: SamHeader): Dataset[SamRecord] = {
     import org.apache.spark.sql.functions._
     val spark = ds.sparkSession
     import spark.implicits._
-    val refOrder = header.refs.map(_.name).zipWithIndex.toMap
-    val orderMap = typedLit(refOrder)
+    val orderMap = typedLit(header.refs.map(_.name).zipWithIndex.toMap)
     val refIdx = coalesce(orderMap(col("rname")), lit(Int.MaxValue))
-    val packed = spark.conf
-      .getOption("spark.graft.ranked.packedSortPrefix").forall(_.equalsIgnoreCase("true"))
-    (if (packed) {
-      ds.toDF()
-        .withColumn("_pk",
-          refIdx.cast("long") * lit(4294967296L) +
-            (col("pos").cast("long") + lit(2147483648L)))
-        .repartitionByRange(col("_pk"))
-        .sortWithinPartitions(col("_pk"))
-        .drop("_pk")
-    } else {
-      ds.toDF()
-        .withColumn("_refIdx", refIdx)
-        .repartitionByRange(col("_refIdx"), col("pos"))
-        .sortWithinPartitions(col("_refIdx"), col("pos"))
-        .drop("_refIdx")
-    }).as[SamRecord]
+    ds.toDF()
+      .withColumn("_pk",
+        refIdx.cast("long") * lit(4294967296L) + (col("pos").cast("long") + lit(2147483648L)))
+      .repartitionByRange(col("_pk"))
+      .sortWithinPartitions(col("_pk"))
+      .drop("_pk")
+      .as[SamRecord]
   }
 
   /** Coordinate-sort ([[coordinateSorted]]) and write with an
@@ -523,66 +396,26 @@ object BamIO {
     v2.GraftDataSinks.overwrite(ds, new v2.BamTable(v2.GraftDataSinks.at(file), Some(header)),
       Map("granularity" -> granularity.toString))
 
-  /** One task's shard + its local (shard-relative) index entries. */
-  final case class ShardInfo(pid: Int, shardLen: Long, count: Long,
-                             entries: Array[(Long, Int, Int)], maxSpan: Int)
-    extends Serializable
-
-  /** Incremental shard writer (one record at a time — nothing buffers
-    * the partition in memory), driven by the DataSource V2 sink's
-    * per-row writes. */
-  private[sources] final class ShardWriter(shardPath: Path, refIdx: Map[String, Int],
-                                           granularity: Int, pid: Int) {
-    private val out = {
-      val (tfs, _) = Fs.get(shardPath.toString)
-      new Bgzf.BgzfOutputStream(tfs.create(shardPath, true))
+  /** BAM's side of the shared write path: the binary header, one
+    * block_size-prefixed [[BamCodec]] record, the (refId, pos0, end)
+    * key. */
+  private[graft] final case class RecordCodec(samHeader: SamHeader)
+      extends BgzfRecords.Codec[SamRecord] {
+    private val refIdx = samHeader.refs.map(_.name).zipWithIndex.toMap
+    def ext: String = "bam"
+    def header: Array[Byte] = {
+      val buf = new ByteArrayOutputStream()
+      BamCodec.writeHeader(buf, samHeader)
+      buf.toByteArray
     }
-    // (shard-relative virtual offset, refId, pos0) per indexed record
-    private val entries = new ArrayBuffer[(Long, Int, Int)]()
-    private var n = 0L
-    private var count = 0L
-    private var maxSpan = 0
-
-    def write(rec: SamRecord): Unit = {
-      if (n % granularity == 0) {
-        // align indexed records to block starts
-        out.blockBoundary()
-        entries += ((Bgzf.virtualOffset(out.compressedOffset, 0),
-          refIdx.get(rec.rname).getOrElse(-1), rec.pos - 1))
-      }
-      if (rec.pos > 0) {
-        val span = rec.end - rec.pos + 1
-        if (span > maxSpan) maxSpan = span
-      }
+    def write(rec: SamRecord, out: OutputStream): Unit = {
       val data = BamCodec.encode(rec, refIdx)
       val len = data.length
       out.write(Array[Byte](len.toByte, (len >> 8).toByte, (len >> 16).toByte, (len >> 24).toByte))
       out.write(data)
-      n += 1; count += 1
     }
-
-    def finish(): ShardInfo = {
-      out.blockBoundary()
-      val shardLen = out.compressedOffset
-      out.closeWithoutTerminator()
-      ShardInfo(pid, shardLen, count, entries.toArray, maxSpan)
-    }
-
-    def abort(): Unit =
-      try out.closeWithoutTerminator()
-      catch { case _: java.io.IOException => () }
-  }
-
-  /** Driver-side merge: header block + the shards in pid order + EOF
-    * terminator, then the v2 sidecar index
-    * ([[SplittingIndex.mergeShards]]). */
-  private[sources] def mergeShardInfo(file: String, header: SamHeader,
-                                      tmpDir: String, shardInfo: Seq[ShardInfo],
-                                      granularity: Int): Unit = {
-    val headerBuf = new ByteArrayOutputStream()
-    BamCodec.writeHeader(headerBuf, header)
-    SplittingIndex.mergeShards(file, headerBuf.toByteArray, tmpDir, "bam",
-      shardInfo.map(si => (si.pid, si.shardLen, si.entries)), granularity,
-      if (shardInfo.isEmpty) 0 else shardInfo.map(_.maxSpan).max)
+    def refId(rec: SamRecord): Int = refIdx.getOrElse(rec.rname, -1)
+    def pos0(rec: SamRecord): Int = rec.pos - 1
+    def end1(rec: SamRecord): Int = rec.end
   }
 }

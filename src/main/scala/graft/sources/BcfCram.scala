@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{ByteArrayOutputStream, DataOutputStream, EOFException, InputStream}
+import java.io.{ByteArrayOutputStream, DataOutputStream, EOFException, InputStream, OutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -378,57 +378,97 @@ object Bcf {
             infoKeys: Array[String], fmtKeys: Array[String] = Array.empty): Unit = {
     val (fs, p) = Fs.get(path)
     val out = new Bgzf.BgzfOutputStream(fs.create(p, true))
-    val o = new DataOutputStream(out)
-    o.write(Magic)
-    val ht = (headerText + "\u0000").getBytes(UTF_8)
-    o.write(ht.length & 0xff); o.write((ht.length >> 8) & 0xff)
-    o.write((ht.length >> 16) & 0xff); o.write((ht.length >> 24) & 0xff)
-    o.write(ht)
+    writeHeader(out, headerText)
     val contigIdx = contigs.zipWithIndex.toMap
     val filterIdx = filters.zipWithIndex.toMap
     val infoIdx = infoKeys.zipWithIndex.toMap
     val fmtIdx = fmtKeys.zipWithIndex.toMap
-    variants.foreach { v =>
-      val withGts = fmtKeys.nonEmpty && v.format.nonEmpty && v.genotypes.nonEmpty
-      val shared = encode(v, contigIdx, filterIdx, infoIdx,
-        nFmt = if (withGts) v.format.length else 0,
-        nSample = if (withGts) v.genotypes.length else 0)
-      val indiv = if (withGts) encodeIndiv(v, fmtIdx) else Array.emptyByteArray
-      def w32(x: Int): Unit = { o.write(x & 0xff); o.write((x >> 8) & 0xff); o.write((x >> 16) & 0xff); o.write((x >> 24) & 0xff) }
-      w32(shared.length)
-      w32(indiv.length)
-      o.write(shared)
-      o.write(indiv)
-    }
-    o.flush()
+    variants.foreach(writeRecord(out, _, contigIdx, filterIdx, infoIdx, fmtIdx))
     out.close()
   }
 
+  /** The BCF2 header: magic, l_text, the NUL-terminated text. */
+  def writeHeader(out: OutputStream, headerText: String): Unit = {
+    out.write(Magic)
+    val ht = (headerText + "\u0000").getBytes(UTF_8)
+    out.write(Array[Byte](ht.length.toByte, (ht.length >> 8).toByte,
+      (ht.length >> 16).toByte, (ht.length >> 24).toByte))
+    out.write(ht)
+  }
+
+  /** The header text at the head of `in` ([[writeHeader]]'s layout). */
+  def readHeaderText(in: InputStream): String = {
+    require(java.util.Arrays.equals(BgzfRecords.readFully(in, 5, "BCF magic"), Magic), "not BCF2")
+    val ht = BgzfRecords.readFully(in, BgzfRecords.readIntLe(in), "BCF header")
+    new String(ht, 0, ht.length - 1, UTF_8)
+  }
+
+  /** One record: l_shared, l_indiv, the shared block, then the
+    * genotype matrix ([[encodeIndiv]]) when `fmtIdx` is non-empty and
+    * the record has genotypes (else a sites-only record). */
+  def writeRecord(out: OutputStream, v: VcfVariant, contigIdx: Map[String, Int],
+                  filterIdx: Map[String, Int], infoIdx: Map[String, Int],
+                  fmtIdx: Map[String, Int]): Unit = {
+    val withGts = fmtIdx.nonEmpty && v.format.nonEmpty && v.genotypes.nonEmpty
+    val shared = encode(v, contigIdx, filterIdx, infoIdx,
+      nFmt = if (withGts) v.format.length else 0,
+      nSample = if (withGts) v.genotypes.length else 0)
+    val indiv = if (withGts) encodeIndiv(v, fmtIdx) else Array.emptyByteArray
+    val ls = shared.length
+    val li = indiv.length
+    out.write(Array[Byte](ls.toByte, (ls >> 8).toByte, (ls >> 16).toByte, (ls >> 24).toByte,
+      li.toByte, (li >> 8).toByte, (li >> 16).toByte, (li >> 24).toByte))
+    out.write(shared)
+    out.write(indiv)
+  }
+
+  /** The header text and every record of a BGZF BCF, decoded against
+    * the given tables. */
   def read(path: String, contigs: Array[String], filters: Array[String],
            infoKeys: Array[String], fmtKeys: Array[String] = Array.empty):
       (String, Seq[VcfVariant]) = {
     val (fs, p) = Fs.get(path)
     val in = new Bgzf.BgzfInputStream(new java.io.BufferedInputStream(fs.open(p)))
-    val magic = new Array[Byte](5)
-    readFully(in, magic)
-    require(java.util.Arrays.equals(magic, Magic), "not BCF2")
-    val lh = readIntLe(in)
-    val ht = new Array[Byte](lh)
-    readFully(in, ht)
-    val headerText = new String(ht, 0, lh - 1, UTF_8)
-    val out = scala.collection.mutable.ArrayBuffer[VcfVariant]()
-    var lShared = readIntLeOrEof(in)
-    while (lShared >= 0) {
-      val lIndiv = readIntLe(in)
-      val shared = new Array[Byte](lShared)
-      readFully(in, shared)
-      val indiv = new Array[Byte](lIndiv)
-      if (lIndiv > 0) readFully(in, indiv)
-      out += decode(shared, contigs, filters, infoKeys, indiv, fmtKeys)
-      lShared = readIntLeOrEof(in)
+    val headerText = try readHeaderText(in) catch { case e: Throwable => in.close(); throw e }
+    val (it, _) = BgzfRecords.records[VcfVariant](in, () => false)(
+      recordReader(contigs, filters, infoKeys, fmtKeys, Vcf.AllFields))
+    (headerText, it.toVector)
+  }
+
+  /** The record decoder over a BCF body: one two-length-framed record
+    * per call, decoded against the given tables, null at the stream's
+    * clean end.  A mask without genotypes skips the indiv block at byte
+    * level. */
+  private[sources] def recordReader(contigs: Array[String], filters: Array[String],
+                                    infoKeys: Array[String], fmtKeys: Array[String],
+                                    fields: Int): InputStream => VcfVariant = {
+    val wantG = (fields & Vcf.FGenotypes) != 0
+    lazy val scratch = new Array[Byte](8192)
+    in => {
+      val lShared = BgzfRecords.readIntLe(in)
+      if (lShared < 0) null
+      else {
+        val lIndiv = BgzfRecords.readIntLe(in)
+        if (lIndiv < 0) throw new EOFException("truncated BCF record")
+        val shared = BgzfRecords.readFully(in, lShared, "BCF record")
+        val indiv =
+          if (wantG) BgzfRecords.readFully(in, lIndiv, "BCF genotypes")
+          else { skipFully(in, lIndiv, scratch); Array.emptyByteArray }
+        decode(shared, contigs, filters, infoKeys, indiv, fmtKeys, fields)
+      }
     }
-    in.close()
-    (headerText, out.toSeq)
+  }
+
+  /** Skip exactly `n` stream bytes through a bounded scratch buffer
+    * (InputStream.skip may be a read loop anyway on decoded streams,
+    * and can legally return 0). */
+  private def skipFully(in: InputStream, n: Int, scratch: Array[Byte]): Unit = {
+    var left = n
+    while (left > 0) {
+      val r = in.read(scratch, 0, math.min(left, scratch.length))
+      if (r < 0) throw new EOFException(s"EOF with $left genotype bytes left to skip")
+      left -= r
+    }
   }
 
   /** Guess the first BCF record start within inflated `data` —
@@ -480,39 +520,17 @@ object Bcf {
     }
     true
   }
-
-  private def readFully(in: InputStream, buf: Array[Byte]): Unit = {
-    var off = 0
-    while (off < buf.length) {
-      val r = in.read(buf, off, buf.length - off)
-      if (r < 0) throw new EOFException()
-      off += r
-    }
-  }
-  private def readIntLe(in: InputStream): Int = {
-    val a = in.read()
-    if (a < 0) throw new EOFException()
-    val b = in.read(); val c = in.read(); val d = in.read()
-    if ((b | c | d) < 0) throw new EOFException()
-    a | (b << 8) | (c << 16) | (d << 24)
-  }
-
-  /** -1 on clean EOF before the first byte. */
-  private def readIntLeOrEof(in: InputStream): Int = {
-    val a = in.read()
-    if (a < 0) return -1
-    val b = in.read(); val c = in.read(); val d = in.read()
-    if ((b | c | d) < 0) throw new EOFException()
-    a | (b << 8) | (c << 16) | (d << 24)
-  }
 }
 
-/** Distributed BCF read/write: the BAM pattern applied to BCF2 —
-  * parallel header-less BGZF shards with per-shard record-start
-  * virtual offsets, driver-side concat + shifted [[SplittingIndex]],
-  * ranged read with records owned by start virtual offset.  The site
-  * codec is [[Bcf]]; dictionaries (contigs/filters/info keys) ride the
-  * header text like the reference's header-driven decode.
+/** Distributed BCF read/write: the BCF side of the shared BGZF record
+  * layer ([[BgzfRecords]]) — the shard writer, driver merge + shifted
+  * [[SplittingIndex]], planner and ranged read BAM uses too.  What is
+  * BCF's own: the [[Dicts]] (contigs/filters/info keys ride the header
+  * text like the reference's header-driven decode), two-length framing
+  * over the [[Bcf]] codec, the [[Vcf.spanEnd]] key, its record
+  * guesser, the `.csi` lookup, the overlap filter
+  * ([[Vcf.openOverlapping]]) and the plain (uncompressed) single
+  * stream.
   */
 object BcfIO {
 
@@ -640,111 +658,27 @@ object BcfIO {
     }
   }
 
-  /** Per-shard write summary - what the driver needs to concat shards
-    * and build the shifted splitting index (mirrors BamIO.ShardInfo). */
-  final case class ShardInfo(pid: Int, shardLen: Long,
-                             entries: Array[(Long, Int, Int)], sorted: Boolean,
-                             firstKey: Option[(Int, Int)],
-                             lastKey: Option[(Int, Int)], maxSpan: Int)
-      extends Serializable
-
-  /** Incremental header-less BCF shard writer (one record at a time -
-    * nothing buffers the partition), driven by the DataSource V2
-    * sink's per-row writes (v2.BcfWriterFactory). */
-  private[graft] final class ShardWriter(shardPath: String, dicts: Dicts,
-                                         granularity: Int, pid: Int) {
+  /** BCF's side of the shared write path: the BCF2 header, one
+    * two-length-framed [[Bcf]] record, the (contig, pos0, [[Vcf.spanEnd]])
+    * key. */
+  private[graft] final case class RecordCodec(dicts: Dicts)
+      extends BgzfRecords.Codec[VcfVariant] {
     private val contigIdx = dicts.contigs.zipWithIndex.toMap
     // record ints index the SHARED string table (BCF2 spec), matching
     // the IDX= attributes headerText emits
-    private val filterIdx = dicts.stringIdx
-    private val infoIdx = dicts.stringIdx
     private val fmtIdx =
       if (dicts.fmtKeys.isEmpty) Map.empty[String, Int] else dicts.stringIdx
-    private val out = {
-      val (tfs, tp) = Fs.get(shardPath)
-      new Bgzf.BgzfOutputStream(tfs.create(tp, true))
+    def ext: String = "bcf"
+    def header: Array[Byte] = {
+      val buf = new ByteArrayOutputStream()
+      Bcf.writeHeader(buf, dicts.headerText)
+      buf.toByteArray
     }
-    // (shard-relative virtual offset, refId, pos0) per indexed record
-    private val entries = scala.collection.mutable.ArrayBuffer[(Long, Int, Int)]()
-    private var n = 0L
-    // track (refId, pos) monotonicity + max record span so the
-    // driver can mark the sidecar interval-prunable (maxSpan >= 0)
-    // exactly when the FILE is coordinate-sorted - the same v2
-    // sidecar contract the BAM writer keeps
-    private var sorted = true
-    private var firstKey: (Int, Int) = null
-    private var lastKey: (Int, Int) = null
-    private var maxSpan = 0
-
-    def write(v: VcfVariant): Unit = {
-      if (n % granularity == 0) {
-        out.blockBoundary()
-        entries += ((Bgzf.virtualOffset(out.compressedOffset, 0),
-          contigIdx.getOrElse(v.chrom, -1), v.pos.toInt - 1))
-      }
-      val key = (contigIdx.getOrElse(v.chrom, -1), v.pos.toInt - 1)
-      if (firstKey == null) firstKey = key
-      if (lastKey != null &&
-        (key._1 < lastKey._1 || (key._1 == lastKey._1 && key._2 < lastKey._2)))
-        sorted = false
-      lastKey = key
-      maxSpan = math.max(maxSpan, (Vcf.spanEnd(v) - v.pos + 1).toInt)
-      val withGts = fmtIdx.nonEmpty && v.format.nonEmpty && v.genotypes.nonEmpty
-      val shared = Bcf.encode(v, contigIdx, filterIdx, infoIdx,
-        nFmt = if (withGts) v.format.length else 0,
-        nSample = if (withGts) v.genotypes.length else 0)
-      val indiv = if (withGts) Bcf.encodeIndiv(v, fmtIdx) else Array.emptyByteArray
-      val len = shared.length
-      val li = indiv.length
-      out.write(Array[Byte](len.toByte, (len >> 8).toByte, (len >> 16).toByte, (len >> 24).toByte))
-      out.write(Array[Byte](li.toByte, (li >> 8).toByte, (li >> 16).toByte, (li >> 24).toByte))
-      out.write(shared)
-      out.write(indiv)
-      n += 1
-    }
-
-    def finish(): ShardInfo = {
-      out.blockBoundary()
-      val shardLen = out.compressedOffset
-      out.closeWithoutTerminator()
-      ShardInfo(pid, shardLen, entries.toArray, sorted,
-        Option(firstKey), Option(lastKey), maxSpan)
-    }
-
-    def abort(): Unit =
-      try out.closeWithoutTerminator()
-      catch { case _: Throwable => () }
-  }
-
-  /** Driver-side merge: header + the shards in pid order + EOF, then
-    * the v2 sidecar splitting index ([[SplittingIndex.mergeShards]]),
-    * interval-prunable (maxSpan >= 0) exactly when the file is
-    * coordinate-sorted. */
-  private[graft] def mergeShardInfo(file: String, dicts: Dicts,
-                                    tmpDir: String, shardInfo: Seq[ShardInfo],
-                                    granularity: Int): Unit = {
-    val nonEmpty = shardInfo.filter(_.firstKey.nonEmpty)
-    val fileSorted = nonEmpty.forall(_.sorted) &&
-      nonEmpty.sliding(2).forall {
-        case Seq(a, b) =>
-          val (ar, ap) = a.lastKey.get
-          val (br, bp) = b.firstKey.get
-          ar < br || (ar == br && ap <= bp)
-        case _ => true
-      }
-    val fileMaxSpan =
-      if (fileSorted) nonEmpty.map(_.maxSpan).foldLeft(0)(math.max) else -1
-
-    val headerBuf = new ByteArrayOutputStream()
-    val o = new DataOutputStream(headerBuf)
-    o.write(Bcf.Magic)
-    val ht = (dicts.headerText + "\u0000").getBytes(UTF_8)
-    o.write(ht.length & 0xff); o.write((ht.length >> 8) & 0xff)
-    o.write((ht.length >> 16) & 0xff); o.write((ht.length >> 24) & 0xff)
-    o.write(ht)
-    o.flush()
-    SplittingIndex.mergeShards(file, headerBuf.toByteArray, tmpDir, "bcf",
-      shardInfo.map(si => (si.pid, si.shardLen, si.entries)), granularity, fileMaxSpan)
+    def write(v: VcfVariant, out: OutputStream): Unit =
+      Bcf.writeRecord(out, v, contigIdx, dicts.stringIdx, dicts.stringIdx, fmtIdx)
+    def refId(v: VcfVariant): Int = contigIdx.getOrElse(v.chrom, -1)
+    def pos0(v: VcfVariant): Int = v.pos.toInt - 1
+    def end1(v: VcfVariant): Int = Vcf.spanEnd(v)
   }
 
   /** Write `ds` as one BCF + sidecar splitting index: the
@@ -754,139 +688,48 @@ object BcfIO {
     v2.GraftDataSinks.overwrite(ds, new v2.BcfTable(v2.GraftDataSinks.at(file), Some(dicts)),
       Map("granularity" -> granularity.toString))
 
-  /** htslib can emit BCF2 UNCOMPRESSED (raw "BCF" magic, no BGZF —
-    * the piping form; `bcftools view -Ou`).  Sniff the first bytes to
-    * pick the framing. */
-  private[sources] def isPlainBcf(file: String): Boolean = {
+  /** [[Bcf.recordReader]] over the tables `dicts` decodes with. */
+  private def recordReader(dicts: Dicts, fields: Int): InputStream => VcfVariant =
+    Bcf.recordReader(dicts.contigs, dicts.filterTable, dicts.infoTable, dicts.fmtTable, fields)
+
+  /** `file` opened past its header: the dictionaries and the record
+    * stream — a [[Bgzf.BgzfInputStream]] (callers read its virtual
+    * offset), or the plain stream when the file is the uncompressed
+    * BCF2 htslib can emit (raw "BCF" magic, no BGZF: the piping form,
+    * `bcftools view -Ou`). */
+  private[sources] def openBody(file: String): (Dicts, InputStream) = {
     val (fs, path) = Fs.get(file)
-    val in = fs.open(path)
+    val raw = new java.io.BufferedInputStream(fs.open(path))
     try {
-      val head = new Array[Byte](3)
-      var got = 0
-      while (got < 3) {
-        val r = in.read(head, got, 3 - got)
-        if (r < 0) return false
-        got += r
-      }
-      head(0) == 'B' && head(1) == 'C' && head(2) == 'F'
-    } finally in.close()
-  }
-
-  /** Skip exactly `n` stream bytes through a bounded scratch buffer
-    * (InputStream.skip may be a read loop anyway on decoded streams,
-    * and can legally return 0). */
-  private def skipFully(in: java.io.InputStream, n: Int,
-                        scratch: Array[Byte]): Unit = {
-    var left = n
-    while (left > 0) {
-      val r = in.read(scratch, 0, math.min(left, scratch.length))
-      require(r > 0, s"EOF with $left genotype bytes left to skip")
-      left -= r
-    }
-  }
-
-  /** Decode records from `in` until EOF or `atEnd` (a BGZF range's end
-    * VO; never, for a plain body).  The stream self-closes on
-    * exhaustion. */
-  private def recordIterator(in: java.io.InputStream, dicts: Dicts, fields: Int,
-                             atEnd: () => Boolean): Iterator[VcfVariant] = {
-    val contigs = dicts.contigs; val filters = dicts.filterTable
-    val infoKeys = dicts.infoTable; val fmtKeys = dicts.fmtTable
-    val wantG = (fields & Vcf.FGenotypes) != 0
-    new Iterator[VcfVariant] {
-      private var nextV: VcfVariant = _
-      private var done = false
-      private lazy val scratch = new Array[Byte](8192)
-      private def fetch(): Unit = {
-        while (nextV == null && !done) {
-          if (atEnd()) { done = true; in.close(); return }
-          val a = in.read()
-          if (a < 0) { done = true; in.close(); return }
-          val lShared = a | (in.read() << 8) | (in.read() << 16) | (in.read() << 24)
-          var lIndiv = 0
-          (0 until 4).foreach(i => lIndiv |= in.read() << (8 * i))
-          val shared = new Array[Byte](lShared)
-          var o = 0
-          while (o < lShared) { val r = in.read(shared, o, lShared - o); require(r > 0); o += r }
-          val indiv =
-            if (wantG) {
-              val b = new Array[Byte](lIndiv)
-              var o2 = 0
-              while (o2 < lIndiv) { val r = in.read(b, o2, lIndiv - o2); require(r > 0); o2 += r }
-              b
-            } else { skipFully(in, lIndiv, scratch); Array.emptyByteArray }
-          nextV = Bcf.decode(shared, contigs, filters, infoKeys, indiv, fmtKeys, fields)
-        }
-      }
-      override def hasNext: Boolean = { if (nextV == null) fetch(); nextV != null }
-      override def next(): VcfVariant = {
-        if (!hasNext) throw new NoSuchElementException
-        val v = nextV; nextV = null; v
-      }
-    }
-  }
-
-  /** Open a plain BCF past its header, returning the record stream. */
-  private def openPlainBody(file: String): (Dicts, java.io.InputStream) = {
-    val (fs, path) = Fs.get(file)
-    val in = new java.io.BufferedInputStream(fs.open(path))
-    val magic = new Array[Byte](5)
-    var got = 0
-    while (got < 5) { val r = in.read(magic, got, 5 - got); require(r > 0); got += r }
-    require(java.util.Arrays.equals(magic, Bcf.Magic), "not BCF2")
-    var lh = 0
-    (0 until 4).foreach(i => lh |= in.read() << (8 * i))
-    val ht = new Array[Byte](lh)
-    var o = 0
-    while (o < lh) { val r = in.read(ht, o, lh - o); require(r > 0); o += r }
-    (Dicts.fromHeader(new String(ht, 0, lh - 1, UTF_8)), in)
+      raw.mark(3)
+      val plain = java.util.Arrays.equals(raw.readNBytes(3), Bcf.Magic.take(3))
+      raw.reset()
+      val in = if (plain) raw else new Bgzf.BgzfInputStream(raw)
+      (Dicts.fromHeader(Bcf.readHeaderText(in)), in)
+    } catch { case e: Throwable => raw.close(); throw e }
   }
 
   /** Every record of a plain BCF (the single-stream piping form), plus
     * a closer for consumers that may abandon the iterator early. */
   private[sources] def openPlain(file: String, fields: Int = Vcf.AllFields):
       (Iterator[VcfVariant], () => Unit) = {
-    val (dicts, in) = openPlainBody(file)
-    (recordIterator(in, dicts, fields, () => false),
-      () => try in.close() catch { case _: java.io.IOException => () })
+    val (dicts, in) = openBody(file)
+    BgzfRecords.records[VcfVariant](in, () => false)(recordReader(dicts, fields))
   }
 
-  def readDicts(file: String): Dicts =
-    if (isPlainBcf(file)) {
-      val (dicts, in) = openPlainBody(file)
-      in.close()
-      dicts
-    } else headerInfo(file)._1
-
-  /** Dicts + the virtual offset where records begin (header end);
-    * read once per plan and handed to the planners below. */
-  private[sources] def headerInfo(file: String): (Dicts, Long) = {
-    val (fs, path) = Fs.get(file)
-    val in = new Bgzf.BgzfInputStream(new java.io.BufferedInputStream(fs.open(path)))
-    try {
-      val magic = new Array[Byte](5)
-      var got = 0
-      while (got < 5) { val r = in.read(magic, got, 5 - got); require(r > 0); got += r }
-      require(java.util.Arrays.equals(magic, Bcf.Magic), "not BCF2")
-      var lh = 0
-      (0 until 4).foreach(i => lh |= in.read() << (8 * i))
-      val ht = new Array[Byte](lh)
-      var o = 0
-      while (o < lh) { val r = in.read(ht, o, lh - o); require(r > 0); o += r }
-      (Dicts.fromHeader(new String(ht, 0, lh - 1, UTF_8)), in.virtualPos)
-    } finally in.close()
+  def readDicts(file: String): Dicts = {
+    val (dicts, in) = openBody(file)
+    in.close()
+    dicts
   }
 
-  /** Records in virtual-offset range [startVo, endVo) — both bounds
-    * must be record starts (index-derived) — plus a closer for
-    * consumers that may abandon the iterator early. */
+  /** Records in virtual-offset range [startVo, endVo)
+    * ([[BgzfRecords.openRange]]), plus a closer for consumers that may
+    * abandon the iterator early. */
   private[sources] def openRange(file: String, startVo: Long, endVo: Long,
                         dicts: Dicts, fields: Int = Vcf.AllFields):
-      (Iterator[VcfVariant], () => Unit) = {
-    val in = Bgzf.openAt(file, startVo)
-    (recordIterator(in, dicts, fields, () => in.virtualPos >= endVo),
-      () => try in.close() catch { case _: java.io.IOException => () })
-  }
+      (Iterator[VcfVariant], () => Unit) =
+    BgzfRecords.openRange[VcfVariant](file, startVo, endVo)(recordReader(dicts, fields))
 
   def read(spark: org.apache.spark.sql.SparkSession, file: String,
            splitSize: Long = 64L * 1024 * 1024,
@@ -911,66 +754,26 @@ object BcfIO {
 
   /** The BCF planner of every read face.  A plain (uncompressed) BCF is
     * one single-stream partition: no index or split point can exist
-    * over it.  A BGZF BCF with intervals resolves them to disjoint
-    * record-aligned VO ranges through the best index
-    * ([[planIntervalRanges]]); without intervals or an index, the
-    * full-scan ranges ([[planFullRanges]]).  With `exact` the intervals
+    * over it.  A BGZF BCF gets one partition per range of
+    * [[BgzfRecords.plan]], its binning index being the `.csi` (ours via
+    * [[Csi.buildBcf]], or htslib-written).  With `exact` the intervals
     * also filter records by overlap. */
   private[sources] def plan(file: String, intervals: Seq[(String, Int, Int)],
                             exact: Boolean, splitSize: Long)
       : Seq[v2.GraftPartition[VcfVariant]] = {
     val iv = if (exact) intervals.toArray else Array.empty[(String, Int, Int)]
-    if (isPlainBcf(file)) Seq(v2.BcfPlainPartition(file, iv))
-    else {
-      val header = headerInfo(file)
-      val ranges =
-        (if (intervals.isEmpty) None else planIntervalRanges(file, header, intervals, splitSize))
-          .getOrElse(planFullRanges(file, header, splitSize))
-      ranges.map { case (s, e) => v2.BcfPartition(file, s, e, iv, header._1) }
+    val (dicts, in) = openBody(file)
+    val headerEndVo = in match { case b: Bgzf.BgzfInputStream => Some(b.virtualPos); case _ => None }
+    in.close()
+    headerEndVo match {
+      case None => Seq(v2.BcfPlainPartition(file, iv))
+      case Some(vo) =>
+        BgzfRecords.plan(file, vo, dicts.contigs.toSeq, intervals, splitSize,
+          includeUnmapped = false, sidxPrunable = true)(
+          (fs, p) => Csi.read(fs, Csi.indexPath(p)),
+          Bcf.guessRecordStart(_, dicts.contigs.length))
+          .map { case (s, e) => v2.BcfPartition(file, s, e, iv, dicts) }
     }
-  }
-
-  /** Bounded-traversal ranges for [[plan]]: disjoint record-aligned VO
-    * ranges from the best index, or None for the full-scan fallback.
-    * `header` is [[headerInfo]].  A `.csi` (ours via [[Csi.buildBcf]],
-    * or htslib-written) gives chunk-precise ranges
-    * ([[BinIndex.Index.ranges]]); else the v2 sidecar splitting index
-    * prunes its granules ([[SplittingIndex.Index.ranges]]) — only when
-    * the file was written coordinate-sorted (maxSpan >= 0, same
-    * contract as BAM). */
-  private[sources] def planIntervalRanges(file: String, header: (Dicts, Long),
-                    intervals: Seq[(String, Int, Int)],
-                    splitSize: Long): Option[Seq[(Long, Long)]] = {
-    val (fs, path) = Fs.get(file)
-    val (dicts, headerEndVo) = header
-    val refIdOf = dicts.contigs.zipWithIndex.toMap
-    val queries = Vcf.mergeIntervals(intervals).toSeq.flatMap { case (c, ivs) =>
-      refIdOf.get(c).toSeq.flatMap(ri => ivs.map { case (s, e) => (ri, s, e) })
-    }
-    Csi.read(fs, Csi.indexPath(path)).map(_.ranges(queries, splitSize)).orElse {
-      SplittingIndex.read(fs, SplittingIndex.indexPath(path))
-        .filter(_.maxSpan >= 0) // unsorted or v1 sidecar: no pruning
-        .map(_.ranges(headerEndVo, Some(queries), splitSize, keepUnmapped = false))
-    }
-  }
-
-  /** Full-scan range planning (header end + sidecar granules or, for
-    * foreign BCFs without a sidecar, BGZF block discovery + record
-    * guessing, the BAM shape — ref: BCFSplitGuesser.java).  `header`
-    * is [[headerInfo]]. */
-  private[sources] def planFullRanges(file: String, header: (Dicts, Long),
-                                      splitSize: Long): Seq[(Long, Long)] = {
-    val (fs, path) = Fs.get(file)
-    val (dicts, headerEndVo) = header
-    val bounds: Seq[Long] = SplittingIndex.read(fs, SplittingIndex.indexPath(path)) match {
-      case Some(sidx) =>
-        (headerEndVo +: sidx.entries.map(_.vo).toSeq :+ sidx.endVo).distinct.sorted
-      case None =>
-        val fileLen = fs.getFileStatus(path).getLen
-        BamIO.splitsByGuessing(fs, path, fileLen, headerEndVo, splitSize,
-          data => Bcf.guessRecordStart(data, dicts.contigs.length)).toSeq
-    }
-    bounds.sliding(2).collect { case Seq(a, b) if a < b => (a, b) }.toSeq
   }
 }
 

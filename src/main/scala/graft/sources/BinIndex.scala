@@ -251,17 +251,6 @@ object BinIndex {
     }
   }
 
-  private def readFully(in: InputStream, n: Int, what: String): Array[Byte] = {
-    val out = new Array[Byte](n)
-    var o = 0
-    while (o < n) {
-      val r = in.read(out, o, n - o)
-      if (r < 0) throw new EOFException(s"truncated $what")
-      o += r
-    }
-    out
-  }
-
   /** Index a coordinate-sorted BAM in one sequential driver pass (the
     * reference's SplittingBAMIndexer.java shape): each placed record
     * over POS..its CIGAR end.  `depth` <= 0 derives the depth from the
@@ -278,15 +267,15 @@ object BinIndex {
         else depthFor(math.max(1L, header.refs.map(_.length.toLong).foldLeft(0L)(math.max)), minShift),
         i => if (i < 0) "*" else header.refs(i).name)
       var recStart = in.virtualPos
-      var sz = BamIO.readIntLe(in)
+      var sz = BgzfRecords.readIntLe(in)
       while (sz >= 0) {
-        val rec = BamCodec.decode(readFully(in, sz, "BAM record"), header.refs, BamCodec.FCigar)
+        val rec = BamCodec.decode(BgzfRecords.readFully(in, sz, "BAM record"), header.refs, BamCodec.FCigar)
         val recEnd = in.virtualPos
         val refId = refIdOf.getOrElse(rec.rname, -1)
         if (refId >= 0 && rec.pos > 0)
           acc.add(refId, rec.pos - 1, math.max(rec.end, rec.pos), recStart, recEnd)
         recStart = recEnd
-        sz = BamIO.readIntLe(in)
+        sz = BgzfRecords.readIntLe(in)
       }
       acc.result(header.refs.length, meta = false)
     } finally in.close()
@@ -297,17 +286,20 @@ object BinIndex {
     * BCFSplitGuesser.java's framing: l_shared/l_indiv, then CHROM, POS
     * and rlen lead the shared block). */
   def buildBcf(file: String, minShift: Int, depth: Int): Index = {
-    val (dicts, headerEndVo) = BcfIO.headerInfo(file)
-    val in = Bgzf.openAt(file, headerEndVo)
+    val (dicts, body) = BcfIO.openBody(file)
     try {
+      val in = body match {
+        case b: Bgzf.BgzfInputStream => b
+        case _ => throw new IOException(s"$file: a plain (uncompressed) BCF cannot be indexed")
+      }
       val acc = new Accumulator(minShift, depth,
         i => if (i >= 0 && i < dicts.contigs.length) dicts.contigs(i) else i.toString)
       var recStart = in.virtualPos
-      var lShared = BamIO.readIntLe(in)
+      var lShared = BgzfRecords.readIntLe(in)
       while (lShared >= 0) {
-        val lIndiv = BamIO.readIntLe(in)
+        val lIndiv = BgzfRecords.readIntLe(in)
         if (lIndiv < 0 || lShared < 12) throw new EOFException("truncated BCF record")
-        val shared = java.nio.ByteBuffer.wrap(readFully(in, lShared, "BCF record"))
+        val shared = java.nio.ByteBuffer.wrap(BgzfRecords.readFully(in, lShared, "BCF record"))
           .order(java.nio.ByteOrder.LITTLE_ENDIAN)
         in.skipNBytes(lIndiv)
         val recEnd = in.virtualPos
@@ -317,10 +309,10 @@ object BinIndex {
         if (refId >= 0 && pos0 >= 0)
           acc.add(refId, pos0, pos0 + math.max(1, rlen), recStart, recEnd)
         recStart = recEnd
-        lShared = BamIO.readIntLe(in)
+        lShared = BgzfRecords.readIntLe(in)
       }
       acc.result(math.max(1, dicts.contigs.length), meta = false)
-    } finally in.close()
+    } finally body.close()
   }
 
   /** Index a coordinate-sorted BGZF VCF (tabix `-p vcf`): each record
@@ -384,11 +376,12 @@ object BinIndex {
     }
   }
 
-  /** Little-endian reader of the three layouts.  Nothing is sized from
-    * a count it reads — collections grow as entries arrive — so a
-    * corrupt count costs at most the bytes the file holds; truncation
-    * or a bad value throws naming the file and the field. */
-  private[sources] final class In(in: InputStream, path: Path) {
+  /** Reader of the three layouts, little-endian (and of the big-endian
+    * `.sidx`, [[SplittingIndex.read]]).  Nothing is sized from a count
+    * it reads — collections grow as entries arrive — so a corrupt count
+    * costs at most the bytes the file holds; truncation or a bad value
+    * throws naming the file and the field. */
+  private[sources] final class In(in: InputStream, path: Path, bigEndian: Boolean = false) {
     def fail(what: String): Nothing = throw new Corrupt(path, what)
     def u8(field: String): Int = {
       val v = in.read()
@@ -396,9 +389,11 @@ object BinIndex {
       v
     }
     def int32(field: String): Int =
-      u8(field) | (u8(field) << 8) | (u8(field) << 16) | (u8(field) << 24)
+      if (bigEndian) (u8(field) << 24) | (u8(field) << 16) | (u8(field) << 8) | u8(field)
+      else u8(field) | (u8(field) << 8) | (u8(field) << 16) | (u8(field) << 24)
     def int64(field: String): Long =
-      (int32(field).toLong & 0xffffffffL) | (int32(field).toLong << 32)
+      if (bigEndian) (int32(field).toLong << 32) | (int32(field).toLong & 0xffffffffL)
+      else (int32(field).toLong & 0xffffffffL) | (int32(field).toLong << 32)
     def count(field: String): Int = {
       val n = int32(field)
       if (n < 0) fail(s"$field = $n")
@@ -463,12 +458,14 @@ object BinIndex {
   /** Read one layout; None when `path` does not exist.  A wrong magic,
     * truncation, a bad count or a corrupt BGZF block throws an
     * IOException naming `path`. */
-  private[sources] def readFile[A](fs: FileSystem, path: Path, magic: String, bgzf: Boolean)
+  private[sources] def readFile[A](fs: FileSystem, path: Path, magic: String, bgzf: Boolean,
+                                   bigEndian: Boolean = false)
                                   (body: In => A): Option[A] = {
     if (!fs.exists(path)) return None
     val raw = new BufferedInputStream(fs.open(path))
     try {
-      val in = new In(if (bgzf) new BufferedInputStream(new Bgzf.BgzfInputStream(raw)) else raw, path)
+      val in = new In(if (bgzf) new BufferedInputStream(new Bgzf.BgzfInputStream(raw)) else raw,
+        path, bigEndian)
       if (!magicBytes(magic).forall(m => in.u8("magic") == (m & 0xff))) in.fail(s"not a $magic file")
       Some(body(in))
     } catch {

@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.model.{SamHeader, SamRecord, SequencedFragment, VcfVariant}
-import graft.sources.{BamIO, BcfIO, Bgzf, CramIO, Fastq, Fs, Qseq, Sam, Vcf}
+import graft.sources.{BamIO, BcfIO, Bgzf, BgzfRecords, CramIO, Fastq, Fs, Qseq, Sam, Vcf}
 
 /** DataSource V2 write paths — the one write path of every graft
   * format.  `df.write.format("bam"/"bcf"/"cram"/"sam"/"fastq"/"qseq"/
@@ -134,7 +134,7 @@ object GraftDataSinks {
       "BCF writes need option(\"header\", <path to an existing .bcf/.vcf/" +
         ".vcf.bgz>) — records do not carry the contig/FILTER/INFO/FORMAT " +
         "dictionaries their wire format indexes"))
-    if (path.endsWith(".bcf")) BcfIO.headerInfo(path)._1
+    if (path.endsWith(".bcf")) BcfIO.readDicts(path)
     else BcfIO.Dicts.fromHeader(Vcf.readHeader(path).lines.mkString("\n"))
   }
 
@@ -259,67 +259,34 @@ abstract class ShardingDataWriter[M <: WriterCommitMessage](
   override def close(): Unit = ()
 }
 
-// ------------------------------------------------------------------ BAM
+// ------------------------------------------------------------ BAM, BCF
 
-case class BamShardDone(info: BamIO.ShardInfo) extends WriterCommitMessage
+/** The BGZF record sinks (BAM, BCF2): per-task header-less BGZF shards
+  * through [[BgzfRecords.ShardWriter]] with the format's codec, then
+  * one driver merge + shifted splitting index ([[BgzfRecords.merge]];
+  * ref: SAMFileMerger.java:32, and KeyIgnoringBCFRecordWriter.java:1
+  * copies a donor header the same way; the `.sidx` is graft's own). */
+case class BgzfShardDone(shard: BgzfRecords.Shard) extends WriterCommitMessage
 
-class BamBatchWrite(target: String, tmp: String, header: SamHeader,
-                    granularity: Int, schema: StructType)
+class BgzfBatchWrite[R](target: String, tmp: String, codec: BgzfRecords.Codec[R],
+                        granularity: Int, decode: InternalRow => R)
     extends ShardedBatchWrite(tmp) {
   override def createBatchWriterFactory(i: PhysicalWriteInfo): DataWriterFactory =
-    new BamWriterFactory(tmp, header.refs.map(_.name).zipWithIndex.toMap, granularity,
-      GraftDataSinks.decoder(ExpressionEncoder[SamRecord]().schema, schema,
-        GraftDataSinks.RowCodecs.sam))
+    new BgzfWriterFactory(tmp, codec, granularity, decode)
   override protected def merge(messages: Array[WriterCommitMessage]): Unit =
-    BamIO.mergeShardInfo(target, header, tmp,
-      messages.map(_.asInstanceOf[BamShardDone].info).sortBy(_.pid).toSeq, granularity)
+    BgzfRecords.merge(target, codec, tmp,
+      messages.map(_.asInstanceOf[BgzfShardDone].shard).toSeq, granularity)
 }
 
-class BamWriterFactory(tmp: String, refIdx: Map[String, Int], granularity: Int,
-                       decode: InternalRow => SamRecord)
+class BgzfWriterFactory[R](tmp: String, codec: BgzfRecords.Codec[R], granularity: Int,
+                           decode: InternalRow => R)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new ShardingDataWriter[BamShardDone](tmp, partitionId, taskId, "bam") {
+    new ShardingDataWriter[BgzfShardDone](tmp, partitionId, taskId, codec.ext) {
       // streams record-by-record — a multi-GB partition never buffers
-      private val shard = new BamIO.ShardWriter(attemptPath, refIdx, granularity, partitionId)
+      private val shard = new BgzfRecords.ShardWriter(attemptPath, codec, granularity, partitionId)
       override def write(row: InternalRow): Unit = shard.write(decode(row))
-      override def finishAttempt(): BamShardDone = BamShardDone(shard.finish())
-      override def abortAttempt(): Unit = shard.abort()
-    }
-}
-
-// ------------------------------------------------------------------ BCF
-
-/** The BAM sink pattern applied to BCF2: per-task header-less BGZF
-  * shards through [[BcfIO.ShardWriter]], driver merge + shifted
-  * splitting index via [[BcfIO.mergeShardInfo]] (ref:
-  * KeyIgnoringBCFRecordWriter.java:1 copies a donor header the same
-  * way; the merge machinery here is graft's own v2-sidecar contract).
-  */
-case class BcfShardDone(info: BcfIO.ShardInfo) extends WriterCommitMessage
-
-class BcfBatchWrite(target: String, tmp: String, dicts: BcfIO.Dicts,
-                    granularity: Int, schema: StructType)
-    extends ShardedBatchWrite(tmp) {
-  override def createBatchWriterFactory(i: PhysicalWriteInfo): DataWriterFactory =
-    new BcfWriterFactory(tmp, dicts, granularity,
-      GraftDataSinks.decoder(ExpressionEncoder[VcfVariant]().schema, schema,
-        GraftDataSinks.RowCodecs.vcf))
-  override protected def merge(messages: Array[WriterCommitMessage]): Unit =
-    BcfIO.mergeShardInfo(target, dicts, tmp,
-      messages.map(_.asInstanceOf[BcfShardDone].info).sortBy(_.pid).toSeq, granularity)
-}
-
-class BcfWriterFactory(tmp: String, dicts: BcfIO.Dicts, granularity: Int,
-                       decode: InternalRow => VcfVariant)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new ShardingDataWriter[BcfShardDone](tmp, partitionId, taskId, "bcf") {
-      // streams record-by-record — a multi-GB partition never buffers
-      private val shard =
-        new BcfIO.ShardWriter(attemptPath.toString, dicts, granularity, partitionId)
-      override def write(row: InternalRow): Unit = shard.write(decode(row))
-      override def finishAttempt(): BcfShardDone = BcfShardDone(shard.finish())
+      override def finishAttempt(): BgzfShardDone = BgzfShardDone(shard.finish())
       override def abortAttempt(): Unit = shard.abort()
     }
 }

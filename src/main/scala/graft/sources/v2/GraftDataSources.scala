@@ -426,8 +426,10 @@ class BamTable(options: CaseInsensitiveStringMap, header: Option[SamHeader] = No
     val target = GraftDataSources.pathsOf(options).head
     val h = header.getOrElse(GraftDataSinks.samHeaderFrom(Option(info.options.get("header"))))
     val granularity = GraftDataSinks.granularityOf(info.options)
+    val decode = GraftDataSinks.decoder(ExpressionEncoder[SamRecord]().schema, info.schema(),
+      GraftDataSinks.RowCodecs.sam)
     new GraftWriteBuilder(target, info, "bam",
-      new BamBatchWrite(target, _, h, granularity, info.schema()))
+      new BgzfBatchWrite(target, _, BamIO.RecordCodec(h), granularity, decode))
   }
 }
 
@@ -770,9 +772,10 @@ case class VcfRangePartition(path: String, start: Long, end: Long,
   * same bounded-traversal pushdown as the vcf/bam sources — `chrom`
   * equality/IN + `pos` bounds (or the authoritative `intervals`
   * option) prune to disjoint record-aligned VO ranges through a
-  * `.csi` or the v2 sidecar splitting index (BcfIO.planIntervalRanges).
-  * Writes mirror the BAM sink: per-task header-less shards + driver
-  * merge, dictionaries donated by option("header", <.bcf/.vcf>). */
+  * `.csi` or the v2 sidecar splitting index (BgzfRecords.plan, the BAM
+  * planner too).  Writes run the BAM sink's BGZF record path: per-task
+  * header-less shards + driver merge, dictionaries donated by
+  * option("header", <.bcf/.vcf>). */
 class BcfDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "bcf"
   override def supportsExternalMetadata(): Boolean = false
@@ -807,8 +810,10 @@ class BcfTable(options: CaseInsensitiveStringMap, dicts: Option[BcfIO.Dicts] = N
     val target = GraftDataSources.pathsOf(options).head
     val d = dicts.getOrElse(GraftDataSinks.bcfDictsFrom(Option(info.options.get("header"))))
     val granularity = GraftDataSinks.granularityOf(info.options)
+    val decode = GraftDataSinks.decoder(ExpressionEncoder[VcfVariant]().schema, info.schema(),
+      GraftDataSinks.RowCodecs.vcf)
     new GraftWriteBuilder(target, info, "bcf",
-      new BcfBatchWrite(target, _, d, granularity, info.schema()))
+      new BgzfBatchWrite(target, _, BcfIO.RecordCodec(d), granularity, decode))
   }
 }
 

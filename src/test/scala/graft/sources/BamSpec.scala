@@ -91,31 +91,23 @@ class BamSpec extends SparkSpec {
     assert(v2.toSeq === full.map(r => (r.qname, r.pos)).sortBy(_._1).toSeq)
   }
 
-  test("packed single-long sort key writes the same coordinate order as the two-column sort") {
-    // r13: writeSorted orders by refIdx*2^32 + (pos + 2^31) — an
-    // injective image of (refIdx ASC, pos ASC), so the packed and
-    // unpacked paths must agree on the full coordinate SEQUENCE (ties
-    // excepted) and on the record multiset.  Input is unsorted and
-    // tie-heavy (every record duplicated at the same coordinate).
+  test("packed sort key writes coordinate order, no record lost") {
+    // writeSorted orders by refIdx*2^32 + (pos + 2^31) — an injective
+    // image of (refIdx ASC, pos ASC): the file must hold the records in
+    // coordinate order (ties in any order) and exactly the input
+    // multiset.  Input is unsorted and tie-heavy (every record
+    // duplicated at the same coordinate).
     import spark.implicits._
     val dir = tmpDir("bam_packed_sort")
     val tied = records ++ records.map(r => r.copy(qname = r.qname + "b"))
     val shuffled = new scala.util.Random(5).shuffle(tied)
-    def writeAndRead(packed: Boolean): Seq[SamRecord] = {
-      val file = s"$dir/${if (packed) "on" else "off"}.bam"
-      spark.conf.set("spark.graft.ranked.packedSortPrefix", packed.toString)
-      try BamIO.writeSorted(spark.createDataset(shuffled).repartition(8), header, file)
-      finally spark.conf.unset("spark.graft.ranked.packedSortPrefix")
-      // single-split read preserves file order
-      BamIO.read(spark, file, splitSize = 1L << 30).collect().toSeq
-    }
-    val on = writeAndRead(packed = true)
-    val off = writeAndRead(packed = false)
+    val file = s"$dir/sorted.bam"
+    BamIO.writeSorted(spark.createDataset(shuffled).repartition(8), header, file)
+    // single-split read preserves file order
+    val back = BamIO.read(spark, file, splitSize = 1L << 30).collect().toSeq
     def coord(r: SamRecord) = (if (r.rname == "chr1") 0 else 1, r.pos)
-    assert(on.map(coord) === off.map(coord))
-    assert(on.map(coord) === on.map(coord).sorted, "packed file not coordinate-sorted")
-    assert(on.map(fields).sortBy(_.toString) === off.map(fields).sortBy(_.toString))
-    assert(on.map(fields).sortBy(_.toString) ===
+    assert(back.map(coord) === tied.map(coord).sorted, "file not coordinate-sorted")
+    assert(back.map(fields).sortBy(_.toString) ===
       tied.map(fields).sortBy(_.toString), "record loss/corruption")
   }
 
@@ -288,6 +280,71 @@ class BamSpec extends SparkSpec {
     val (fs, _) = Fs.get(file)
     val idx = SplittingIndex.read(fs, new Path(file + ".sidx")).get
     assert(idx.maxSpan === 1000040) // 20M + 1M N + 20M reference span
+  }
+
+  test("unsorted rows under a coordinate header get an unprunable .sidx (typed and format(\"bam\") writes)") {
+    import spark.implicits._
+    // the header says SO:coordinate, the rows are not: the sidecar must
+    // not let the planner prune on the header's word
+    val dir = tmpDir("bam_unsorted_coord")
+    val donor = s"$dir/donor.bam"
+    BamIO.writeSorted(spark.createDataset(records), header, donor)
+    assert(BamIO.readHeader(donor).sortOrder === "coordinate")
+    val shuffled = new scala.util.Random(11).shuffle(records)
+    val typed = s"$dir/typed.bam"
+    BamIO.write(spark.createDataset(shuffled).repartition(3), header, typed, granularity = 20)
+    val sql = s"$dir/sql.bam"
+    spark.createDataset(shuffled).repartition(3).write.format("bam")
+      .option("header", donor).option("granularity", "20").mode("overwrite").save(sql)
+    val ivs = Seq(("chr1", 2000, 3000), ("chr2", 100, 700), ("chr1", 8500, 9100))
+    val brute = records.filter(r => ivs.exists { case (c, s, e) =>
+      r.rname == c && r.pos <= e && r.end >= s }).map(_.qname).sorted
+    assert(brute.nonEmpty)
+    def readIvs(f: String): Seq[String] =
+      BamIO.read(spark, f, intervals = ivs, splitSize = 2048).collect().map(_.qname).sorted.toSeq
+    Seq(typed, sql).foreach { f =>
+      val (fs, p) = Fs.get(f)
+      assert(BamIO.readHeader(f).sortOrder === "coordinate", f)
+      assert(SplittingIndex.read(fs, SplittingIndex.indexPath(p)).get.maxSpan === -1, f)
+      assert(readIvs(f) === brute, f)
+      // no binning index can exist over unsorted records
+      intercept[IllegalArgumentException](Bai.buildAndWrite(f))
+    }
+    // the same rows written sorted keep their span; interval reads
+    // match through the .sidx alone and with a .bai beside it
+    val sorted = s"$dir/sorted.bam"
+    BamIO.writeSorted(spark.createDataset(shuffled).repartition(3), header, sorted, granularity = 20)
+    val (fs, p) = Fs.get(sorted)
+    assert(SplittingIndex.read(fs, SplittingIndex.indexPath(p)).get.maxSpan > 0)
+    assert(readIvs(sorted) === brute)
+    Bai.buildAndWrite(sorted)
+    assert(readIvs(sorted) === brute)
+  }
+
+  test("a .sidx span over unsorted rows under SO:unsorted never prunes (older sidecars)") {
+    import spark.implicits._
+    // .sidx files written before the writer checked record order carry
+    // a span whatever the rows; under a header that does not claim
+    // coordinate order the planner must not prune on it
+    val dir = tmpDir("bam_unsorted_span")
+    val unsortedHeader = SamHeader(header.text.replace("SO:coordinate", "SO:unsorted"), header.refs)
+    val f = s"$dir/u.bam"
+    BamIO.write(spark.createDataset(new scala.util.Random(13).shuffle(records)).repartition(3),
+      unsortedHeader, f, granularity = 20)
+    assert(BamIO.readHeader(f).sortOrder === "unsorted")
+    val (fs, p) = Fs.get(f)
+    val idx = SplittingIndex.read(fs, SplittingIndex.indexPath(p)).get
+    assert(idx.maxSpan === -1)
+    val span = records.map(r => r.end - r.pos + 1).max
+    SplittingIndex.write(fs, SplittingIndex.indexPath(p), idx.granularity, idx.entries.toSeq,
+      idx.endVo, span)
+    assert(SplittingIndex.read(fs, SplittingIndex.indexPath(p)).get.maxSpan === span)
+    val ivs = Seq(("chr1", 2000, 3000), ("chr2", 100, 700), ("chr1", 8500, 9100))
+    val brute = records.filter(r => ivs.exists { case (c, s, e) =>
+      r.rname == c && r.pos <= e && r.end >= s }).map(_.qname).sorted
+    assert(brute.nonEmpty)
+    assert(BamIO.read(spark, f, intervals = ivs, splitSize = 2048).collect().map(_.qname)
+      .sorted.toSeq === brute)
   }
 
   test("bounded traversal returns unplaced-unmapped only when asked (sidecar + bai)") {

@@ -283,8 +283,9 @@ class PropertySpec extends AnyFunSuite {
       Bcf.write(f, BcfIO.Dicts(contigs, filters, infoKeys).headerText,
         vs, contigs, filters, infoKeys)
       Csi.buildAndWriteBcf(f)
-      val header = BcfIO.headerInfo(f)
-      val dicts = header._1
+      val (fs, p) = Fs.get(f)
+      val csi = Csi.read(fs, Csi.indexPath(p)).get
+      val refIdOf = BcfIO.readDicts(f).contigs.zipWithIndex.toMap
       queries.foreach { case (ivs, splitSize) =>
         val merged = Vcf.mergeIntervals(ivs)
         val naive = vs.filter { v =>
@@ -292,22 +293,20 @@ class PropertySpec extends AnyFunSuite {
             v.pos <= e && v.pos + math.max(1, v.ref.length) - 1 >= s
           })
         }.map(_.id).sorted
-        BcfIO.planIntervalRanges(f, header, ivs, splitSize) match {
-          case Some(ranges) =>
-            val got = ranges.flatMap { case (s0, e0) =>
-              BcfIO.openRange(f, s0, e0, dicts)._1
-            }.filter { v =>
-              merged.get(v.chrom).exists(_.exists { case (s, e) =>
-                v.pos <= e && v.pos + math.max(1, v.ref.length) - 1 >= s
-              })
-            }.map(_.id)
-            assert(got.length === got.distinct.length,
-              s"duplicates (splitSize=$splitSize ivs=$ivs)")
-            assert(got.sorted === naive, s"mismatch (splitSize=$splitSize ivs=$ivs)")
-          case None => fail(".csi written but planIntervalRanges returned None")
-        }
+        val parts = BcfIO.plan(f, ivs, exact = false, splitSize)
+        val csiRanges = csi.ranges(ivs.flatMap { case (c, s, e) =>
+          refIdOf.get(c).map(ri => (ri, s, e)) }, splitSize)
+        assert(parts.collect { case b: v2.BcfPartition => (b.startVo, b.endVo) } === csiRanges,
+          ".csi written but the plan does not follow it")
+        val got = parts.flatMap(_.open(Vcf.AllFields)._1).filter { v =>
+          merged.get(v.chrom).exists(_.exists { case (s, e) =>
+            v.pos <= e && v.pos + math.max(1, v.ref.length) - 1 >= s
+          })
+        }.map(_.id)
+        assert(got.length === got.distinct.length,
+          s"duplicates (splitSize=$splitSize ivs=$ivs)")
+        assert(got.sorted === naive, s"mismatch (splitSize=$splitSize ivs=$ivs)")
       }
-      val (fs, _) = Fs.get(f)
       fs.delete(new org.apache.hadoop.fs.Path(dir), true)
     }
   }
@@ -474,6 +473,19 @@ class PropertySpec extends AnyFunSuite {
     fs.delete(new org.apache.hadoop.fs.Path(dir), true)
   }
 
+  /** `file` as the BGZF record sinks write it: one shard per group of
+    * `shards`, merged behind the header with its `.sidx`. */
+  private def writeShards[R](file: String, codec: BgzfRecords.Codec[R], shards: Seq[Seq[R]],
+                             granularity: Int): Unit = {
+    val tmp = s"$file.shards"
+    BgzfRecords.merge(file, codec, tmp, shards.zipWithIndex.map { case (rs, pid) =>
+      val w = new BgzfRecords.ShardWriter(Fs.partPath(tmp, pid, codec.ext), codec,
+        granularity, pid)
+      rs.foreach(w.write)
+      w.finish()
+    }, granularity)
+  }
+
   test("a truncated or byte-flipped .bai/.csi/.tbi reads back equal or " +
     "fails naming its path, never exhausting memory or hanging") {
     import scala.concurrent.{Await, Future}
@@ -492,6 +504,15 @@ class PropertySpec extends AnyFunSuite {
         s"v$i", "A" * (1 + i % 40), Array("C"), None, "PASS", Array("DP"), Array("7"),
         Array.empty, Array.empty)), contigs, Array("PASS"), Array("DP"))
     Csi.buildAndWriteBcf(bcf)
+    // graft-written .sidx files: BAM in two shards, BCF in three
+    val sharded = genSortedBam.apply(Gen.Parameters.default, Seed(8L)).get
+    writeShards(s"$dir/s.bam", BamIO.RecordCodec(sortedHeader),
+      Seq(sharded.take(sharded.length / 2), sharded.drop(sharded.length / 2)), 16)
+    val sites = (0 until 300).map(i => graft.model.VcfVariant(contigs(i / 150),
+      1L + (i % 150) * 300, s"v$i", "A", Array("C"), None, "PASS", Array("DP"), Array("7"),
+      Array.empty, Array.empty))
+    writeShards(s"$dir/s.bcf", BcfIO.RecordCodec(BcfIO.Dicts(contigs, Array("PASS"),
+      Array("DP"))), sites.grouped(100).toSeq, 16)
     val vcf = s"$dir/t.vcf.bgz"
     val (fs, _) = Fs.get(vcf)
     val out = new Bgzf.BgzfOutputStream(fs.create(new org.apache.hadoop.fs.Path(vcf), true),
@@ -509,7 +530,11 @@ class PropertySpec extends AnyFunSuite {
       b.refs.toSeq.map(r => (r.bins, r.linear.toSeq, r.loffsets)))
     def tabix(p: org.apache.hadoop.fs.Path): Option[Any] = Tabix.read(fs, p).map(t =>
       (t.format, t.colSeq, t.colBeg, t.colEnd, t.meta, t.skip, t.names, t.nNoCoor, canon(t.binning)))
+    def sidx(p: org.apache.hadoop.fs.Path): Option[Any] = SplittingIndex.read(fs, p).map(i =>
+      (i.granularity, i.entries.toSeq, i.endVo, i.maxSpan))
     val cases: Seq[(String, org.apache.hadoop.fs.Path => Option[Any])] = Seq(
+      (s"$dir/s.bam.sidx", sidx),
+      (s"$dir/s.bcf.sidx", sidx),
       (s"$bam.bai", p => Bai.read(fs, p).map(canon)),
       (s"$bam.csi", p => Csi.read(fs, p).map(canon)),
       (s"$bcf.csi", p => Csi.read(fs, p).map(canon)),

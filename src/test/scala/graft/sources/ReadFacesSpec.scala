@@ -50,6 +50,20 @@ class ReadFacesSpec extends SparkSpec {
     f
   }
 
+  /** One shard, 200 `.sidx` granules (20k sites, granularity 100). */
+  private lazy val oneShardBcf: String = {
+    import spark.implicits._
+    val f = s"$dir/one-shard.bcf"
+    val sites = (0 until 20000).map { i =>
+      graft.model.VcfVariant(if (i < 10000) "c1" else "c2", 1L + (i % 10000) * 10, s"v$i",
+        "A", Array("C"), Some(30.0), "PASS", Array("DP"), Array(s"${i % 50}"),
+        Array.empty, Array.empty)
+    }
+    BcfIO.write(spark.createDataset(sites).coalesce(1),
+      BcfIO.Dicts(Array("c1", "c2"), Array("PASS"), Array("DP")), f, granularity = 100)
+    f
+  }
+
   /** (label, format, path, typed read at a split size). */
   private def cases: Seq[(String, String, () => String, Long => DataFrame)] = {
     import spark.implicits._
@@ -60,7 +74,9 @@ class ReadFacesSpec extends SparkSpec {
       ("test.uncompressed.bcf", "bcf", fixture("test.uncompressed.bcf"),
         (s: Long) => BcfIO.read(spark, res("test.uncompressed.bcf"), splitSize = s).toDF()),
       ("test.bgzf.bcf", "bcf", fixture("test.bgzf.bcf"),
-        (s: Long) => BcfIO.read(spark, res("test.bgzf.bcf"), splitSize = s).toDF())) ++
+        (s: Long) => BcfIO.read(spark, res("test.bgzf.bcf"), splitSize = s).toDF()),
+      ("graft-written one-shard BCF", "bcf", () => oneShardBcf,
+        (s: Long) => BcfIO.read(spark, oneShardBcf, splitSize = s).toDF())) ++
       Seq("test.vcf", "test.vcf.bgz", "test.vcf.gz", "HiSeq.10000.vcf.bgz").map { n =>
         (n, "vcf", fixture(n), (s: Long) => Vcf.read(spark, res(n), splitSize = s).toDF())
       } ++
@@ -83,6 +99,11 @@ class ReadFacesSpec extends SparkSpec {
       }
   }
 
+  private def scanPartitions(df: DataFrame): Int =
+    df.queryExecution.executedPlan.collectLeaves()
+      .head.asInstanceOf[org.apache.spark.sql.execution.datasources.v2.BatchScanExec]
+      .inputPartitions.length
+
   cases.foreach { case (label, format, path, typed) =>
     test(s"$label: typed reader == format(\"$format\") at every split size") {
       splitSizes.foreach { s =>
@@ -90,6 +111,15 @@ class ReadFacesSpec extends SparkSpec {
         assert(want.nonEmpty, s"$label split=$s")
         assert(rowStrings(sqlRead(format, path(), "splitsize" -> s.toString)) === want,
           s"$label split=$s")
+      }
+      // a BGZF record file below the split size is one partition on
+      // both faces, whatever its `.sidx` granules
+      if (format == "bam" || format == "bcf") {
+        val whole = 1L << 30
+        val sql = sqlRead(format, path(), "splitsize" -> whole.toString)
+        assert(typed(whole).rdd.getNumPartitions === 1, label)
+        assert(scanPartitions(sql) === 1, label)
+        assert(rowStrings(sql) === rowStrings(typed(splitSizes.head)), label)
       }
     }
   }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.SparkSpec
 import graft.model.{SamHeader, SamRecord, SamRef, VcfVariant}
-import graft.sources.v2.{BamShardDone, BamTable, BcfTable, CramTable, GraftDataSinks, ShardDone, VcfTable}
+import graft.sources.v2.{BamTable, BcfTable, BgzfShardDone, CramTable, GraftDataSinks, ShardDone, VcfTable}
 
 /** The one commit protocol of every graft sink: an overwrite never
   * leaves the previous write's index beside the new file, only a
@@ -208,7 +208,7 @@ class SinkCommitSpec extends SparkSpec {
       (bamDir, batchOf(new BamTable(GraftDataSinks.at(bam), Some(header))),
         threeParts(reads(300, 7000, 11), ExpressionEncoder[SamRecord]()),
         // partition 2's message names a shard whose part file is missing
-        BamShardDone(BamIO.ShardInfo(2, 4096L, 100L, Array.empty, 50)): WriterCommitMessage),
+        BgzfShardDone(BgzfRecords.Shard(2, 4096L, Array.empty, sorted = true, 0L, 0L, 50)): WriterCommitMessage),
       (vcfDir, batchOf(new VcfTable(GraftDataSinks.at(vcf),
         Some(GraftDataSinks.TextHeader(vcfHeader.lines, bgzf = true)))),
         threeParts(sites(300, 7000, 11), ExpressionEncoder[VcfVariant]()),
