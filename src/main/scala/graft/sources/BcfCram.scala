@@ -788,10 +788,12 @@ object Cram {
 
   /** `landmark` = first slice's byte offset within the compressed
     * container body (0 when the container has no landmarks) — what a
-    * `.crai` line's slice-offset field records. */
+    * `.crai` line's slice-offset field records.  `crcOk` is false when
+    * a 3.x header's bytes do not match its stored CRC32; the walk
+    * reports it and leaves the decision to its caller. */
   final case class Container(offset: Long, length: Int, refSeqId: Int,
                              startPos: Int, span: Int, nRecords: Int,
-                             landmark: Int = 0)
+                             landmark: Int = 0, crcOk: Boolean = true)
 
   /** ITF8: CRAM's variable-length int (public CRAM spec §2.3).
     * Every byte is EOF-checked: a truncation mid-varint must surface
@@ -898,8 +900,12 @@ object Cram {
             val lm = readItf8(counting)
             if (i == 0) firstLandmark = lm
           }
-          out += Container(off, clen, refId, start, span, nRec, firstLandmark)
-          val headerLen = counting.count + crcLen
+          val crcOk = crcLen == 0 || {
+            val computed = counting.crc.getValue.toInt
+            readInt32Le(counting) == computed
+          }
+          out += Container(off, clen, refId, start, span, nRec, firstLandmark, crcOk)
+          val headerLen = counting.count
           if (off + headerLen + clen > len)
             throw new java.io.IOException(
               s"truncated CRAM container at offset $off (body runs past EOF)")
@@ -925,20 +931,15 @@ object Cram {
     a | (b << 8) | (c << 16) | (d << 24)
   }
 
+  /** Counts, and CRC32s, the bytes read through it. */
   private final class CountingInputStream(in: InputStream) extends InputStream {
     var count = 0L
-    override def read(): Int = { val v = in.read(); if (v >= 0) count += 1; v }
-    override def read(b: Array[Byte], off: Int, len: Int): Int = {
-      val r = in.read(b, off, len); if (r > 0) count += r; r
+    val crc = new java.util.zip.CRC32()
+    override def read(): Int = {
+      val v = in.read(); if (v >= 0) { count += 1; crc.update(v) }; v
     }
-    def skipFully(n: Long): Unit = {
-      var left = n
-      val buf = new Array[Byte](8192)
-      while (left > 0) {
-        val r = read(buf, 0, math.min(left, buf.length).toInt)
-        if (r < 0) throw new EOFException()
-        left -= r
-      }
+    override def read(b: Array[Byte], off: Int, len: Int): Int = {
+      val r = in.read(b, off, len); if (r > 0) { count += r; crc.update(b, off, r) }; r
     }
   }
 }

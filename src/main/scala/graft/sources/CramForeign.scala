@@ -36,11 +36,22 @@ object CramForeign {
     private final val TotFreq = 4096
     private final val Low = 1L << 23
 
-    def decode(comp: Array[Byte]): Array[Byte] = {
+    /** Decode one rANS 4x8 body.  `expectedLen`, when known (a CRAM
+      * block's raw size), must match the body's own raw-size field, so a
+      * damaged size fails before anything is allocated.  A body whose
+      * compressed-size field disagrees with its length, or whose tables
+      * or states run past its end, throws. */
+    def decode(comp: Array[Byte], expectedLen: Int = -1): Array[Byte] = {
+      require(comp.length >= 9, s"rANS 4x8 body of ${comp.length} bytes has no header")
       val bs = new ByteStream(comp)
       val order = bs.byte()
-      bs.p += 4 // compressed size (redundant with block framing)
+      require(order == 0 || order == 1, s"rANS 4x8 order $order")
+      val compSize = bs.byte() | (bs.byte() << 8) | (bs.byte() << 16) | (bs.byte() << 24)
+      require(compSize == comp.length - 9,
+        s"rANS 4x8 body declares $compSize compressed bytes, holds ${comp.length - 9}")
       val rawSize = bs.byte() | (bs.byte() << 8) | (bs.byte() << 16) | (bs.byte() << 24)
+      require(rawSize >= 0 && (expectedLen < 0 || rawSize == expectedLen),
+        s"rANS 4x8 raw size $rawSize, expected $expectedLen")
       val out = new Array[Byte](rawSize)
       if (rawSize == 0) return out
       if (order == 0) decode0(bs, out) else decode1(bs, out)
@@ -55,8 +66,12 @@ object CramForeign {
       var last = sym
       var rle = 0
       var done = false
+      var total = 0
       while (!done) {
-        freq(sym) = bs.itf8()
+        val f = bs.itf8()
+        require(f >= 0 && f <= TotFreq - total, s"rANS 4x8 frequency table overflows $TotFreq")
+        freq(sym) = f
+        total += f
         if (rle > 0) { rle -= 1; sym += 1 }
         else {
           sym = bs.byte()
@@ -76,13 +91,12 @@ object CramForeign {
       cum
     }
 
+    /** Slot -> symbol: each symbol's run of `freq` slots in one fill. */
     private def lutFrom(freq: Array[Int], cum: Array[Int]): Array[Byte] = {
       val lut = new Array[Byte](TotFreq)
       var s = 0
       while (s < 256) {
-        var i = cum(s)
-        val e = cum(s) + freq(s)
-        while (i < e && i < TotFreq) { lut(i) = s.toByte; i += 1 }
+        if (freq(s) > 0) java.util.Arrays.fill(lut, cum(s), cum(s) + freq(s), s.toByte)
         s += 1
       }
       lut
@@ -531,11 +545,32 @@ object CramForeign {
   final class SliceCtx(val core: BitReader, val ext: Map[Int, ByteStream]) {
     def stream(cid: Int): ByteStream =
       ext.getOrElse(cid, throw new IllegalStateException(s"missing external block $cid"))
+
+    /** `e` with its external blocks looked up once for this slice, so a
+      * value read costs a field access, not a map lookup.  A block the
+      * slice lacks fails only when a value is read from it. */
+    def bind(e: Enc): Enc = e match {
+      case ExternalEnc(cid) => BoundExt(cid, ext.getOrElse(cid, null))
+      case ByteArrayStopEnc(stop, cid) => BoundStop(stop, cid, ext.getOrElse(cid, null))
+      case ByteArrayLenEnc(len, value) => ByteArrayLenEnc(bind(len), bind(value))
+      case other => other
+    }
   }
 
-  def readInt(e: Enc, ctx: SliceCtx): Int = e match {
+  /** Bound forms ([[SliceCtx.bind]]): EXTERNAL and BYTE_ARRAY_STOP over
+    * the slice's stream (null when the slice has no block `cid`), and a
+    * series the compression header does not encode. */
+  private final case class BoundExt(cid: Int, s: ByteStream) extends Enc
+  private final case class BoundStop(stop: Int, cid: Int, s: ByteStream) extends Enc
+  private final case class Unencoded(what: String) extends Enc
+
+  private def present(s: ByteStream, cid: Int): ByteStream =
+    if (s != null) s else throw new IllegalStateException(s"missing external block $cid")
+
+  /** Value reads from an encoding bound to the slice ([[SliceCtx.bind]]). */
+  private def readInt(e: Enc, ctx: SliceCtx): Int = e match {
+    case BoundExt(cid, s) => present(s, cid).itf8()
     case h: HuffmanEnc => h.read(ctx.core)
-    case ExternalEnc(cid) => ctx.stream(cid).itf8()
     case BetaEnc(off, bits) => ctx.core.readBits(bits) - off
     case GammaEnc(off) =>
       var n = 0
@@ -547,30 +582,33 @@ object CramForeign {
       val b = if (u == 0) k else u + k - 1
       val n = ctx.core.readBits(b)
       (if (u == 0) n else (1 << b) | n) - off
+    case Unencoded(what) => throw new IllegalStateException(what)
     case other => throw new UnsupportedOperationException(s"int read from $other")
   }
 
-  def readByte(e: Enc, ctx: SliceCtx): Int = e match {
-    case ExternalEnc(cid) => ctx.stream(cid).byte()
+  private def readByte(e: Enc, ctx: SliceCtx): Int = e match {
+    case BoundExt(cid, s) => present(s, cid).byte()
     case h: HuffmanEnc => h.read(ctx.core)
     case BetaEnc(off, bits) => ctx.core.readBits(bits) - off
+    case Unencoded(what) => throw new IllegalStateException(what)
     case other => throw new UnsupportedOperationException(s"byte read from $other")
   }
 
-  def readBytes(e: Enc, ctx: SliceCtx): Array[Byte] = e match {
+  private def readBytes(e: Enc, ctx: SliceCtx): Array[Byte] = e match {
     case ByteArrayLenEnc(lenE, valE) =>
       val n = readInt(lenE, ctx)
       valE match {
-        case ExternalEnc(cid) => ctx.stream(cid).take(n)
+        case BoundExt(cid, s) => present(s, cid).take(n)
         case _ => Array.fill(n)(readByte(valE, ctx).toByte)
       }
-    case ByteArrayStopEnc(stop, cid) =>
-      val s = ctx.stream(cid)
-      val start = s.p
-      while (s.data(s.p) != stop.toByte) s.p += 1
-      val out = java.util.Arrays.copyOfRange(s.data, start, s.p)
-      s.p += 1 // consume the stop byte
+    case BoundStop(stop, cid, s) =>
+      val st = present(s, cid)
+      val start = st.p
+      while (st.data(st.p) != stop.toByte) st.p += 1
+      val out = java.util.Arrays.copyOfRange(st.data, start, st.p)
+      st.p += 1 // consume the stop byte
       out
+    case Unencoded(what) => throw new IllegalStateException(what)
     case other => throw new UnsupportedOperationException(s"byte-array read from $other")
   }
 
@@ -680,56 +718,77 @@ object CramForeign {
   def decodeSlice(h: CompHeader, slice: SliceHeader, ctx: SliceCtx,
                   refs: Array[SamRef], rgIds: Array[String],
                   refSrc: RefSource): Seq[SamRecord] = {
-    def enc(key: String): Enc = h.ds.getOrElse(key, NullEnc)
-    def reqEnc(key: String): Enc = h.ds.getOrElse(key,
-      throw new IllegalStateException(s"no encoding for required series $key"))
+    // every series bound to this slice's streams once, not per value
+    def series(key: String): Enc = h.ds.get(key) match {
+      case Some(e) => ctx.bind(e)
+      case None => Unencoded(s"no encoding for required series $key")
+    }
+    val BF = series("BF"); val CF = series("CF"); val RI = series("RI")
+    val RL = series("RL"); val AP = series("AP"); val RG = series("RG")
+    val RN = series("RN"); val MF = series("MF"); val NS = series("NS")
+    val NP = series("NP"); val TS = series("TS"); val NF = series("NF")
+    val TL = series("TL"); val FN = series("FN"); val FC = series("FC")
+    val FP = series("FP"); val BA = series("BA"); val QS = series("QS")
+    val BS = series("BS"); val IN = series("IN"); val SC = series("SC")
+    val DL = series("DL"); val RS = series("RS"); val HC = series("HC")
+    val PD = series("PD"); val BB = series("BB"); val QQ = series("QQ")
+    val MQ = series("MQ")
+    // tag encodings are bound per tag line on first use: tag content
+    // ids are 24-bit, too sparse for a table indexed by id
+    val tagEncs = new Array[Array[Enc]](h.tagLines.length)
+    def tagLine(tl: Int): Array[Enc] = {
+      if (tagEncs(tl) == null) tagEncs(tl) = h.tagLines(tl).map { td =>
+        h.tagEnc.get(td.cid).map(ctx.bind)
+          .getOrElse(Unencoded(s"no tag encoding for ${td.tag}:${td.typ}"))
+      }
+      tagEncs(tl)
+    }
 
     val recs = new Array[Rec](slice.nRecords)
     var prevPos = slice.start
     var i = 0
     while (i < slice.nRecords) {
       val r = new Rec
-      val bf = readInt(reqEnc("BF"), ctx)
-      val cf = readInt(reqEnc("CF"), ctx)
-      r.refId = if (slice.refSeqId == -2) readInt(reqEnc("RI"), ctx) else slice.refSeqId
-      val rl = readInt(reqEnc("RL"), ctx)
+      val bf = readInt(BF, ctx)
+      val cf = readInt(CF, ctx)
+      r.refId = if (slice.refSeqId == -2) readInt(RI, ctx) else slice.refSeqId
+      val rl = readInt(RL, ctx)
       r.pos =
-        if (h.apDelta) { prevPos += readInt(reqEnc("AP"), ctx); prevPos }
-        else readInt(reqEnc("AP"), ctx)
-      val rg = readInt(reqEnc("RG"), ctx)
+        if (h.apDelta) { prevPos += readInt(AP, ctx); prevPos }
+        else readInt(AP, ctx)
+      val rg = readInt(RG, ctx)
       if (h.rnCaptured)
-        r.qname = new String(readBytes(reqEnc("RN"), ctx),
-          java.nio.charset.StandardCharsets.US_ASCII)
+        r.qname = new String(readBytes(RN, ctx), java.nio.charset.StandardCharsets.US_ASCII)
       // ---- mate info
       var flag = bf
       if ((cf & 0x2) != 0) { // detached
-        val mf = readInt(reqEnc("MF"), ctx)
+        val mf = readInt(MF, ctx)
         if ((mf & 0x1) != 0) flag |= 0x20
         if ((mf & 0x2) != 0) flag |= 0x8
         if (!h.rnCaptured)
-          r.qname = new String(readBytes(reqEnc("RN"), ctx),
-            java.nio.charset.StandardCharsets.US_ASCII)
-        r.nextRef = readInt(reqEnc("NS"), ctx)
-        r.nextPos = readInt(reqEnc("NP"), ctx)
-        r.tlen = readInt(reqEnc("TS"), ctx)
+          r.qname = new String(readBytes(RN, ctx), java.nio.charset.StandardCharsets.US_ASCII)
+        r.nextRef = readInt(NS, ctx)
+        r.nextPos = readInt(NP, ctx)
+        r.tlen = readInt(TS, ctx)
       } else if ((cf & 0x4) != 0) {
-        r.mateDown = i + 1 + readInt(reqEnc("NF"), ctx)
+        r.mateDown = i + 1 + readInt(NF, ctx)
       }
       // ---- tags
-      val tl = readInt(reqEnc("TL"), ctx)
-      val line = if (tl >= 0 && tl < h.tagLines.length) h.tagLines(tl) else Array.empty[TagDef]
-      var t = 0
-      while (t < line.length) {
-        val td = line(t)
-        val value = readBytes(h.tagEnc.getOrElse(td.cid,
-          throw new IllegalStateException(s"no tag encoding for ${td.tag}:${td.typ}")), ctx)
-        r.tags = formatTag(td, value) :: r.tags
-        t += 1
+      val tl = readInt(TL, ctx)
+      if (tl >= 0 && tl < h.tagLines.length) {
+        val line = h.tagLines(tl)
+        val encs = tagLine(tl)
+        var t = 0
+        while (t < line.length) {
+          r.tags = formatTag(line(t), readBytes(encs(t), ctx)) :: r.tags
+          t += 1
+        }
       }
       // ---- alignment payload
-      val quals = Array.fill[Byte](rl)(-1)
+      val quals = new Array[Byte](rl)
+      java.util.Arrays.fill(quals, -1: Byte)
       if ((bf & 0x4) == 0) { // mapped
-        val fn = readInt(reqEnc("FN"), ctx)
+        val fn = readInt(FN, ctx)
         val seq = new Array[Char](rl)
         java.util.Arrays.fill(seq, 'N')
         val cig = new CigarBuilder
@@ -751,84 +810,87 @@ object CramForeign {
           cig.add('M', n); rpos += n; rofs += n
         }
         while (f < fn) {
-          val code = readByte(reqEnc("FC"), ctx).toChar
-          fpos += readInt(reqEnc("FP"), ctx)
+          val code = readByte(FC, ctx).toChar
+          fpos += readInt(FP, ctx)
           code match {
             case 'B' =>
               matchRun(fpos - 1 - rpos)
-              seq(rpos) = (readByte(reqEnc("BA"), ctx) & 0xff).toChar
-              quals(rpos) = readByte(reqEnc("QS"), ctx).toByte
+              seq(rpos) = (readByte(BA, ctx) & 0xff).toChar
+              quals(rpos) = readByte(QS, ctx).toByte
               cig.add('M', 1); rpos += 1; rofs += 1
             case 'X' =>
               matchRun(fpos - 1 - rpos)
-              val c = readInt(reqEnc("BS"), ctx)
+              val c = readInt(BS, ctx)
               seq(rpos) = substitute(h.subMatrix, refAt(r.pos + rofs), c)
               cig.add('M', 1); rpos += 1; rofs += 1
             case 'I' =>
               matchRun(fpos - 1 - rpos)
-              val ins = readBytes(reqEnc("IN"), ctx)
-              ins.indices.foreach(k => seq(rpos + k) = (ins(k) & 0xff).toChar)
+              val ins = readBytes(IN, ctx)
+              copyChars(ins, seq, rpos)
               cig.add('I', ins.length); rpos += ins.length
             case 'i' =>
               matchRun(fpos - 1 - rpos)
-              seq(rpos) = (readByte(reqEnc("BA"), ctx) & 0xff).toChar
+              seq(rpos) = (readByte(BA, ctx) & 0xff).toChar
               cig.add('I', 1); rpos += 1
             case 'S' =>
               matchRun(fpos - 1 - rpos)
-              val sc = readBytes(reqEnc("SC"), ctx)
-              sc.indices.foreach(k => seq(rpos + k) = (sc(k) & 0xff).toChar)
+              val sc = readBytes(SC, ctx)
+              copyChars(sc, seq, rpos)
               cig.add('S', sc.length); rpos += sc.length
             case 'D' =>
               matchRun(fpos - 1 - rpos)
-              val n = readInt(reqEnc("DL"), ctx)
+              val n = readInt(DL, ctx)
               cig.add('D', n); rofs += n
             case 'N' =>
               matchRun(fpos - 1 - rpos)
-              val n = readInt(reqEnc("RS"), ctx)
+              val n = readInt(RS, ctx)
               cig.add('N', n); rofs += n
             case 'H' =>
               matchRun(fpos - 1 - rpos)
-              cig.add('H', readInt(reqEnc("HC"), ctx))
+              cig.add('H', readInt(HC, ctx))
             case 'P' =>
               matchRun(fpos - 1 - rpos)
-              cig.add('P', readInt(reqEnc("PD"), ctx))
+              cig.add('P', readInt(PD, ctx))
             case 'b' =>
               matchRun(fpos - 1 - rpos)
-              val bb = readBytes(reqEnc("BB"), ctx)
-              bb.indices.foreach(k => seq(rpos + k) = (bb(k) & 0xff).toChar)
+              val bb = readBytes(BB, ctx)
+              copyChars(bb, seq, rpos)
               cig.add('M', bb.length); rpos += bb.length; rofs += bb.length
             case 'Q' =>
-              quals(fpos - 1) = readByte(reqEnc("QS"), ctx).toByte
+              quals(fpos - 1) = readByte(QS, ctx).toByte
             case 'q' =>
-              val qq = readBytes(reqEnc("QQ"), ctx)
-              qq.indices.foreach(k => quals(fpos - 1 + k) = qq(k))
+              val qq = readBytes(QQ, ctx)
+              System.arraycopy(qq, 0, quals, fpos - 1, qq.length)
             case other =>
               throw new UnsupportedOperationException(s"feature code '$other'")
           }
           f += 1
         }
         matchRun(rl - rpos)
-        r.mapq = readInt(reqEnc("MQ"), ctx)
+        r.mapq = readInt(MQ, ctx)
         r.cigar = cig.result()
         r.seq = if (rl == 0) "*" else new String(seq)
       } else { // unmapped: verbatim bases
         val seq = new Array[Char](rl)
         var k = 0
-        while (k < rl) { seq(k) = (readByte(reqEnc("BA"), ctx) & 0xff).toChar; k += 1 }
+        while (k < rl) { seq(k) = (readByte(BA, ctx) & 0xff).toChar; k += 1 }
         r.seq = if (rl == 0) "*" else new String(seq)
       }
       // CF bit 0x8 (§8.4): SEQ is unknown — htslib sets it for mapped
       // records whose bases were not stored; report '*' like samtools
       // rather than the reference-reconstructed bases decoded above.
       if ((cf & 0x8) != 0) r.seq = "*"
-      if ((cf & 0x1) != 0) { // qualities stored as an array
-        val qe = reqEnc("QS")
-        var k = 0
-        while (k < rl) { quals(k) = readByte(qe, ctx).toByte; k += 1 }
+      if ((cf & 0x1) != 0) QS match { // qualities stored as an array
+        case BoundExt(cid, s) =>
+          // EXTERNAL: the record's qualities are the next rl bytes
+          val st = present(s, cid)
+          System.arraycopy(st.data, st.p, quals, 0, rl)
+          st.p += rl
+        case qe =>
+          var k = 0
+          while (k < rl) { quals(k) = readByte(qe, ctx).toByte; k += 1 }
       }
-      r.qual =
-        if (rl == 0 || quals.forall(_ == -1)) "*"
-        else new String(quals.map(q => (q + 33).toChar))
+      r.qual = qualString(quals)
       if (rg >= 0 && rg < rgIds.length) r.tags = s"RG:Z:${rgIds(rg)}" :: r.tags
       r.flag = flag
       recs(i) = r
@@ -844,6 +906,26 @@ object CramForeign {
       SamRecord(r.qname, r.flag, rname, r.pos, r.mapq, r.cigar, rnext,
         r.nextPos, r.tlen, r.seq, r.qual, r.tags.reverse.toArray)
     }.toSeq
+  }
+
+  /** Bytes as chars (Latin-1) into `seq` from `at`. */
+  private def copyChars(src: Array[Byte], seq: Array[Char], at: Int): Unit = {
+    var k = 0
+    while (k < src.length) { seq(at + k) = (src(k) & 0xff).toChar; k += 1 }
+  }
+
+  /** Phred+33 text of a record's qualities; "*" when none is stored
+    * (every byte the 0xff "missing" sentinel, or no bases). */
+  private def qualString(q: Array[Byte]): String = {
+    var k = 0
+    while (k < q.length && q(k) == -1) k += 1
+    if (k == q.length) "*"
+    else {
+      val c = new Array[Char](q.length)
+      k = 0
+      while (k < q.length) { c(k) = (q(k) + 33).toChar; k += 1 }
+      new String(c)
+    }
   }
 
   /** Reference bases for a record's contig: the slice's embedded

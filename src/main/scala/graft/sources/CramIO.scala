@@ -1,8 +1,9 @@
 package graft.sources
 
-import java.io.{BufferedInputStream, ByteArrayInputStream, ByteArrayOutputStream, EOFException, InputStream, OutputStream}
+import java.io.{BufferedInputStream, ByteArrayInputStream, ByteArrayOutputStream, EOFException, IOException, InputStream, OutputStream}
 import java.util.zip.CRC32
 
+import org.apache.hadoop.fs.FSDataInputStream
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.model.{SamHeader, SamRecord}
@@ -153,7 +154,7 @@ object CramIO {
           n += r
         }
         out
-      case Rans4x8 => CramForeign.Rans.decode(body)
+      case Rans4x8 => CramForeign.Rans.decode(body, rawSize)
       case RansNx16M => RansNx16.decode(body, rawSize)
       case ArithM => Arith.decode(body, rawSize)
       case FqzM => Fqz.decode(body, rawSize)
@@ -194,7 +195,8 @@ object CramIO {
 
   /** One container = header + blocks; `length` in the header counts
     * the block bytes.  Landmarks point at slice-header block offsets
-    * within the block byte range (we write one slice per container). */
+    * within the block byte range, one per slice (the graft profile
+    * writes one slice per container, the spec profiles up to two). */
   private def writeContainer(out: OutputStream, refSeqId: Int, startPos: Int,
                              span: Int, nRecords: Int, counter: Long,
                              bases: Long, blocks: Seq[Block],
@@ -206,12 +208,13 @@ object CramIO {
   }
 
   /** Same, from an already-serialized block body (lets the writer
-    * measure landmark offsets without serializing blocks twice). */
+    * measure landmark offsets without serializing blocks twice);
+    * returns the container's size in bytes. */
   private def writeContainerRaw(out: OutputStream, refSeqId: Int, startPos: Int,
                                 span: Int, nRecords: Int, counter: Long,
                                 bases: Long, nBlocks: Int,
                                 landmarks: Seq[Int],
-                                bodyBytes: Array[Byte]): Unit = {
+                                bodyBytes: Array[Byte]): Int = {
     val head = new ByteArrayOutputStream(64)
     writeInt32Le(head, bodyBytes.length)
     Cram.writeItf8(head, refSeqId)
@@ -228,6 +231,7 @@ object CramIO {
     out.write(headBytes)
     writeInt32Le(out, crc.getValue.toInt)
     out.write(bodyBytes)
+    headBytes.length + 4 + bodyBytes.length
   }
 
   /** EOF container: the spec-prescribed sentinel (refSeqId -1,
@@ -292,38 +296,58 @@ object CramIO {
 
   // -------------------------------------------------------------- write
 
+  /** One committed shard: its length in bytes and the `.crai` lines of
+    * its slices, container offsets relative to the shard's start. */
+  final case class Shard(pid: Int, length: Long, crai: Seq[Crai.Entry])
+
   /** A per-task CRAM shard: records in, data containers out. */
   private[sources] trait ShardSink {
     def write(rec: SamRecord): Unit
-    /** Flush the tail container, close, return records written. */
-    def finish(): Long
+    /** Flush the tail container, close, return the shard. */
+    def finish(): Shard
     def abort(): Unit
   }
 
   /** The shard writer of a (checked) write profile. */
   private[sources] def shardWriter(pathStr: String, refIdx: Map[String, Int],
-                                   profile: String): ShardSink =
-    if (profile == "graft") new ShardWriter(pathStr, refIdx)
-    else new SpecShardWriter(pathStr, refIdx, v31 = profile.startsWith("spec31"),
+                                   profile: String, pid: Int): ShardSink =
+    if (profile == "graft") new ShardWriter(pathStr, refIdx, pid)
+    else new SpecShardWriter(pathStr, refIdx, pid, v31 = profile.startsWith("spec31"),
       fqz = profile == "spec31-fqz")
 
-  /** Streaming per-task shard writer of the graft profile: records
-    * arrive one at a time and leave as ~1 MB containers — a multi-GB
-    * partition never buffers. */
-  final class ShardWriter(pathStr: String, refIdx: Map[String, Int]) extends ShardSink {
-    private val out = {
+  /** What both shard writers share: the attempt file, its running
+    * length and the `.crai` lines of the containers written so far. */
+  private abstract class ShardBase(pathStr: String, pid: Int) extends ShardSink {
+    protected val out = {
       val (tfs, tp) = Fs.get(pathStr)
       new java.io.BufferedOutputStream(tfs.create(tp, true))
     }
-    private var nTotal = 0L
+    protected var nTotal = 0L
+    protected var offset = 0L
+    protected val crai = scala.collection.mutable.ArrayBuffer[Crai.Entry]()
+
+    protected def flush(): Unit
+
+    def finish(): Shard = { flush(); out.close(); Shard(pid, offset, crai.toSeq) }
+
+    def abort(): Unit =
+      try out.close() catch { case _: IOException => () }
+  }
+
+  /** Streaming per-task shard writer of the graft profile: records
+    * arrive one at a time and leave as ~1 MB one-slice containers — a
+    * multi-GB partition never buffers. */
+  private final class ShardWriter(pathStr: String, refIdx: Map[String, Int], pid: Int)
+      extends ShardBase(pathStr, pid) {
     private val recs = new ByteArrayOutputStream(1 << 20)
     private var n = 0
     private var minPos = Int.MaxValue
     private var maxEnd = 0
     private var refSeq = -2 // -2 = unset; -1 unmapped; >=0 single-ref; -3 multi-ref marker
     private var bases = 0L
+    private val spans = new Crai.SliceSpans
 
-    private def flush(): Unit = if (n > 0) {
+    protected def flush(): Unit = if (n > 0) {
       val recBytes = recs.toByteArray
       val ext = Block(Gzip, External, 1, recBytes)
       val rid = if (refSeq == -3) -2 else refSeq // spec: -2 = multi-ref slice
@@ -337,10 +361,12 @@ object CramIO {
       val landmark = body.size()
       writeBlock(body, slice)
       writeBlock(body, ext)
-      writeContainerRaw(out, rid, start, span, n, nTotal, bases,
+      crai ++= spans.entries(offset, landmark, body.size() - landmark)
+      offset += writeContainerRaw(out, rid, start, span, n, nTotal, bases,
         nBlocks = 3, Seq(landmark), body.toByteArray)
       nTotal += n
       recs.reset(); n = 0; minPos = Int.MaxValue; maxEnd = 0; refSeq = -2; bases = 0L
+      spans.clear()
     }
 
     def write(rec: SamRecord): Unit = {
@@ -354,15 +380,11 @@ object CramIO {
         minPos = math.min(minPos, rec.pos)
         maxEnd = math.max(maxEnd, rec.end)
       }
+      spans.add(ri, rec.pos, rec.end)
       bases += (if (rec.seq == "*") 0 else rec.seq.length)
       n += 1
       if (recs.size >= (1 << 20)) flush() // ~1 MB containers
     }
-
-    def finish(): Long = { flush(); out.close(); nTotal }
-
-    def abort(): Unit =
-      try out.close() catch { case _: java.io.IOException => () }
   }
 
   /** Spec-profile shard writer (see [[CramSpecWrite]]): buffers
@@ -370,18 +392,14 @@ object CramIO {
     * output any foreign CRAM reader consumes.  Same streaming
     * discipline as [[ShardWriter]]: ~1 MB of buffered payload per
     * container, so a multi-GB partition never accumulates. */
-  final class SpecShardWriter(pathStr: String, refIdx: Map[String, Int],
+  private final class SpecShardWriter(pathStr: String, refIdx: Map[String, Int], pid: Int,
                               v31: Boolean = false, fqz: Boolean = false)
-      extends ShardSink {
-    private val out = {
-      val (tfs, tp) = Fs.get(pathStr)
-      new java.io.BufferedOutputStream(tfs.create(tp, true))
-    }
-    private var nTotal = 0L
+      extends ShardBase(pathStr, pid) {
     private val buf = scala.collection.mutable.ArrayBuffer[SamRecord]()
     private var approx = 0L
+    private val spans = new Crai.SliceSpans
 
-    private def flush(): Unit = if (buf.nonEmpty) {
+    protected def flush(): Unit = if (buf.nonEmpty) {
       // two slices per container once enough is buffered — the
       // multi-slice layout htslib writes (shared compression header,
       // one landmark per slice).  The split point avoids separating a
@@ -401,7 +419,13 @@ object CramIO {
         landmarks += body.size()
         sl.blocks.foreach(b => writeBlock(body, b))
       }
-      writeContainerRaw(out, enc.refSeqId, enc.start, enc.span, enc.nRecords,
+      val ends = landmarks.drop(1) :+ body.size()
+      slices.indices.foreach { i =>
+        slices(i).foreach(r => spans.add(refIdx.getOrElse(r.rname, -1), r.pos, r.end))
+        crai ++= spans.entries(offset, landmarks(i), ends(i) - landmarks(i))
+        spans.clear()
+      }
+      offset += writeContainerRaw(out, enc.refSeqId, enc.start, enc.span, enc.nRecords,
         nTotal, enc.bases, 1 + enc.slices.map(_.blocks.length).sum,
         landmarks.toSeq, body.toByteArray)
       nTotal += enc.nRecords
@@ -414,37 +438,41 @@ object CramIO {
         rec.tags.iterator.map(_.length + 8).sum
       if (approx >= (1 << 20)) flush()
     }
-
-    def finish(): Long = { flush(); out.close(); nTotal }
-
-    def abort(): Unit =
-      try out.close() catch { case _: java.io.IOException => () }
   }
 
   /** Driver-side merge through [[Fs.commitFile]]: file definition +
-    * SAM-header container + the `part-<pid>.cram` shards under
-    * `tmpDir` in pid order + EOF container, then the
-    * container-granularity `.crai` (one header walk of the new file),
-    * so interval reads prune containers without re-walking headers. */
+    * SAM-header container + the committed shards under `tmpDir` in pid
+    * order + EOF container, then the `.crai`: each shard's lines
+    * shifted by the shard's offset in the merged file, so the index is
+    * written without reading the new file back. */
   private[sources] def mergeShards(file: String, header: SamHeader, tmpDir: String,
-                                   pids: Seq[Int], minor: Int): Unit = {
-    val (fs, _) = Fs.get(file)
+                                   shards: Seq[Shard], minor: Int): Unit = {
+    val (fs, p) = Fs.get(file)
     // SAM header container: one FileHeader block; spec prefixes the
     // text with its int32 length inside the block
     val ht = header.text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val hblk = new ByteArrayOutputStream(ht.length + 8)
     writeInt32Le(hblk, ht.length)
     hblk.write(ht)
+    val head = new ByteArrayOutputStream(ht.length + 128)
+    head.write("CRAM".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    head.write(3); head.write(minor)
+    head.write(new Array[Byte](20)) // file id
+    writeContainer(head, refSeqId = -1, startPos = 0, span = 0, nRecords = 0,
+      counter = 0L, bases = 0L,
+      blocks = Seq(Block(Gzip, FileHeader, 0, hblk.toByteArray)), landmarks = Nil)
+    val inOrder = shards.sortBy(_.pid)
+    var base = head.size.toLong
+    val crai = inOrder.flatMap { s =>
+      val shift = base
+      base += s.length
+      s.crai.map(e => e.copy(containerOffset = e.containerOffset + shift))
+    }
     Fs.commitFile(file) { out =>
-      out.write("CRAM".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      out.write(3); out.write(minor)
-      out.write(new Array[Byte](20)) // file id
-      writeContainer(out, refSeqId = -1, startPos = 0, span = 0, nRecords = 0,
-        counter = 0L, bases = 0L,
-        blocks = Seq(Block(Gzip, FileHeader, 0, hblk.toByteArray)), landmarks = Nil)
-      Fs.concatParts(fs, pids.map(Fs.partPath(tmpDir, _, "cram")), out)
+      head.writeTo(out)
+      Fs.concatParts(fs, inOrder.map(s => Fs.partPath(tmpDir, s.pid, "cram")), out)
       writeEofContainer(out)
-    }(_ => Crai.buildAndWrite(file))
+    }(_ => Crai.write(fs, Crai.indexPath(p), crai))
   }
 
   /** Write a CRAM + `.crai`: the `format("cram")` batch write with
@@ -476,7 +504,7 @@ object CramIO {
     val in = new BufferedInputStream(fs.open(p))
     try {
       val major = readFileDefinition(in)
-      val blocks = readContainerBlocks(in, major)
+      val blocks = readContainerBlocks(in, major, file, 26L)
       val hb = blocks.find(_.contentType == FileHeader)
         .getOrElse(throw new IllegalStateException("first container has no file-header block"))
       val bb = java.nio.ByteBuffer.wrap(hb.data).order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -511,12 +539,16 @@ object CramIO {
   }
 
   /** The CRAM planner of every read face: container groups of about
-    * `splitSize` bytes.  With `intervals`, only containers whose header
-    * (refSeqId, startPos, span) overlaps them are planned — through the
-    * `.crai` when present (no per-container header seeks on the
-    * driver), else through the container walk; multi-ref slices
-    * (refSeqId -2) and spanless containers are kept conservatively.
-    * With `exact` the intervals also filter records by overlap. */
+    * `splitSize` bytes, in file order.  With `intervals`, only
+    * containers holding an overlapping record can be planned: through
+    * the `.crai` when present (no per-container header seeks on the
+    * driver; one line per slice and per reference of a multi-reference
+    * slice, so a container is planned once however many of its lines
+    * match), else through the container walk.  A line or header on a
+    * queried contig without a span, and a `.crai` line or container
+    * header with refSeqId -2 (a multi-reference container of an older
+    * index, or a foreign one), are kept conservatively.  With `exact`
+    * the intervals also filter records by overlap. */
   private[sources] def plan(file: String, intervals: Seq[(String, Int, Int)],
                             exact: Boolean, splitSize: Long,
                             reference: Option[String]): Seq[v2.CramPartition] = {
@@ -525,21 +557,23 @@ object CramIO {
     val ivsById = intervals.flatMap { case (c, s, e) =>
       refIdx.get(c).map(ri => (ri, s, e))
     }
-    def containerOverlaps(seqId: Int, start: Int, span: Int): Boolean =
-      seqId == -2 || // multi-ref slice: header carries no usable span
-        (seqId >= 0 && (span <= 0 || ivsById.exists { case (ri, s, e) =>
-          ri == seqId && start <= e && start + math.max(span, 1) - 1 >= s
-        }))
+    def overlaps(seqId: Int, start: Int, span: Int): Boolean =
+      seqId == -2 || ivsById.exists { case (ri, s, e) =>
+        ri == seqId && (span <= 0 || (start <= e && start + span - 1 >= s))
+      }
     val (fs, p) = Fs.get(file)
-    def walk = Cram.enumerateContainers(file).filter(c => c.nRecords > 0 && !isEof(c))
+    def walk = Cram.enumerateContainers(file).map { c =>
+      if (!c.crcOk) throw new IOException(
+        s"$file: CRAM container header CRC mismatch at offset ${c.offset}")
+      c
+    }.filter(c => c.nRecords > 0 && !isEof(c))
     val containers: Seq[(Long, Int)] =
       if (intervals.isEmpty) walk.map(c => (c.offset, c.length))
       else Crai.read(fs, Crai.indexPath(p)) match {
         case Some(entries) =>
-          entries.filter(e => containerOverlaps(e.seqId, e.start, e.span))
-            .map(e => (e.containerOffset, e.sliceSize.toInt + e.sliceOffset.toInt))
+          Crai.containers(entries.filter(e => overlaps(e.seqId, e.start, e.span)))
         case None =>
-          walk.filter(c => containerOverlaps(c.refSeqId, c.startPos, c.span))
+          walk.filter(c => overlaps(c.refSeqId, c.startPos, c.span))
             .map(c => (c.offset, c.length))
       }
     val meta = detectMeta(file, containers.headOption.map(_._1))
@@ -580,7 +614,7 @@ object CramIO {
       val foreign = firstContainerOffset.exists { off =>
         raw.seek(off)
         val in = new BufferedInputStream(raw)
-        readContainerHeader(in, major) == 0 || {
+        readContainerHeader(in, major, file, off) == 0 || {
           val b = readBlock(in, withCrc = major >= 3)
           !(b.contentType == CompressionHeader && isGraftProfile(b.data))
         }
@@ -591,13 +625,12 @@ object CramIO {
 
   /** Task-side: decode all records of one container group.
     *
-    * Read-ahead coalescing (r5): a group's containers are consecutive
-    * in the file, so the task seeks ONCE to the first offset and
-    * streams the rest through a single buffered reader — skipping the
-    * (rare) filtered-out zero-record containers in between — instead
-    * of a seek + fresh buffer per ~1 MB container.  On object stores
-    * each seek is a ranged GET; one sequential stream per 64 MB group
-    * is the difference between 1 and ~64 round trips. */
+    * Read-ahead coalescing (r5): a group's containers are ascending in
+    * the file, so the task seeks once to the first offset and streams
+    * on through one buffer; a gap between planned containers is skipped
+    * inside the buffer when it is buffered and by a seek when it is not.
+    * On object stores each seek is a ranged GET; one sequential stream
+    * per 64 MB group is the difference between 1 and ~64 round trips. */
   private[sources] def readGroup(file: String, offsets: Seq[Long],
                                  refs: Array[graft.model.SamRef],
                                  meta: CramMeta = CramMeta(3, foreign = false),
@@ -609,22 +642,12 @@ object CramIO {
     val out = scala.collection.mutable.ArrayBuffer[SamRecord]()
     val refSrc = new CramForeign.RefSource(reference, refs)
     try {
-      raw.seek(offsets.head)
-      var logical = offsets.head // position in file coordinates
-      val base = new BufferedInputStream(raw, 1 << 16)
-      val in = new InputStream {
-        override def read(): Int = {
-          val v = base.read(); if (v >= 0) logical += 1; v
-        }
-        override def read(b: Array[Byte], o: Int, l: Int): Int = {
-          val r = base.read(b, o, l); if (r > 0) logical += r; r
-        }
-      }
+      val in = new Cursor(raw, offsets.head)
       offsets.foreach { off =>
-        require(off >= logical,
-          s"container offsets must be increasing: $off after $logical")
-        skipFully(in, off - logical)
-        val blocks = readContainerBlocks(in, meta.major)
+        require(off >= in.pos,
+          s"container offsets must be increasing: $off after ${in.pos}")
+        in.skipTo(off)
+        val blocks = readContainerBlocks(in, meta.major, file, off)
         if (meta.foreign) {
           out ++= CramForeign.decodeContainer(blocks, refs, rgIds, refSrc)
         } else {
@@ -643,24 +666,76 @@ object CramIO {
     } finally raw.close()
   }
 
+  /** A buffered forward reader over an open file that knows its file
+    * position and jumps ahead by seeking past what it has not
+    * buffered, never by reading the gap. */
+  private final class Cursor(raw: FSDataInputStream, start: Long)
+      extends InputStream {
+    private val buf = new Array[Byte](1 << 16)
+    private var bufStart = start // file offset of buf(0)
+    private var lim = 0
+    private var i = 0
+    raw.seek(start)
+
+    def pos: Long = bufStart + i
+
+    def skipTo(off: Long): Unit =
+      if (off - bufStart <= lim) i = (off - bufStart).toInt
+      else { raw.seek(off); bufStart = off; lim = 0; i = 0 }
+
+    private def fill(): Boolean = {
+      bufStart += lim; lim = 0; i = 0
+      val r = raw.read(buf, 0, buf.length)
+      if (r > 0) lim = r
+      r > 0
+    }
+
+    override def read(): Int =
+      if (i < lim || fill()) { val v = buf(i) & 0xff; i += 1; v } else -1
+
+    override def read(b: Array[Byte], o: Int, l: Int): Int =
+      if (l == 0) 0
+      else if (i < lim || fill()) {
+        val n = math.min(l, lim - i)
+        System.arraycopy(buf, i, b, o, n)
+        i += n
+        n
+      } else -1
+  }
+
   /** Parse one container (header + its blocks) from the stream;
     * `major` selects the framing (3.x carries CRC32s, 2.x none). */
-  private def readContainerBlocks(in: InputStream, major: Int = 3): Seq[Block] = {
-    val nBlocks = readContainerHeader(in, major)
+  private def readContainerBlocks(in: InputStream, major: Int, file: String,
+                                  offset: Long): Seq[Block] = {
+    val nBlocks = readContainerHeader(in, major, file, offset)
     (0 until nBlocks).map(_ => readBlock(in, withCrc = major >= 3))
   }
 
-  /** Consume a container header and return its block count; the
-    * stream is left at the container's first block. */
-  private def readContainerHeader(in: InputStream, major: Int): Int = {
-    readInt32Le(in) // container length
-    Cram.readItf8(in) // refSeqId
-    Cram.readItf8(in); Cram.readItf8(in); Cram.readItf8(in) // start/span/nrec
-    Cram.readLtf8(in); Cram.readLtf8(in) // counter/bases
-    val nBlocks = Cram.readItf8(in)
-    val nLandmarks = Cram.readItf8(in)
-    (0 until nLandmarks).foreach(_ => Cram.readItf8(in))
-    if (major >= 3) skipFully(in, 4) // header crc
+  /** Consume the header of the container at `offset` of `file` and
+    * return its block count; the stream is left at the container's
+    * first block.  A 3.x header is checked against its CRC32, so a
+    * damaged record count or landmark fails the read. */
+  private def readContainerHeader(in: InputStream, major: Int, file: String,
+                                  offset: Long): Int = {
+    val crc = new CRC32()
+    val hin = new InputStream { // header bytes (few) go through the CRC
+      override def read(): Int = {
+        val v = in.read(); if (v >= 0) crc.update(v); v
+      }
+    }
+    readInt32Le(hin) // container length
+    Cram.readItf8(hin) // refSeqId
+    Cram.readItf8(hin); Cram.readItf8(hin); Cram.readItf8(hin) // start/span/nrec
+    Cram.readLtf8(hin); Cram.readLtf8(hin) // counter/bases
+    val nBlocks = Cram.readItf8(hin)
+    val nLandmarks = Cram.readItf8(hin)
+    (0 until nLandmarks).foreach(_ => Cram.readItf8(hin))
+    if (major >= 3) {
+      val stored = readInt32Le(in)
+      if (stored != crc.getValue.toInt) throw new IOException(
+        f"$file: CRAM container header CRC mismatch at offset $offset: " +
+          f"stored 0x$stored%08x computed 0x${crc.getValue.toInt}%08x")
+    }
     nBlocks
   }
 
@@ -676,7 +751,7 @@ object CramIO {
     require(new String(magic, java.nio.charset.StandardCharsets.UTF_8) == "CRAM", "not CRAM")
     val major = in.read()
     if (major < 0) throw new EOFException("truncated CRAM version")
-    skipFully(in, 1 + 20) // minor version + file id
+    in.skipNBytes(1 + 20) // minor version + file id
     major
   }
 
@@ -691,13 +766,5 @@ object CramIO {
     val a = in.read(); val b = in.read(); val c = in.read(); val d = in.read()
     if ((a | b | c | d) < 0) throw new EOFException()
     a | (b << 8) | (c << 16) | (d << 24)
-  }
-
-  private def skipFully(in: InputStream, n: Long): Unit = {
-    var left = n
-    while (left > 0) {
-      if (in.read() < 0) throw new EOFException()
-      left -= 1
-    }
   }
 }

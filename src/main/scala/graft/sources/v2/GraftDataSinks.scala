@@ -45,7 +45,8 @@ import graft.sources.{BamIO, BcfIO, Bgzf, BgzfRecords, CramIO, Fastq, Fs, Qseq, 
   *      .crai);
   *   3. move the temp file over the target;
   *   4. write the sidecars this format produces: `.sidx` for BAM and
-  *      BCF, `.crai` for CRAM.
+  *      BCF, `.crai` for CRAM, each from the lines the shard writers
+  *      sent in their commit messages, shifted by the shard's offset.
   * A failed merge leaves the target and its indexes as they were; a
   * crash after step 3 leaves a complete file with no index, which
   * every reader handles by its no-index fallback.  Both save modes
@@ -294,8 +295,12 @@ class BgzfWriterFactory[R](tmp: String, codec: BgzfRecords.Codec[R], granularity
 // ----------------------------------------------------------------- CRAM
 
 /** One commit message per shard of a format whose merge needs only
-  * the partition id (CRAM and the text formats). */
+  * the partition id (the text formats). */
 case class ShardDone(pid: Int) extends WriterCommitMessage
+
+/** A committed CRAM shard: its length and the `.crai` lines of its
+  * slices, which the driver merge shifts into place. */
+case class CramShardDone(shard: CramIO.Shard) extends WriterCommitMessage
 
 class CramBatchWrite(target: String, tmp: String, header: SamHeader,
                      schema: StructType, profile: String)
@@ -305,7 +310,8 @@ class CramBatchWrite(target: String, tmp: String, header: SamHeader,
       GraftDataSinks.decoder(ExpressionEncoder[SamRecord]().schema, schema,
         GraftDataSinks.RowCodecs.sam), profile)
   override protected def merge(messages: Array[WriterCommitMessage]): Unit =
-    CramIO.mergeShards(target, header, tmp, GraftDataSinks.pidsOf(messages),
+    CramIO.mergeShards(target, header, tmp,
+      messages.map(_.asInstanceOf[CramShardDone].shard).toSeq,
       minor = if (profile.startsWith("spec31")) 1 else 0)
 }
 
@@ -314,12 +320,12 @@ class CramWriterFactory(tmp: String, refIdx: Map[String, Int],
                         profile: String)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new ShardingDataWriter[ShardDone](tmp, partitionId, taskId, "cram") {
+    new ShardingDataWriter[CramShardDone](tmp, partitionId, taskId, "cram") {
       // streams record-by-record into ~1 MB containers — a multi-GB
       // partition never buffers
-      private val shard = CramIO.shardWriter(attemptPath.toString, refIdx, profile)
+      private val shard = CramIO.shardWriter(attemptPath.toString, refIdx, profile, partitionId)
       override def write(row: InternalRow): Unit = shard.write(decode(row))
-      override def finishAttempt(): ShardDone = { shard.finish(); ShardDone(partitionId) }
+      override def finishAttempt(): CramShardDone = CramShardDone(shard.finish())
       override def abortAttempt(): Unit = shard.abort()
     }
 }

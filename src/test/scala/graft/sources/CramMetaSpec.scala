@@ -94,4 +94,43 @@ class CramMetaSpec extends SparkSpec {
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(t => String.valueOf(t.getMessage).contains("CRC")), e.toString)
   }
+
+  test("a flipped byte in a container header's record count or landmark fails " +
+    "every read naming the file and the container offset") {
+    import spark.implicits._
+    // the header's own CRC32 is what must catch it: Hadoop's .crc
+    // sidecar is removed with the flip
+    val data = Cram.enumerateContainers(written("graft")).filter(_.nRecords > 0)
+    assert(data.length >= 2)
+    /** Offsets, within the container at `off`, of the last byte of its
+      * record count and of its first landmark. */
+    def fields(bytes: Array[Byte], off: Long): (Int, Int) = {
+      val bs = new CramForeign.ByteStream(bytes)
+      bs.p = off.toInt + 4
+      (0 until 4).foreach(_ => bs.itf8()) // refSeqId, start, span, nRecords
+      val countEnd = bs.p - 1
+      bs.ltf8(); bs.ltf8(); bs.itf8(); bs.itf8() // counter, bases, blocks, landmarks
+      (countEnd, bs.p)
+    }
+    Seq("record count", "landmark").foreach { field =>
+      val file = written("graft")
+      val target = Cram.enumerateContainers(file).filter(_.nRecords > 0)(1).offset
+      val bytes = Files.readAllBytes(Paths.get(file))
+      val (countAt, landmarkAt) = fields(bytes, target)
+      val at = if (field == "record count") countAt else landmarkAt
+      bytes(at) = (bytes(at) ^ 0x01).toByte
+      Files.write(Paths.get(file), bytes)
+      Files.delete(Paths.get(file).resolveSibling(".t.cram.crc"))
+      def failsNamingIt(read: => Any): Unit = {
+        val e = intercept[Exception](read)
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists(t =>
+          t.isInstanceOf[java.io.IOException] &&
+            t.getMessage.contains(file) && t.getMessage.contains(s"offset $target")),
+          s"$field: $e")
+      }
+      failsNamingIt(CramIO.read(spark, file).collect())
+      failsNamingIt(CramIO.readIntervals(spark, file, Seq(("chr1", 1, 50000))).collect())
+      failsNamingIt(spark.read.format("cram").load(file).collect())
+    }
+  }
 }

@@ -195,6 +195,48 @@ class ForeignCramSpec extends SparkSpec {
     }
   }
 
+  test("rANS 4x8 property: seeded inputs round-trip at orders 0 and 1; " +
+    "truncated or flipped bodies throw or decode to the declared size, never hang") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val rnd = new scala.util.Random(20261020L)
+    // lengths 1..70k, not all multiples of 4 (order 1 drains the tail
+    // with state 3); one-symbol, small-alphabet and full-alphabet input
+    val lengths = Seq(1, 2, 3, 4, 5, 7, 8, 4097, 65535, 70000) ++
+      Seq.fill(14)(1 + rnd.nextInt(70000))
+    val inputs = lengths.zipWithIndex.map { case (n, i) =>
+      val alphabet = i % 3 match {
+        case 0 => 1
+        case 1 => 2 + rnd.nextInt(6)
+        case _ => 256
+      }
+      val base = rnd.nextInt(256)
+      Array.fill(n)(((base + rnd.nextInt(alphabet)) & 0xff).toByte)
+    }
+    def decodeWithin(body: Array[Byte], n: Int): Either[Throwable, Array[Byte]] =
+      try Await.result(Future(scala.util.Try(CramForeign.Rans.decode(body, n)).toEither),
+        60.seconds)
+      catch {
+        case _: java.util.concurrent.TimeoutException => fail(s"no answer in 60 s")
+      }
+    for ((x, i) <- inputs.zipWithIndex; order <- Seq(0, 1)) {
+      val what = s"input $i (${x.length} bytes) order $order"
+      val enc = CramForeign.Rans.encode(x, order)
+      assert(java.util.Arrays.equals(CramForeign.Rans.decode(enc, x.length), x), what)
+      assert(java.util.Arrays.equals(CramForeign.Rans.decode(enc), x), what)
+      (0 until 6).foreach { k =>
+        val cut = rnd.nextInt(enc.length)
+        assert(decodeWithin(enc.take(cut), x.length).isLeft, s"$what truncated to $cut")
+        val flipped = enc.clone()
+        val at = rnd.nextInt(enc.length)
+        flipped(at) = (flipped(at) ^ (1 + rnd.nextInt(255))).toByte
+        decodeWithin(flipped, x.length).foreach(out =>
+          assert(out.length === x.length, s"$what byte $at flipped"))
+      }
+    }
+  }
+
   test("rANS Nx16 round-trips: orders, 4/32-way, PACK/RLE/CAT/STRIPE/NOSZ") {
     import RansNx16._
     val rnd = new scala.util.Random(31)
