@@ -19,8 +19,13 @@ object GraftSession {
   def local(cpus: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
     configure(SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
 
+  /** `local`'s settings on any builder.  Besides the SQL defaults it
+    * installs graft's `file:` file system (`sources.GraftLocalFs`:
+    * Hadoop's local file system with `chmod` and `readlink` done
+    * in-process) on both Hadoop APIs; other schemes are untouched. */
   def configure(b: SparkSession.Builder, cpus: Int): SparkSession.Builder = b
     .appName("graft")
+    .config(sources.GraftLocalFs.Settings.map { case (k, v) => s"spark.hadoop.$k" -> v }.toMap)
     .config("spark.sql.shuffle.partitions", cpus.toString)
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -5,7 +5,7 @@ import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayOutputStream
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path, UnsupportedFileSystemException}
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.model.{SamHeader, SamRecord}
@@ -15,10 +15,15 @@ import graft.model.{SamHeader, SamRecord}
   * first use from the same defaults and site XMLs a fresh one loads
   * (cluster nodes carry their own site configs), so Hadoop's XML is
   * parsed once, not per file open. `spark.hadoop.*` settings are not
-  * applied. The instance is shared by every caller and thread: never
-  * mutate it. */
+  * applied; graft's local file system ([[GraftLocalFs.Settings]]) is.
+  * The instance is shared by every caller and thread: never mutate
+  * it. */
 object Fs {
-  private[sources] lazy val conf = new Configuration()
+  private[sources] lazy val conf = {
+    val c = new Configuration()
+    GraftLocalFs.Settings.foreach { case (k, v) => c.set(k, v) }
+    c
+  }
 
   def get(p: String): (FileSystem, Path) = {
     val path = new Path(p)
@@ -46,13 +51,26 @@ object Fs {
   /** Sidecar indexes a reader may pick up beside a data file. */
   private val Sidecars = Seq(".sidx", ".bai", ".csi", ".tbi", ".crai")
 
+  /** Move `src` over `dst` in one `FileContext` rename with
+    * overwrite, which HDFS does atomically (`FileSystem.rename` does
+    * not overwrite).  A scheme with no `FileContext` binding deletes
+    * `dst`, then renames. */
+  private[sources] def moveOver(fs: FileSystem, src: Path, dst: Path): Unit =
+    try FileContext.getFileContext(fs.getUri, conf)
+      .rename(fs.makeQualified(src), fs.makeQualified(dst), Options.Rename.OVERWRITE)
+    catch {
+      case _: UnsupportedFileSystemException =>
+        if (fs.exists(dst)) fs.delete(dst, false)
+        if (!fs.rename(src, dst)) throw new java.io.IOException(s"could not rename $src to $dst")
+    }
+
   /** The one driver commit of every sink: `merge` writes the whole
     * file into a temp sibling of `target`; only once it returns are
     * the target's sidecar indexes deleted, the temp moved over the
-    * target, and `index` run with the merge's result to write the
-    * sidecars this format produces.  A failed merge removes the temp
-    * and leaves the target and its indexes as they were; a crash after
-    * the move leaves a complete file with no index. */
+    * target ([[moveOver]]), and `index` run with the merge's result to
+    * write the sidecars this format produces.  A failed merge removes
+    * the temp and leaves the target and its indexes as they were; a
+    * crash after the move leaves a complete file with no index. */
   def commitFile[A](target: String)(merge: OutputStream => A)(index: A => Unit): Unit = {
     val (fs, path) = get(target)
     val tmp = new Path(path.getParent, s".${path.getName}.${java.util.UUID.randomUUID}.tmp")
@@ -62,11 +80,11 @@ object Fs {
         try merge(out) finally out.close()
       } catch { case e: Throwable => fs.delete(tmp, false); throw e }
     Sidecars.foreach(s => fs.delete(new Path(path.getParent, path.getName + s), false))
-    // HDFS rename does not overwrite
-    if (fs.exists(path)) fs.delete(path, false)
-    if (!fs.rename(tmp, path)) {
-      fs.delete(tmp, false)
-      throw new java.io.IOException(s"could not move the merged file into place at $target")
+    try moveOver(fs, tmp, path)
+    catch {
+      case e: java.io.IOException =>
+        fs.delete(tmp, false)
+        throw new java.io.IOException(s"could not move the merged file into place at $target", e)
     }
     index(merged)
   }

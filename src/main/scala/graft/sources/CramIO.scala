@@ -108,11 +108,12 @@ object CramIO {
     writeInt32Le(out, crc.getValue.toInt)
   }
 
-  def readBlock(in: InputStream): Block = readBlock(in, withCrc = true)
+  def readBlock(in: InputStream): Block = readBlock(in, withCrc = true, "CRAM block stream")
 
   /** Read one block; `withCrc = false` for CRAM 2.x framing, which has
-    * no per-block CRC32. */
-  def readBlock(in: InputStream, withCrc: Boolean): Block = {
+    * no per-block CRC32.  A CRC mismatch fails with an `IOException`
+    * that starts with `where` (the file and the container offset). */
+  def readBlock(in: InputStream, withCrc: Boolean, where: String): Block = {
     val crc = new CRC32()
     val hin = new InputStream { // header bytes (few) go through the CRC
       override def read(): Int = {
@@ -138,8 +139,8 @@ object CramIO {
     if (withCrc) {
       crc.update(body, 0, compSize)
       val stored = readInt32Le(in)
-      require(stored == crc.getValue.toInt,
-        f"block CRC mismatch: stored 0x$stored%08x computed 0x${crc.getValue.toInt}%08x")
+      if (stored != crc.getValue.toInt) throw new IOException(
+        f"$where: CRAM block CRC mismatch: stored 0x$stored%08x computed 0x${crc.getValue.toInt}%08x")
     }
     val data = method match {
       case Raw => body
@@ -615,7 +616,7 @@ object CramIO {
         raw.seek(off)
         val in = new BufferedInputStream(raw)
         readContainerHeader(in, major, file, off) == 0 || {
-          val b = readBlock(in, withCrc = major >= 3)
+          val b = readBlock(in, withCrc = major >= 3, s"$file: container at offset $off")
           !(b.contentType == CompressionHeader && isGraftProfile(b.data))
         }
       }
@@ -708,7 +709,8 @@ object CramIO {
   private def readContainerBlocks(in: InputStream, major: Int, file: String,
                                   offset: Long): Seq[Block] = {
     val nBlocks = readContainerHeader(in, major, file, offset)
-    (0 until nBlocks).map(_ => readBlock(in, withCrc = major >= 3))
+    val where = s"$file: container at offset $offset"
+    (0 until nBlocks).map(_ => readBlock(in, withCrc = major >= 3, where))
   }
 
   /** Consume the header of the container at `offset` of `file` and

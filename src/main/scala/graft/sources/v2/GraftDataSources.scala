@@ -335,9 +335,7 @@ class GraftMicroBatchStream[T](dir: String, checkpointLocation: String,
     try out.write(known.mkString("", "\n", "\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    if (fs.exists(logPath)) fs.delete(logPath, false)
-    if (!fs.rename(tmp, logPath))
-      throw new java.io.IOException(s"could not commit file log $logPath")
+    Fs.moveOver(fs, tmp, logPath)
   }
 
   private def refresh(): Unit = {

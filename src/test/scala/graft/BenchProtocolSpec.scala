@@ -118,14 +118,20 @@ class BenchProtocolSpec extends AnyFunSuite {
 
   test("gitSha stamps a checkable jar lineage into the artifact (r15)") {
     // r14's one defect: committed bench artifacts predated a fix and
-    // nothing in the artifact could show it.  The stamp must be either
-    // a full 40-hex SHA (optionally -dirty) or the explicit "unknown"
-    // sentinel — never empty, never a crash.
+    // nothing in the artifact could show it.  Where git knows HEAD the
+    // stamp is exactly that SHA (optionally -dirty); in a tree without
+    // git (an exported archive) it is the explicit "unknown" sentinel —
+    // never empty, never a crash.
     val sha = Bench.gitSha()
-    assert(sha == "unknown" || sha.matches("[0-9a-f]{40}(-dirty)?"), sha)
-    // in this repo's own checkout git IS present, so the stamp must be
-    // a real SHA, not the fallback
-    assert(sha != "unknown")
+    val head = scala.util.Try {
+      val p = new ProcessBuilder("git", "rev-parse", "HEAD").redirectErrorStream(true).start()
+      val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
+      if (p.waitFor() == 0 && out.matches("[0-9a-f]{40}")) Some(out) else None
+    }.toOption.flatten
+    head match {
+      case Some(h) => assert(sha == h || sha == s"$h-dirty", s"$sha vs HEAD $h")
+      case None => assert(sha === "unknown")
+    }
   }
 
   test("porcelainPaths survives the trimmed first line (r16 root cause)") {

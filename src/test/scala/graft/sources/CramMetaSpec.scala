@@ -77,8 +77,9 @@ class CramMetaSpec extends SparkSpec {
     val (start, body, csz) = blocks(bytes, off).head
     assert(bytes(start + 1) === CramIO.CompressionHeader)
     val bad = flipped(file, body + csz / 2)
-    val e = intercept[IllegalArgumentException](CramIO.detectMeta(bad, Some(off)))
-    assert(e.getMessage.contains("CRC"), e.toString)
+    val e = intercept[java.io.IOException](CramIO.detectMeta(bad, Some(off)))
+    assert(e.getMessage.contains("CRC") && e.getMessage.contains(bad) &&
+      e.getMessage.contains(s"offset $off"), e.toString)
   }
 
   test("only the first block is read: later damage surfaces at decode, not planning") {
@@ -91,8 +92,9 @@ class CramMetaSpec extends SparkSpec {
     val bad = flipped(file, body + csz / 2)
     assert(CramIO.detectMeta(bad, Some(off)) === CramIO.CramMeta(3, foreign = false))
     val e = intercept[Exception](CramIO.read(spark, bad).collect())
-    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-      .exists(t => String.valueOf(t.getMessage).contains("CRC")), e.toString)
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).exists(t =>
+      t.isInstanceOf[java.io.IOException] && t.getMessage.contains("CRC") &&
+        t.getMessage.contains(bad) && t.getMessage.contains(s"offset $off")), e.toString)
   }
 
   test("a flipped byte in a container header's record count or landmark fails " +
